@@ -395,6 +395,11 @@ def _int_lit_array_sql(values) -> str:
     return "array(" + ",".join(str(int(v)) for v in values) + ")"
 
 
+def _quote(name: str) -> str:
+    """A column name as a SQL identifier (``order``, ``doc id``)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def lang_id_scores(
     df: DataFrame,
     text_col: str,
@@ -481,8 +486,9 @@ def lang_id_scores(
     top_sql = "greatest(" + ", ".join(
         f"_l_{lang}" for lang in LANGID_LANGS
     ) + ")"
+    qid = _quote(id_col)
     ranked = scored.selectExpr(
-        id_col, "_isnull", "_ng",
+        qid, "_isnull", "_ng",
         *[f"_l_{la}" for la in LANGID_LANGS],
         f"{top_sql} AS _top",
     )
@@ -496,7 +502,7 @@ def lang_id_scores(
     # the bare biases — the same silent-flip class the r9 advice
     # flagged on the quality classifier)
     return ranked.selectExpr(
-        id_col,
+        qid,
         "CASE WHEN _isnull THEN CAST(NULL AS BIGINT) "
         "ELSE CAST(_ng AS BIGINT) END AS n_grams",
         f"CASE WHEN _isnull THEN CAST(NULL AS STRING) "
@@ -578,6 +584,6 @@ def _langid_arrow(
 
     return df.select(id_col, text_col).mapInPandas(
         score,
-        f"{id_col} {id_type}, n_grams long, lang_pred string, "
+        f"{_quote(id_col)} {id_type}, n_grams long, lang_pred string, "
         "lang_score double",
     )

@@ -19,7 +19,10 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from aws_de_final_project_spark import etl
-from aws_de_final_project_spark.plans.views import create_views_from_dir
+from aws_de_final_project_spark.plans.views import (
+    create_views_from_dir,
+    uncache_views_from_dir,
+)
 from aws_de_final_project_spark.sources.rest_source import ingest_increment
 from aws_de_final_project_spark.streaming.ingest import incremental_csv_ingest
 
@@ -66,7 +69,10 @@ def run(
     ``persistent=True`` is Glue-catalog/Athena-view parity: the
     ``processed`` table and every analytics view land in the catalog
     (durable across sessions — and across processes when the session
-    has a persistent metastore) instead of dying with the session."""
+    has a persistent metastore) instead of dying with the session.
+
+    The previous pass's view caches are released first, while
+    ``processed`` is still the table they were cached over."""
 
     def step_ingest() -> None:
         if cfg.base_url and cfg.fetcher:
@@ -117,6 +123,7 @@ def run(
             else:
                 df.createOrReplaceTempView(name)
 
+    uncache_views_from_dir(spark, cfg.sql_dir)
     _with_retry(step_ingest, "ingest")
     _with_retry(step_transform, "transform")
     _with_retry(step_register, "register")

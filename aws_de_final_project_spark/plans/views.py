@@ -6,8 +6,14 @@ registers each as an Athena NamedQuery (``CDK/cdk/cdk_stack.py:
 ``dependency1_`` filename prefix encoding execution order (SURVEY.md
 §2.8 V4). Here: a ``sql/`` directory of ``.sql`` files executed via
 ``spark.sql`` in dependency order. Catalyst inlines view bodies, so
-layering is free; the shared filter view is a cache candidate
-(SURVEY.md §4 X7).
+layering is free.
+
+Caching rule: a ``dependencyN_*`` view exists to be read by the views
+after it, so it is cached (lazily) when created and the first read
+fills the cache; the views after it read it from memory instead of
+rescanning its base table (SURVEY.md §4 X7). ``pipeline.run`` releases
+it first thing on the next refresh (``uncache_views_from_dir``), before
+the base table is replaced, so a session holds one such cache at most.
 """
 
 from __future__ import annotations
@@ -59,8 +65,26 @@ def create_views_from_dir(
         # strip line comments; Spark SQL handles them, but keep the
         # statement single — files hold exactly one statement each.
         spark.sql(text)
+        if _DEP_RE.match(path.stem):
+            spark.catalog.cacheTable(path.stem)
         created.append(path.stem)
     return created
+
+
+def uncache_views_from_dir(
+    spark: SparkSession, sql_dir: str | os.PathLike
+) -> None:
+    """Release the caches ``create_views_from_dir`` took. Call it
+    before the views' base tables are replaced, while each cached view
+    still resolves to the plan it was cached over."""
+    for path in Path(sql_dir).glob("*.sql"):
+        name = path.stem
+        if (
+            _DEP_RE.match(name)
+            and spark.catalog.tableExists(name)
+            and spark.catalog.isCached(name)
+        ):
+            spark.catalog.uncacheTable(name)
 
 
 def run_view(spark: SparkSession, name: str) -> DataFrame:

@@ -12,6 +12,10 @@ it into a batch-incremental run (process everything new, then stop)
 At 100 TB: the file-source maintains seen-file state in the
 checkpoint (RocksDB-backed at scale); ``maxFilesPerTrigger`` bounds
 micro-batch size so a backlog never produces one giant batch.
+
+A partitioned sink first hash-repartitions by the partition columns:
+each partition value gets one writer task, so every increment lands as
+one file per value instead of one per value per input split.
 """
 
 from __future__ import annotations
@@ -49,6 +53,8 @@ def incremental_csv_ingest(
     df = reader.csv(input_dir)
     if transform is not None:
         df = transform(df)
+    if partition_cols:
+        df = df.repartition(*partition_cols)
     writer = (
         df.writeStream.format("parquet")
         .option("path", output_dir)

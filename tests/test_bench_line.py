@@ -11,10 +11,13 @@ import json
 import bench
 
 
+CPUS = 8  # the bench's core budget; the host's core count plays no part
+
+
 def _check(warm):
     quality = bench.run_quality(
         (1.23, 1.0, 0.9), (30.0, 20.0, 10.0), warm,
-        {n: 0.0 for n in warm},
+        {n: 0.0 for n in warm}, CPUS,
     )
     line = bench.final_line(warm, round(sum(warm.values()), 3), 0.1,
                             quality=quality)
@@ -31,15 +34,22 @@ def test_run_quality_flags_contention():
     warm = {f"q{i}": 1.0 for i in range(40)}
     # (a) external load before the run started
     q = bench.run_quality((20.0, 5.0, 2.0), (30.0,) * 3, warm,
-                          {n: 0.0 for n in warm})
+                          {n: 0.0 for n in warm}, CPUS)
     assert q["noisy"] is True and q["noisy_queries"] == []
+    # the same start load is judged against the budget it was given
+    q = bench.run_quality((3.0,) * 3, (3.0,) * 3, warm,
+                          {n: 0.0 for n in warm}, 32)
+    assert q["noisy"] is False and q["cpus"] == 32
+    q = bench.run_quality((3.0,) * 3, (3.0,) * 3, warm,
+                          {n: 0.0 for n in warm}, CPUS)
+    assert q["noisy"] is True and q["cpus"] == CPUS
     # (b) widespread within-run spread: 5 of 40 queries > 50% spread
     spread = {n: (0.9 if i < 5 else 0.1) for i, n in enumerate(warm)}
-    q = bench.run_quality((0.5, 0.5, 0.5), (30.0,) * 3, warm, spread)
+    q = bench.run_quality((0.5, 0.5, 0.5), (30.0,) * 3, warm, spread, CPUS)
     assert q["noisy"] is True and len(q["noisy_queries"]) == 5
     # a couple of noisy queries alone is normal GC wobble, not a flag
     spread = {n: (0.9 if i < 2 else 0.1) for i, n in enumerate(warm)}
-    q = bench.run_quality((0.5, 0.5, 0.5), (30.0,) * 3, warm, spread)
+    q = bench.run_quality((0.5, 0.5, 0.5), (30.0,) * 3, warm, spread, CPUS)
     assert q["noisy"] is False and len(q["noisy_queries"]) == 2
 
 

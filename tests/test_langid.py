@@ -175,6 +175,20 @@ def test_null_text_yields_null_prediction(spark):
     assert r.n_grams is None and r.lang_pred is None and r.lang_score is None
 
 
+def test_id_columns_that_need_quoting(spark):
+    """An id column named like a keyword or holding a space passes
+    through both impls under its own name."""
+    rows = [(0, "the weather is nice today"), (1, None)]
+    want = {i: _py_predict(t) if t is not None else (None,) * 3 for i, t in rows}
+    for id_col in ("order", "doc id"):
+        df = spark.createDataFrame(rows, f"`{id_col}` long, text string")
+        for impl in ("sql", "arrow"):
+            out = LI.lang_id_scores(df, "text", id_col, impl=impl)
+            assert out.columns[0] == id_col, (impl, out.columns)
+            got = {r[id_col]: (r.n_grams, r.lang_pred, r.lang_score) for r in out.collect()}
+            assert got == want, (id_col, impl, got)
+
+
 def test_inference_is_shuffle_free(spark):
     """Same 100 TB posture as the quality classifier: lang-id must be
     ONE scan-side projection — literal banks, no Exchange node."""

@@ -1,12 +1,16 @@
 """Replay the reference end-to-end: raw CSV -> (REST ingest with fake
 fetcher) -> checkpointed incremental transform (bookmark parity) ->
 partitioned parquet -> the four Athena views, checked against DuckDB
-over the same processed parquet."""
+over the same processed parquet. Also pins the refresh's read-side
+layout: one file per (year, month) per increment, and one cached
+``dependency1_`` view per session, released by the next run."""
 
 from __future__ import annotations
 
+import glob
 import io
 import os
+from collections import Counter
 
 import duckdb
 import pytest
@@ -14,6 +18,7 @@ import pytest
 from pyspark.sql import types as T
 
 from aws_de_final_project_spark import etl, pipeline
+from aws_de_final_project_spark.plans.views import uncache_views_from_dir
 from aws_de_final_project_spark.sources.rest_source import ingest_increment
 from tests.crimes_fixture import (
     COLUMNS,
@@ -92,6 +97,23 @@ def _rows_to_csv_text(rows):
     return buf.getvalue()
 
 
+def _persisted_rdds(spark) -> dict[int, str]:
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k): str(rdds[k].name()) for k in rdds}
+
+
+def _partitions_of(spark, csv_path) -> set[tuple[str, str]]:
+    """The (year, month) directory values one increment's rows map to,
+    through the pipeline's own transform."""
+    df = etl.derive_date_parts(
+        spark.read.schema(CRIME_SCHEMA).option("header", True).csv(csv_path)
+    )
+    return {
+        (str(r.year), str(r.month))
+        for r in df.select("year", "month").distinct().collect()
+    }
+
+
 def test_full_pipeline_and_views(spark, pipeline_dirs, crimes_rows, tmp_path):
     # 1. REST ingest with an injected fake fetcher (S1-S3 parity)
     batch1 = crimes_rows[:3000]
@@ -124,6 +146,7 @@ def test_full_pipeline_and_views(spark, pipeline_dirs, crimes_rows, tmp_path):
         schema=CRIME_SCHEMA,
         supporting={"community_areas": pipeline_dirs["supporting"]},
     )
+    rdds_before = _persisted_rdds(spark)
     views = pipeline.run(spark, cfg)
     assert set(views) >= {
         "dependency1_violent_crimes",
@@ -134,6 +157,9 @@ def test_full_pipeline_and_views(spark, pipeline_dirs, crimes_rows, tmp_path):
     }
     n1 = spark.table("processed").count()
     assert n1 == len(batch1)
+    # the shared filter view is cached; the first read fills it
+    assert spark.catalog.isCached("dependency1_violent_crimes")
+    assert spark.table("arrest_pct_by_community_violent").count() == 15
 
     # partition layout parity: hive-style year=/month= directories
     years = [
@@ -141,15 +167,40 @@ def test_full_pipeline_and_views(spark, pipeline_dirs, crimes_rows, tmp_path):
     ]
     assert years, "expected hive-partitioned year= directories"
 
-    # 4. bookmark parity: re-run with one new file -> only new rows added
+    # 4. bookmark parity: re-run with two new files -> only new rows
+    # added (two files = two input splits feeding the same partitions)
     batch2 = crimes_rows[3000:]
-    write_crimes_csv(
-        os.path.join(pipeline_dirs["landing"], "recent_source_data_b2.csv"),
-        batch2,
-    )
+    b2_files = [
+        os.path.join(pipeline_dirs["landing"], f"recent_source_data_b2{part}.csv")
+        for part in "ab"
+    ]
+    write_crimes_csv(b2_files[0], batch2[: len(batch2) // 2])
+    write_crimes_csv(b2_files[1], batch2[len(batch2) // 2 :])
     pipeline.run(spark, cfg)
     n2 = spark.table("processed").count()
     assert n2 == len(crimes_rows), f"incremental run added {n2 - n1}, want {len(batch2)}"
+    assert spark.table("arrest_pct_by_community_violent").count() == 15
+
+    # no leak: the second run released the first run's cache, so the
+    # two runs together hold exactly one new persisted RDD — the
+    # current dependency1_ cache
+    new_rdds = set(_persisted_rdds(spark).items()) - set(rdds_before.items())
+    assert len(new_rdds) == 1, new_rdds
+    assert "dependency1_violent_crimes" in next(iter(new_rdds))[1]
+
+    # one writer task per partition value: each year=/month= directory
+    # gets at most one file per increment that had rows for it
+    increments = [_partitions_of(spark, landed), _partitions_of(spark, b2_files)]
+    files = Counter(
+        tuple(d.split("=", 1)[1] for d in f.split(os.sep)[-3:-1])
+        for f in glob.glob(
+            os.path.join(pipeline_dirs["processed"], "year=*", "month=*", "*.parquet")
+        )
+    )
+    assert files
+    for part, n in files.items():
+        assert n <= sum(part in inc for inc in increments), (part, n)
+    assert sum(files.values()) == sum(len(inc) for inc in increments)
 
     # 5. oracle-check the four views against DuckDB on the same parquet
     con = duckdb.connect()
@@ -250,3 +301,8 @@ def test_full_pipeline_and_views(spark, pipeline_dirs, crimes_rows, tmp_path):
         ).fetchall()
     )
     assert s_wd == d_wd
+
+    # the release pipeline.run starts with drops the cache it took
+    uncache_views_from_dir(spark, cfg.sql_dir)
+    assert not spark.catalog.isCached("dependency1_violent_crimes")
+    assert set(_persisted_rdds(spark).items()) - set(rdds_before.items()) == set()
