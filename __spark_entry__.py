@@ -31,87 +31,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return Q.return_pct_by_nation(spark, "/root/testdata/sf0.001")
 
 
-# Round-11 driver-sample rotation (VERDICT r10 item 5): the union
-# analysis over CORRECTNESS_r1-r10 found 42 entries last driver-sampled
-# in r1-r4. queries() reorders its registry at return so the driver's
-# ~50-entry front window covers: flagship, this round's NEW entries,
-# then ALL 42 longest-unsampled — re-proving them green under the
-# current codebase without touching the definitions below.
-_R11_NEW: tuple[str, ...] = (
-    "main_content_multilingual_docs",
-    "dedup_image_phash",
-    "dedup_image_exact_groups",
-    "unigram_lm_vocab",
-    "unigram_encode_docs",
-)
-_R11_ROTATION: tuple[str, ...] = (
-    # last sampled r1
-    "ann_cosine_topk", "text_stats_by_lang", "token_counts",
-    "sketch_event_stats", "doc_fingerprints", "doc_winnow_fingerprints",
-    "lang_id_heuristic", "multimodal_byte_stats",
-    # last sampled r4
-    "json_extract_events", "hourly_event_stats", "user_sessions",
-    "asof_click_attribution", "range_join_event_sessions",
-    "pivot_event_matrix", "latest_event_per_user", "user_value_intervals",
-    "gap_fill_hourly_values", "full_outer_nation_activity",
-    "above_customer_avg_orders", "corr_qty_price_by_flag",
-    "funnel_user_steps", "readability_scores", "order_value_deciles",
-    "skew_plain_join", "skew_salted_join", "cube_order_stats",
-    "set_intersect_customers", "set_except_customers",
-    "moving_avg_user_value", "median_value_by_type", "label_centroids",
-    "tfidf_top_terms", "dedup_exact_groups", "dedup_jaccard_pairs",
-    "dedup_ngram_jaccard", "dedup_embedding_cosine",
-    "dedup_embedding_cosine_blocked", "dedup_minhash_lsh",
-    "dedup_minhash_portable", "dedup_simhash_portable",
-    "grouping_sets_order_stats", "dedup_simhash_pairs",
-)
-
-
-# Round-12 driver-sample rotation (VERDICT r11 items 7+8): the next-
-# stalest cohort — every oracled entry last driver-sampled in r5 (the
-# round-5 curation/PCA/pagerank block, 33 entries) plus the head of the
-# r7 block to fill the ~50-entry window. The 4 rows-only engine-hash
-# entries (no_oracle by design; their portable twins carry the check)
-# are EXCLUDED from the front and pinned to the very back so driver
-# sample slots are never burned on rows-only checks again.
-_R12_NEW: tuple[str, ...] = (
-    "html_table_rows",
-    "html_table_records",
-    "avro_roundtrip_stats",
-    "dedup_video_frames",
-    "video_scene_cut_frames",
-    "media_header_stats",
-    "dedup_image_quality_keepers",
-    "dedup_audio_fingerprint",
-    "tokenizer_roundtrip_docs",
-    "tokenizer_export_manifest",
-)
-_R12_ROTATION: tuple[str, ...] = (
-    # last sampled r5
-    "ann_int8_topk", "ann_matryoshka_prefix_recall",
-    "band_join_order_tiers", "cohort_retention",
-    "dedup_corpus_quality_keepers", "dedup_exact_spans",
-    "dedup_semantic_clustered", "dq_documents_suite", "dq_orders_suite",
-    "event_transition_matrix", "fuzzy_name_pairs",
-    "hard_negatives_contrastive", "histogram_order_values",
-    "order_percentile_ranks", "overlap_shipment_pairs",
-    "pack_training_sequences", "pagerank_trade_nations",
-    "pca_embedding_projection", "pii_redact_names",
-    "q5_local_supplier_volume", "recursive_org_depth",
-    "rolling_1h_user_value", "rollup_incremental_user_stats",
-    "rollup_incremental_user_variance",
-    "rollup_incremental_value_quantiles", "semi_join_fast_parts",
-    "shard_docs_by_token_budget", "spatial_near_customers",
-    "token_entropy_scores", "unigram_logprob_scores",
-    "unpivot_part_metrics", "weighted_median_price_by_flag",
-    "weighted_sample_docs",
-    # head of the r7 block (fills the window)
-    "ann_cosine_topk_vec", "basket_pair_affinity",
-    "bigram_logprob_scores", "chi2_event_type_hour", "chunk_text_cdc",
-    "chunk_text_windows", "curation_manifest_docs",
-    "decontaminate_vs_benchmark", "dedup_component_groups",
-    "dedup_containment_pairs", "dedup_incremental_fold",
-)
+# The rows-only engine-hash entries (no oracle by design; their
+# portable twins carry the check) are pinned to the very back, so
+# driver sample slots are never spent on rows-only checks.
 _NO_ORACLE_BACK: tuple[str, ...] = (
     "sketch_event_stats", "dedup_minhash_lsh", "dedup_simhash_pairs",
     "dedup_component_groups_lsh",
@@ -185,10 +107,10 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # CORRECTNESS_r10 re-proves the §2 core under the current
         # codebase; then this round's new entries; then the r8/r9
         # ordering. The no-oracle xxhash64 LSH variant stays last
-        # (its portable twin carries the check). NOTE (r11): the
-        # driver-facing order is now produced by queries() above from
-        # _R11_NEW/_R11_ROTATION — this literal order is the fallback
-        # for everything not rotated.
+        # (its portable twin carries the check). The driver-facing
+        # order is produced by queries() above from _R13_NEW/
+        # _R13_ROTATION; this literal order is the fallback for
+        # everything not rotated.
         "return_pct_by_nation": Q.return_pct_by_nation,
         "q1_pricing_summary": Q.q1_pricing_summary,
         "filter_disjunctive": Q.filter_disjunctive,
@@ -220,7 +142,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chat_render_template": X.chat_render_template,
         "chat_pack_sequences": X.chat_pack_sequences,
         "streaming_chat_validation_replay": X.streaming_chat_validation_replay,
-        # round-12 additions (inside the sample window via _R12_NEW)
+        # round-12 additions
         "html_table_rows": X.html_table_rows,
         "html_table_records": X.html_table_records,
         "tokenizer_roundtrip_docs": X.tokenizer_roundtrip_docs,
@@ -231,7 +153,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_image_quality_keepers": X.dedup_image_quality_keepers,
         "dedup_audio_fingerprint": X.dedup_audio_fingerprint,
         "avro_roundtrip_stats": X.avro_roundtrip_stats,
-        # round-11 additions (inside the sample window via _R11_NEW)
+        # round-11 additions
         "main_content_multilingual_docs": X.main_content_multilingual_docs,
         "dedup_image_phash": X.dedup_image_phash,
         "dedup_image_exact_groups": X.dedup_image_exact_groups,

@@ -1,19 +1,20 @@
 """The reference's ETL transform, Spark-first.
 
-Re-expresses ``Glue Script/process_crime_data.py:19-39`` as one
-declarative function chain:
+Re-expresses ``Glue Script/process_crime_data.py:19-39``:
 
-  catalog scan -> toDF           ->  spark.read (we start in DataFrame)
-  withColumn new_date/month/day  ->  identical built-ins (P1-P3)
-  write glueparquet partitioned  ->  df.write.partitionBy(...).parquet
+  catalog scan -> toDF           ->  a DataFrame (the pipeline reads the
+                                     landing zone as a file stream)
+  withColumn new_date/month/day  ->  :func:`derive_date_parts`, identical
+                                     built-ins (P1-P3)
+  write glueparquet partitioned  ->  ``streaming/ingest.incremental_csv_ingest``
+                                     (parquet partitioned by year, month)
 
 Deliberate deviations (documented in SURVEY.md §4 X3):
 
 * compression: the reference writes **uncompressed** parquet
   (``process_crime_data.py:37``, snappy commented out at ``:28``).
-  We default to zstd — strictly better at 100 TB (CPU cost is noise
-  next to the S3/network savings). ``compression="uncompressed"``
-  restores byte parity if needed.
+  The session writes zstd — strictly better at 100 TB (CPU cost is
+  noise next to the S3/network savings).
 * partition layout kept (``year, month``) — it is the reference's one
   real optimization (partition pruning for time-ranged queries).
 """
@@ -40,33 +41,3 @@ def derive_date_parts(
         .withColumn("month", F.month("new_date"))
         .withColumn("day", F.dayofmonth("new_date"))
     )
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = ("year", "month"),
-    compression: str = "zstd",
-    mode: str = "overwrite",
-) -> None:
-    """Partitioned parquet sink (``process_crime_data.py:29-39``).
-
-    At scale: hive-layout ``year=/month=`` directories give free
-    partition pruning; dynamic partition overwrite keeps incremental
-    runs from clobbering history.
-    """
-    (
-        df.write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", compression)
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-
-
-def process_crimes(raw: DataFrame, out_path: str, **write_kwargs) -> DataFrame:
-    """Full job parity: transform + partitioned write; returns the
-    transformed frame (pre-write) for testing."""
-    transformed = derive_date_parts(raw)
-    write_partitioned(transformed, out_path, **write_kwargs)
-    return transformed

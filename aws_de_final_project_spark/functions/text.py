@@ -448,40 +448,26 @@ def mojibake_chars_recovered(col: Column | str) -> Column:
     return (F.length(t) - F.length(repair_mojibake(t))).cast("long")
 
 
-def _driver_train_max_vocab(spark) -> int:
-    """Vocabulary-row threshold below which tokenizer TRAINING folds
-    onto the driver (``spark.graft.tokenizer.driverTrainMaxVocab``,
-    default 2,000,000 rows ~= tens of MB — broadcast-sized; 0 disables
-    the fold). The corpus-side vocabulary aggregate is always
-    distributed; only the vocab-sized iterative loop moves. This is
-    the SentencePiece posture — word counts are reduced cluster-side,
-    the merge/EM loop runs in memory — and it removes the per-
-    iteration job-scheduling + plan-analysis overhead (measured
-    ~0.25 s/iteration on local[32] REGARDLESS of vocab size). Above
-    the threshold the distributed loop below runs unchanged."""
-    try:
-        return int(
-            spark.conf.get(
-                "spark.graft.tokenizer.driverTrainMaxVocab", "2000000"
-            )
-        )
-    except ValueError:
-        return 2_000_000
+def _collect_vocab(vocab) -> dict[str, int]:
+    """The one driver collect every tokenizer trainer starts from: the
+    cluster-reduced (w, c) vocabulary as ``{w: c}``. Duplicate words
+    sum, as they do in every corpus-weighted count the trainers take."""
+    wc: dict[str, int] = {}
+    for r in vocab.select("w", "c").collect():
+        wc[r.w] = wc.get(r.w, 0) + r.c
+    return wc
 
 
 def py_bpe_train_merges(
     word_counts: dict[str, int], n_merges: int = 16
 ) -> list[tuple[int, str, str, int]]:
-    """Driver-side BPE merge loop over a collected word-frequency
-    vocabulary — the same boundary-encoded ``<sym>`` strings, the same
-    all-adjacent corpus-weighted pair counts, the same
-    (freq DESC, lhs, rhs) argmax tie-break, and the same
-    left-to-right non-overlapping ``str.replace`` application as the
-    distributed loop in :func:`bpe_train_merges` (Python's
-    ``str.replace`` and Spark's ``F.replace`` share the
-    all-occurrences left-to-right contract). Agreement with the
-    distributed loop is pinned by
-    tests/test_curation.py::test_bpe_train_merges_match_python_reference."""
+    """BPE merge loop over a word-frequency vocabulary: boundary-encoded
+    ``<sym>`` strings, all-adjacent corpus-weighted pair counts, the
+    (freq DESC, lhs, rhs) argmax tie-break, and left-to-right
+    non-overlapping ``str.replace`` merge application (the same
+    all-occurrences contract as the SQL ``replace`` the DuckDB oracle
+    unrolls). Pinned against an independent Sennrich-style reference
+    by tests/test_curation.py::test_bpe_train_merges_match_python_reference."""
     rows = [
         ("".join(f"<{ch}>" for ch in w), c)
         for w, c in word_counts.items()
@@ -505,6 +491,13 @@ def py_bpe_train_merges(
     return merges
 
 
+def _bpe_merges_frame(spark, word_counts: dict[str, int], n_merges: int):
+    return spark.createDataFrame(
+        py_bpe_train_merges(word_counts, n_merges),
+        "step int, lhs string, rhs string, freq long",
+    )
+
+
 def bpe_train_merges(vocab, n_merges: int = 16):
     """Full BPE tokenizer training over a word-frequency VOCABULARY:
     ``vocab`` is a DataFrame (w, c) — the output of the one corpus
@@ -516,100 +509,27 @@ def bpe_train_merges(vocab, n_merges: int = 16):
     Each of the ``n_merges`` iterations is classic Sennrich et al.
     BPE: count adjacent SYMBOL pairs corpus-weighted, merge the
     argmax (ties broken freq DESC then (lhs, rhs) lexicographic —
-    deterministic on both engines over the [a-z0-9] alphabet), apply
-    greedily left-to-right. The driver loop is legitimate at scale:
-    every per-iteration job runs on the MATERIALIZED vocab
-    (localCheckpoint up front — the corpus is never rescanned), the
-    pair aggregate is bounded by |alphabet + merges|^2, and the only
-    driver traffic is one argmax row per step.
+    deterministic over the [a-z0-9] alphabet), apply greedily
+    left-to-right.
+
+    Scale contract: the corpus reduces to (w, c) on the cluster, the
+    vocabulary is collected to the driver once (one Spark job), and
+    the merge loop runs in memory (:func:`py_bpe_train_merges`). So
+    |vocab| is bounded by driver memory — the posture of the
+    SentencePiece trainer, which also counts words first and trains
+    in memory.
 
     The symbol sequence rides as a ``<sym><sym>...`` STRING: the
     explicit ``<``/``>`` boundaries (never in the [a-z0-9] symbol
     alphabet) make greedy merge application a plain substring
-    ``replace('<l><r>', '<lr>')`` — left-to-right non-overlapping on
-    BOTH engines, so overlapping runs (``aaa`` under an ``aa`` merge)
-    and prefix ambiguity (``<t><he>`` under a ``(t, h)`` merge) are
-    handled for free, and the DuckDB oracle replays the identical 16
-    unrolled iterations with the identical replace.
+    ``replace('<l><r>', '<lr>')`` — left-to-right non-overlapping, so
+    overlapping runs (``aaa`` under an ``aa`` merge) and prefix
+    ambiguity (``<t><he>`` under a ``(t, h)`` merge) are handled for
+    free, and the DuckDB oracle replays the identical 16 unrolled
+    iterations with the identical replace.
     """
-    spark = vocab.sparkSession
-    # a handful of partitions is right for vocab-sized data: each of
-    # the 16 iterations schedules one job over the materialized vocab,
-    # and at the session's corpus-sized partition count the scheduling
-    # overhead (16 x 32+ tasks) dominates the actual pair counting.
-    # A real deployment sizes this to |vocab| / ~1M rows.
-    syms = (
-        vocab.repartition(4)
-        .select(
-            F.regexp_replace(F.col("w"), "(.)", "<$1>").alias("enc"),
-            F.col("c"),
-        )
-        .localCheckpoint()
-    )
-    # Scale-adaptive fold (guide §2/§5): the loop's per-iteration cost
-    # on local[32] is dominated by fixed driver overhead (plan build +
-    # 2 scheduled jobs ~= 0.25 s/iteration) regardless of |vocab|.
-    # Below the conf'd threshold, collect the MATERIALIZED encoded
-    # vocab once and run the byte-identical Python loop; above it the
-    # distributed loop below is unchanged.
-    thr = _driver_train_max_vocab(spark)
-    if thr > 0 and syms.count() <= thr:
-        wc: dict[str, int] = {}
-        for r in syms.collect():
-            # enc is already boundary-encoded; strip to the raw word
-            w = r.enc.replace("<", "").replace(">", "")
-            wc[w] = wc.get(w, 0) + r.c
-        return spark.createDataFrame(
-            py_bpe_train_merges(wc, n_merges),
-            "step int, lhs string, rhs string, freq long",
-        )
-    merges = []
-    for step in range(1, n_merges + 1):
-        s = F.split(
-            F.col("enc").substr(F.lit(2), F.length("enc") - F.lit(2)),
-            "><",
-        )
-        pairs = (
-            syms.select(s.alias("s"), "c")
-            .filter(F.size("s") >= 2)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("s") - 1),
-                        lambda i: F.concat(
-                            F.element_at("s", i),
-                            F.lit(" "),
-                            F.element_at("s", i + 1),
-                        ),
-                    )
-                ).alias("pair"),
-                "c",
-            )
-            .groupBy("pair")
-            .agg(F.sum("c").cast("long").alias("freq"))
-        )
-        best = (
-            pairs.select(
-                F.substring_index("pair", " ", 1).alias("lhs"),
-                F.substring_index("pair", " ", -1).alias("rhs"),
-                "freq",
-            )
-            .orderBy(F.desc("freq"), "lhs", "rhs")
-            .first()
-        )
-        if best is None:
-            break
-        merges.append((step, best.lhs, best.rhs, int(best.freq)))
-        syms = syms.select(
-            F.replace(
-                F.col("enc"),
-                F.lit(f"<{best.lhs}><{best.rhs}>"),
-                F.lit(f"<{best.lhs}{best.rhs}>"),
-            ).alias("enc"),
-            "c",
-        )
-    return spark.createDataFrame(
-        merges, "step int, lhs string, rhs string, freq long"
+    return _bpe_merges_frame(
+        vocab.sparkSession, _collect_vocab(vocab), n_merges
     )
 
 
@@ -763,19 +683,16 @@ def dominant_script(col: Column | str) -> Column:
 # r10 verdict item 6): seed vocabulary from corpus-weighted substring
 # counts, then EM rounds where the E-step Viterbi-segments every
 # vocabulary word under integer-quantized piece log-probs and the
-# M-step re-estimates piece counts from the segmentations. Runs on
-# the same materialized |vocab| word aggregate as BPE training —
+# M-step re-estimates piece counts from the segmentations. Like BPE
+# training it runs in memory on the collected |vocab| word aggregate —
 # 100 TB of text collapses to |vocab| rows before any per-character
-# work — and, unlike the BPE driver loop, is FULLY relational: the
-# Viterbi DP is generated per-position column expressions (bounded
-# by max_word_len), so each EM round is one broadcast join + one
-# aggregate, no driver argmax at all.
+# work.
 #
 # Engine-exactness discipline: piece log-probs are quantized to
 # BIGINT once per round (floor(1e4 * ln(c/T) + 0.5) — the DSIR/KN
 # 4dp-int rule), the DP then sums and compares exact integers, and
 # ties take the SMALLEST back-pointer k (= the longest final piece),
-# so both engines walk identical segmentations.
+# so the trainer and the DuckDB oracles walk identical segmentations.
 # ---------------------------------------------------------------------------
 
 UNIGRAM_MAX_PIECE_LEN = 4
@@ -801,337 +718,9 @@ def _unigram_scores(counts):
     )
 
 
-def unigram_seed_counts(
-    vocab,
-    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
-    n_multi: int = 48,
-    max_word_len: int = UNIGRAM_MAX_WORD_LEN,
-):
-    """Seed piece bank: every substring of length 1..max_piece_len of
-    the (truncated) vocabulary words, corpus-weighted; ALL single
-    characters are kept (the Viterbi fallback path can never dead-end)
-    plus the top ``n_multi`` multi-char pieces by (count DESC, piece
-    ASC). ``vocab`` is (w, c)."""
-    w10 = F.substring(F.col("w"), 1, max_word_len)
-    subs = vocab.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.length(w10)),
-                    lambda i: F.transform(
-                        F.sequence(
-                            F.lit(1),
-                            F.least(
-                                F.lit(max_piece_len),
-                                F.length(w10) - i + 1,
-                            ),
-                        ),
-                        lambda ln: w10.substr(i, ln),
-                    ),
-                )
-            )
-        ).alias("piece"),
-        "c",
-    )
-    counts = subs.groupBy("piece").agg(F.sum("c").cast("long").alias("c"))
-    singles = counts.filter(F.length("piece") == 1)
-    multis = (
-        counts.filter(F.length("piece") >= 2)
-        .orderBy(F.desc("c"), "piece")
-        .limit(n_multi)
-    )
-    return singles.unionByName(multis)
-
-
-def _unigram_viterbi_pieces(
-    words,
-    scores,
-    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
-    max_word_len: int = UNIGRAM_MAX_WORD_LEN,
-):
-    """E-step: per (w, c) word row, the Viterbi segmentation's pieces
-    as an array column. Generated-expression DP: edge scores ride a
-    per-word MAP (one explode + one broadcast join + one aggregate),
-    then best/backpointer per position 1..max_word_len are plain
-    column expressions, then the backtrack walk is an unrolled CASE
-    chain — pure codegen after the edge join, no UDFs, no driver
-    loop."""
-    L, P = max_word_len, max_piece_len
-    w10 = F.substring(F.col("w"), 1, L)
-    # zero-length words carry no segmentation: drop them EXPLICITLY
-    # here (r11 advice) — previously they fell out implicitly via the
-    # empty edge set + inner emap join while the Python twin returned
-    # (0, 0), a latent divergence; both paths now drop them.
-    words = (
-        words.select(w10.alias("w10"), "c")
-        .filter(F.length("w10") >= 1)
-        .groupBy("w10")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-    # edge candidates: (k, j) with k < j <= len, j - k <= P
-    edges = words.select(
-        "w10",
-        F.explode(
-            F.filter(
-                F.flatten(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(L - 1)),
-                        lambda k: F.transform(
-                            F.sequence(F.lit(1), F.lit(P)),
-                            lambda d: F.struct(
-                                (k * 16 + k + d).alias("idx"),
-                                F.when(
-                                    k + d <= F.length("w10"),
-                                    F.col("w10").substr(
-                                        (k + 1).cast("int"), d.cast("int")
-                                    ),
-                                ).alias("piece"),
-                            ),
-                        ),
-                    )
-                ),
-                lambda e: e["piece"].isNotNull(),
-            )
-        ).alias("e"),
-    ).select("w10", F.col("e.idx").alias("idx"), F.col("e.piece").alias("piece"))
-    scored = edges.join(F.broadcast(scores), "piece", "left").select(
-        "w10", "idx", F.coalesce("s", F.lit(UNIGRAM_NEG_INF)).alias("s")
-    )
-    emap = scored.groupBy("w10").agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("idx", "s")))
-        ).alias("em")
-    )
-    df = words.join(emap, "w10")
-
-    # DP as a RUNTIME fold (F.aggregate evaluates iteratively, so the
-    # expression tree is CONSTANT-size — both a fully inlined and a
-    # column-staged unrolling of this DP explode in the optimizer
-    # at L = 10): the accumulator carries best[0..j] and bp[1..j] as
-    # growing arrays; best[j] = max over k in [j-P, j-1] of best[k] +
-    # s(k, j) with the SMALLEST k on ties (deterministic backtrack).
-    neg = F.lit(UNIGRAM_NEG_INF)
-
-    def dp_step(acc, j):
-        # best[k] rides at array position k+1; missing edge -> NEG_INF
-        cands = []
-        for d in range(1, P + 1):  # piece length d, k = j - d
-            k = j - d
-            cands.append(
-                F.when(
-                    k >= 0,
-                    F.element_at(acc["b"], k + 1)
-                    + F.coalesce(
-                        F.element_at("em", (k * 16 + j).cast("int")), neg
-                    ),
-                ).otherwise(neg + neg)
-            )
-        best_j = F.greatest(*cands)
-        bp_j = F.lit(-1)
-        # prefer the SMALLEST k = the LARGEST d: iterate d ascending so
-        # the last (largest-d) matching when wins the chain bottom-up
-        for d, t in zip(range(1, P + 1), cands):
-            bp_j = F.when(t == best_j, j - d).otherwise(bp_j)
-        return F.struct(
-            F.concat(acc["b"], F.array(best_j)).alias("b"),
-            F.concat(acc["p"], F.array(bp_j.cast("int"))).alias("p"),
-        )
-
-    acc0 = F.struct(
-        F.array(F.lit(0).cast("long")).alias("b"),
-        F.expr("CAST(array() AS array<int>)").alias("p"),
-    )
-    dp = F.aggregate(
-        F.sequence(F.lit(1), F.length("w10").cast("int")), acc0, dp_step
-    )
-    staged = df.select("w10", "c", dp["p"].alias("_bp"))
-
-    # backtrack: another runtime fold walking cur -> bp[cur] and
-    # collecting substr pieces (bp rides 1-indexed at position cur)
-    walk0 = F.struct(
-        F.length("w10").cast("int").alias("cur"),
-        F.expr("CAST(array() AS array<string>)").alias("ps"),
-    )
-
-    def walk_step(acc, _):
-        prev = F.element_at("_bp", acc["cur"])
-        return F.when(acc["cur"] <= 0, acc).otherwise(
-            F.struct(
-                prev.alias("cur"),
-                F.concat(
-                    acc["ps"],
-                    F.array(
-                        F.col("w10").substr(prev + 1, acc["cur"] - prev)
-                    ),
-                ).alias("ps"),
-            )
-        )
-
-    walk = F.aggregate(
-        F.sequence(F.lit(1), F.lit(L)), walk0, walk_step
-    )
-    return staged.select("w10", "c", walk["ps"].alias("pieces"))
-
-
-def _collect_word_counts(words, thr: int) -> dict[str, int] | None:
-    """Fold guard shared by the unigram entry points: ``words`` is the
-    MATERIALIZED (w, c) checkpoint; returns its dict form when it fits
-    under the driver-train threshold, else None (stay distributed).
-    Duplicate words sum — identical to the Spark paths, which only
-    ever consume (w, c) through corpus-weighted aggregates."""
-    if thr <= 0 or words.count() > thr:
-        return None
-    wc: dict[str, int] = {}
-    for r in words.collect():
-        wc[r.w] = wc.get(r.w, 0) + r.c
-    return wc
-
-
-def _unigram_counts_from_words(
-    words,
-    n_iters: int,
-    max_piece_len: int,
-    n_multi: int,
-    max_word_len: int,
-):
-    """Distributed EM loop body of :func:`unigram_trained_counts` over
-    an already-materialized (w, c) checkpoint."""
-    counts = unigram_seed_counts(
-        words, max_piece_len, n_multi, max_word_len
-    ).localCheckpoint()
-    bank = counts.select("piece")
-    for _ in range(n_iters):
-        scores = _unigram_scores(counts).select("piece", "s")
-        segs = _unigram_viterbi_pieces(
-            words, scores, max_piece_len, max_word_len
-        )
-        used = (
-            segs.select(F.explode("pieces").alias("piece"), "c")
-            .groupBy("piece")
-            .agg(F.sum("c").cast("long").alias("_u"))
-        )
-        # materialize the (bank-sized) counts each round: the next
-        # round's scores/edges reference counts MULTIPLE times, and an
-        # un-materialized chain re-expands the previous round's whole
-        # Viterbi subtree per consumer — plan growth is exponential in
-        # n_iters without this (the round-5 multi-consumer lesson)
-        counts = (
-            bank.join(used, "piece", "left")
-            .select(
-                "piece",
-                (F.coalesce("_u", F.lit(0)) + F.lit(1))
-                .cast("long")
-                .alias("c"),
-            )
-            .localCheckpoint()
-        )
-    return counts
-
-
-def unigram_trained_counts(
-    vocab,
-    n_iters: int = 2,
-    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
-    n_multi: int = 48,
-    max_word_len: int = UNIGRAM_MAX_WORD_LEN,
-):
-    """The EM training loop shared by :func:`unigram_train` (vocab
-    output) and :func:`unigram_encode_stats` (corpus encoding):
-    returns the final (piece, c) counts frame. Scale-adaptive (guide
-    §2/§5): the corpus-side vocabulary aggregate is always
-    distributed; below the conf'd driver-train threshold the
-    vocab-sized EM loop folds onto the driver via the test-pinned
-    Python twin (:func:`py_unigram_trained_counts`), else the
-    distributed generated-expression loop runs unchanged."""
-    spark = vocab.sparkSession
-    words = vocab.select("w", "c").localCheckpoint()
-    wc = _collect_word_counts(words, _driver_train_max_vocab(spark))
-    if wc is not None:
-        cnts = py_unigram_trained_counts(
-            wc, n_iters, max_piece_len, n_multi, max_word_len
-        )
-        return spark.createDataFrame(
-            sorted(cnts.items()), "piece string, c long"
-        )
-    return _unigram_counts_from_words(
-        words, n_iters, max_piece_len, n_multi, max_word_len
-    )
-
-
-def unigram_word_stats(
-    vocab,
-    n_iters: int = 2,
-    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
-    n_multi: int = 48,
-    max_word_len: int = UNIGRAM_MAX_WORD_LEN,
-):
-    """Corpus ENCODING side of the unigram model: train, then
-    Viterbi-segment every (truncated) vocabulary word under the FINAL
-    scores and return per-word stats (w10, n_pieces, sum_s) with
-    sum_s the BIGINT sum of the 4dp-quantized piece log-probs. This
-    is the |vocab|-row lookup table a 100 TB encode pass broadcasts —
-    documents then join it instead of re-running the DP per
-    occurrence. Scale-adaptive like :func:`unigram_trained_counts`:
-    under the driver-train threshold the whole train+segment pass
-    folds to the test-pinned Python twin."""
-    spark = vocab.sparkSession
-    words = vocab.select("w", "c").localCheckpoint()
-    wc = _collect_word_counts(words, _driver_train_max_vocab(spark))
-    if wc is not None:
-        stats = py_unigram_word_stats(
-            wc, n_iters, max_piece_len, n_multi, max_word_len
-        )
-        return spark.createDataFrame(
-            [(w, n, s) for w, (n, s) in sorted(stats.items())],
-            "w10 string, n_pieces long, sum_s long",
-        )
-    counts = _unigram_counts_from_words(
-        words, n_iters, max_piece_len, n_multi, max_word_len
-    )
-    scores = _unigram_scores(counts).select("piece", "s")
-    segs = _unigram_viterbi_pieces(
-        words, scores, max_piece_len, max_word_len
-    )
-    return (
-        segs.select("w10", F.explode("pieces").alias("piece"))
-        .join(F.broadcast(scores), "piece")
-        .groupBy("w10")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_pieces"),
-            F.sum("s").cast("long").alias("sum_s"),
-        )
-    )
-
-
-def unigram_train(
-    vocab,
-    n_iters: int = 2,
-    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
-    n_multi: int = 48,
-    max_word_len: int = UNIGRAM_MAX_WORD_LEN,
-):
-    """Full unigram-LM training: seed bank -> ``n_iters`` EM rounds
-    (quantize scores; Viterbi-segment the vocab; re-count pieces with
-    add-one smoothing over the FIXED bank — no pruning, documented
-    simplification) -> (piece, count, logp) with logp the final-round
-    4dp quantized log-prob. Words are truncated to ``max_word_len``
-    chars for the E-step statistic (SentencePiece bounds candidate
-    lengths the same way); counts are corpus-weighted BIGINTs
-    end-to-end."""
-    counts = unigram_trained_counts(
-        vocab, n_iters, max_piece_len, n_multi, max_word_len
-    )
-    out = _unigram_scores(counts)
-    return out.select(
-        "piece",
-        F.col("c").alias("count"),
-        (F.col("s").cast("double") / 10000.0).alias("logp"),
-    ).orderBy(F.desc("count"), "piece")
-
-
 def _py_quantize_scores(cnts: dict[str, int]) -> dict[str, int]:
     """(piece, c) -> 4dp-quantized BIGINT log-probs, the once-per-
-    round quantization shared by every Python unigram twin."""
+    round quantization of :func:`_unigram_scores`."""
     import math
 
     t = sum(cnts.values())
@@ -1145,12 +734,11 @@ def _py_trunc_word_counts(
     word_counts: dict[str, int], max_word_len: int
 ) -> dict[str, int]:
     """Truncate + re-sum word counts to ``max_word_len`` chars;
-    zero-length words are dropped, matching the Spark path's explicit
-    length >= 1 filter in _unigram_viterbi_pieces."""
-    wc = {w[:max_word_len]: 0 for w in word_counts if w}
+    zero-length words carry no segmentation and are dropped."""
+    wc: dict[str, int] = {}
     for w, c in word_counts.items():
         if w:
-            wc[w[:max_word_len]] += c
+            wc[w[:max_word_len]] = wc.get(w[:max_word_len], 0) + c
     return wc
 
 
@@ -1158,18 +746,15 @@ def _py_viterbi_pieces(
     w: str, s: dict[str, int], max_piece_len: int
 ) -> list[str]:
     """Viterbi segmentation of one (truncated) word under quantized
-    scores, pieces in BACKTRACK order (last piece first) — the exact
-    DP and smallest-backpointer tie-break of the Spark generated-
-    expression form."""
+    scores, pieces in BACKTRACK order (last piece first); ties take
+    the smallest back-pointer."""
     n = len(w)
     best: list[int | None] = [0] + [None] * n
     bp = [0] * (n + 1)
     for j in range(1, n + 1):
         cand = []
         for k in range(max(0, j - max_piece_len), j):
-            sc = s.get(w[k:j])
-            e = sc if sc is not None else -(1 << 40)
-            cand.append((best[k] + e, k))
+            cand.append((best[k] + s.get(w[k:j], UNIGRAM_NEG_INF), k))
         bj = max(t[0] for t in cand)
         best[j] = bj
         bp[j] = min(k for t, k in cand if t == bj)
@@ -1187,10 +772,12 @@ def py_unigram_trained_counts(
     n_multi: int = 48,
     max_word_len: int = UNIGRAM_MAX_WORD_LEN,
 ) -> dict[str, int]:
-    """Driver-side seed + EM loop of :func:`unigram_trained_counts`:
-    {piece: final count}. The counts half of
-    :func:`py_unigram_train`, exposed so the adaptive fold can return
-    the counts frame alone."""
+    """Seed bank + EM loop: {piece: final count}. The seed keeps every
+    single character of the truncated words (the Viterbi fallback path
+    can never dead-end) plus the top ``n_multi`` multi-char substrings
+    of length <= ``max_piece_len`` by (count DESC, piece ASC); each
+    round re-counts pieces with add-one smoothing over that FIXED
+    bank."""
     wc = _py_trunc_word_counts(word_counts, max_word_len)
     seed: dict[str, int] = {}
     for w, c in wc.items():
@@ -1215,22 +802,6 @@ def py_unigram_trained_counts(
     return counts
 
 
-def py_unigram_train(
-    word_counts: dict[str, int],
-    n_iters: int = 2,
-    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
-    n_multi: int = 48,
-    max_word_len: int = UNIGRAM_MAX_WORD_LEN,
-) -> dict[str, tuple[int, float]]:
-    """From-the-definition Python ground truth for
-    :func:`unigram_train` (test twin): {piece: (count, logp)}."""
-    counts = py_unigram_trained_counts(
-        word_counts, n_iters, max_piece_len, n_multi, max_word_len
-    )
-    s = _py_quantize_scores(counts)
-    return {p: (counts[p], s[p] / 10000.0) for p in counts}
-
-
 def py_unigram_word_stats(
     word_counts: dict[str, int],
     n_iters: int = 2,
@@ -1238,20 +809,17 @@ def py_unigram_word_stats(
     n_multi: int = 48,
     max_word_len: int = UNIGRAM_MAX_WORD_LEN,
 ) -> dict[str, tuple[int, int]]:
-    """From-the-definition ground truth for
-    :func:`unigram_word_stats` (test twin): {w10: (n_pieces, sum_s)}
-    with sum_s the BIGINT sum of final-round quantized log-probs
-    along each word's Viterbi segmentation."""
-    pieces = py_unigram_word_pieces(
+    """{w10: (n_pieces, sum_s)} with sum_s the BIGINT sum of the
+    final-round quantized log-probs along each word's Viterbi
+    segmentation."""
+    s = _py_quantize_scores(py_unigram_trained_counts(
         word_counts, n_iters, max_piece_len, n_multi, max_word_len
-    )
-    counts = py_unigram_trained_counts(
-        word_counts, n_iters, max_piece_len, n_multi, max_word_len
-    )
-    s = _py_quantize_scores(counts)
-    return {
-        w: (len(ps), sum(s[p] for p in ps)) for w, ps in pieces.items()
-    }
+    ))
+    out: dict[str, tuple[int, int]] = {}
+    for w in _py_trunc_word_counts(word_counts, max_word_len):
+        ps = _py_viterbi_pieces(w, s, max_piece_len)
+        out[w] = (len(ps), sum(s[p] for p in ps))
+    return out
 
 
 def py_unigram_word_pieces(
@@ -1261,16 +829,107 @@ def py_unigram_word_pieces(
     n_multi: int = 48,
     max_word_len: int = UNIGRAM_MAX_WORD_LEN,
 ) -> dict[str, list[str]]:
-    """From-the-definition ground truth for
-    :func:`unigram_word_pieces` (and the adaptive fold's driver
-    path): {w10: pieces} with pieces in BACKTRACK order (last piece
-    first), matching the Spark walk exactly."""
-    wc = _py_trunc_word_counts(word_counts, max_word_len)
-    counts = py_unigram_trained_counts(
+    """{w10: pieces} under the final scores, pieces in BACKTRACK order
+    (last piece first)."""
+    s = _py_quantize_scores(py_unigram_trained_counts(
         word_counts, n_iters, max_piece_len, n_multi, max_word_len
+    ))
+    return {
+        w: _py_viterbi_pieces(w, s, max_piece_len)
+        for w in _py_trunc_word_counts(word_counts, max_word_len)
+    }
+
+
+def _unigram_counts_frame(spark, word_counts: dict[str, int], *train_args):
+    cnts = py_unigram_trained_counts(word_counts, *train_args)
+    return spark.createDataFrame(
+        sorted(cnts.items()), "piece string, c long"
     )
-    s = _py_quantize_scores(counts)
-    return {w: _py_viterbi_pieces(w, s, max_piece_len) for w in wc}
+
+
+def _unigram_vocab_frame(counts):
+    """(piece, c) counts -> the (piece, count, logp) model table, logp
+    the 4dp-quantized log-prob of :func:`_unigram_scores`."""
+    return (
+        _unigram_scores(counts)
+        .select(
+            "piece",
+            F.col("c").alias("count"),
+            (F.col("s").cast("double") / 10000.0).alias("logp"),
+        )
+        .orderBy(F.desc("count"), "piece")
+    )
+
+
+def unigram_trained_counts(
+    vocab,
+    n_iters: int = 2,
+    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
+    n_multi: int = 48,
+    max_word_len: int = UNIGRAM_MAX_WORD_LEN,
+):
+    """The EM training loop behind :func:`unigram_train`: the final
+    (piece, c) counts frame, trained in memory on the collected
+    vocabulary (:func:`py_unigram_trained_counts`; scale contract as
+    in :func:`unigram_train`)."""
+    return _unigram_counts_frame(
+        vocab.sparkSession, _collect_vocab(vocab),
+        n_iters, max_piece_len, n_multi, max_word_len,
+    )
+
+
+def unigram_word_stats(
+    vocab,
+    n_iters: int = 2,
+    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
+    n_multi: int = 48,
+    max_word_len: int = UNIGRAM_MAX_WORD_LEN,
+):
+    """Corpus ENCODING side of the unigram model: train, then
+    Viterbi-segment every (truncated) vocabulary word under the FINAL
+    scores and return per-word stats (w10, n_pieces, sum_s) with
+    sum_s the BIGINT sum of the 4dp-quantized piece log-probs. This
+    is the |vocab|-row lookup table a 100 TB encode pass broadcasts —
+    documents then join it instead of re-running the DP per
+    occurrence. Trains and segments in memory on the collected
+    vocabulary (:func:`py_unigram_word_stats`; scale contract as in
+    :func:`unigram_train`)."""
+    stats = py_unigram_word_stats(
+        _collect_vocab(vocab), n_iters, max_piece_len, n_multi,
+        max_word_len,
+    )
+    return vocab.sparkSession.createDataFrame(
+        [(w, n, s) for w, (n, s) in sorted(stats.items())],
+        "w10 string, n_pieces long, sum_s long",
+    )
+
+
+def unigram_train(
+    vocab,
+    n_iters: int = 2,
+    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
+    n_multi: int = 48,
+    max_word_len: int = UNIGRAM_MAX_WORD_LEN,
+):
+    """Full unigram-LM training: seed bank -> ``n_iters`` EM rounds
+    (quantize scores; Viterbi-segment the vocab; re-count pieces with
+    add-one smoothing over the FIXED bank — no pruning, documented
+    simplification) -> (piece, count, logp) with logp the final-round
+    4dp quantized log-prob. Words are truncated to ``max_word_len``
+    chars for the E-step statistic (SentencePiece bounds candidate
+    lengths the same way); counts are corpus-weighted BIGINTs
+    end-to-end.
+
+    Scale contract: the corpus reduces to (w, c) on the cluster, the
+    vocabulary is collected to the driver once (one Spark job), and
+    the EM loop runs in memory (:func:`py_unigram_trained_counts`).
+    So |vocab| is bounded by driver memory — the posture of the
+    SentencePiece trainer."""
+    return _unigram_vocab_frame(
+        unigram_trained_counts(
+            vocab, n_iters, max_piece_len, n_multi, max_word_len
+        )
+    )
 
 
 def unigram_word_pieces(
@@ -1286,26 +945,16 @@ def unigram_word_pieces(
     ``array_join(reverse(pieces), '') == w10``. Same train-once /
     segment-the-vocab-once shape as :func:`unigram_word_stats`; a
     100 TB round-trip audit broadcasts this |vocab|-row table.
-    Scale-adaptive like :func:`unigram_trained_counts`: under the
-    driver-train threshold the whole train+segment pass folds to the
-    Python twin (:func:`py_unigram_word_pieces`)."""
-    spark = vocab.sparkSession
-    words = vocab.select("w", "c").localCheckpoint()
-    wc = _collect_word_counts(words, _driver_train_max_vocab(spark))
-    if wc is not None:
-        pieces = py_unigram_word_pieces(
-            wc, n_iters, max_piece_len, n_multi, max_word_len
-        )
-        return spark.createDataFrame(
-            sorted(pieces.items()), "w10 string, pieces array<string>"
-        )
-    counts = _unigram_counts_from_words(
-        words, n_iters, max_piece_len, n_multi, max_word_len
+    Trains and segments in memory on the collected vocabulary
+    (:func:`py_unigram_word_pieces`; scale contract as in
+    :func:`unigram_train`)."""
+    pieces = py_unigram_word_pieces(
+        _collect_vocab(vocab), n_iters, max_piece_len, n_multi,
+        max_word_len,
     )
-    scores = _unigram_scores(counts).select("piece", "s")
-    return _unigram_viterbi_pieces(
-        words, scores, max_piece_len, max_word_len
-    ).select("w10", "pieces")
+    return vocab.sparkSession.createDataFrame(
+        sorted(pieces.items()), "w10 string, pieces array<string>"
+    )
 
 
 def bpe_boundary_encode(
@@ -1375,18 +1024,18 @@ def export_tokenizer_model(
     of the counts, so including a float rendering would add
     cross-engine drift risk without pinning anything extra.
     Determinism (same corpus -> byte-identical manifest) is pinned in
-    tests/test_text_functions.py."""
+    tests/test_curation.py::test_export_tokenizer_model_deterministic.
+
+    The vocabulary is collected ONCE and both families train from
+    that one dict, so the corpus-sized aggregate upstream of
+    ``vocab`` runs once (scale contract as in :func:`bpe_train_merges`)."""
     import json
     import os
 
-    # Both trainings localCheckpoint their own derivation of `vocab`,
-    # so without this the corpus-sized explode+groupBy upstream runs
-    # TWICE (once per family) — materialize the tiny (w, c) aggregate
-    # once and both trainings start from it (the "count consumers"
-    # lesson; this is the slowest bench entry).
-    vocab = vocab.localCheckpoint()
-    merges = bpe_train_merges(vocab, n_merges)
-    uni = unigram_train(vocab, n_iters)
+    spark = vocab.sparkSession
+    wc = _collect_vocab(vocab)
+    merges = _bpe_merges_frame(spark, wc, n_merges)
+    uni = _unigram_vocab_frame(_unigram_counts_frame(spark, wc, n_iters))
     merges.orderBy("step").coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "bpe_merges")
     )

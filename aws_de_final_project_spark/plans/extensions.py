@@ -4172,8 +4172,9 @@ def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-lossless including full text content (the checksum covers
     every row's text, not just lengths). Result is materialized
     before the temp dir is removed. Scale posture: columnar +
-    splittable + predicate-pushdown-capable, same partitioned-sink
-    discipline as etl.write_partitioned."""
+    splittable + predicate-pushdown-capable, the same zstd columnar
+    sink the pipeline's processed zone gets from
+    streaming/ingest.incremental_csv_ingest."""
     import shutil
     import tempfile
 
@@ -4743,9 +4744,9 @@ def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus word-frequency vocabulary — the ordered merge table a
     GPT-2-style trainer ships, not just one iteration's candidates
     (which :func:`bpe_merge_candidates` keeps covering). The corpus
-    is aggregated ONCE and materialized; training then runs on
-    vocab-sized data with one argmax row per step crossing to the
-    driver. FULL DuckDB oracle: the identical 16 iterations unrolled
+    is aggregated ONCE on the cluster and the vocabulary collected
+    once; training then runs in memory on vocab-sized data. FULL
+    DuckDB oracle: the identical 16 iterations unrolled
     as chained CTEs with the identical boundary-encoded substring
     replace and the identical (freq DESC, lhs, rhs) tie-break."""
     from aws_de_final_project_spark.functions.text import (
@@ -4774,15 +4775,13 @@ def unigram_lm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-weighted substring counts (all single chars + top-48
     multi-char), then 2 EM rounds — E-step Viterbi segmentation of
     every vocabulary word under integer-quantized piece log-probs
-    (RUNTIME HOF folds, constant expression size; ties take the
-    smallest backpointer), M-step add-one re-count over the fixed
-    bank. Runs on the same materialized |vocab| word aggregate as
-    bpe_merge_table, and unlike BPE is fully relational: one
-    broadcast join + one aggregate per round, no driver argmax.
-    FULL DuckDB oracle: the identical seed/EM rounds unrolled as
-    chained CTEs with the DP positions as lateral column aliases and
-    the identical (floor(1e4*ln+0.5)) BIGINT quantization; Python
-    from-the-definition ground truth in tests/test_curation.py."""
+    (ties take the smallest backpointer), M-step add-one re-count
+    over the fixed bank. Trains in memory on the same collected
+    |vocab| word aggregate as bpe_merge_table. FULL DuckDB oracle:
+    the identical seed/EM rounds unrolled as chained CTEs with the DP
+    positions as lateral column aliases and the identical
+    (floor(1e4*ln+0.5)) BIGINT quantization; invariant checks in
+    tests/test_curation.py."""
     from aws_de_final_project_spark.functions.text import unigram_train
 
     t = load_tables(spark, sf_dir, ("documents",))

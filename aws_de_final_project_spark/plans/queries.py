@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_de_final_project_spark import etl
 from aws_de_final_project_spark.functions.numeric import epoch_us
 from aws_de_final_project_spark.functions.numeric import round_half_up as rnd
 
@@ -175,20 +176,17 @@ def etl_derive_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Glue job's transform chain (P1-P3 / F1-F3), mirroring
     ``Glue Script/process_crime_data.py:22-24``: parse a
     ``MM/dd/yyyy hh:mm:ss a`` string to a date, then derive month and
-    day-of-month. String input is produced by formatting the real
-    shipdate, same round-trip rationale as :func:`weekday_features`.
+    day-of-month — the pipeline's own :func:`etl.derive_date_parts`.
+    String input is produced by formatting the real shipdate, same
+    round-trip rationale as :func:`weekday_features`.
     """
     t = load_tables(spark, sf_dir, ("lineitem",))
     raw = t["lineitem"].select(
         "l_orderkey",
         "l_linenumber",
-        F.date_format("l_shipdate", "MM/dd/yyyy hh:mm:ss a").alias("date"),
+        F.date_format("l_shipdate", etl.CRIME_DATE_PATTERN).alias("date"),
     )
-    return (
-        raw.withColumn("new_date", F.to_date("date", "MM/dd/yyyy hh:mm:ss a"))
-        .withColumn("month", F.month("new_date"))
-        .withColumn("day", F.dayofmonth("new_date"))
-    )
+    return etl.derive_date_parts(raw)
 
 
 def filtered_agg_returns(spark: SparkSession, sf_dir: str) -> DataFrame:

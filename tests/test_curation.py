@@ -11,22 +11,6 @@ from aws_de_final_project_spark.functions import text as TX
 import pytest
 
 
-import contextlib
-
-
-@contextlib.contextmanager
-def _force_distributed_tokenizer(spark):
-    """Pin the DISTRIBUTED tokenizer-training path: the r13 adaptive
-    fold routes sub-threshold vocabularies through the Python twins,
-    which would make the twin-agreement tests below tautological.
-    Setting the threshold to 0 keeps them pinning the Spark loop."""
-    spark.conf.set("spark.graft.tokenizer.driverTrainMaxVocab", "0")
-    try:
-        yield
-    finally:
-        spark.conf.unset("spark.graft.tokenizer.driverTrainMaxVocab")
-
-
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string, lang string")
 
@@ -570,18 +554,11 @@ def test_bpe_train_merges_match_python_reference(spark):
 
     want = py_bpe(vocab, 12)
     df = spark.createDataFrame(list(vocab.items()), ["w", "c"])
-    with _force_distributed_tokenizer(spark):
-        got = [
-            (r.step, r.lhs, r.rhs, r.freq)
-            for r in bpe_train_merges(df, 12).orderBy("step").collect()
-        ]
+    got = [
+        (r.step, r.lhs, r.rhs, r.freq)
+        for r in bpe_train_merges(df, 12).orderBy("step").collect()
+    ]
     assert got == want, (got, want)
-    # the adaptive driver fold must produce the identical merge table
-    from aws_de_final_project_spark.functions.text import (
-        py_bpe_train_merges,
-    )
-
-    assert py_bpe_train_merges(vocab, 12) == want
 
 
 def test_bpe_encode_matches_python_reference(spark):
@@ -839,65 +816,74 @@ def test_repetition_signals_hand_computed(spark, tmp_path):
 
 
 def test_unigram_train_matches_python_reference(spark):
-    """Unigram-LM tokenizer training (r10 verdict item 6): the Spark
-    seed/EM/Viterbi pipeline reproduces the from-the-definition
-    Python reference EXACTLY — same bank, same integer-quantized
-    scores, same smallest-backpointer tie rule, same add-one M-step —
-    including >10-char words (truncated) and words forcing the
-    single-char fallback path."""
-    from aws_de_final_project_spark.functions.text import (
-        py_unigram_train,
-        unigram_train,
-    )
-
+    """Unigram-LM tokenizer training (r10 verdict item 6): the trained
+    (piece, count, logp) table carries the in-memory EM loop's bank
+    and counts, and its Spark-side logp quantization agrees with the
+    Python one — including >10-char words (truncated) and words
+    forcing the single-char fallback path. The trained values
+    themselves are checked independently by the DuckDB oracle
+    (unigram_lm_vocab)."""
     wc = {
         "the": 30, "then": 9, "there": 6, "cat": 12, "that": 8,
         "hat": 5, "hatter": 2, "internationalization": 3,
         "zq": 1, "data": 14, "database": 4, "dates": 6,
     }
     vocab = spark.createDataFrame(list(wc.items()), ["w", "c"])
-    with _force_distributed_tokenizer(spark):
-        got = {
-            r.piece: (r["count"], r.logp)
-            for r in unigram_train(vocab).collect()
-        }
-    want = py_unigram_train(wc)
+    train = TX.unigram_train(vocab)
+    assert train.dtypes == [
+        ("piece", "string"), ("count", "bigint"), ("logp", "double")
+    ]
+    got = {r.piece: (r["count"], r.logp) for r in train.collect()}
+    want = TX.py_unigram_trained_counts(wc)
+    want_s = TX._py_quantize_scores(want)
     assert set(got) == set(want)
-    for p, (c, lp) in want.items():
+    for p, c in want.items():
         assert got[p][0] == c, (p, got[p], c)
-        assert abs(got[p][1] - lp) < 2e-4, (p, got[p], lp)
+        assert abs(got[p][1] - want_s[p] / 10000.0) < 2e-4, (p, got[p])
     # whole-word high-frequency pieces must out-rank their parts
     assert got["the"][0] > got["th"][0]
     # every single char of the corpus is in the bank (fallback path)
-    chars = {ch for w in wc for ch in w[:10]}
-    assert chars <= set(got)
+    assert {ch for w in wc for ch in w[:10]} <= set(got)
+
+    counts = TX.unigram_trained_counts(vocab)
+    assert counts.dtypes == [("piece", "string"), ("c", "bigint")]
+    assert {r.piece: r.c for r in counts.collect()} == want
 
 
 def test_unigram_word_stats_matches_python_reference(spark):
     """The encoding side of the unigram model: per-word piece counts
     and quantized log-prob sums under the FINAL trained scores match
-    the Python reference exactly."""
-    from aws_de_final_project_spark.functions.text import (
-        py_unigram_word_stats,
-        unigram_word_stats,
-    )
-
+    the Python reference exactly, and agree with the word's pieces
+    summed under the trained table's logp."""
     wc = {
         "the": 30, "then": 9, "cat": 12, "that": 8, "hat": 5,
         "internationalization": 3, "data": 14, "dates": 6,
     }
     vocab = spark.createDataFrame(list(wc.items()), ["w", "c"])
-    with _force_distributed_tokenizer(spark):
-        got = {
-            r.w10: (r.n_pieces, r.sum_s)
-            for r in unigram_word_stats(vocab).collect()
-        }
-    want = py_unigram_word_stats(wc)
+    stats = TX.unigram_word_stats(vocab)
+    assert stats.dtypes == [
+        ("w10", "string"), ("n_pieces", "bigint"), ("sum_s", "bigint")
+    ]
+    got = {r.w10: (r.n_pieces, r.sum_s) for r in stats.collect()}
+    want = TX.py_unigram_word_stats(wc)
     assert got == want, {
         k: (got.get(k), want.get(k))
         for k in set(got) | set(want)
         if got.get(k) != want.get(k)
     }
+
+    score = {
+        r.piece: round(r.logp * 10000)
+        for r in TX.unigram_train(vocab).collect()
+    }
+    pieces = {
+        r.w10: list(r.pieces)
+        for r in TX.unigram_word_pieces(vocab).collect()
+    }
+    assert set(pieces) == set(got)
+    for w10, (n, s) in got.items():
+        ps = pieces[w10]
+        assert (n, s) == (len(ps), sum(score[p] for p in ps)), (w10, ps)
 
 
 def test_unigram_word_pieces_roundtrip_identity(spark):
@@ -906,61 +892,58 @@ def test_unigram_word_pieces_roundtrip_identity(spark):
     ''.join(reversed(pieces)) must rebuild the (truncated) word —
     including the truncation path (the 20-char word rebuilds its
     first 10 chars) and the single-char-fallback path ('zq')."""
-    from aws_de_final_project_spark.functions.text import (
-        unigram_word_pieces,
-    )
-
     wc = {
         "the": 30, "then": 9, "cat": 12, "that": 8, "hat": 5,
         "internationalization": 3, "zq": 1, "data": 14, "dates": 6,
     }
     vocab = spark.createDataFrame(list(wc.items()), ["w", "c"])
-    with _force_distributed_tokenizer(spark):
-        got = {
-            r.w10: list(r.pieces)
-            for r in unigram_word_pieces(vocab).collect()
-        }
+    pieces_df = TX.unigram_word_pieces(vocab)
+    assert pieces_df.dtypes == [
+        ("w10", "string"), ("pieces", "array<string>")
+    ]
+    got = {r.w10: list(r.pieces) for r in pieces_df.collect()}
     assert set(got) == {w[:10] for w in wc}
     for w10, pieces in got.items():
         assert "".join(reversed(pieces)) == w10, (w10, pieces)
 
 
-def test_tokenizer_adaptive_fold_matches_distributed(spark):
-    """The r13 scale-adaptive driver fold (vocab under the
-    driverTrainMaxVocab threshold trains via the Python twins) returns
-    ROW-IDENTICAL frames with IDENTICAL dtypes to the distributed
-    loop, for every tokenizer entry point — the equivalence that lets
-    the bench queries take the fold path."""
-    from aws_de_final_project_spark.functions.text import (
-        bpe_train_merges,
-        unigram_train,
-        unigram_trained_counts,
-        unigram_word_pieces,
-        unigram_word_stats,
+def test_tokenizer_training_collects_vocab_once(spark, tmp_path):
+    """Every trainer collects the (w, c) vocabulary in ONE Spark job
+    and trains in memory; export collects it once for both families
+    (the vocabulary's plan is evaluated exactly once)."""
+    sc = spark.sparkContext
+    wc = {
+        "the": 30, "then": 9, "cat": 12, "that": 8, "hat": 5,
+        "data": 14, "dates": 6, "ingest": 4,
+    }
+    scanned = sc.accumulator(0)
+
+    def bump(row):
+        scanned.add(1)
+        return row
+
+    vocab = spark.createDataFrame(
+        sc.parallelize(list(wc.items()), 2).map(bump), "w string, c long"
     )
 
-    wc = {
-        "the": 30, "then": 9, "there": 6, "cat": 12, "that": 8,
-        "hat": 5, "hatter": 2, "internationalization": 3,
-        "zq": 1, "data": 14, "database": 4, "dates": 6, "aaaa": 5,
-    }
-    vocab = spark.createDataFrame(list(wc.items()), ["w", "c"])
+    def jobs(group, fn, *args):
+        sc.setJobGroup(group, "tokenizer training")
+        try:
+            fn(*args)
+        finally:
+            sc.setJobGroup(f"{group}-done", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    def rows(d):
-        return sorted(tuple(str(x) for x in r) for r in d.collect())
-
-    for fn, args in [
-        (bpe_train_merges, (vocab, 12)),
-        (unigram_train, (vocab,)),
-        (unigram_trained_counts, (vocab,)),
-        (unigram_word_stats, (vocab,)),
-        (unigram_word_pieces, (vocab,)),
-    ]:
-        folded = fn(*args)
-        with _force_distributed_tokenizer(spark):
-            dist = fn(*args)
-            assert rows(folded) == rows(dist), fn.__name__
-            assert folded.dtypes == dist.dtypes, fn.__name__
+    for fn in (
+        TX.bpe_train_merges,
+        TX.unigram_train,
+        TX.unigram_word_stats,
+        TX.unigram_word_pieces,
+    ):
+        assert jobs(f"tok-{fn.__name__}", fn, vocab) == 1, fn.__name__
+    before = scanned.value
+    jobs("tok-export", TX.export_tokenizer_model, vocab, str(tmp_path))
+    assert scanned.value - before == len(wc)
 
 
 def test_bpe_boundary_roundtrip_and_symbol_count(spark):

@@ -1,12 +1,17 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for named queries to plans/r13/.
+"""Dump .explain("formatted") for named queries to plans/<subdir>/.
 
-Usage: python tools/capture_plans.py <suffix> [query ...]
-  suffix: e.g. "before" / "after" -> plans/r13/<query>_<suffix>.txt
+Usage: python tools/capture_plans.py <subdir> <suffix> [--final] [query ...]
+  subdir: output directory under plans/, e.g. "r15"
+  suffix: e.g. "before" / "after" -> plans/<subdir>/<query>_<suffix>.txt
+  --final: EXECUTE the query first (df.collect()) and dump the plan of
+           the same QueryExecution afterwards, so AdaptiveSparkPlan
+           prints isFinalPlan=true with ReusedExchange / AQEShuffleRead
+           nodes visible (pre-execution plans cannot show runtime
+           exchange reuse).
   no query args = the full headline list from bench.py.
 
-Plans only — nothing is executed, so this is safe to run while other
-work is on the box.
+Without --final nothing is executed (safe alongside other work).
 """
 
 from __future__ import annotations
@@ -22,8 +27,13 @@ import __spark_entry__ as entrymod  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    args = sys.argv[1:]
+    subdir, suffix = args.pop(0), args.pop(0)
+    final = False
+    if args and args[0] == "--final":
+        final = True
+        args.pop(0)
+    names = args
     if not names:
         import bench
 
@@ -32,7 +42,7 @@ def main() -> None:
     outdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r13",
+        subdir,
     )
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("capture_plans")
@@ -42,6 +52,11 @@ def main() -> None:
         fn = queries[name]
         try:
             df = fn(spark, sf_dir)
+            if final:
+                # execute THIS DataFrame's own QueryExecution (collect,
+                # not a derived agg) so the adaptive plan finalizes and
+                # the explain below shows the runtime plan
+                df.collect()
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
