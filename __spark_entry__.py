@@ -393,7 +393,7 @@ _MESSY_URL = """
 # expression yields canon_url given CTEs below.
 _URL_CANON_CTES = """
     defrag AS (
-        SELECT *, regexp_replace(url, '#.*$', '') AS _u FROM urls
+        SELECT *, regexp_replace(url, '(?s)#.*', '') AS _u FROM urls
     ),
     split1 AS (
         SELECT *,

@@ -13,6 +13,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from aws_de_final_project_spark.functions.numeric import round_half_up as rnd
+from aws_de_final_project_spark.operators.util import local_frame
 
 # Tiny per-language stopword lists for the heuristic language ID.
 # Deliberately short + fixed: the point is a deterministic, cheap,
@@ -491,11 +492,7 @@ def py_bpe_train_merges(
     return merges
 
 
-def _bpe_merges_frame(spark, word_counts: dict[str, int], n_merges: int):
-    return spark.createDataFrame(
-        py_bpe_train_merges(word_counts, n_merges),
-        "step int, lhs string, rhs string, freq long",
-    )
+BPE_MERGES_SCHEMA = "step int, lhs string, rhs string, freq long"
 
 
 def bpe_train_merges(vocab, n_merges: int = 16):
@@ -528,8 +525,10 @@ def bpe_train_merges(vocab, n_merges: int = 16):
     free, and the DuckDB oracle replays the identical 16 unrolled
     iterations with the identical replace.
     """
-    return _bpe_merges_frame(
-        vocab.sparkSession, _collect_vocab(vocab), n_merges
+    return local_frame(
+        vocab.sparkSession,
+        py_bpe_train_merges(_collect_vocab(vocab), n_merges),
+        BPE_MERGES_SCHEMA,
     )
 
 
@@ -700,27 +699,10 @@ UNIGRAM_MAX_WORD_LEN = 10
 UNIGRAM_NEG_INF = -(1 << 40)  # worse than any real path, sums safely
 
 
-def _unigram_scores(counts):
-    """(piece, c) -> (piece, s): s = floor(10000 * ln(c/T) + 0.5) as
-    BIGINT, T = sum(c) — the once-per-round quantization that keeps
-    the DP integer."""
-    tot = counts.agg(F.sum("c").alias("_t"))
-    return counts.crossJoin(F.broadcast(tot)).select(
-        "piece",
-        "c",
-        F.floor(
-            F.log(F.col("c").cast("double") / F.col("_t").cast("double"))
-            * 10000.0
-            + 0.5
-        )
-        .cast("long")
-        .alias("s"),
-    )
-
-
 def _py_quantize_scores(cnts: dict[str, int]) -> dict[str, int]:
-    """(piece, c) -> 4dp-quantized BIGINT log-probs, the once-per-
-    round quantization of :func:`_unigram_scores`."""
+    """(piece, c) -> 4dp-quantized BIGINT log-probs,
+    floor(10000 * ln(c/T) + 0.5) with T = sum(c): the once-per-round
+    quantization that keeps the DP integer."""
     import math
 
     t = sum(cnts.values())
@@ -840,24 +822,19 @@ def py_unigram_word_pieces(
     }
 
 
-def _unigram_counts_frame(spark, word_counts: dict[str, int], *train_args):
-    cnts = py_unigram_trained_counts(word_counts, *train_args)
-    return spark.createDataFrame(
-        sorted(cnts.items()), "piece string, c long"
-    )
-
-
-def _unigram_vocab_frame(counts):
-    """(piece, c) counts -> the (piece, count, logp) model table, logp
-    the 4dp-quantized log-prob of :func:`_unigram_scores`."""
-    return (
-        _unigram_scores(counts)
-        .select(
-            "piece",
-            F.col("c").alias("count"),
-            (F.col("s").cast("double") / 10000.0).alias("logp"),
-        )
-        .orderBy(F.desc("count"), "piece")
+def _unigram_vocab_frame(spark, cnts: dict[str, int]):
+    """Trained {piece: c} -> the (piece, count, logp) model table in
+    (count DESC, piece) order, logp the 4dp-quantized log-prob
+    floor(10000 * ln(c/T) + 0.5) / 10000 as a Spark expression with
+    T = sum(c) a literal (:func:`_py_quantize_scores` is its Python
+    twin)."""
+    rows = sorted(cnts.items(), key=lambda pc: (-pc[1], pc[0]))
+    t = float(sum(cnts.values()))
+    s = F.floor(
+        F.log(F.col("count").cast("double") / F.lit(t)) * 10000.0 + 0.5
+    ).cast("long")
+    return local_frame(spark, rows, "piece string, count long").select(
+        "piece", "count", (s.cast("double") / 10000.0).alias("logp")
     )
 
 
@@ -872,9 +849,12 @@ def unigram_trained_counts(
     (piece, c) counts frame, trained in memory on the collected
     vocabulary (:func:`py_unigram_trained_counts`; scale contract as
     in :func:`unigram_train`)."""
-    return _unigram_counts_frame(
-        vocab.sparkSession, _collect_vocab(vocab),
-        n_iters, max_piece_len, n_multi, max_word_len,
+    cnts = py_unigram_trained_counts(
+        _collect_vocab(vocab), n_iters, max_piece_len, n_multi,
+        max_word_len,
+    )
+    return local_frame(
+        vocab.sparkSession, sorted(cnts.items()), "piece string, c long"
     )
 
 
@@ -898,7 +878,8 @@ def unigram_word_stats(
         _collect_vocab(vocab), n_iters, max_piece_len, n_multi,
         max_word_len,
     )
-    return vocab.sparkSession.createDataFrame(
+    return local_frame(
+        vocab.sparkSession,
         [(w, n, s) for w, (n, s) in sorted(stats.items())],
         "w10 string, n_pieces long, sum_s long",
     )
@@ -926,9 +907,11 @@ def unigram_train(
     So |vocab| is bounded by driver memory — the posture of the
     SentencePiece trainer."""
     return _unigram_vocab_frame(
-        unigram_trained_counts(
-            vocab, n_iters, max_piece_len, n_multi, max_word_len
-        )
+        vocab.sparkSession,
+        py_unigram_trained_counts(
+            _collect_vocab(vocab), n_iters, max_piece_len, n_multi,
+            max_word_len,
+        ),
     )
 
 
@@ -952,8 +935,10 @@ def unigram_word_pieces(
         _collect_vocab(vocab), n_iters, max_piece_len, n_multi,
         max_word_len,
     )
-    return vocab.sparkSession.createDataFrame(
-        sorted(pieces.items()), "w10 string, pieces array<string>"
+    return local_frame(
+        vocab.sparkSession,
+        sorted(pieces.items()),
+        "w10 string, pieces array<string>",
     )
 
 
@@ -985,21 +970,17 @@ def bpe_boundary_decode(enc: Column) -> Column:
     )
 
 
-def _portable_xor_checksum(df, render: Column) -> tuple[int, int]:
-    """(n_rows, order-insensitive content checksum) over a row
-    rendering: XOR of the 60-bit ints from each row's md5 prefix —
-    the engine-portable fingerprint discipline (md5 + conv on the
-    Spark side, '0x'||substr cast in DuckDB oracles). One aggregate,
-    two scalars to the driver."""
-    r = df.select(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.bit_xor(
-            F.conv(F.substring(F.md5(render), 1, 15), 16, 10).cast(
-                "long"
-            )
-        ).alias("x"),
-    ).first()
-    return int(r.n), int(r.x if r.x is not None else 0)
+def _xor_checksum(renderings: list[str]) -> tuple[int, int]:
+    """(n_rows, order-insensitive content checksum) over row
+    renderings: XOR of the 60-bit ints from each row's md5 prefix —
+    the engine-portable fingerprint discipline (md5 + conv in Spark,
+    '0x'||substr cast in the DuckDB oracles)."""
+    import hashlib
+
+    x = 0
+    for r in renderings:
+        x ^= int(hashlib.md5(r.encode("utf-8")).hexdigest()[:15], 16)
+    return len(renderings), x
 
 
 def export_tokenizer_model(
@@ -1022,40 +1003,32 @@ def export_tokenizer_model(
     Checksums render only the INTEGER/STRING fields (merges:
     step|lhs|rhs|freq; vocab: piece|count) — logp is a pure function
     of the counts, so including a float rendering would add
-    cross-engine drift risk without pinning anything extra.
+    cross-engine drift risk without pinning anything extra. They are
+    computed in Python on the driver, over the same rows each artifact
+    is written from (the DuckDB oracle replays them independently).
     Determinism (same corpus -> byte-identical manifest) is pinned in
     tests/test_curation.py::test_export_tokenizer_model_deterministic.
 
     The vocabulary is collected ONCE and both families train from
     that one dict, so the corpus-sized aggregate upstream of
-    ``vocab`` runs once (scale contract as in :func:`bpe_train_merges`)."""
+    ``vocab`` runs once (scale contract as in :func:`bpe_train_merges`);
+    each artifact is then one write of a pre-sorted local frame — three
+    Spark jobs in all."""
     import json
     import os
 
     spark = vocab.sparkSession
     wc = _collect_vocab(vocab)
-    merges = _bpe_merges_frame(spark, wc, n_merges)
-    uni = _unigram_vocab_frame(_unigram_counts_frame(spark, wc, n_iters))
-    merges.orderBy("step").coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "bpe_merges")
-    )
-    uni.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "unigram_vocab")
-    )
-    m_n, m_x = _portable_xor_checksum(
-        merges,
-        F.concat_ws(
-            "|",
-            F.col("step").cast("string"),
-            "lhs",
-            "rhs",
-            F.col("freq").cast("string"),
-        ),
-    )
-    u_n, u_x = _portable_xor_checksum(
-        uni,
-        F.concat_ws("|", "piece", F.col("count").cast("string")),
-    )
+    merges = py_bpe_train_merges(wc, n_merges)
+    cnts = py_unigram_trained_counts(wc, n_iters)
+    local_frame(spark, merges, BPE_MERGES_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(out_dir, "bpe_merges"))
+    _unigram_vocab_frame(spark, cnts).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(out_dir, "unigram_vocab"))
+    m_n, m_x = _xor_checksum(["|".join(map(str, m)) for m in merges])
+    u_n, u_x = _xor_checksum([f"{p}|{c}" for p, c in cnts.items()])
     manifest = {
         "format_version": 1,
         "n_merges": n_merges,

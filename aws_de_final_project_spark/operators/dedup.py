@@ -56,6 +56,7 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 from aws_de_final_project_spark.operators.util import cut as _cut
+from aws_de_final_project_spark.operators.util import local_frame
 from aws_de_final_project_spark.operators.util import release as _release
 from aws_de_final_project_spark.operators.util import spread as _spread
 
@@ -665,8 +666,9 @@ def connected_components(
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     labels = sorted((n, find(n)) for n in parent)
-    spark = pairs.sparkSession
-    return spark.createDataFrame(labels, "node long, component long")
+    return local_frame(
+        pairs.sparkSession, labels, "node long, component long"
+    )
 
 
 def connected_components_iters(

@@ -37,6 +37,7 @@ from aws_de_final_project_spark.operators.similarity import (
     _resolve_impl,
 )
 from aws_de_final_project_spark.operators.util import cut as _cut
+from aws_de_final_project_spark.operators.util import local_frame
 from aws_de_final_project_spark.operators.util import spread as _spread
 
 
@@ -316,8 +317,10 @@ def pca_project(
             cov.collect(), dim, n_components, n_iter
         )
         comps = [
-            spark.createDataFrame(
-                [(i + 1, float(v[i])) for i in range(dim)], "i int, v double"
+            local_frame(
+                spark,
+                [(i + 1, float(v[i])) for i in range(dim)],
+                "i int, v double",
             )
             for v in vecs
         ]

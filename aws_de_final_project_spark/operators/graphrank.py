@@ -22,9 +22,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, LongType, StructType
 
 from aws_de_final_project_spark.functions.numeric import round_half_up as rnd
 from aws_de_final_project_spark.operators.util import cut as _cut
+from aws_de_final_project_spark.operators.util import local_frame
 
 
 def _driver_pagerank(
@@ -121,8 +123,15 @@ def pagerank(
         node_ids = [r[0] for r in nodes.select(node_col).collect()]
         edge_rows = [(r["_src"], r["_dst"], r["_w"]) for r in e.collect()]
         pr = _driver_pagerank(node_ids, edge_rows, damping, n_iter)
-        return spark.createDataFrame(
-            [(v, float(p)) for v, p in pr.items()], [node_col, "pr"]
+        # integral node ids come back as Python ints: bigint, as
+        # schema inference over these rows typed them
+        key_type = nodes.schema[node_col].dataType
+        if isinstance(key_type, IntegralType):
+            key_type = LongType()
+        return local_frame(
+            spark,
+            [(v, float(p)) for v, p in pr.items()],
+            StructType().add(node_col, key_type).add("pr", "double"),
         )
     outw = e.groupBy("_src").agg(F.sum("_w").alias("_tw"))
     en = _cut(

@@ -2,7 +2,46 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from datetime import timezone
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType, TimestampType
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: str | StructType
+) -> DataFrame:
+    """Driver-held rows -> DataFrame. The rule: driver rows become a
+    frame ONLY through this helper (tests/test_util.py greps for it).
+
+    ``spark.createDataFrame(list)`` ships the rows as a pickled RDD
+    (``Scan ExistingRDD``): every job over the frame starts Python
+    workers to re-read them, and the planner sees no size. Here the
+    rows go in as one ``pyarrow.Table`` typed from ``schema`` (a DDL
+    string or a ``StructType``); under the default
+    ``spark.sql.execution.arrow.localRelationThreshold`` that is a
+    JVM-side ``LocalRelation`` — a ``LocalTableScan`` with exact size
+    statistics that projections fold into, and no Python worker. Row
+    order is kept, so a pre-sorted frame needs no ``orderBy``.
+
+    Types, nullability and values equal the list path's for the same
+    schema. Naive ``datetime`` values of a TIMESTAMP (LTZ) field are
+    process-local wall clock there, so they are localized here before
+    Arrow (which would read them as UTC)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for f, af, col in zip(schema.fields, arrow_schema, cols):
+        if isinstance(f.dataType, TimestampType):
+            col = [v and v.astimezone(timezone.utc) for v in col]
+        arrays.append(pa.array(col, type=af.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def cut(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:

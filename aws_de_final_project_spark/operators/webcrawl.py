@@ -17,7 +17,8 @@ Canonical form (documented, deliberately minimal — each rule is
 idempotent so canon(canon(u)) == canon(u), property-pinned in
 tests/test_webcrawl.py):
 
-1. strip the fragment (``#...``);
+1. strip the fragment (``#`` to the end of the string, line breaks
+   included);
 2. lowercase the scheme and authority (host:port) — path/query case
    is preserved (paths are case-sensitive per RFC 3986);
 3. drop default ports (``http://...:80``, ``https://...:443``);
@@ -56,16 +57,19 @@ def canonicalize_url(url: Column | str) -> Column:
     through mostly unchanged (no scheme -> rules 2-4 find nothing to
     rewrite, which is the safe behavior for a cleaning pass)."""
     u = F.col(url) if isinstance(url, str) else url
+    # Line breaks: Java's '.' stops at a line terminator and its '$'
+    # also matches before a final one, so the rules use (?s) and \z —
+    # the RE2 (DuckDB) semantics of '.*$'.
     # 1. fragment
-    u = F.regexp_replace(u, r"#.*$", "")
+    u = F.regexp_replace(u, r"(?s)#.*", "")
     # split: authority = scheme://host[:port], rest = /path?query
     auth = F.regexp_extract(u, r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*)", 1)
     rest = F.substring(u, F.length(auth) + 1, F.lit(1 << 30))
     # 2. lowercase scheme+authority
     auth = F.lower(auth)
     # 3. default ports
-    auth = F.regexp_replace(auth, r"^(http://[^/:?]+):80$", "$1")
-    auth = F.regexp_replace(auth, r"^(https://[^/:?]+):443$", "$1")
+    auth = F.regexp_replace(auth, r"^(http://[^/:?]+):80\z", "$1")
+    auth = F.regexp_replace(auth, r"^(https://[^/:?]+):443\z", "$1")
     # 4. every leading www. label in one anchored match (idempotence)
     auth = F.regexp_replace(auth, r"^([a-z][a-z0-9+.-]*://)(www\.)+", "$1")
     path = F.regexp_extract(rest, r"^([^?]*)", 1)
@@ -74,7 +78,7 @@ def canonicalize_url(url: Column | str) -> Column:
         F.substring(rest, F.length(path) + 2, F.lit(1 << 30)),
     ).otherwise(F.lit(""))
     # 5. trailing slashes
-    path = F.regexp_replace(path, r"/+$", "")
+    path = F.regexp_replace(path, r"/+\z", "")
     # 6. drop tracking params, sort the rest bytewise
     kept = F.array_sort(
         F.filter(
@@ -114,7 +118,7 @@ def url_host_direct(url: Column | str) -> Column:
     and everything path/query-side are already cut by the host char
     class. Equality is pinned exhaustively against the composed form
     in tests/test_webcrawl.py (quote styles, ports, fragments,
-    IPv6-ish brackets, schemeless, empty-host)."""
+    IPv6-ish brackets, schemeless, empty-host, line breaks)."""
     u = F.col(url) if isinstance(url, str) else url
     host = F.lower(
         F.regexp_extract(

@@ -26,7 +26,7 @@ from aws_de_final_project_spark.operators import (
     similarity,
     spatial,
 )
-from aws_de_final_project_spark.operators.util import spread
+from aws_de_final_project_spark.operators.util import local_frame, spread
 from aws_de_final_project_spark.sources.registry import embedding_dim, load_tables
 
 
@@ -1866,7 +1866,8 @@ def band_join_order_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     legitimate small-side case. Tiers are half-open [lo, hi) so
     boundary prices land in exactly one tier."""
     t = load_tables(spark, sf_dir, ("orders",))
-    tiers = spark.createDataFrame(
+    tiers = local_frame(
+        spark,
         [
             ("bronze", 0.0, 50_000.0),
             ("silver", 50_000.0, 150_000.0),
@@ -2024,7 +2025,7 @@ def dedup_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus."""
     t = load_tables(spark, sf_dir, ("documents",))
     docs = t["documents"].select("doc_id", "text")
-    state = spark.createDataFrame([], "fp string, keeper_id long")
+    state = local_frame(spark, [], "fp string, keeper_id long")
     kept_all = None
     for i in range(3):
         batch = docs.filter(F.col("doc_id") % 3 == i)
@@ -3133,7 +3134,7 @@ def warc_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id")
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("doc_id")
+        return local_frame(spark, rows, out.schema).orderBy("doc_id")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -3295,7 +3296,7 @@ def streaming_kmv_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ) AS rn FROM {qname}) WHERE rn = 1"""
         )
         rows = final.collect()
-        return spark.createDataFrame(rows, final.schema).orderBy(
+        return local_frame(spark, rows, final.schema).orderBy(
             "event_type"
         )
     finally:
@@ -4019,7 +4020,7 @@ def jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang")
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("lang")
+        return local_frame(spark, rows, out.schema).orderBy("lang")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -4203,7 +4204,7 @@ def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang")
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("lang")
+        return local_frame(spark, rows, out.schema).orderBy("lang")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -4444,7 +4445,7 @@ def streaming_drift_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "psi",
         )
         rows = m.collect()
-        return spark.createDataFrame(rows, m.schema).orderBy(
+        return local_frame(spark, rows, m.schema).orderBy(
             "batch_id", "grp"
         )
     finally:
@@ -4512,8 +4513,8 @@ def robots_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, ("documents",))
     docs = t["documents"].select("doc_id", _messy_url().alias("url"))
-    rules = spark.createDataFrame(
-        list(ROBOTS_RULES), ["host", "prefix", "allow"]
+    rules = local_frame(
+        spark, ROBOTS_RULES, "host string, prefix string, allow boolean"
     )
     out = WC.robots_disallow_filter(docs, rules, "url")
     return out.select(
@@ -4544,8 +4545,10 @@ def robots_wildcard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, ("documents",))
     docs = t["documents"].select("doc_id", _messy_url().alias("url"))
-    rules = spark.createDataFrame(
-        list(ROBOTS_WILDCARD_RULES), ["host", "prefix", "allow", "agent"]
+    rules = local_frame(
+        spark,
+        ROBOTS_WILDCARD_RULES,
+        "host string, prefix string, allow boolean, agent string",
     )
     out = WC.robots_disallow_filter(docs, rules, "url", agent="SampleBot")
     return out.select(
@@ -5301,7 +5304,8 @@ def tokenizer_export_manifest(
         manifest = export_tokenizer_model(vocab, out_dir)
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (a["artifact"], a["n_rows"], a["checksum_xor"])
             for a in manifest["artifacts"]
@@ -5479,7 +5483,7 @@ def avro_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang")
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("lang")
+        return local_frame(spark, rows, out.schema).orderBy("lang")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -6462,7 +6466,8 @@ def streaming_chat_validation_replay(
         final = iso.sql(f"SELECT * FROM {qname}").collect()
         assert len(final) == 1
         row = final[0].asDict()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(k, int(v), int(v) == 0) for k, v in sorted(row.items())],
             "check_name string, violations long, passed boolean",
         ).orderBy("check_name")

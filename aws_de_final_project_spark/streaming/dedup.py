@@ -26,6 +26,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_de_final_project_spark.operators.util import local_frame
+
 
 def dedup_stream(
     events: DataFrame,
@@ -90,7 +92,7 @@ def content_dedup_registry_sink(
         if os.path.exists(registry_dir):
             state = spark.read.parquet(registry_dir)
         else:
-            state = spark.createDataFrame([], "fp string, keeper_id long")
+            state = local_frame(spark, [], "fp string, keeper_id long")
         joined = batch_first.join(
             state.withColumnRenamed("fp", "_sfp"),
             batch_first["fp"] == F.col("_sfp"),

@@ -910,7 +910,8 @@ def test_unigram_word_pieces_roundtrip_identity(spark):
 def test_tokenizer_training_collects_vocab_once(spark, tmp_path):
     """Every trainer collects the (w, c) vocabulary in ONE Spark job
     and trains in memory; export collects it once for both families
-    (the vocabulary's plan is evaluated exactly once)."""
+    (the vocabulary's plan is evaluated exactly once) and then runs
+    only its two artifact writes."""
     sc = spark.sparkContext
     wc = {
         "the": 30, "then": 9, "cat": 12, "that": 8, "hat": 5,
@@ -942,7 +943,11 @@ def test_tokenizer_training_collects_vocab_once(spark, tmp_path):
     ):
         assert jobs(f"tok-{fn.__name__}", fn, vocab) == 1, fn.__name__
     before = scanned.value
-    jobs("tok-export", TX.export_tokenizer_model, vocab, str(tmp_path))
+    # one vocabulary collect + one write per artifact; the manifest's
+    # checksums run no job
+    assert jobs(
+        "tok-export", TX.export_tokenizer_model, vocab, str(tmp_path)
+    ) == 3
     assert scanned.value - before == len(wc)
 
 
@@ -977,12 +982,16 @@ def test_bpe_boundary_roundtrip_and_symbol_count(spark):
 
 def test_export_tokenizer_model_deterministic(spark, tmp_path):
     """Exporting twice from the same vocabulary yields byte-identical
-    manifests, parquet artifacts that re-read to the manifest row
-    counts, and checksums that CHANGE when the corpus changes."""
-    import json
-
+    manifests; each parquet artifact re-reads row for row, in order,
+    to the in-memory trainer's output (logp the 4dp quantization),
+    and the manifest's driver-side checksums equal the Spark md5/XOR
+    fold over the written rows; checksums CHANGE when the corpus
+    changes."""
     from aws_de_final_project_spark.functions.text import (
+        _py_quantize_scores,
         export_tokenizer_model,
+        py_bpe_train_merges,
+        py_unigram_trained_counts,
     )
 
     wc = {
@@ -996,9 +1005,41 @@ def test_export_tokenizer_model_deterministic(spark, tmp_path):
     b1 = open(f"{d1}/_manifest.json", "rb").read()
     b2 = open(f"{d2}/_manifest.json", "rb").read()
     assert b1 == b2 and m1 == m2
+
+    merges = spark.read.parquet(f"{d1}/bpe_merges")
+    assert merges.dtypes == [
+        ("step", "int"), ("lhs", "string"), ("rhs", "string"),
+        ("freq", "bigint"),
+    ]
+    assert [tuple(r) for r in merges.collect()] == py_bpe_train_merges(wc)
+    uni = spark.read.parquet(f"{d1}/unigram_vocab")
+    assert uni.dtypes == [
+        ("piece", "string"), ("count", "bigint"), ("logp", "double")
+    ]
+    cnts = py_unigram_trained_counts(wc)
+    s = _py_quantize_scores(cnts)
+    assert [tuple(r) for r in uni.collect()] == [
+        (p, c, s[p] / 10000.0)
+        for p, c in sorted(cnts.items(), key=lambda t: (-t[1], t[0]))
+    ]
+
+    def spark_xor(df, *cols):
+        r = df.select(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.conv(F.substring(F.md5(F.concat_ws(
+                "|", *(F.col(c).cast("string") for c in cols)
+            )), 1, 15), 16, 10).cast("long")).alias("x"),
+        ).first()
+        return {"n_rows": r.n, "checksum_xor": r.x}
+
+    want = {
+        "bpe_merges": spark_xor(merges, "step", "lhs", "rhs", "freq"),
+        "unigram_vocab": spark_xor(uni, "piece", "count"),
+    }
     for a in m1["artifacts"]:
-        df = spark.read.parquet(f"{d1}/{a['artifact']}")
-        assert df.count() == a["n_rows"], a
+        assert {k: a[k] for k in ("n_rows", "checksum_xor")} == want[
+            a["artifact"]
+        ], a
     vocab2 = spark.createDataFrame(
         [(w, c + (w == "cat")) for w, c in wc.items()], ["w", "c"]
     )

@@ -216,3 +216,21 @@ def test_host_pagerank_blocklisted_spam_ranks_low(spark):
     # sink (c's only out-edge) legitimately collects c's mass
     assert pr["c.com"] > pr["a.com"] and pr["c.com"] > pr["b.com"]
     assert pr["d.com"] > spam  # dangling sink still collects rank
+
+
+@pytest.mark.parametrize(
+    "key,want", [("int", "bigint"), ("bigint", "bigint"), ("string", "string")]
+)
+def test_driver_path_key_dtypes(spark, key, want):
+    """The driver path's (node, pr) frame keeps the types schema
+    inference gave it: Python-int ids are bigint, strings stay
+    strings."""
+    nodes = spark.createDataFrame([(1,), (2,)], "id long").selectExpr(
+        f"CAST(id AS {key}) AS id"
+    )
+    edges = _df_edges(spark, [(1, 2, 1.0), (2, 1, 1.0)]).selectExpr(
+        f"CAST(src AS {key}) AS src", f"CAST(dst AS {key}) AS dst", "w"
+    )
+    out = pagerank(nodes, edges, n_iter=3, iter_impl="driver")
+    assert out.dtypes == [("id", want), ("pr", "double")]
+    assert sorted(r.pr for r in out.collect()) == pytest.approx([0.5, 0.5])

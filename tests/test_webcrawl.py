@@ -28,6 +28,13 @@ CASES = [
     ("https://example.com/?", "https://example.com"),
     ("https://sub.domain.example.co/x?z=1&y=2&z=0",
      "https://sub.domain.example.co/x?y=2&z=0&z=1"),
+    # line breaks, as the DuckDB twin (RE2) reads '#.*$' and '...$':
+    # the fragment runs to the end of the string, and an anchored rule
+    # does not match before a final line break
+    ("http://a.com#f\nx", "http://a.com"),
+    ("http://a.com#f\n", "http://a.com"),
+    ("http://a.com:80\n", "http://a.com:80\n"),
+    ("http://a.com/x/\n", "http://a.com/x/\n"),
 ]
 
 
@@ -1419,7 +1426,7 @@ def test_url_host_direct_equals_canonicalize_chain(spark):
     after the path), default and non-default ports on both schemes,
     stacked/mixed-case www labels, uppercase scheme+host, IPv6-ish
     bracket hosts, schemeless strings, empty host, userinfo-looking
-    strings, tracking params, and plain garbage."""
+    strings, tracking params, line breaks, and plain garbage."""
     from pyspark.sql import functions as F
 
     cases = [
@@ -1447,6 +1454,14 @@ def test_url_host_direct_equals_canonicalize_chain(spark):
         "    ",
         "javascript:void(0)",
         "http://UPPER.www.Lower.org/p",
+        # line breaks: Java regex '.' stops at them and '$' matches
+        # before a final one
+        "http://a.com#f\nx",
+        "http://a.com#f\n",
+        "http://a.com#f\r\nx",
+        "http://a.com:80\n",
+        "https://www.a.com:443\u2028",
+        "http://a.\ncom/x#f",
     ]
     df = spark.createDataFrame([(c,) for c in cases], "u string")
     got = df.select(
