@@ -28,6 +28,7 @@ from aws_de_final_project_spark.operators import (
 )
 from aws_de_final_project_spark.operators.util import local_frame, spread
 from aws_de_final_project_spark.sources.registry import embedding_dim, load_tables
+from aws_de_final_project_spark.streaming import replay as RP
 
 
 def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3221,19 +3222,16 @@ def streaming_kmv_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries() entry whose value IS a stream-fold result, so the
     driver's oracle gate covers the stateful streaming machinery, not
     just batch plans. Events are split by event_id % 3 into three
-    time-ordered files, maxFilesPerTrigger=1 + availableNow makes
-    them three micro-batches, and the final per-key state (max
-    n_batches) is returned. Because the KMV merge is associative, the
-    result equals the batch sketch of the full history — which is
-    exactly what the DuckDB oracle computes; the fold order is proven
-    irrelevant by the oracle match itself. Result is materialized
-    (tiny: one row per event_type) before the temp replay dir is
-    removed."""
-    import os
-    import shutil
+    slices, replayed as three micro-batches by streaming/replay.py,
+    and the final per-key state (max n_batches) is returned. Because
+    the KMV merge is associative, the result equals the batch sketch
+    of the full history — which is exactly what the DuckDB oracle
+    computes; the fold order is proven irrelevant by the oracle match
+    itself. Result is materialized (tiny: one row per event_type)
+    before the temp replay dir is removed."""
     import tempfile
-    import time
-    import uuid
+
+    from pyspark.sql.window import Window
 
     from aws_de_final_project_spark.streaming.sketch import (
         kmv_distinct_stream,
@@ -3241,66 +3239,26 @@ def streaming_kmv_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, ("events",))
     events = t["events"].select("event_type", "user_id", "event_id")
-    tmp = tempfile.mkdtemp(prefix="kmv_replay_")
-    try:
-        # ONE pass for all three slices (slice column + hash-
-        # repartition -> one file per slice dir) instead of three
-        # filter-writes that each rescan the table
-        part_dir = os.path.join(tmp, "_parts")
-        (
-            events.withColumn(
-                "_slice", (F.col("event_id") % 3).cast("int")
-            )
-            .repartition("_slice")
-            .write.mode("overwrite")
-            .partitionBy("_slice")
-            .parquet(part_dir)
+    with tempfile.TemporaryDirectory(prefix="kmv_replay_") as tmp:
+        RP.land_slices(
+            events.withColumn("_slice", (F.col("event_id") % 3).cast("int")),
+            "_slice",
+            tmp,
         )
-        for i in range(3):
-            d = os.path.join(part_dir, f"_slice={i}")
-            f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
-            dst = os.path.join(tmp, f"f{i}.parquet")
-            os.rename(os.path.join(d, f), dst)
-            now = time.time()
-            os.utime(dst, (now + i * 10, now + i * 10))
-        shutil.rmtree(part_dir)
-        # the stateful exchange follows the SESSION's shuffle
-        # partition count; a driver session at the 200 default spends
-        # the whole replay scheduling ~600 empty tasks for a handful
-        # of keys. Run the replay on an ISOLATED session (same
-        # SparkContext, private SQLConf + catalog) so the small pin
-        # can never leak into queries running concurrently on the
-        # caller's session (ADVICE r7) — a production stream sizes
-        # this to its key cardinality at startup instead.
-        iso = spark.newSession()
-        iso.conf.set("spark.sql.shuffle.partitions", "2")
-        stream = (
-            iso.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+        sink = RP.to_memory(
+            kmv_distinct_stream(RP.read_slices(spark, events.schema, tmp)),
+            "update",
         )
-        qname = f"kmv_replay_{uuid.uuid4().hex[:8]}"
-        q = (
-            kmv_distinct_stream(stream)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+        last = Window.partitionBy("event_type").orderBy(
+            F.col("n_batches").desc()
         )
-        q.awaitTermination()
-        final = iso.sql(
-            f"""SELECT event_type, n_in_sketch, est_users FROM (
-                    SELECT *, row_number() OVER (
-                        PARTITION BY event_type ORDER BY n_batches DESC
-                    ) AS rn FROM {qname}) WHERE rn = 1"""
+        final = (
+            sink.withColumn("rn", F.row_number().over(last))
+            .filter(F.col("rn") == 1)
+            .select("event_type", "n_in_sketch", "est_users")
         )
         rows = final.collect()
-        return local_frame(spark, rows, final.schema).orderBy(
-            "event_type"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return local_frame(spark, rows, final.schema).orderBy("event_type")
 
 
 def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3331,16 +3289,11 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 XOR over the event_id set straight off the events table — a
     green row proves every duplicate was dropped AND nothing else
     was (duplicates are identical full rows, so the id set is the
-    whole contract). Runs on an isolated newSession; the memory-sink
+    whole contract). Replayed by streaming/replay.py; the memory-sink
     aggregate is returned directly (same pattern as the session
     replay)."""
-    import os
-    import shutil
     import tempfile
-    import time
-    import uuid
 
-    from aws_de_final_project_spark.functions.numeric import epoch_us
     from aws_de_final_project_spark.streaming.dedup import dedup_stream
 
     t = load_tables(spark, sf_dir, ("events",))
@@ -3365,67 +3318,34 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup7 = events.filter(F.col("event_id") % 7 == 0).withColumn(
         "_slice", base_slice
     )
-    replay = originals.unionByName(dup3).unionByName(dup7)
-    tmp = tempfile.mkdtemp(prefix="dedup_replay_")
-    try:
-        part_dir = os.path.join(tmp, "_parts")
-        (
-            replay.repartition("_slice")
-            .write.mode("overwrite")
-            .partitionBy("_slice")
-            .parquet(part_dir)
+    with tempfile.TemporaryDirectory(prefix="dedup_replay_") as tmp:
+        RP.land_slices(
+            originals.unionByName(dup3).unionByName(dup7), "_slice", tmp
         )
-        for i in range(2):
-            d = os.path.join(part_dir, f"_slice={i}")
-            f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
-            dst = os.path.join(tmp, f"f{i}.parquet")
-            os.rename(os.path.join(d, f), dst)
-            now = time.time()
-            os.utime(dst, (now + i * 10, now + i * 10))
-        shutil.rmtree(part_dir)
-        iso = spark.newSession()
-        iso.conf.set("spark.sql.shuffle.partitions", "2")
-        iso.conf.set("spark.sql.session.timeZone", "UTC")
-        stream = (
-            iso.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
-        )
-        qname = f"dedup_replay_{uuid.uuid4().hex[:8]}"
-        q = (
+        sink = RP.to_memory(
             dedup_stream(
-                stream,
+                RP.read_slices(spark, events.schema, tmp),
                 keys=("event_id",),
                 watermark=f"{wm_seconds} seconds",
-            )
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # integer-keyed checksum only: double->string serialization
-        # differs across engines, and identical-row duplicates make
-        # the id set the whole contract
-        sig = F.conv(
-            F.substring(
-                F.md5(F.col("event_id").cast("string")), 1, 15
             ),
-            16,
-            10,
-        ).cast("bigint")
-        return (
-            iso.table(qname)
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_events"),
-                F.bit_xor(sig).alias("id_xor"),
-            )
-            .orderBy("event_type")
+            "append",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # integer-keyed checksum only: double->string serialization
+    # differs across engines, and identical-row duplicates make
+    # the id set the whole contract
+    sig = F.conv(
+        F.substring(F.md5(F.col("event_id").cast("string")), 1, 15),
+        16,
+        10,
+    ).cast("bigint")
+    return (
+        sink.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.bit_xor(sig).alias("id_xor"),
+        )
+        .orderBy("event_type")
+    )
 
 
 def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4373,16 +4293,15 @@ def streaming_drift_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Replay: days 1-10 of events freeze the reference histogram
     (32 bins over [0, 640), the batch drift entry's geometry); days
-    11-20 and 21+ become two micro-batch files. Each batch's
-    (grp, n_ref, n_cur, psi) row lands in a per-batch metrics dir.
+    11-20 and 21+ become two slices, replayed as two micro-batches by
+    streaming/replay.py. Each batch's (grp, n_ref, n_cur, psi) row
+    lands in a per-batch metrics dir.
     DATE slicing (not percentiles) keeps the split trivially
     tz-independent and lets the DuckDB oracle recompute BOTH batches'
     PSI exactly — a green row proves the streamed metric equals the
     batch formula per micro-batch, eps floors included."""
     import os
-    import shutil
     import tempfile
-    import time
 
     from aws_de_final_project_spark.streaming.dq import (
         drift_monitor_stream,
@@ -4394,8 +4313,7 @@ def streaming_drift_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c1 = F.lit("2024-01-11").cast("date")
     c2 = F.lit("2024-01-21").cast("date")
-    tmp = tempfile.mkdtemp(prefix="drift_replay_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="drift_replay_") as tmp:
         ref_path = os.path.join(tmp, "ref")
         reference_histogram(
             ev.filter(F.col("_d") < c1).select("event_type", "value"),
@@ -4407,25 +4325,18 @@ def streaming_drift_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             ref_path,
         )
         src = os.path.join(tmp, "src")
-        slices = [
-            ev.filter((F.col("_d") >= c1) & (F.col("_d") < c2)),
-            ev.filter(F.col("_d") >= c2),
-        ]
-        for i, sl in enumerate(slices):
-            d = os.path.join(src, f"b{i}")
-            sl.select("event_type", "value").coalesce(1).write.parquet(d)
-            for f in os.listdir(d):
-                if f.endswith(".parquet"):
-                    now = time.time()
-                    os.utime(
-                        os.path.join(d, f), (now + i * 10, now + i * 10)
-                    )
-        iso = spark.newSession()
-        iso.conf.set("spark.sql.shuffle.partitions", "2")
-        iso.conf.set("spark.sql.session.timeZone", "UTC")
+        RP.land_slices(
+            ev.filter(F.col("_d") >= c1).select(
+                "event_type",
+                "value",
+                F.when(F.col("_d") < c2, 0).otherwise(1).alias("_slice"),
+            ),
+            "_slice",
+            src,
+        )
         q = drift_monitor_stream(
-            iso,
-            src + "/*",
+            RP.isolated_session(spark),
+            src,
             "event_type string, value double",
             ref_path,
             os.path.join(tmp, "metrics"),
@@ -4445,11 +4356,7 @@ def streaming_drift_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "psi",
         )
         rows = m.collect()
-        return local_frame(spark, rows, m.schema).orderBy(
-            "batch_id", "grp"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return local_frame(spark, rows, m.schema).orderBy("batch_id", "grp")
 
 
 def zipf_fit_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5010,33 +4917,30 @@ def streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-time median (strictly time-ordered slices, so with a
     0-second watermark nothing is ever late-dropped and the stream
     must equal batch), plus two far-future SENTINEL slices for a
-    synthetic user -1 (max ts + 2 h / + 4 h). maxFilesPerTrigger=1 +
-    availableNow makes four micro-batches; TWO sentinels because the
-    watermark a batch uses comes from the data seen through the
-    PREVIOUS batch — the first raises event-time max, the second runs
-    with the advanced watermark and emits every real session exactly
-    once in append mode (the sentinel's own still-open session is
-    filtered out). Sessions whose events straddle the median boundary
-    arrive in different micro-batches and must merge in the state
-    store before closing — the cross-batch merge one boundary
-    exercises as well as two did, at one micro-batch less fixed cost
-    (VERDICT r8 item 8).
+    synthetic user -1 (max ts + 2 h / + 4 h), all four landed in one
+    write and replayed as four micro-batches by streaming/replay.py;
+    TWO sentinels because the watermark a batch uses comes from the
+    data seen through the PREVIOUS batch — the first raises event-time
+    max, the second runs with the advanced watermark and emits every
+    real session exactly once in append mode (the sentinel's own
+    still-open session is filtered out). Sessions whose events
+    straddle the median boundary arrive in different micro-batches
+    and must merge in the state store before closing — the
+    cross-batch merge one boundary exercises as well as two did, at
+    one micro-batch less fixed cost (VERDICT r8 item 8).
 
     FULL DuckDB oracle: the same gaps-and-islands rewrite that checks
     the batch ``user_sessions`` twin — a green row proves
     stream == batch including merge order, not just that the plan ran.
-    Runs on an isolated ``newSession`` (pinned UTC + small shuffle
-    count, no leak into concurrent queries on the shared context); the
-    memory-sink table is returned DIRECTLY (sessions share the JVM —
+    Runs on the replay driver's isolated session; the memory-sink
+    table is returned DIRECTLY (sessions share the JVM —
     re-collecting ~100k rows through the driver just to re-create the
     frame on the main session was the dominant fixed cost)."""
-    import os
-    import shutil
+    import datetime as dt
     import tempfile
-    import time
-    import uuid
 
-    from aws_de_final_project_spark.functions.numeric import epoch_us
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
     from aws_de_final_project_spark.streaming.windows import (
         session_stats_stream,
     )
@@ -5047,89 +4951,30 @@ def streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile(epoch_us("ts"), F.lit(0.5)).alias("c1"),
         F.max("ts").alias("mx"),
     ).collect()[0]
-    e = epoch_us("ts")
-    import datetime as _dt
-
-    tmp = tempfile.mkdtemp(prefix="sess_replay_")
-    try:
-        # ONE pass over events for both real slices (a slice column +
-        # hash-repartition on it -> one file per slice dir), instead
-        # of per-slice filter-writes that each rescan the table
-        part_dir = os.path.join(tmp, "_parts")
-        (
-            events.withColumn(
-                "_slice",
-                F.when(e < F.lit(cuts.c1), 0).otherwise(1),
-            )
-            .repartition("_slice")
-            .write.mode("overwrite")
-            .partitionBy("_slice")
-            .parquet(part_dir)
+    real = events.withColumn(
+        "_slice", F.when(epoch_us("ts") < F.lit(cuts.c1), 0).otherwise(1)
+    )
+    sentinels = local_frame(
+        spark,
+        [(-1, cuts.mx + dt.timedelta(hours=2), 2),
+         (-1, cuts.mx + dt.timedelta(hours=4), 3)],
+        StructType([*events.schema, StructField("_slice", IntegerType())]),
+    )
+    with tempfile.TemporaryDirectory(prefix="sess_replay_") as tmp:
+        RP.land_slices(real.unionByName(sentinels), "_slice", tmp)
+        sink = RP.to_memory(
+            session_stats_stream(
+                RP.read_slices(spark, events.schema, tmp), gap="30 minutes"
+            ),
+            "append",
         )
-        slice_files = []
-        for i in range(2):
-            d = os.path.join(part_dir, f"_slice={i}")
-            f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
-            slice_files.append(os.path.join(d, f))
-        # sentinel members are single rows — write them straight from
-        # the driver with pyarrow (zero Spark jobs; schema matches the
-        # stream's explicit schema: int64 + timestamp[us] == NTZ)
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        for off in (2, 4):
-            p = os.path.join(tmp, f"sent{off}.parquet")
-            pq.write_table(
-                pa.table(
-                    {
-                        "user_id": pa.array([-1], pa.int64()),
-                        "ts": pa.array(
-                            [cuts.mx + _dt.timedelta(hours=off)],
-                            pa.timestamp("us"),
-                        ),
-                    }
-                ),
-                p,
-            )
-            slice_files.append(p)
-        for i, src in enumerate(slice_files):
-            dst = os.path.join(tmp, f"f{i}.parquet")
-            os.rename(src, dst)
-            now = time.time()
-            os.utime(dst, (now + i * 10, now + i * 10))
-        shutil.rmtree(part_dir)
-        iso = spark.newSession()
-        # 2 state partitions: plenty for the fixture's key count; a
-        # production stream sizes this to its key cardinality at
-        # startup (per-batch state-commit cost scales with partitions)
-        iso.conf.set("spark.sql.shuffle.partitions", "2")
-        iso.conf.set("spark.sql.session.timeZone", "UTC")
-        stream = (
-            iso.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
-        )
-        qname = f"sess_replay_{uuid.uuid4().hex[:8]}"
-        q = (
-            session_stats_stream(stream, gap="30 minutes")
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # the memory-sink table lives in the shared JVM and survives
-        # the query; returning it directly skips a full driver
-        # roundtrip of the result set (collect + re-create was ~40%
-        # of this entry's fixed cost at sf0.1)
-        return (
-            iso.table(qname)
-            .filter(F.col("user_id") >= 0)
-            .orderBy("user_id", "session_start")
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # the memory-sink table lives in the shared JVM and survives the
+    # query; returning it directly skips a full driver roundtrip of
+    # the result set (collect + re-create was ~40% of this entry's
+    # fixed cost at sf0.1)
+    return sink.filter(F.col("user_id") >= 0).orderBy(
+        "user_id", "session_start"
+    )
 
 
 def html_table_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6413,63 +6258,31 @@ def streaming_chat_validation_replay(
     arrives exactly once the final fold must equal the BATCH suite
     over the full corpus — which is exactly what the shared
     chat_validation_suite oracle computes, so the oracle match proves
-    stream == batch. Replay mechanics are the streaming_kmv_replay
-    harness (slice parquet + maxFilesPerTrigger=1 + availableNow +
-    isolated small-shuffle session)."""
-    import os
-    import shutil
+    stream == batch. The three slices (conv_id % 3) are replayed by
+    streaming/replay.py."""
     import tempfile
-    import time
-    import uuid
 
     from aws_de_final_project_spark.operators import chat as CH
 
     lines = _chat_fixture_lines(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="chatval_replay_")
-    try:
-        part_dir = os.path.join(tmp, "_parts")
-        (
-            lines.withColumn(
-                "_slice", (F.col("conv_id") % 3).cast("int")
-            )
-            .repartition("_slice")
-            .write.mode("overwrite")
-            .partitionBy("_slice")
-            .parquet(part_dir)
+    with tempfile.TemporaryDirectory(prefix="chatval_replay_") as tmp:
+        RP.land_slices(
+            lines.withColumn("_slice", (F.col("conv_id") % 3).cast("int")),
+            "_slice",
+            tmp,
         )
-        for i in range(3):
-            d = os.path.join(part_dir, f"_slice={i}")
-            f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
-            dst = os.path.join(tmp, f"f{i}.parquet")
-            os.rename(os.path.join(d, f), dst)
-            now = time.time()
-            os.utime(dst, (now + i * 10, now + i * 10))
-        shutil.rmtree(part_dir)
-        iso = spark.newSession()
-        iso.conf.set("spark.sql.shuffle.partitions", "2")
-        stream = (
-            iso.readStream.schema("conv_id long, line string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+        stream = RP.read_slices(spark, "conv_id long, line string", tmp)
+        sink = RP.to_memory(
+            CH.chat_violation_counts_stream(
+                CH.parse_chat_lines(stream, "line")
+            ),
+            "complete",
         )
-        convs = CH.parse_chat_lines(stream, "line")
-        qname = f"chatval_replay_{uuid.uuid4().hex[:8]}"
-        q = (
-            CH.chat_violation_counts_stream(convs)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        final = iso.sql(f"SELECT * FROM {qname}").collect()
-        assert len(final) == 1
-        row = final[0].asDict()
-        return local_frame(
-            spark,
-            [(k, int(v), int(v) == 0) for k, v in sorted(row.items())],
-            "check_name string, violations long, passed boolean",
-        ).orderBy("check_name")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        final = sink.collect()
+    assert len(final) == 1
+    row = final[0].asDict()
+    return local_frame(
+        spark,
+        [(k, int(v), int(v) == 0) for k, v in sorted(row.items())],
+        "check_name string, violations long, passed boolean",
+    ).orderBy("check_name")

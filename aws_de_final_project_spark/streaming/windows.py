@@ -117,22 +117,3 @@ def session_stats_stream(
         )
     )
 
-
-def run_stream_to_memory(
-    events_stream: DataFrame,
-    query_name: str,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-) -> None:
-    """Drive the windowed plan from any streaming source to an
-    in-memory sink until caught up (AvailableNow) — the test harness
-    for streaming semantics."""
-    agg = windowed_event_counts(events_stream, window_duration, watermark)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -279,111 +279,26 @@ def bench_streaming_upsert(spark, sf_dir: str) -> dict:
         shutil.rmtree(tmpd, ignore_errors=True)
 
 
-def bench_streaming_window(spark, sf_dir: str) -> dict:
-    """Wall-clock for the watermarked tumbling-window aggregation over
-    the whole events table delivered as 4 micro-batches
-    (AvailableNow + maxFilesPerTrigger): the per-event cost of the
-    stateful windowed-agg path, complementing the upsert sink number.
-    Runs in append mode so the watermark actually EVICTS finalized
-    windows between batches — the path the description claims — not
-    complete mode, which would keep all window state forever and bench
-    the no-eviction plan (ADVICE r4)."""
-    import shutil
-    import tempfile
-
-    from aws_de_final_project_spark.sources.registry import load_tables
-    from aws_de_final_project_spark.streaming.windows import (
-        windowed_event_counts,
-    )
-
-    ev = load_tables(spark, sf_dir, ("events",), register_views=False)[
-        "events"
-    ].select("event_id", "ts", "user_id", "event_type", "value")
-    tmpd = tempfile.mkdtemp(prefix="bench_stream_win_")
-    src = os.path.join(tmpd, "src")
-    try:
-        ev.repartition(4).write.mode("overwrite").parquet(src)
-        n_in = ev.count()
-        with _state_partitions(spark) as sp:
-            t0 = time.perf_counter()
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            agg = windowed_event_counts(stream, watermark="2 hours")
-            q = (
-                agg.writeStream.format("memory")
-                .queryName("bench_win")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(600)
-            elapsed = round(time.perf_counter() - t0, 3)
-        # append emits only watermark-finalized windows; the last ~2 h
-        # of event time stays in (evictable) state when the query ends
-        n_windows = spark.table("bench_win").count()
-        return {
-            "windowed_agg_append_4_batches_sec": elapsed,
-            "events": n_in,
-            "windows_emitted": n_windows,
-            "window_state_partitions": sp.n,
-        }
-    finally:
-        shutil.rmtree(tmpd, ignore_errors=True)
-
-
-_STREAM_STATE_PARTITIONS = 8
-
-
-class _state_partitions:
-    """Scope the stateful-operator partition count for a streaming
-    bench. Each state partition is a state store instance paying fixed
-    per-batch cost (checkpoint files, snapshot, task dispatch) — at
-    100k bench events the 32-partition default is pure overhead
-    (measured on the stream-stream join: 13.9 s at 32 -> 4.3 s at 8,
-    identical pairs), while a real deployment sizes this UP with state
-    volume. The count used is reported in each bench's output dict."""
-
-    def __init__(self, spark, n: int = _STREAM_STATE_PARTITIONS):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-
-
-def _write_time_ordered_files(ev, src: str, ts_col: str = "ts") -> None:
-    """Land ``ev`` as 4 event-time-quantile files with increasing
-    mtimes so the file stream delivers ordered micro-batches — the
-    realistic arrival pattern for event-time pipelines, and the one
-    that makes watermark-based lateness (and therefore the benched
-    output) DETERMINISTIC: with shuffled files, which rows count as
-    late depends on file pickup order and the result varies run to
-    run."""
+def _event_time_quartiles(ev):
+    """``ev`` plus a ``_slice`` column: the row's event-time quartile
+    (0..3). Replayed in slice order, the file stream delivers ordered
+    micro-batches — the realistic arrival pattern for event-time
+    pipelines, and the one that makes watermark-based lateness (and
+    therefore the benched output) DETERMINISTIC: with shuffled files,
+    which rows count as late depends on file pickup order and the
+    result varies run to run."""
     from pyspark.sql import functions as F
 
     from aws_de_final_project_spark.functions.numeric import epoch_us
 
-    os.makedirs(src)
-    with_us = ev.withColumn("_us", epoch_us(ts_col))
-    qs = with_us.approxQuantile("_us", [0.25, 0.5, 0.75], 0.0)
-    bounds = [float("-inf"), *qs, float("inf")]
-    for i in range(4):
-        part = with_us.filter(
-            (F.col("_us") > bounds[i]) & (F.col("_us") <= bounds[i + 1])
-        ).drop("_us")
-        part.coalesce(1).write.mode("overwrite").parquet(f"{src}/stage{i}")
-        f = [x for x in os.listdir(f"{src}/stage{i}")
-             if x.endswith(".parquet")][0]
-        os.rename(f"{src}/stage{i}/{f}", f"{src}/f{i}.parquet")
-        now = time.time()
-        os.utime(f"{src}/f{i}.parquet", (now + i * 10, now + i * 10))
+    us = epoch_us("ts")
+    q1, q2, q3 = ev.select(us.alias("_us")).approxQuantile(
+        "_us", [0.25, 0.5, 0.75], 0.0
+    )
+    return ev.withColumn(
+        "_slice",
+        F.when(us <= q1, 0).when(us <= q2, 1).when(us <= q3, 2).otherwise(3),
+    )
 
 
 def bench_streaming_ss_join(spark, sf_dir: str) -> dict:
@@ -392,12 +307,12 @@ def bench_streaming_ss_join(spark, sf_dir: str) -> dict:
     delivered as 4 event-time-ordered micro-batches — the
     buffered-state join path whose per-batch cost was previously
     untracked (VERDICT r4 #6)."""
-    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
 
     from aws_de_final_project_spark.sources.registry import load_tables
+    from aws_de_final_project_spark.streaming import replay
     from aws_de_final_project_spark.streaming.joins import (
         click_purchase_attribution,
     )
@@ -405,38 +320,19 @@ def bench_streaming_ss_join(spark, sf_dir: str) -> dict:
     ev = load_tables(spark, sf_dir, ("events",), register_views=False)[
         "events"
     ].select("event_id", "ts", "user_id", "event_type")
-    tmpd = tempfile.mkdtemp(prefix="bench_stream_ssj_")
-    src = os.path.join(tmpd, "src")
-    try:
-        _write_time_ordered_files(ev, src)
-        with _state_partitions(spark) as sp:
-            t0 = time.perf_counter()
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            joined = click_purchase_attribution(
+    with tempfile.TemporaryDirectory(prefix="bench_stream_ssj_") as src:
+        replay.land_slices(_event_time_quartiles(ev), "_slice", src)
+        t0 = time.perf_counter()
+        stream = replay.read_slices(spark, ev.schema, src)
+        pairs = replay.to_memory(
+            click_purchase_attribution(
                 stream.filter(F.col("event_type") == "purchase"),
                 stream.filter(F.col("event_type") == "click"),
-            )
-            q = (
-                joined.writeStream.format("memory")
-                .queryName("bench_ssj")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(600)
-            elapsed = round(time.perf_counter() - t0, 3)
-        n_pairs = spark.table("bench_ssj").count()
-        return {
-            "ss_join_4_batches_sec": elapsed,
-            "pairs": n_pairs,
-            "ss_join_state_partitions": sp.n,
-        }
-    finally:
-        shutil.rmtree(tmpd, ignore_errors=True)
+            ),
+            "append",
+        )
+        elapsed = round(time.perf_counter() - t0, 3)
+    return {"ss_join_4_batches_sec": elapsed, "pairs": pairs.count()}
 
 
 def bench_streaming_sessionize(spark, sf_dir: str) -> dict:
@@ -445,10 +341,10 @@ def bench_streaming_sessionize(spark, sf_dir: str) -> dict:
     stateful-operator path (VERDICT r4 #6). Counts only gap/timeout-
     closed sessions (append semantics; open state dies with the
     query)."""
-    import shutil
     import tempfile
 
     from aws_de_final_project_spark.sources.registry import load_tables
+    from aws_de_final_project_spark.streaming import replay
     from aws_de_final_project_spark.streaming.stateful import (
         sessionize_stateful,
     )
@@ -456,38 +352,21 @@ def bench_streaming_sessionize(spark, sf_dir: str) -> dict:
     ev = load_tables(spark, sf_dir, ("events",), register_views=False)[
         "events"
     ].select("user_id", "ts", "value")
-    tmpd = tempfile.mkdtemp(prefix="bench_stream_sess_")
-    src = os.path.join(tmpd, "src")
-    try:
-        # ordered delivery (see _write_time_ordered_files): a 0-second
+    with tempfile.TemporaryDirectory(prefix="bench_stream_sess_") as src:
+        # ordered delivery (see _event_time_quartiles): a 0-second
         # watermark over shuffled files would drop most rows as late
         # and bench nothing
-        _write_time_ordered_files(ev, src)
-        with _state_partitions(spark) as sp:
-            t0 = time.perf_counter()
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            out = sessionize_stateful(stream, gap_minutes=30)
-            q = (
-                out.writeStream.format("memory")
-                .queryName("bench_sess")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(600)
-            elapsed = round(time.perf_counter() - t0, 3)
-        n_sessions = spark.table("bench_sess").count()
-        return {
-            "stateful_sessionize_4_batches_sec": elapsed,
-            "sessions_closed": n_sessions,
-            "sessionize_state_partitions": sp.n,
-        }
-    finally:
-        shutil.rmtree(tmpd, ignore_errors=True)
+        replay.land_slices(_event_time_quartiles(ev), "_slice", src)
+        t0 = time.perf_counter()
+        stream = replay.read_slices(spark, ev.schema, src)
+        sessions = replay.to_memory(
+            sessionize_stateful(stream, gap_minutes=30), "append"
+        )
+        elapsed = round(time.perf_counter() - t0, 3)
+    return {
+        "stateful_sessionize_4_batches_sec": elapsed,
+        "sessions_closed": sessions.count(),
+    }
 
 
 # per-round slope guard (VERDICT r4 #7): queries re-timed at sf0.01 so
@@ -657,7 +536,6 @@ def main() -> None:
         name: round(max(t - overhead, 0.0), 3) for name, t in warm.items()
     }
     streaming = bench_streaming_upsert(spark, sf_dir)
-    streaming.update(bench_streaming_window(spark, sf_dir))
     streaming.update(bench_streaming_ss_join(spark, sf_dir))
     streaming.update(bench_streaming_sessionize(spark, sf_dir))
     scaling = bench_scaling(spark, sf_dir, queries, warm, overhead)

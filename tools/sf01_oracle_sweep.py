@@ -49,7 +49,6 @@ def main() -> None:
         SparkSession.builder.master("local[24]")
         .appName("sf01-sweep")
         .config("spark.sql.session.timeZone", "America/Chicago")
-        .config("spark.sql.shuffle.partitions", "32")
         .getOrCreate()
     )
     con = duckdb.connect()

@@ -1,22 +1,23 @@
 #!/usr/bin/env python
-"""Joint sf1 bench of the four streaming replay entries (r9 verdict
-item 10/advice: they were benched individually; one session running
-all four back-to-back catches state-store interference — RocksDB/HDFS
+"""Joint sf1 bench of the streaming replay entries (r9 verdict item
+10/advice: they were benched individually; one session running all of
+them back-to-back catches state-store interference — RocksDB/HDFS
 state dirs, memory-sink tables, and JVM heap churn shared across
 queries).
 
-Runs streaming_kmv_replay, streaming_session_replay,
-streaming_drift_replay, streaming_dedup_replay sequentially in ONE
-SparkSession at $SPARK_GRAFT_SF_DIR (default /tmp/sf1), two passes
-(pass 2 is the warm number), forced GC between entries (same JMH-style
-discipline as bench.py). Writes STREAMING_JOINT_SF1.json next to the
-repo root with per-entry joint times, the isolated sf1 references from
-BENCH_SF1_DETAIL.json, and the joint/isolated ratio — the contract is
-no entry > 2x its isolated number.
+Runs every ``queries()`` entry named ``streaming_*_replay``, in name
+order, sequentially in ONE SparkSession at $SPARK_GRAFT_SF_DIR
+(default /tmp/sf1), two passes (pass 2 is the warm number), forced GC
+between entries (same JMH-style discipline as bench.py). Writes
+STREAMING_JOINT_SF1.json next to the repo root with per-entry joint
+times, the isolated sf1 references from BENCH_SF1_DETAIL.json, and the
+joint/isolated ratio — the contract is no entry > 2x its isolated
+number.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import json
 import os
 import sys
@@ -29,12 +30,7 @@ from aws_de_final_project_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 
-REPLAYS = [
-    "streaming_kmv_replay",
-    "streaming_session_replay",
-    "streaming_drift_replay",
-    "streaming_dedup_replay",
-]
+REPLAYS = sorted(fnmatch.filter(entrymod.queries(), "streaming_*_replay"))
 
 
 def main() -> None:
