@@ -12,9 +12,21 @@ Every knob here is chosen for the 100 TB posture, not just local runs:
 * ``spark.sql.adaptive.enabled`` — runtime shuffle-stats re-planning;
   converts sort-merge joins to broadcast when the built side turns out
   small, and splits skewed partitions.
-* ``spark.sql.shuffle.partitions`` — sized to ~2x cores locally; on a
-  real cluster AQE's ``coalescePartitions`` makes the initial number a
-  ceiling, not a commitment.
+* two shuffle widths, both set here. Batch shuffles start at
+  ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` (~2x
+  cores locally) and AQE's ``coalescePartitions`` shrinks them at
+  runtime, so the initial number is a ceiling, not a commitment.
+  Spark reads ``initialPartitionNum`` in place of
+  ``spark.sql.shuffle.partitions`` only while coalescing is enabled,
+  which is why it sits beside ``coalescePartitions.enabled``; stateless
+  streams, which also run under AQE, get the same ceiling. Stateful
+  streaming operators run with AQE off, so they read
+  ``spark.sql.shuffle.partitions``, which is :data:`STATE_PARTITIONS`.
+  That number is the state-store count: each store pays a fixed
+  per-micro-batch cost (commit, snapshot, task dispatch), Spark records
+  it in the checkpoint at first start and a restarted query keeps the
+  recorded count. The engine's streams carry at most a few thousand
+  keys; a production stream sizes it to its key cardinality at start.
 * session timezone pinned UTC so event-time semantics are
   deterministic regardless of host timezone.
 """
@@ -24,6 +36,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+STATE_PARTITIONS = 2
 
 
 def default_parallelism() -> int:
@@ -39,7 +53,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied.
 
-    Safe to call repeatedly — Spark returns the existing session; the
+    ``shuffle_partitions`` is the batch shuffle ceiling (default 2 x
+    ``cpus``); stateful streams get :data:`STATE_PARTITIONS` whatever it
+    is. Safe to call repeatedly — Spark returns the existing session; the
     static (pre-JVM) confs only take effect on first creation.
     """
     cpus = cpus or default_parallelism()
@@ -49,7 +65,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 2 * cpus))
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(shuffle_partitions or 2 * cpus),
+        )
+        .config("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")

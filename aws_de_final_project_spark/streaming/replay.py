@@ -5,14 +5,13 @@ A replay lands a frame as slice files ``f0.parquet``, ``f1.parquet``
 ... with increasing mtimes, reads them back one file per micro-batch
 and drains them with ``availableNow`` on an ISOLATED session. The
 isolated session shares the SparkContext but owns its SQLConf,
-catalog and stream manager, so the UTC pin and the small state width
-set here never reach queries that run on the caller's session.
+catalog and stream manager, so the UTC pin and the state width set
+here never reach queries that run on the caller's session.
 
 Each stateful operator gets ``spark.sql.shuffle.partitions`` state
-partitions, and each state partition pays a fixed per-batch cost
-(state-store commit, snapshot, task dispatch). The replays carry at
-most a few thousand keys, so :data:`STATE_PARTITIONS` is 2. A
-production stream sizes this to its key cardinality at start.
+partitions. ``session.get_spark`` already gives its sessions
+``session.STATE_PARTITIONS``; the isolated session sets the same width
+because the caller's session may be one the engine did not build.
 """
 
 from __future__ import annotations
@@ -24,9 +23,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from aws_de_final_project_spark.session import tune_session
-
-STATE_PARTITIONS = 2
+from aws_de_final_project_spark.session import STATE_PARTITIONS, tune_session
 
 
 def land_slices(df: DataFrame, slice_col: str, path: str) -> None:
@@ -60,7 +57,7 @@ def land_slices(df: DataFrame, slice_col: str, path: str) -> None:
 def isolated_session(spark: SparkSession) -> SparkSession:
     """A new session on ``spark``'s context with the engine defaults
     (``session.tune_session``: UTC, AQE), and
-    :data:`STATE_PARTITIONS` shuffle partitions."""
+    ``session.STATE_PARTITIONS`` shuffle partitions."""
     iso = tune_session(spark.newSession())
     iso.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     return iso

@@ -18,12 +18,26 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def plans(spark):
-    """name -> executed-plan string (AQE final plans where relevant)."""
+def frames(spark):
+    """name -> the queries() frame at SF_DIR, built once per module:
+    plan building dominates the blanket tests that visit every entry."""
     q = entrymod.queries()
+    built = {}
+
+    def frame_of(name: str):
+        if name not in built:
+            built[name] = q[name](spark, SF_DIR)
+        return built[name]
+
+    return frame_of
+
+
+@pytest.fixture(scope="module")
+def plans(frames):
+    """name -> executed-plan string (AQE final plans where relevant)."""
 
     def plan_of(name: str) -> str:
-        df = q[name](spark, SF_DIR)
+        df = frames(name)
         # trigger execution so AdaptiveSparkPlan reports final plans
         df.count()
         return df._jdf.queryExecution().executedPlan().toString()
@@ -313,18 +327,16 @@ def test_q5_broadcasts_dimensions(plans):
     assert "CartesianProduct" not in p
 
 
-def test_no_ltz_output_columns_anywhere(spark):
+def test_no_ltz_output_columns_anywhere(frames):
     """No queries() entry may output a TIMESTAMP (LTZ) column: LTZ
     values localize through the PROCESS timezone at collect(), so an
     LTZ output diverges from its naive-timestamp oracle under any
     non-UTC driver tz (caught live by the Chatham-tz sweep on
     hourly_event_stats/gap_fill_hourly_values — date_trunc silently
     upcasts NTZ to LTZ). Plan-build only, no execution."""
-    import __spark_entry__ as entrymod
-
     offenders = {}
-    for name, fn in entrymod.queries().items():
-        df = fn(spark, "/root/testdata/sf0.001")
+    for name in entrymod.queries():
+        df = frames(name)
         ltz = [c for c, t in df.dtypes if t == "timestamp"]
         if ltz:
             offenders[name] = ltz

@@ -4,14 +4,24 @@
 from __future__ import annotations
 
 import ast
+import datetime as dt
 import os
+import re
 from pathlib import Path
 
 import pytest
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
+from aws_de_final_project_spark import session
 from aws_de_final_project_spark.operators.util import local_frame
 from aws_de_final_project_spark.sources.registry import load_tables
 from aws_de_final_project_spark.streaming import replay
@@ -20,6 +30,19 @@ from aws_de_final_project_spark.streaming.windows import windowed_event_counts
 ROOT = Path(__file__).resolve().parent.parent
 REPLAY = ROOT / "aws_de_final_project_spark" / "streaming" / "replay.py"
 SESSION = ROOT / "aws_de_final_project_spark" / "session.py"
+WIDTH = "spark.sql.shuffle.partitions"
+BATCH_WIDTH = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+EVENTS = StructType(
+    [
+        StructField("ts", TimestampNTZType()),
+        StructField("event_type", StringType()),
+        StructField("value", DoubleType()),
+    ]
+)
+
+
+def _h(hh: int, mm: int = 0) -> dt.datetime:
+    return dt.datetime(2024, 1, 1, hh, mm)
 
 
 @pytest.fixture(scope="module")
@@ -609,10 +632,7 @@ def test_replay_session_leaves_the_caller_session_alone(
     """The driver's UTC pin and state width live on its own session: a
     caller at America/Chicago with 8 shuffle partitions keeps both,
     and the replayed query's state operator runs 2 partitions."""
-    import datetime as dt
-
     from pyspark.sql.streaming.readwriter import DataStreamWriter
-    from pyspark.sql.types import DoubleType, StringType, TimestampNTZType
 
     started = []
     start = DataStreamWriter.start
@@ -622,34 +642,108 @@ def test_replay_session_leaves_the_caller_session_alone(
         return started[-1]
 
     monkeypatch.setattr(DataStreamWriter, "start", recording_start)
-    schema = StructType(
-        [
-            StructField("ts", TimestampNTZType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    h = lambda hh: dt.datetime(2024, 1, 1, hh)  # noqa: E731
-    slices = [[(h(1), "click", 1.0)], [(h(5), "click", 2.0)]]
-    tz, width = "spark.sql.session.timeZone", "spark.sql.shuffle.partitions"
-    before = {k: spark.conf.get(k) for k in (tz, width)}
+    slices = [[(_h(1), "click", 1.0)], [(_h(5), "click", 2.0)]]
+    tz = "spark.sql.session.timeZone"
+    before = {k: spark.conf.get(k) for k in (tz, WIDTH)}
     spark.conf.set(tz, "America/Chicago")
-    spark.conf.set(width, "8")
+    spark.conf.set(WIDTH, "8")
     try:
         src = str(tmp_path / "iso_src")
-        _land_rows(spark, slices, schema, src)
-        stream = replay.read_slices(spark, schema, src)
+        _land_rows(spark, slices, EVENTS, src)
+        stream = replay.read_slices(spark, EVENTS, src)
         sink = replay.to_memory(windowed_event_counts(stream), "append")
         assert sink.count() == 1  # 01:00 closes once 05:00 passes the watermark
         assert sink.sparkSession.conf.get(tz) == "UTC"
         assert spark.conf.get(tz) == "America/Chicago"
-        assert spark.conf.get(width) == "8"
+        assert spark.conf.get(WIDTH) == "8"
         (q,) = started
         op = q.lastProgress.stateOperators[0]
-        assert op.numShufflePartitions == replay.STATE_PARTITIONS == 2
+        assert op.numShufflePartitions == session.STATE_PARTITIONS
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
+
+
+def _window_stream(spark, src: str):
+    return windowed_event_counts(
+        spark.readStream.schema(EVENTS).option("maxFilesPerTrigger", 1).parquet(src)
+    )
+
+
+def test_session_splits_batch_and_state_width(spark, tmp_path):
+    """One session, two widths: batch shuffles plan at the session's
+    batch ceiling (conftest: 8), stateful streams run
+    ``session.STATE_PARTITIONS`` state partitions."""
+    agg = spark.range(100).withColumn("k", F.col("id") % 7).groupBy("k").count()
+    agg.collect()
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"hashpartitioning\(k#\d+L?, 8\)", plan), plan
+
+    src = str(tmp_path / "src")
+    _land_rows(spark, [[(_h(1), "click", 1.0)], [(_h(5), "click", 2.0)]], EVENTS, src)
+    q = (
+        _window_stream(spark, src)
+        .writeStream.format("noop")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    op = q.lastProgress.stateOperators[0]
+    assert op.numShufflePartitions == session.STATE_PARTITIONS
+
+
+def test_resumed_query_keeps_its_checkpointed_width(spark, tmp_path):
+    """A stateful query first started at 8 state partitions (the width
+    of every checkpoint written while the session had one width) keeps
+    8 when restarted on a session at ``STATE_PARTITIONS``, and its state
+    survives: the emitted windows equal the batch aggregate."""
+    slices = [
+        [(_h(1), "click", 1.0), (_h(2), "view", 2.0)],
+        [(_h(5), "click", 3.0)],
+        # 05:30 lands after the restart in the window 05:00 opened
+        # before it; 09:00 moves the watermark to 07:00 and closes it
+        [(_h(5, 30), "click", 4.0), (_h(9), "view", 5.0)],
+    ]
+    staged, src = tmp_path / "staged", tmp_path / "src"
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _land_rows(spark, slices, EVENTS, str(staged))
+    src.mkdir()
+
+    def run(files: list[str]) -> int:
+        for f in files:
+            os.rename(staged / f, src / f)
+        q = (
+            _window_stream(spark, str(src))
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q.lastProgress.stateOperators[0].numShufflePartitions
+
+    before = spark.conf.get(WIDTH)
+    spark.conf.set(WIDTH, "8")
+    try:
+        assert run(["f0.parquet", "f1.parquet"]) == 8
+    finally:
+        spark.conf.set(WIDTH, before)
+    assert spark.conf.get(WIDTH) == str(session.STATE_PARTITIONS)
+    assert run(["f2.parquet"]) == 8
+
+    def rows(df):
+        return sorted(
+            (r.window_start, r.event_type, r.n_events, r.sum_value)
+            for r in df.collect()
+        )
+
+    batch = rows(windowed_event_counts(spark.read.schema(EVENTS).parquet(str(src))))
+    # the 09:00 window is still open at the final watermark (07:00)
+    expected = [r for r in batch if r[0] < _h(9)]
+    assert len(expected) == 3
+    assert rows(spark.read.parquet(out)) == expected
 
 
 def _calls(path: Path):
@@ -658,19 +752,20 @@ def _calls(path: Path):
             yield node
 
 
-def _sets_shuffle_width(call) -> bool:
-    return (
-        call.func.attr in ("set", "config")
-        and bool(call.args)
-        and getattr(call.args[0], "value", None) == "spark.sql.shuffle.partitions"
-    )
+def _conf_key(call) -> str | None:
+    if call.func.attr in ("set", "config") and call.args:
+        return getattr(call.args[0], "value", None)
+    return None
 
 
 def test_replay_isolation_lives_only_in_the_driver():
     """One-way guard: in the package, bench.py and tools/, only
-    streaming/replay.py calls ``newSession()`` or ``os.utime()``, and
-    only it and session.py set ``spark.sql.shuffle.partitions``."""
+    streaming/replay.py calls ``newSession()`` or ``os.utime()``, only
+    it and session.py set ``spark.sql.shuffle.partitions``, and only
+    session.py sets the batch ceiling ``initialPartitionNum``."""
     assert {"newSession", "utime", "set"} <= {c.func.attr for c in _calls(REPLAY)}
+    assert {WIDTH, BATCH_WIDTH} <= {_conf_key(c) for c in _calls(SESSION)}
+    allowed = {WIDTH: (REPLAY, SESSION), BATCH_WIDTH: (SESSION,)}
     files = sorted((ROOT / "aws_de_final_project_spark").rglob("*.py"))
     files += [ROOT / "bench.py", *sorted((ROOT / "tools").glob("*.py"))]
     hits = []
@@ -680,7 +775,7 @@ def test_replay_isolation_lives_only_in_the_driver():
             is_utime = name == "utime" and getattr(call.func.value, "id", "") == "os"
             if (name == "newSession" or is_utime) and path != REPLAY:
                 hits.append(f"{path.relative_to(ROOT)}:{call.lineno}: {name}")
-            if _sets_shuffle_width(call) and path not in (REPLAY, SESSION):
+            key = _conf_key(call)
+            if key in allowed and path not in allowed[key]:
                 hits.append(f"{path.relative_to(ROOT)}:{call.lineno}: {name}")
     assert not hits, "\n".join(hits)
-
