@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from aws_de_final_project_spark.functions.numeric import round_half_up as rnd
 from aws_de_final_project_spark.operators.dedup import _shingle_sets
-from aws_de_final_project_spark.operators.util import spread
+from aws_de_final_project_spark.operators.util import cut, release, spread
 
 
 def _md5_long(col: Column) -> Column:
@@ -432,7 +432,9 @@ def curate_corpus(
     broadcast shingle join runs on the smallest surviving set).
 
     Returns the export manifest plus per-stage survivor counts (each
-    count is one action over an already-needed frame).
+    count is one action over an already-needed frame, and fills that
+    stage's cut). Each cut is released once the next stage's cut is
+    filled, so the call leaves no persisted frame behind.
     """
     from aws_de_final_project_spark.operators.dedup import exact_dedup
     from aws_de_final_project_spark.operators.segments import (
@@ -440,25 +442,28 @@ def curate_corpus(
     )
 
     stage_counts = {"input": docs.count()}
-    deduped = exact_dedup(docs, text_col, id_col).localCheckpoint()
+    deduped = cut(exact_dedup(docs, text_col, id_col))
     stage_counts["after_exact_dedup"] = deduped.count()
 
     gated_ids = quantile_quality_filter(
         deduped, group_col=group_col, q=quality_q
     ).select(id_col)
-    gated = deduped.join(gated_ids, id_col, "left_semi").localCheckpoint()
+    gated = cut(deduped.join(gated_ids, id_col, "left_semi"))
     stage_counts["after_quality_gate"] = gated.count()
+    release(deduped)
 
     overlap = decontaminate(gated, benchmark, text_col, id_col)
     clean_ids = overlap.filter(
         F.col("hit_frac") <= F.lit(float(max_hit_frac))
     ).select(id_col)
-    clean = gated.join(clean_ids, id_col, "left_semi").localCheckpoint()
+    clean = cut(gated.join(clean_ids, id_col, "left_semi"))
     stage_counts["after_decontamination"] = clean.count()
+    release(gated)
 
     manifest = write_token_shards(
         clean, out_dir, id_col, text_col, budget=shard_budget
     )
+    release(clean)
     return {"stages": stage_counts, "manifest": manifest}
 
 

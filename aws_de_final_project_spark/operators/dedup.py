@@ -285,13 +285,13 @@ def minhash_lsh_pairs(
         )
     rows_per_band = num_hashes // bands
     # ONE hashed-shingle pass feeds the signature aggregate AND both
-    # exact-Jaccard verify sides: a lazy cut materializes the ~230 B/doc
+    # exact-Jaccard verify sides: the cut materializes the ~230 B/doc
     # hashed sets at the first action instead of re-running the
     # normalize+shingle+hash pipeline once per consumer (3x before —
     # the r14 measured defect; at 100 TB the frame is the lightweight
     # decision proxy of guide §8, orders of magnitude under the corpus).
     words = _hashed_shingle_sets(df, text_col, id_col, ngram)
-    words = words.localCheckpoint(eager=False)
+    words = _cut(words)
     sigs = _minhash_signature_from_words(words, num_hashes)
     banded = sigs.select(
         "_id",
@@ -313,14 +313,14 @@ def minhash_lsh_pairs(
         ).alias("bb"),
     ).select("_id", "bb.band", "bb.bucket")
     # both bucket-join sides carry the IDENTICAL banded signatures:
-    # a lazy cut materializes the k-min-hash aggregate once and both
+    # the cut materializes the k-min-hash aggregate once and both
     # join sides scan the stored blocks (~bands rows x ~40 B per doc —
     # scale-trivial). r13 relied on alias self-join exchange reuse,
     # which only fires when BOTH sides shuffle; at broadcast-sized
     # inputs the planner broadcast one side and re-evaluated the whole
     # signature pipeline for it (the r14 measured defect: the 64-hash
     # aggregate ran twice, ~14 s CPU per evaluation at sf0.1).
-    banded = banded.localCheckpoint(eager=False)
+    banded = _cut(banded)
     bx, by = banded.alias("_bx"), banded.alias("_by")
     candidates = (
         bx.join(
@@ -534,12 +534,12 @@ def simhash_near_pairs(
             )
         ).alias("cc"),
     ).select("_id", "simhash", "cc.chunk", "cc.key")
-    # a lazy cut materializes the simhash pipeline once and both
+    # the cut materializes the simhash pipeline once and both
     # chunk-join sides scan the stored blocks (chunks rows x ~40 B per
     # doc). The r13 alias self-join only deduplicated the pipeline
     # when both sides shuffled; at broadcast-sized inputs one side was
     # re-evaluated (the r14 measured defect on the minhash twin).
-    banded = banded.localCheckpoint(eager=False)
+    banded = _cut(banded)
     bx, by = banded.alias("_bx"), banded.alias("_by")
     xor = F.col("simhash").bitwiseXOR(F.col("simhash_b"))
     hamming = F.bit_count(xor)
@@ -573,7 +573,6 @@ def connected_components(
     max_iter: int = 20,
     impl: str = "relational",
     driver_max_pairs: int = 2_000_000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Labels-only connected components. Two implementations with the
     same output contract (node -> min id of its component):
@@ -601,9 +600,7 @@ def connected_components(
       the happy path.
     """
     if impl == "relational":
-        labels, _ = connected_components_iters(
-            pairs, id_a, id_b, max_iter, checkpoint_dir=checkpoint_dir
-        )
+        labels, _ = connected_components_iters(pairs, id_a, id_b, max_iter)
         return labels
     if impl not in ("driver", "auto"):
         raise ValueError(
@@ -623,23 +620,22 @@ def connected_components(
     # pipeline's final stage once per escalation round when the pair
     # list is smaller than the cap — the common case — costing ~1.65x
     # the pipeline plus a driver round-trip per round (measured on the
-    # entity-resolution entry, r13). The cut (util.cut: reliable
-    # checkpoint() when checkpoint_dir is given, localCheckpoint
-    # otherwise) materializes the pipeline exactly once at the count;
-    # the collect then reads the stored blocks, and the count keeps
-    # the driver pull bounded before any row moves (the same
-    # legitimacy contract as before).
-    cleaned = _cut(cleaned, checkpoint_dir)
+    # entity-resolution entry, r13). The cut materializes the
+    # pipeline exactly once at the count; the collect then reads the
+    # stored frame, and the count keeps the driver pull bounded before
+    # any row moves (the same legitimacy contract as before).
+    cleaned = _cut(cleaned)
     n_pairs = cleaned.count()
     if n_pairs > driver_max_pairs:
         if impl == "auto":
             # feed the MATERIALIZED pair list into the relational
             # fallback — recomputing the candidate pipeline from the
             # original frame would waste the full run the count just
-            # paid (r13 ADVICE/VERDICT item 2); the iteration's first
-            # eager cut consumes the blocks, then they are released.
+            # paid (r13 ADVICE/VERDICT item 2); the iteration's
+            # convergence counts consume the blocks, then they are
+            # released.
             labels, _ = connected_components_iters(
-                cleaned, "a", "b", max_iter, checkpoint_dir=checkpoint_dir
+                cleaned, "a", "b", max_iter
             )
             _release(cleaned)
             return labels
@@ -676,7 +672,6 @@ def connected_components_iters(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, int]:
     """Connected components over a near-duplicate pair list: the step
     that turns "these documents are similar" into "keep one per
@@ -696,14 +691,12 @@ def connected_components_iters(
     iteration bound). Per round: one edges-to-labels join, one
     min-aggregate, one labels self-join — all shuffle-on-key, no
     driver data movement; the driver loop only checks the converged
-    flag (a 1-row count). localCheckpoint cuts the lineage so plan
-    size stays constant across rounds; superseded per-round
-    checkpoints are dropped by the ContextCleaner as their DataFrames
-    go out of scope (verified: persisted-RDD count stays flat across
-    repeated invocations). Pass ``checkpoint_dir`` to cut to reliable
-    ``checkpoint()`` instead — localCheckpoint blocks die with their
-    executor, so a long components run on a real cluster should cut
-    to durable storage (operators/util.py ``cut``).
+    flag (a 1-row count), and that count is the action that fills each
+    round's cuts. ``util.cut`` keeps plan size constant across rounds
+    (reliable when the session has a checkpoint dir); superseded
+    per-round checkpoints are dropped by the ContextCleaner as their
+    DataFrames go out of scope (verified: persisted-RDD count stays
+    flat across repeated invocations).
 
     Returns ``(labels, n_rounds)`` — the round count rides the return
     value (no shared mutable function-attribute, so concurrent calls
@@ -724,14 +717,12 @@ def connected_components_iters(
         # here keeps the node set — and thus the output rows — equal
         # to the driver union-find path's
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
     labels = _cut(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("component")),
-        checkpoint_dir,
+        .select("node", F.col("node").alias("component"))
     )
     iters = 0
     for it in range(max_iter):
@@ -752,8 +743,7 @@ def connected_components_iters(
                     F.col("component"),
                     F.coalesce("nbr_min", F.col("component")),
                 ).alias("component"),
-            ),
-            checkpoint_dir,
+            )
         )
         # pointer doubling: comp = label[comp]; halves chain distance
         lut = propagated.select(
@@ -773,8 +763,7 @@ def connected_components_iters(
                 (
                     F.coalesce("_c_comp", "component") != F.col("_old")
                 ).alias("_chg"),
-            ),
-            checkpoint_dir,
+            )
         )
         changed = stepped.filter("_chg").limit(1).count()
         labels = stepped.drop("_chg")
@@ -803,17 +792,12 @@ def dedup_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     impl: str = "relational",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Component assignment for EVERY document: docs in some near-dup
     cluster get the cluster's min id, singletons get themselves.
     Output: (id_col, component, is_keeper). ``impl`` dispatches the
-    components step (see :func:`connected_components`);
-    ``checkpoint_dir`` selects reliable checkpointing for the
-    relational iteration."""
-    comps = connected_components(
-        pairs, id_a, id_b, impl=impl, checkpoint_dir=checkpoint_dir
-    )
+    components step (see :func:`connected_components`)."""
+    comps = connected_components(pairs, id_a, id_b, impl=impl)
     return (
         df.select(F.col(id_col).cast("long").alias("node"))
         .join(comps, "node", "left")
@@ -860,7 +844,7 @@ def minhash_lsh_pairs_portable(
     # string shingles on both the signature and verify sides, and one
     # stored pass beats three regex+HOF corpus passes.
     sets = _shingle_sets(df, text_col, id_col, ngram)
-    sets = sets.localCheckpoint(eager=False)
+    sets = _cut(sets)
     exploded = sets.select("_id", F.explode_outer("_words").alias("_sh"))
     agg = exploded.groupBy("_id").agg(
         *[
@@ -898,7 +882,7 @@ def minhash_lsh_pairs_portable(
             )
         ).alias("bb"),
     ).select("_id", "bb.band", "bb.bh")
-    # a lazy cut materializes the md5 minhash pipeline once and both
+    # the cut materializes the md5 minhash pipeline once and both
     # bucket-join sides scan the stored blocks (bands rows x ~50 B per
     # doc). The r13 alias self-join only deduplicated the pipeline
     # when both sides shuffled; at broadcast-sized inputs one side was
@@ -906,7 +890,7 @@ def minhash_lsh_pairs_portable(
     # measured defect). Candidate pairs re-spread before the per-row
     # set-intersect verify (AQE coalesces the tiny id-pair bytes to a
     # couple of partitions otherwise).
-    banded = banded.localCheckpoint(eager=False)
+    banded = _cut(banded)
     bx, by = banded.alias("_bx"), banded.alias("_by")
     cand = (
         bx.join(
@@ -1204,7 +1188,7 @@ def _prefix_filter_candidates(sets: DataFrame, threshold: float) -> DataFrame:
     from pyspark.sql.window import Window
 
     wr = Window.partitionBy("_id").orderBy("_dfreq", "_tok")
-    prefixes = (
+    prefixes = _cut(
         sized.select("_id", "_sz", F.explode("_words").alias("_tok"))
         .join(tok_df, "_tok")
         .select(
@@ -1215,7 +1199,6 @@ def _prefix_filter_candidates(sets: DataFrame, threshold: float) -> DataFrame:
         )
         .where(F.col("_rn") <= plen)
         .select("_id", "_sz", "_tok")
-        .localCheckpoint()
     )
     right = prefixes.select(
         F.col("_id").alias("_id_b"),
@@ -1284,7 +1267,7 @@ def prefix_filter_jaccard_pairs(
     # sets, the hashed verify, and the exact string verify — reads
     # the checkpoint instead of re-deriving from text (measured: the
     # re-derivations, not shuffles, dominated before).
-    sets = _shingle_sets(df, text_col, id_col, ngram).localCheckpoint()
+    sets = _cut(_shingle_sets(df, text_col, id_col, ngram))
     # Candidate generation + first verify run over 64-bit-HASHED
     # shingles: the prefix theorem only needs a consistent total
     # order over a set family, and the hashed sets are one. A hash
@@ -1298,12 +1281,14 @@ def prefix_filter_jaccard_pairs(
     # exact_verify=True to run the string verify on every candidate.
     # Payoff of the hashed path: candidate shuffles move 8-byte ints,
     # and the per-candidate verify compares longs, not strings.
-    hsets = sets.select(
-        "_id",
-        F.array_distinct(
-            F.transform(F.col("_words"), lambda s: F.xxhash64(s))
-        ).alias("_words"),
-    ).localCheckpoint()
+    hsets = _cut(
+        sets.select(
+            "_id",
+            F.array_distinct(
+                F.transform(F.col("_words"), lambda s: F.xxhash64(s))
+            ).alias("_words"),
+        )
+    )
     # candidates generated at threshold - one 4dp rounding step, for
     # the same reason as the verify slack below: the final filter is
     # on the ROUNDED string Jaccard. Lowering t only lengthens
@@ -1403,8 +1388,7 @@ def _containment_hashed_sets(
                     ).cast("long"),
                 )
             ).alias("_h"),
-        ),
-        None,
+        )
     )
 
 

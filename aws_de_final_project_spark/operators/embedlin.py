@@ -184,7 +184,7 @@ def power_component(
     the per-step program free of aggregates-inside-recursion, so the
     DuckDB twin can unroll the identical steps as chained CTEs.
 
-    ``cov`` should be localCheckpointed by the caller: the returned
+    ``cov`` should be cut (``util.cut``) by the caller: the returned
     plan references it ``n_iter`` times."""
     v = _start_vector(spark, dim)
     for _ in range(n_iter):
@@ -251,7 +251,6 @@ def pca_project(
     impl: str = "auto",
     iter_impl: str = "auto",
     decimals: int = 4,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Project every vector onto the top ``n_components`` principal
     directions of the column's covariance: (id_col, pc1[, pc2, ...]),
@@ -267,18 +266,14 @@ def pca_project(
     bounded by schema, not data, the same legitimacy contract as the
     k-means trainer's sample collect) and iterates in numpy — ~2
     cluster stages total; ``'relational'`` keeps even the iteration
-    distributed (localCheckpointed cov, one join+agg per matvec) —
+    distributed (cut cov, one join+agg per matvec) —
     the right choice only when dim^2 itself is too big to collect,
     at the cost of ~10 tiny stages per component. ``'auto'``: driver
     below 4M cells (32 MB), relational above. Both run the identical
     program (same start vector, same step count, same deflation) and
-    land inside the same rounded output.
-
-    ``checkpoint_dir``: as in operators/util.py::cut — default
-    ``localCheckpoint()`` (fast, executor-resident, not fault-
-    tolerant); pass an HDFS/object-store path on a real cluster for
-    reliable ``checkpoint()`` of the covariance and each iteration
-    frame, surviving executor loss mid-iteration.
+    land inside the same rounded output. The covariance and each
+    iteration frame go through ``util.cut``, so a session with a
+    checkpoint dir gets reliable cuts that survive executor loss.
     """
     if n_components < 1:
         raise ValueError("n_components must be >= 1")
@@ -292,15 +287,11 @@ def pca_project(
     spark = df.sparkSession
     n = df.count()
     # ONE means aggregate (dim rows — broadcast-sized) shared by the
-    # covariance build and the centering pass below: lazily
-    # materialized so the element explode runs once for it, not once
-    # per consumer (r13; measured two redundant full element passes).
+    # covariance build and the centering pass below: cut so the
+    # element explode runs once for it, not once per consumer (r13;
+    # measured two redundant full element passes).
     e = _elements(df, vec_col, id_col)
-    means = (
-        e.groupBy("i")
-        .agg((F.sum("x") / F.lit(n)).alias("m"))
-        .localCheckpoint(eager=False)
-    )
+    means = _cut(e.groupBy("i").agg((F.sum("x") / F.lit(n)).alias("m")))
     # dim^2 rows are cluster-tiny; collapsing them to a handful of
     # partitions before the iteration turns each matvec's shuffle
     # into a near-no-op. ~1M cells per partition keeps even dim=4096
@@ -309,8 +300,7 @@ def pca_project(
     cov = _cut(
         covariance_entries(
             df, vec_col, id_col, dim, impl, n=n, means=means
-        ).coalesce(n_cov_parts),
-        checkpoint_dir,
+        ).coalesce(n_cov_parts)
     )
     if iter_impl == "driver":
         vecs = _driver_components(
@@ -327,12 +317,10 @@ def pca_project(
     else:
         comps = []
         for _ in range(n_components):
-            comp = _cut(
-                power_component(cov, spark, dim, n_iter), checkpoint_dir
-            )
+            comp = _cut(power_component(cov, spark, dim, n_iter))
             comps.append(comp)
             if len(comps) < n_components:
-                cov = _cut(deflate(cov, comp), checkpoint_dir)
+                cov = _cut(deflate(cov, comp))
 
     cent = e.join(F.broadcast(means), "i").select(
         "_id", "i", (F.col("x") - F.col("m")).alias("xc")

@@ -13,7 +13,7 @@ Scale shape: the expensive stage is building the weighted edge list
 (an ordinary multi-join + hash aggregate — whatever the caller's
 graph derivation is); each iteration is then one join of edges with
 the rank vector on src and one hash aggregate on dst — shuffle keyed
-by node id, state one double per node. Ranks are localCheckpointed
+by node id, state one double per node. Ranks are cut (``util.cut``)
 per step so the plan stays flat at any iteration count; the driver
 only orchestrates (N is the single scalar it ever sees).
 """
@@ -68,7 +68,6 @@ def pagerank(
     iter_impl: str = "auto",
     driver_max_nodes: int = 100_000,
     driver_max_edges: int = 2_000_000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Rank ``nodes`` by ``n_iter`` weighted-PageRank steps over
     ``edges``: pr'(v) = (1-d)/N + d * (sum over u->v of
@@ -110,8 +109,8 @@ def pagerank(
     # either the driver collect or the outw/en pair) — without this
     # the caller's data-sized graph build (e.g. the trade 4-way join
     # or the full HTML link extraction) re-runs per consumer (the
-    # multi-consumer lesson). Lazy: materializes at the first action.
-    e = e.localCheckpoint(eager=False)
+    # multi-consumer lesson).
+    e = _cut(e)
     if iter_impl == "auto":
         iter_impl = (
             "driver"
@@ -136,15 +135,13 @@ def pagerank(
     outw = e.groupBy("_src").agg(F.sum("_w").alias("_tw"))
     en = _cut(
         e.join(outw, "_src")
-        .select("_src", "_dst", (F.col("_w") / F.col("_tw")).alias("_p")),
-        checkpoint_dir,
+        .select("_src", "_dst", (F.col("_w") / F.col("_tw")).alias("_p"))
     )
     ranks = _cut(
         nodes.select(
             F.col(node_col).alias("_id"),
             (F.lit(1.0) / F.lit(float(n))).alias("_pr"),
-        ),
-        checkpoint_dir,
+        )
     )
     base = F.lit((1.0 - damping) / float(n))
     for _ in range(n_iter):
@@ -177,7 +174,7 @@ def pagerank(
                 ).alias("_pr"),
             )
         )
-        ranks = _cut(ranks, checkpoint_dir)
+        ranks = _cut(ranks)
     return ranks.select(F.col("_id").alias(node_col), F.col("_pr").alias("pr"))
 
 
@@ -231,7 +228,6 @@ def triangle_counts(
     edges: DataFrame,
     src: str,
     dst: str,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Per-node triangle participation counts over an undirected
     graph given as an edge relation (duplicates/self-loops/reversed
@@ -255,20 +251,8 @@ def triangle_counts(
     # orientation join) and the caller's edge derivation is often
     # itself a join (e.g. the per-order co-purchase self-join) —
     # without a checkpoint Spark re-derives it once per consumer
-    # (measured 4x wall-clock on the lineitem graph at sf0.1). LAZY
-    # when local (r14): the eager cut was a serial driver barrier —
-    # each of the three cuts (e, oriented, adj) ran as its own
-    # scheduled execution with a driver round trip between; a lazy
-    # localCheckpoint materializes inside the first consumer's job
-    # and later consumers read the persisted blocks, same work, no
-    # barrier. A reliable checkpoint_dir cut stays eager (checkpoint()
-    # semantics).
-    def _lazy_cut(df):
-        if checkpoint_dir is None:
-            return df.localCheckpoint(eager=False)
-        return _cut(df, checkpoint_dir)
-
-    e = _lazy_cut(
+    # (measured 4x wall-clock on the lineitem graph at sf0.1).
+    e = _cut(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("_u"),
             F.greatest(F.col(src), F.col(dst)).alias("_v"),
@@ -330,7 +314,7 @@ def triangle_counts(
         n_files = 0
     if n_files < target:
         oriented = oriented.repartition(target)
-    oriented = _lazy_cut(oriented)
+    oriented = _cut(oriented)
     # Adjacency-intersection enumeration (compact-forward): build each
     # node's sorted out-neighbor array once, attach it to both ends of
     # every oriented edge, and intersect in codegen. A triangle
@@ -348,9 +332,7 @@ def triangle_counts(
     # hash(_s) exchanges do not canonicalize equal under AQE here, so
     # without a cut the collect_list aggregate runs once per side
     # (measured ~30 s + ~12 s executor CPU per warm run at sf0.1).
-    # Lazy: materializes at the first action, keeps plan construction
-    # job-free (the r13 image-phash posture).
-    adj = _lazy_cut(adj)
+    adj = _cut(adj)
     # The adjacency frame is O(n + m) — it carries EVERY oriented edge
     # inside its arrays — and must NEVER be a broadcast build side:
     # Catalyst's static estimate of the checkpointed frame
@@ -421,12 +403,13 @@ def host_pagerank(
     # a checkpoint the caller's data-sized graph build (here the full
     # HTML link extraction) re-runs per consumer — measured 3 serial
     # re-extractions per pagerank_host_graph run before this (r13).
-    # Lazy: materializes at the first action.
-    e = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("double").alias("w"),
-    ).localCheckpoint(eager=False)
+    e = _cut(
+        edges.select(
+            F.col(src_col).alias("src"),
+            F.col(dst_col).alias("dst"),
+            F.col(weight_col).cast("double").alias("w"),
+        )
+    )
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))

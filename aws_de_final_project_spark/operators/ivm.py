@@ -27,6 +27,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_de_final_project_spark.operators.util import cut
+
 
 def join_view_delta(
     a_old: DataFrame,
@@ -56,7 +58,7 @@ def fold_join_view(
     on: Sequence[str],
 ) -> DataFrame:
     """Fold paired insert batches through the delta algebra, returning
-    the final view. Each round localCheckpoints the accumulated
+    the final view. Each round cuts (``util.cut``) the accumulated
     state so lineage stays flat (same posture as the rollup folds);
     parity of fold == one-shot join is what the oracled entry and the
     unit tests pin."""
@@ -68,7 +70,7 @@ def fold_join_view(
     for da, db in zip(a_batches, b_batches):
         dv = join_view_delta(a_old, da, b_old, db, on)
         view = dv if view is None else view.unionByName(dv)
-        view = view.localCheckpoint()
-        a_old = a_old.unionByName(da).localCheckpoint()
-        b_old = b_old.unionByName(db).localCheckpoint()
+        view = cut(view)
+        a_old = cut(a_old.unionByName(da))
+        b_old = cut(b_old.unionByName(db))
     return view

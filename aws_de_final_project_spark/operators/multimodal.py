@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_de_final_project_spark.operators.util import cut
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -896,14 +898,12 @@ def image_phash_pairs(
     # it once or the whole upstream grid/decode subtree re-runs per
     # consumer (the round-5 multi-consumer lesson; measured 3.5 s ->
     # 5.9 s at sf0.1 before this checkpoint). The frame is tiny:
-    # one id + four 16-bit bands per image. eager=False defers the
-    # materializing job to the first action (composing the plan stays
-    # free); the lineage-loss trade remains — executor loss after
-    # materialization fails the job instead of recomputing, acceptable
-    # for a short-lived intermediate this small.
-    sigs = images.select(
-        F.col(id_col).alias("_id"), dhash_bands(F.col(grid_col)).alias("_b")
-    ).localCheckpoint(eager=False)
+    # one id + four 16-bit bands per image.
+    sigs = cut(
+        images.select(
+            F.col(id_col).alias("_id"), dhash_bands(F.col(grid_col)).alias("_b")
+        )
+    )
     # 1. exact-group collapse: one representative per distinct signature
     reps = sigs.groupBy("_b").agg(F.min("_id").alias("_rep"))
     # hamming-0 pairs straight off the signature equality (no banding)

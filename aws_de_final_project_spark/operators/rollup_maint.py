@@ -22,6 +22,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_de_final_project_spark.operators.util import cut
+
 # measure spec: (output_col, source_col, kind) where kind in
 # {"sum", "count", "min", "max", "sumsq", "hll"} or
 # "hist:<lo>:<hi>:<n_bins>". count counts non-null source rows. sumsq
@@ -227,7 +229,7 @@ def hist_quantiles(
         .withColumn("_cumprev", F.col("_cum") - F.col("_c"))
     )
     tot = b.groupBy(*keys).agg(F.sum("_c").alias("_n"))
-    j = cum.join(F.broadcast(tot), list(keys)).localCheckpoint()
+    j = cut(cum.join(F.broadcast(tot), list(keys)))
     result = None
     for alias, q in qs.items():
         target = F.lit(float(q)) * F.col("_n").cast("double")

@@ -44,16 +44,29 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
-def cut(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
-    """Lineage cut for iterative operators (components, PageRank,
-    triangle counting): keeps plan size constant across rounds.
+def cut(df: DataFrame) -> DataFrame:
+    """The package's one lineage cut (materialization): a frame with
+    several consumers, or an iteration's per-round state, goes through
+    here so its subtree runs once and plans stay flat across rounds.
+    tests/test_util.py greps that no other module checkpoints.
 
-    Default is ``localCheckpoint()`` — blocks live on executors, fast,
-    but NOT fault-tolerant: losing an executor mid-iteration drops its
-    blocks and kills the job. On a real cluster pass ``checkpoint_dir``
-    (an HDFS/object-store path) to get a reliable ``checkpoint()``
-    instead — survives executor loss at the cost of a write per cut.
-    Both are eager, so the caller's cost model is unchanged.
+    One rule, set per session where Spark keeps it:
+
+    * the SparkContext has a checkpoint dir (``spark.checkpoint.dir``
+      at session build, an HDFS/object-store path on a real cluster):
+      a reliable, eager ``checkpoint()`` — the frame is written there
+      and survives executor loss;
+    * otherwise ``localCheckpoint(eager=False)`` — executor-resident
+      blocks, filled by the first job that reads the frame. Not
+      fault-tolerant: losing an executor drops its blocks and fails
+      the job.
+
+    "Lazy" is partial under AQE: the call still runs the map stages of
+    every exchange inside ``df`` and only the final stage waits for a
+    consumer (``groupBy().count()`` then a lazy cut runs 1 job at the
+    call with AQE on, 0 with it off). Callers whose contract needs the
+    rows out before something else happens (a count, an overwrite of
+    the source path) run that action themselves.
 
     RETENTION: reliable checkpoints are NOT reclaimed by default — an
     iterative operator writes up to a few frames per round (~26 rounds
@@ -63,22 +76,16 @@ def cut(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     SESSION BUILD time (it is a SparkContext conf, immutable
     afterwards — which is why this function cannot set it for you) so
     checkpoints whose RDDs go out of scope are deleted by the
-    ContextCleaner; otherwise clean ``checkpoint_dir`` after the job.
+    ContextCleaner; otherwise clean the checkpoint dir after the job.
     """
-    if checkpoint_dir is None:
-        return df.localCheckpoint()
-    sc = df.sparkSession.sparkContext
-    # setCheckpointDir appends a UUID subdir, so getCheckpointDir()
-    # never equals the base path — track the base we set ourselves
-    if getattr(sc, "_engine_ckpt_base", None) != checkpoint_dir:
-        sc.setCheckpointDir(checkpoint_dir)
-        sc._engine_ckpt_base = checkpoint_dir
-    return df.checkpoint()
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint()
+    return df.localCheckpoint(eager=False)
 
 
 def release(df: DataFrame) -> None:
-    """Best-effort, immediate unpersist of a ``localCheckpoint``-ed
-    frame's storage blocks (no-op for reliable checkpoints — their
+    """Best-effort, immediate unpersist of a :func:`cut` frame's
+    executor-resident blocks (no-op for reliable checkpoints — their
     files are governed by ``cleanCheckpoints``, see :func:`cut`).
 
     The ContextCleaner reclaims checkpoint blocks anyway once the

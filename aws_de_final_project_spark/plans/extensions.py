@@ -26,7 +26,7 @@ from aws_de_final_project_spark.operators import (
     similarity,
     spatial,
 )
-from aws_de_final_project_spark.operators.util import local_frame, spread
+from aws_de_final_project_spark.operators.util import cut, local_frame, spread
 from aws_de_final_project_spark.sources.registry import embedding_dim, load_tables
 from aws_de_final_project_spark.streaming import replay as RP
 
@@ -1183,8 +1183,6 @@ def curation_manifest_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline end-to-end."""
     from aws_de_final_project_spark.operators import curation
 
-    from aws_de_final_project_spark.operators.util import cut as _cutf
-
     t = load_tables(spark, sf_dir, ("documents",))
     docs = t["documents"]
     bench = docs.filter(F.col("doc_id") % 23 == 0)
@@ -1193,11 +1191,11 @@ def curation_manifest_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # curate_corpus): deduped feeds the gate AND the semi-join,
     # gated feeds decontamination AND the final semi-join — without
     # the cuts each stage's whole subtree replays per consumer
-    deduped = _cutf(dedup.exact_dedup(corpus, "text", "doc_id"))
+    deduped = cut(dedup.exact_dedup(corpus, "text", "doc_id"))
     gated_ids = curation.quantile_quality_filter(
         deduped, group_col="source", q=0.5
     ).select("doc_id")
-    gated = _cutf(deduped.join(gated_ids, "doc_id", "left_semi"))
+    gated = cut(deduped.join(gated_ids, "doc_id", "left_semi"))
     overlap = curation.decontaminate(gated, bench, ngram=5)
     clean_ids = overlap.filter(F.col("n_hits") == 0).select("doc_id")
     clean = gated.join(clean_ids, "doc_id", "left_semi")
@@ -2847,12 +2845,11 @@ def basket_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the basket frame — the pre-distinct shuffle, the separate
     # distinct-orderkey scan, and the separate item-support scan all
     # collapse into this aggregate (r13: 3 corpus-width shuffles -> 1).
-    baskets = (
+    baskets = cut(
         t["lineitem"]
         .select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("_ps"))
-        .localCheckpoint(eager=False)
     )
     # 1-row denominator frame, broadcast-crossed in lazily (the
     # plan-build .count() alternative makes warm == cold, VERDICT r1):

@@ -33,6 +33,7 @@ from aws_de_final_project_spark.functions.dialect import (
     presto_date_format,
     presto_date_parse,
 )
+from aws_de_final_project_spark.operators.util import cut
 from aws_de_final_project_spark.sources.registry import load_tables
 
 
@@ -1363,9 +1364,11 @@ def state_diff_user_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     t = load_tables(spark, sf_dir, ("events",))
-    dim = scd2_from_changelog(
-        t["events"], "user_id", ["event_type"], "ts", "event_id"
-    ).localCheckpoint()
+    dim = cut(
+        scd2_from_changelog(
+            t["events"], "user_id", ["event_type"], "ts", "event_id"
+        )
+    )
     t1 = scd2_point_in_time(dim, "2024-01-10 00:00:00").select(
         "user_id", "event_type"
     )

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from aws_de_final_project_spark.operators.util import cut, release
+
 
 def _bucketed(df: DataFrame, key_col: str, n_buckets: int) -> DataFrame:
     return df.withColumn(
@@ -67,14 +69,15 @@ def merge_batch(
             F.desc(version_col), F.desc("_src")
         )
         # materialize BEFORE the write: the merged plan reads the same
-        # path it is about to overwrite; localCheckpoint (eager) pulls
-        # the survivors out of the source files first.
-        merged = (
+        # path it is about to overwrite. The cut alone may wait for its
+        # first consumer — which would be the overwrite itself — so the
+        # count pulls the survivors out of the source files first.
+        merged = cut(
             both.withColumn("_rn", F.row_number().over(w2))
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_src")
-            .localCheckpoint()
         )
+        merged.count()
     except Exception:  # first batch — nothing to merge
         merged = incoming
     (
@@ -83,6 +86,7 @@ def merge_batch(
         .option("partitionOverwriteMode", "dynamic")
         .parquet(target_dir)
     )
+    release(merged)
 
 
 def streaming_upsert(

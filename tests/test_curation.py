@@ -347,7 +347,8 @@ def test_curate_corpus_end_to_end(spark, tmp_path):
     shard export. Each stage's survivor set is checkable by
     construction: planted exact dups collapse, the contaminated doc
     (verbatim benchmark 5-gram) is dropped, counts are monotone, and
-    the manifest totals match the survivors."""
+    the manifest totals match the survivors. The stage cuts are
+    released: the call leaves no new persisted RDD behind."""
     from aws_de_final_project_spark.operators.curation import curate_corpus
 
     good = "the quiet library holds many well organized shelves of books "
@@ -365,10 +366,13 @@ def test_curate_corpus_end_to_end(spark, tmp_path):
         [(1, "the secret benchmark answer phrase exactly")],
         "doc_id long, text string",
     )
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs())
     out = curate_corpus(
         docs, bench, str(tmp_path / "corpus"),
         quality_q=0.05, shard_budget=500,
     )
+    leaked = set(spark.sparkContext._jsc.getPersistentRDDs()) - persisted
+    assert not leaked, leaked
     st = out["stages"]
     assert st["input"] == 43
     assert st["after_exact_dedup"] == 42  # dup 100 collapsed

@@ -446,39 +446,6 @@ def test_connected_components_nonconvergence_raises(spark):
         dedup.connected_components_iters(path, max_iter=2)
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir selects reliable df.checkpoint() (durable on a
-    real cluster where localCheckpoint blocks die with executors) and
-    must produce identical labels — and actually write checkpoint
-    data under the given directory."""
-    import random
-
-    rng = random.Random(11)
-    edges = {(min(a, b), max(a, b))
-             for a, b in ((rng.randrange(120), rng.randrange(120))
-                          for _ in range(90)) if a != b}
-    edges.update((i, i + 1) for i in range(200, 230))
-    pairs = spark.createDataFrame(sorted(edges), ["doc_a", "doc_b"])
-    base = {(r.node, r.component)
-            for r in dedup.connected_components(pairs).collect()}
-    ckpt = str(tmp_path / "ckpt")
-    durable = {
-        (r.node, r.component)
-        for r in dedup.connected_components(
-            pairs, checkpoint_dir=ckpt
-        ).collect()
-    }
-    assert durable == base
-    import os
-
-    written = [
-        os.path.join(dp, f)
-        for dp, _dn, fn in os.walk(ckpt)
-        for f in fn
-    ]
-    assert written, "reliable checkpoint wrote nothing under checkpoint_dir"
-
-
 def test_connected_components_null_pairs_dropped_in_both_impls(spark):
     """Pairs with NULL (or NULL-cast) ids must silently drop in BOTH
     impls — previously the driver union-find raised an opaque

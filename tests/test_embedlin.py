@@ -163,30 +163,3 @@ def test_jl_projection_preserves_norms(spark):
     mean = sum(ratios) / len(ratios)
     assert abs(mean - 1.0) < 0.15
     assert min(ratios) > 0.05
-
-
-def test_pca_reliable_checkpoint_identical(planted, tmp_path):
-    """checkpoint_dir swaps the relational iteration's lineage cuts
-    to reliable df.checkpoint() (durable on a real cluster) without
-    changing a single projected value, and actually writes under the
-    given dir."""
-    import os
-
-    df, _, _ = planted
-    base = embedlin.pca_project(
-        df, "embedding", "vec_id", dim=8, n_components=2,
-        n_iter=8, impl="sql", iter_impl="relational",
-    ).orderBy("vec_id").collect()
-    ckpt = str(tmp_path / "pca_ckpt")
-    reliable = embedlin.pca_project(
-        df, "embedding", "vec_id", dim=8, n_components=2,
-        n_iter=8, impl="sql", iter_impl="relational",
-        checkpoint_dir=ckpt,
-    ).orderBy("vec_id").collect()
-    assert [tuple(r) for r in base] == [tuple(r) for r in reliable]
-    written = [
-        os.path.join(d, f)
-        for d, _, fs in os.walk(ckpt)
-        for f in fs
-    ]
-    assert written, "reliable checkpoint wrote nothing under checkpoint_dir"

@@ -148,44 +148,6 @@ def test_triangle_counts_star_hub_no_blowup(spark):
     assert triangle_counts(df, "src", "dst").count() == 0
 
 
-def test_pagerank_and_triangles_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir must swap the per-iteration lineage cut to
-    reliable df.checkpoint() without changing results (pagerank ranks
-    and triangle counts both bit-identical to the default path)."""
-    from aws_de_final_project_spark.operators.graphrank import (
-        triangle_counts,
-    )
-
-    nodes = _df_nodes(spark, [1, 2, 3, 4])
-    edges = _df_edges(
-        spark,
-        [(1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0), (1, 4, 0.5), (4, 2, 1.0)],
-    )
-    base = {r.id: r.pr for r in
-            pagerank(nodes, edges, n_iter=6, iter_impl="relational").collect()}
-    durable = {
-        r.id: r.pr
-        for r in pagerank(
-            nodes, edges, n_iter=6, iter_impl="relational",
-            checkpoint_dir=str(tmp_path / "pr"),
-        ).collect()
-    }
-    assert durable == base
-
-    tri_edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 1)], "a long, b long"
-    )
-    t_base = {(r.node, r.n_triangles)
-              for r in triangle_counts(tri_edges, "a", "b").collect()}
-    t_durable = {
-        (r.node, r.n_triangles)
-        for r in triangle_counts(
-            tri_edges, "a", "b", checkpoint_dir=str(tmp_path / "tri")
-        ).collect()
-    }
-    assert t_durable == t_base
-
-
 def test_host_pagerank_blocklisted_spam_ranks_low(spark):
     """Composition pin (VERDICT r12 item 5): on a planted host graph,
     a spam/link-farm domain (out-links only, zero in-links — the

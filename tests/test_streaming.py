@@ -294,7 +294,7 @@ def test_streaming_upsert_last_writer_wins(spark, tmp_path):
     """foreachBatch keyed MERGE (the re-delivery fix the reference
     never had): re-delivered keys replace their old version, new keys
     insert, a re-run adds nothing, and only touched hash buckets are
-    rewritten."""
+    rewritten. Each batch releases its merge cut after the write."""
     from pyspark.sql import types as T
 
     from aws_de_final_project_spark.streaming.upsert import streaming_upsert
@@ -329,7 +329,10 @@ def test_streaming_upsert_last_writer_wins(spark, tmp_path):
         )
         streaming_upsert(spark, stream, out, ckpt, "id", "v")
 
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs())
     run()
+    leaked = set(spark.sparkContext._jsc.getPersistentRDDs()) - persisted
+    assert not leaked, leaked
     got = {r.id: (r.v, r.payload) for r in spark.read.parquet(out).collect()}
     want = {i: (1, f"a{i}") for i in range(20, 110)}
     want.update({i: (2, f"b{i}") for i in range(20)})

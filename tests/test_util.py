@@ -1,15 +1,20 @@
-"""operators/util.local_frame: the one driver-rows -> frame primitive.
+"""operators/util: the one driver-rows -> frame primitive and the one
+lineage cut.
 
-Each case builds the same rows both ways — ``local_frame`` and the
-pickled-list ``createDataFrame`` path it replaces — and checks equal
-schemas (names, types, nullability) and equal collected rows, and that
-the local frame plans as a JVM-side ``LocalTableScan``."""
+Each ``local_frame`` case builds the same rows both ways —
+``local_frame`` and the pickled-list ``createDataFrame`` path it
+replaces — and checks equal schemas (names, types, nullability) and
+equal collected rows, and that the local frame plans as a JVM-side
+``LocalTableScan``."""
 
 from __future__ import annotations
 
 import ast
 import datetime as dt
+import json
 import os
+import subprocess
+import sys
 import time
 from pathlib import Path
 
@@ -136,25 +141,61 @@ def test_local_frame_datetimes_under_non_utc_process_tz(spark):
         time.tzset()
 
 
-def _local_frame_lines() -> range:
-    for node in ast.parse(UTIL.read_text()).body:
-        if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
-            return range(node.lineno, node.end_lineno + 1)
-    raise AssertionError("operators/util.local_frame not found")
+def _outside(fn: str, patterns: tuple[str, ...]) -> str:
+    """Lines of the package and the entry module that contain one of
+    ``patterns`` outside operators/util.<fn>, one per line."""
+    allowed = next(
+        range(node.lineno, node.end_lineno + 1)
+        for node in ast.parse(UTIL.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name == fn
+    )
+    files = sorted((ROOT / "aws_de_final_project_spark").rglob("*.py"))
+    files.append(ROOT / "__spark_entry__.py")
+    return "\n".join(
+        f"{path.relative_to(ROOT)}:{no}: {line.strip()}"
+        for path in files
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if any(p in line for p in patterns)
+        and not (path == UTIL and no in allowed)
+    )
 
 
 def test_driver_rows_become_frames_only_through_local_frame():
     """One-way guard: no ``createDataFrame(`` in the package or the
     entry module outside operators/util.local_frame."""
-    allowed = _local_frame_lines()
-    files = sorted((ROOT / "aws_de_final_project_spark").rglob("*.py"))
-    files.append(ROOT / "__spark_entry__.py")
-    hits = []
-    for path in files:
-        for no, line in enumerate(path.read_text().splitlines(), 1):
-            if "createDataFrame(" not in line:
-                continue
-            if path == UTIL and no in allowed:
-                continue
-            hits.append(f"{path.relative_to(ROOT)}:{no}: {line.strip()}")
-    assert not hits, "\n".join(hits)
+    hits = _outside("local_frame", ("createDataFrame(",))
+    assert not hits, hits
+
+
+def test_frames_are_cut_only_through_util_cut():
+    """One-way guard: no ``localCheckpoint(``, ``.checkpoint(`` or
+    ``setCheckpointDir`` outside operators/util.cut, the one place the
+    lazy/reliable choice is made."""
+    hits = _outside("cut", ("localCheckpoint(", ".checkpoint(", "setCheckpointDir"))
+    assert not hits, hits
+
+
+def test_reliable_cut_from_session_checkpoint_dir(spark, tmp_path):
+    """A fresh session built with ``spark.checkpoint.dir`` makes every
+    ``util.cut`` a reliable ``checkpoint()``: the iterative and
+    multi-consumer operators give the same rows as this (local-cut)
+    session, and each writes checkpoint files under the dir — MinHash
+    included, whose cuts had no fault-tolerant mode before. A
+    subprocess, because a context's checkpoint dir cannot be unset."""
+    from tests._reliable_cut_proc import results
+
+    assert not spark.sparkContext.getCheckpointDir()
+    local_rows, _ = results(spark)
+    assert all(local_rows.values()), local_rows
+    proc = subprocess.run(
+        [sys.executable, str(ROOT / "tests" / "_reliable_cut_proc.py"), str(tmp_path)],
+        capture_output=True,
+        text=True,
+        timeout=420,
+        env=dict(os.environ, PYTHONPATH=str(ROOT)),
+        cwd=ROOT,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.split("RESULTS ", 1)[1].splitlines()[0])
+    assert got["rows"] == json.loads(json.dumps(local_rows))
+    assert all(got["wrote"].values()), got["wrote"]
