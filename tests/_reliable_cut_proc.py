@@ -1,4 +1,5 @@
-"""Subprocess worker for tests/test_util.py: reliable-mode ``util.cut``.
+"""Subprocess worker for the ``reliable_cut`` fixture (tests/conftest.py):
+reliable-mode ``util.cut``.
 
 A SparkContext's checkpoint dir cannot be unset, so reliable mode runs
 in its own JVM, built with ``spark.checkpoint.dir=<root>``. Both sides

@@ -446,6 +446,19 @@ def test_connected_components_nonconvergence_raises(spark):
         dedup.connected_components_iters(path, max_iter=2)
 
 
+def test_connected_components_reliable_checkpoint(reliable_cut):
+    """On a session with a checkpoint dir, ``util.cut`` is a reliable
+    ``df.checkpoint()`` (durable on a real cluster, where
+    localCheckpoint blocks die with executors): connected_components
+    must give identical labels and actually write checkpoint data under
+    the dir."""
+    local_rows, got = reliable_cut
+    assert local_rows["connected_components"]
+    assert got["rows"]["connected_components"] == local_rows["connected_components"]
+    assert got["wrote"]["connected_components"], (
+        "reliable checkpoint wrote nothing under spark.checkpoint.dir")
+
+
 def test_connected_components_null_pairs_dropped_in_both_impls(spark):
     """Pairs with NULL (or NULL-cast) ids must silently drop in BOTH
     impls — previously the driver union-find raised an opaque

@@ -163,3 +163,15 @@ def test_jl_projection_preserves_norms(spark):
     mean = sum(ratios) / len(ratios)
     assert abs(mean - 1.0) < 0.15
     assert min(ratios) > 0.05
+
+
+def test_pca_reliable_checkpoint_identical(reliable_cut):
+    """A session checkpoint dir swaps the relational iteration's lineage
+    cuts to reliable df.checkpoint() (durable on a real cluster) without
+    changing a single projected value, and actually writes under the
+    dir."""
+    local_rows, got = reliable_cut
+    assert local_rows["pca_project"]
+    assert got["rows"]["pca_project"] == local_rows["pca_project"]
+    assert got["wrote"]["pca_project"], (
+        "reliable checkpoint wrote nothing under spark.checkpoint.dir")

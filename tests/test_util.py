@@ -11,10 +11,7 @@ from __future__ import annotations
 
 import ast
 import datetime as dt
-import json
 import os
-import subprocess
-import sys
 import time
 from pathlib import Path
 
@@ -175,27 +172,13 @@ def test_frames_are_cut_only_through_util_cut():
     assert not hits, hits
 
 
-def test_reliable_cut_from_session_checkpoint_dir(spark, tmp_path):
+def test_reliable_cut_from_session_checkpoint_dir(reliable_cut):
     """A fresh session built with ``spark.checkpoint.dir`` makes every
     ``util.cut`` a reliable ``checkpoint()``: the iterative and
     multi-consumer operators give the same rows as this (local-cut)
     session, and each writes checkpoint files under the dir — MinHash
-    included, whose cuts had no fault-tolerant mode before. A
-    subprocess, because a context's checkpoint dir cannot be unset."""
-    from tests._reliable_cut_proc import results
-
-    assert not spark.sparkContext.getCheckpointDir()
-    local_rows, _ = results(spark)
+    included, whose cuts had no fault-tolerant mode before."""
+    local_rows, got = reliable_cut
     assert all(local_rows.values()), local_rows
-    proc = subprocess.run(
-        [sys.executable, str(ROOT / "tests" / "_reliable_cut_proc.py"), str(tmp_path)],
-        capture_output=True,
-        text=True,
-        timeout=420,
-        env=dict(os.environ, PYTHONPATH=str(ROOT)),
-        cwd=ROOT,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    got = json.loads(proc.stdout.split("RESULTS ", 1)[1].splitlines()[0])
-    assert got["rows"] == json.loads(json.dumps(local_rows))
+    assert got["rows"] == local_rows
     assert all(got["wrote"].values()), got["wrote"]
