@@ -127,15 +127,6 @@ def fingerprint(col: Column | str) -> Column:
     return F.md5(normalized_text(col))
 
 
-def char_ngrams(col: Column | str, n: int = 5) -> Column:
-    """Distinct character n-gram shingles of the normalized text ->
-    array<string>. Built with sequence+transform+substring: stays in
-    codegen, no UDF."""
-    norm = normalized_text(col)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: norm.substr(i, F.lit(n))))
-
-
 def mean_word_len(col: Column | str) -> Column:
     """Mean characters per whitespace token (0 for empty docs) — a
     Gopher-rule signal: real prose sits ~3-10; OCR noise and code

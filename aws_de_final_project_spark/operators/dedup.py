@@ -55,6 +55,7 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.join(keepers, id_col, "left_semi")
 
 
+from aws_de_final_project_spark.operators import util
 from aws_de_final_project_spark.operators.util import cut as _cut
 from aws_de_final_project_spark.operators.util import local_frame
 from aws_de_final_project_spark.operators.util import release as _release
@@ -571,41 +572,14 @@ def connected_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 20,
-    impl: str = "relational",
-    driver_max_pairs: int = 2_000_000,
 ) -> DataFrame:
-    """Labels-only connected components. Two implementations with the
-    same output contract (node -> min id of its component):
-
-    * ``impl='relational'`` — iterative min-label propagation with
-      pointer doubling (:func:`connected_components_iters`); the
-      data-scale path, O(log diameter)-ish rounds of key-partitioned
-      joins. Raises loudly if ``max_iter`` rounds don't converge.
-    * ``impl='driver'`` — union-find over the collected ID PAIRS
-      (16 bytes each, capped at ``driver_max_pairs``): the right
-      plan when the pair list is aggregation-sized — a blocked
-      entity-resolution graph is a few pairs per entity no matter how
-      big the input tables were, and a 26-diameter component that
-      costs 26 shuffle rounds relationally is microseconds in
-      union-find. Same dispatch precedent as
-      ``graphrank.pagerank(iter_impl=...)``. Raises if the pair
-      count exceeds the cap rather than silently collecting big data.
-    * ``impl='auto'`` — tries the driver path's bounded collect
-      first and FALLS BACK to the relational iteration when the pair
-      list exceeds the cap, instead of raising: the dispatch a
-      pipeline wants at unknown scale (small blocked graphs stay
-      microsecond-fast; a pathological blocking key degrades to the
-      distributed path, never to an OOM or an error). Costs exactly
-      one wasted bounded collect on the fallback path, nothing on
-      the happy path.
+    """Labels-only connected components: node -> min id of its
+    component. The pair list is cut and counted once; at most
+    ``util.DRIVER_MAX_ROWS`` pairs (16 bytes each) run union-find over
+    the collected pairs, more run :func:`connected_components_iters`
+    (pointer-doubling rounds, raises if ``max_iter`` rounds don't
+    converge) on the cut pairs. Both paths give the same labels.
     """
-    if impl == "relational":
-        labels, _ = connected_components_iters(pairs, id_a, id_b, max_iter)
-        return labels
-    if impl not in ("driver", "auto"):
-        raise ValueError(
-            f"impl must be 'relational', 'driver' or 'auto', got {impl!r}"
-        )
     # drop pairs with NULL (or non-numeric -> NULL-cast) ids up
     # front: the relational path's equi-joins drop them implicitly,
     # and an uncaught None here would raise an opaque TypeError
@@ -621,29 +595,16 @@ def connected_components(
     # list is smaller than the cap — the common case — costing ~1.65x
     # the pipeline plus a driver round-trip per round (measured on the
     # entity-resolution entry, r13). The cut materializes the
-    # pipeline exactly once at the count; the collect then reads the
-    # stored frame, and the count keeps the driver pull bounded before
-    # any row moves (the same legitimacy contract as before).
+    # pipeline exactly once at the count; the collect (or, over the
+    # cap, the relational rounds) then reads the stored frame, and the
+    # count keeps the driver pull bounded before any row moves.
     cleaned = _cut(cleaned)
     n_pairs = cleaned.count()
-    if n_pairs > driver_max_pairs:
-        if impl == "auto":
-            # feed the MATERIALIZED pair list into the relational
-            # fallback — recomputing the candidate pipeline from the
-            # original frame would waste the full run the count just
-            # paid (r13 ADVICE/VERDICT item 2); the iteration's
-            # convergence counts consume the blocks, then they are
-            # released.
-            labels, _ = connected_components_iters(
-                cleaned, "a", "b", max_iter
-            )
-            _release(cleaned)
-            return labels
+    if n_pairs > util.DRIVER_MAX_ROWS:
+        labels, _ = connected_components_iters(cleaned, "a", "b", max_iter)
+        # the iteration's convergence counts consumed the blocks
         _release(cleaned)
-        raise ValueError(
-            f"pair list exceeds driver_max_pairs={driver_max_pairs}; "
-            f"use impl='relational'"
-        )
+        return labels
     rows = cleaned.collect()
     _release(cleaned)
     parent: dict = {}
@@ -775,12 +736,10 @@ def connected_components_iters(
         # distance is graph-shaped (a blocked entity graph at sf0.1
         # needed 26 rounds — past the old default, which would have
         # returned mislabeled components with no signal). Loud
-        # failure tells the caller to raise max_iter or use the
-        # driver union-find path for aggregation-sized graphs.
+        # failure tells the caller to raise max_iter.
         raise RuntimeError(
             f"connected components did not converge in {max_iter} "
-            f"rounds; raise max_iter (diameter-bound) or use "
-            f"impl='driver' for aggregation-sized pair lists"
+            f"rounds; raise max_iter (diameter-bound)"
         )
     return labels, iters
 
@@ -791,13 +750,12 @@ def dedup_components(
     id_col: str,
     id_a: str = "doc_a",
     id_b: str = "doc_b",
-    impl: str = "relational",
 ) -> DataFrame:
     """Component assignment for EVERY document: docs in some near-dup
     cluster get the cluster's min id, singletons get themselves.
-    Output: (id_col, component, is_keeper). ``impl`` dispatches the
-    components step (see :func:`connected_components`)."""
-    comps = connected_components(pairs, id_a, id_b, impl=impl)
+    Output: (id_col, component, is_keeper); the components step is
+    :func:`connected_components` (driver union-find up to the cap)."""
+    comps = connected_components(pairs, id_a, id_b)
     return (
         df.select(F.col(id_col).cast("long").alias("node"))
         .join(comps, "node", "left")

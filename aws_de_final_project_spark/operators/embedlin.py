@@ -22,8 +22,10 @@ engines run the identical truncation, so parity is exact regardless.)
 Scale shape at 100 TB: the only data-sized stages are the element
 explode (n * dim rows, linear) and the Gram aggregate (map-side
 combinable into dim^2 cells). Everything after the Gram is O(dim^2)
-rows — cluster-tiny — and the driver only ever orchestrates, never
-collects vectors.
+rows — cluster-tiny. The driver never collects vectors; it collects
+the covariance and iterates in numpy when its dim^2 cells fit
+``util.DRIVER_MAX_ROWS`` (the package's one driver-or-cluster rule),
+and leaves the iteration distributed otherwise.
 """
 
 from __future__ import annotations
@@ -32,10 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aws_de_final_project_spark.functions.numeric import round_half_up as rnd
-from aws_de_final_project_spark.operators.similarity import (
-    ARROW_AUTO_DIM,
-    _resolve_impl,
-)
+from aws_de_final_project_spark.operators import util
+from aws_de_final_project_spark.operators.similarity import _resolve_impl
 from aws_de_final_project_spark.operators.util import cut as _cut
 from aws_de_final_project_spark.operators.util import local_frame
 from aws_de_final_project_spark.operators.util import spread as _spread
@@ -220,7 +220,7 @@ def _driver_components(
     run on the collected (dim x dim) covariance with numpy: the
     matvec summation order differs from the relational group-sum at
     ~1e-16 relative, far inside the output rounding — so either
-    iteration impl satisfies the same oracle."""
+    iteration path satisfies the same oracle."""
     import numpy as np
 
     c = np.zeros((dim, dim))
@@ -249,7 +249,6 @@ def pca_project(
     n_components: int = 2,
     n_iter: int = 8,
     impl: str = "auto",
-    iter_impl: str = "auto",
     decimals: int = 4,
 ) -> DataFrame:
     """Project every vector onto the top ``n_components`` principal
@@ -261,29 +260,21 @@ def pca_project(
     broadcast of the (dim x n_components) projection back onto the
     data.
 
-    ``iter_impl`` picks where the O(dim^2) fixed-point iteration
-    runs: ``'driver'`` collects the covariance (dim^2 doubles —
-    bounded by schema, not data, the same legitimacy contract as the
-    k-means trainer's sample collect) and iterates in numpy — ~2
-    cluster stages total; ``'relational'`` keeps even the iteration
-    distributed (cut cov, one join+agg per matvec) —
-    the right choice only when dim^2 itself is too big to collect,
-    at the cost of ~10 tiny stages per component. ``'auto'``: driver
-    below 4M cells (32 MB), relational above. Both run the identical
-    program (same start vector, same step count, same deflation) and
-    land inside the same rounded output. The covariance and each
-    iteration frame go through ``util.cut``, so a session with a
-    checkpoint dir gets reliable cuts that survive executor loss.
+    Where the O(dim^2) fixed-point iteration runs follows
+    ``util.DRIVER_MAX_ROWS``: when the dim^2 covariance cells fit the
+    cap, the covariance (bounded by schema, not data, the same
+    legitimacy contract as the k-means trainer's sample collect) is
+    collected and iterated in numpy — ~2 cluster stages total; above
+    it the iteration stays distributed (cut cov, one join+agg per
+    matvec), at the cost of ~10 tiny stages per component. Both run
+    the identical program (same start vector, same step count, same
+    deflation) and land inside the same rounded output. The
+    covariance and each iteration frame go through ``util.cut``, so a
+    session with a checkpoint dir gets reliable cuts that survive
+    executor loss.
     """
     if n_components < 1:
         raise ValueError("n_components must be >= 1")
-    if iter_impl not in ("auto", "driver", "relational"):
-        raise ValueError(
-            f"iter_impl must be 'auto', 'driver' or 'relational',"
-            f" got {iter_impl!r}"
-        )
-    if iter_impl == "auto":
-        iter_impl = "driver" if dim * dim <= 1 << 22 else "relational"
     spark = df.sparkSession
     n = df.count()
     # ONE means aggregate (dim rows — broadcast-sized) shared by the
@@ -302,7 +293,7 @@ def pca_project(
             df, vec_col, id_col, dim, impl, n=n, means=means
         ).coalesce(n_cov_parts)
     )
-    if iter_impl == "driver":
+    if dim * dim <= util.DRIVER_MAX_ROWS:
         vecs = _driver_components(
             cov.collect(), dim, n_components, n_iter
         )

@@ -14,8 +14,10 @@ Scale shape: the expensive stage is building the weighted edge list
 graph derivation is); each iteration is then one join of edges with
 the rank vector on src and one hash aggregate on dst — shuffle keyed
 by node id, state one double per node. Ranks are cut (``util.cut``)
-per step so the plan stays flat at any iteration count; the driver
-only orchestrates (N is the single scalar it ever sees).
+per step so the plan stays flat at any iteration count. A graph whose
+nodes + edges fit ``util.DRIVER_MAX_ROWS`` (the package's one
+driver-or-cluster rule) is collected and iterated on the driver
+instead; the program and the rounded output are the same.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, LongType, StructType
 
 from aws_de_final_project_spark.functions.numeric import round_half_up as rnd
+from aws_de_final_project_spark.operators import util
 from aws_de_final_project_spark.operators.util import cut as _cut
 from aws_de_final_project_spark.operators.util import local_frame
 
@@ -35,7 +38,7 @@ def _driver_pagerank(
     """The identical fixed-iteration program on collected (bounded)
     graphs: plain dict arithmetic, same expression shape as the
     relational path (base + d * (contrib + dangling/N)), so both
-    impls land inside the same rounded output (float sum order
+    paths land inside the same rounded output (float sum order
     differs at ~1e-15)."""
     n = len(node_ids)
     outw: dict = {}
@@ -65,9 +68,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "w",
-    iter_impl: str = "auto",
-    driver_max_nodes: int = 100_000,
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Rank ``nodes`` by ``n_iter`` weighted-PageRank steps over
     ``edges``: pr'(v) = (1-d)/N + d * (sum over u->v of
@@ -80,23 +80,15 @@ def pagerank(
     program is identical on any engine — the same contract as
     embedlin.power_component.
 
-    ``iter_impl``: ``'driver'`` collects the AGGREGATED graph (often
-    schema-bounded tiny — e.g. a nation-level or domain-level graph —
-    even when the underlying facts are 100 TB) and iterates in plain
+    Where it iterates follows ``util.DRIVER_MAX_ROWS``: when nodes +
+    edges fit the cap, the AGGREGATED graph (often schema-bounded
+    tiny — e.g. a nation-level or domain-level graph — even when the
+    underlying facts are 100 TB) is collected and iterated in plain
     Python, ~1 cluster stage after the edge aggregation instead of
-    ~3 per iteration; ``'relational'`` keeps the iteration
-    distributed for graphs whose node/edge count is itself
-    data-scale. ``'auto'`` picks driver only when BOTH the node and
-    edge counts fit the configured bounds — the same
-    bounded-collect legitimacy contract as the PCA covariance and
-    the k-means sample."""
+    ~3 per iteration; a graph whose node/edge count is itself
+    data-scale keeps the iteration distributed."""
     if not 0.0 < damping < 1.0:
         raise ValueError("damping must be in (0, 1)")
-    if iter_impl not in ("auto", "driver", "relational"):
-        raise ValueError(
-            f"iter_impl must be 'auto', 'driver' or 'relational',"
-            f" got {iter_impl!r}"
-        )
     n = nodes.count()
     if n == 0:
         raise ValueError("empty node set")
@@ -105,19 +97,13 @@ def pagerank(
         F.col(dst_col).alias("_dst"),
         F.col(weight_col).cast("double").alias("_w"),
     )
-    # e is consumed 2-4 times below (the auto-sizing count, then
-    # either the driver collect or the outw/en pair) — without this
-    # the caller's data-sized graph build (e.g. the trade 4-way join
-    # or the full HTML link extraction) re-runs per consumer (the
-    # multi-consumer lesson).
+    # e is consumed 2-4 times below (the cap count, then either the
+    # driver collect or the outw/en pair) — without this the caller's
+    # data-sized graph build (e.g. the trade 4-way join or the full
+    # HTML link extraction) re-runs per consumer (the multi-consumer
+    # lesson).
     e = _cut(e)
-    if iter_impl == "auto":
-        iter_impl = (
-            "driver"
-            if n <= driver_max_nodes and e.count() <= driver_max_edges
-            else "relational"
-        )
-    if iter_impl == "driver":
+    if n + e.count() <= util.DRIVER_MAX_ROWS:
         spark = nodes.sparkSession
         node_ids = [r[0] for r in nodes.select(node_col).collect()]
         edge_rows = [(r["_src"], r["_dst"], r["_w"]) for r in e.collect()]
@@ -395,8 +381,8 @@ def host_pagerank(
     (domain, pr) 6dp floor-form, descending.
 
     Scale shape: the edge list is domain-keyed (schema-bounded far
-    below the page count), so ``iter_impl='auto'`` usually collapses
-    to the driver iteration after one distinct-union over the
+    below the page count), so :func:`pagerank` usually takes the
+    driver iteration after one distinct-union over the
     aggregated edges — ~2 cluster stages on top of the graph build."""
     # the edge aggregate feeds BOTH node derivation (union-distinct +
     # count + possible driver collect) and the rank iteration; without

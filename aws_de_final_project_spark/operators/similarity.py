@@ -131,10 +131,6 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def cosine_similarity(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1239,45 +1235,3 @@ def _verify_buckets_cosine_gram(
         gram, "id_a long, id_b long, cos double"
     )
     return scored.groupBy("id_a", "id_b").agg(F.max("cos").alias("cos"))
-
-
-def _verify_pairs_cosine_vectorized(
-    pairs: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact-cosine verify for a candidate-pair frame (``_ida, _idb,
-    _va, _vb``) — the Arrow/numpy twin of the HOF pair scorer.
-
-    The candidate-generation stages (signature/cell equi-joins) are
-    cheap codegen arithmetic, but a dense candidate set (low
-    threshold -> short signatures -> fat buckets) pays an INTERPRETED
-    zip_with+aggregate dot per pair: measured ~95 s for ~3M pairs x
-    64 dims at sf0.1. This kernel scores each Arrow batch with one
-    vectorized numpy pass (~50x). Rounding to 4dp before the
-    threshold keeps the output contract identical to the HOF path —
-    same absorption the ann_cosine_topk_vec twin established
-    (float64 sum-order differences vanish at 4dp).
-    """
-    import pandas as pd  # noqa: F401 (Arrow batch interface)
-
-    def score(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.stack(pdf["_va"].to_numpy()).astype(np.float64)
-            B = np.stack(pdf["_vb"].to_numpy()).astype(np.float64)
-            cos = (A * B).sum(axis=1) / (
-                np.maximum(np.linalg.norm(A, axis=1), 1e-300)
-                * np.maximum(np.linalg.norm(B, axis=1), 1e-300)
-            )
-            cos = np.floor(cos * 10000.0 + 0.5) / 10000.0
-            keep = cos >= threshold
-            if keep.any():
-                out = pdf.loc[keep, ["_ida", "_idb"]].rename(
-                    columns={"_ida": "id_a", "_idb": "id_b"}
-                )
-                out["cos"] = cos[keep]
-                yield out
-
-    return pairs.mapInPandas(score, "id_a long, id_b long, cos double")

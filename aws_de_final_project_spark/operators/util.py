@@ -7,6 +7,24 @@ from datetime import timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType, TimestampType
 
+# The package's one driver-or-cluster rule. An operator with a driver
+# path collects its rows and runs the driver algorithm when the count
+# it already takes is at most this cap, and runs its relational
+# iteration otherwise. There is no caller override; operators read
+# ``util.DRIVER_MAX_ROWS`` at call time, so a test patches it here.
+#
+# * dedup.connected_components: cleaned (non-NULL) id pairs. A blocked
+#   or LSH pair list is a few edges per near-dup cluster or entity, so
+#   union-find replaces ~log-diameter rounds of join+agg+cut (26 on the
+#   sf0.1 entity graph) with one collect. Over the cap it feeds the
+#   already-cut pairs to connected_components_iters.
+# * graphrank.pagerank: nodes + edges of the aggregated graph (a
+#   nation- or domain-level graph is schema-bounded even over large
+#   facts); the driver iterates in plain Python.
+# * embedlin.pca_project: the dim x dim covariance cells; numpy runs
+#   the power iteration on the collected matrix.
+DRIVER_MAX_ROWS = 2_000_000
+
 
 def local_frame(
     spark: SparkSession, rows, schema: str | StructType

@@ -1160,14 +1160,6 @@ def extract_anchors(html: Column | str) -> Column:
     )
 
 
-def url_path(canon_url: Column) -> Column:
-    """The path component of a canonical URL (leading slash, no
-    query), '' when absent."""
-    return F.regexp_extract(
-        canon_url, r"^[a-z][a-z0-9+.-]*://[^/?]+(/[^?]*)?", 1
-    )
-
-
 def url_path_query(canon_url: Column) -> Column:
     """Everything after the authority of a canonical URL — path plus
     '?query' when present, '' when neither. The robots match target:

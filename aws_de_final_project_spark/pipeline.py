@@ -46,7 +46,6 @@ class PipelineConfig:
     # before views run (the reference's supporting/ crawler,
     # CDK/cdk/cdk_stack.py:113-134)
     supporting: dict[str, str] = field(default_factory=dict)
-    extra: dict = field(default_factory=dict)
 
 
 def _with_retry(step: Callable[[], None], name: str) -> None:

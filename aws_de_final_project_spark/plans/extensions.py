@@ -785,9 +785,9 @@ def dedup_component_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the exact 3-gram-Jaccard pair list, assigning every document
     its cluster's min doc_id (singletons keep their own id) and an
     is_keeper flag — the final "keep one per cluster" step of a dedup
-    pipeline. Iterative min-label propagation (operators/dedup.py);
-    oracle-checked via a DuckDB recursive-CTE transitive closure over
-    the same pair list.
+    pipeline. Union-find on the driver while the pair list fits
+    ``util.DRIVER_MAX_ROWS`` (operators/dedup.py); oracle-checked via
+    a DuckDB recursive-CTE transitive closure over the same pair list.
 
     Edges here come from the EXACT Jaccard join (O(n^2) within a lang
     block) so the oracle can reproduce them — this entry is the
@@ -799,16 +799,7 @@ def dedup_component_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.ngram_jaccard_pairs(
         docs, "text", "doc_id", threshold=0.5, block_col="lang"
     )
-    # impl='auto': the LSH pair list is aggregation-sized (a few edges
-    # per near-dup cluster), so the bounded driver union-find runs and
-    # the ~log-diameter pointer-doubling rounds (each a scheduled
-    # join+agg+checkpoint) collapse to one collect; past the 2M-pair
-    # cap it falls back to the distributed iteration (r13; same
-    # dispatch as the entity-resolution entry, equivalence pinned in
-    # tests/test_dedup.py)
-    return dedup.dedup_components(
-        docs, pairs, "doc_id", impl="auto"
-    ).orderBy("doc_id")
+    return dedup.dedup_components(docs, pairs, "doc_id").orderBy("doc_id")
 
 
 def dedup_component_groups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,16 +814,7 @@ def dedup_component_groups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("documents",))
     docs = t["documents"]
     pairs = dedup.minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.5)
-    # impl='auto': the LSH pair list is aggregation-sized (a few edges
-    # per near-dup cluster), so the bounded driver union-find runs and
-    # the ~log-diameter pointer-doubling rounds (each a scheduled
-    # join+agg+checkpoint) collapse to one collect; past the 2M-pair
-    # cap it falls back to the distributed iteration (r13; same
-    # dispatch as the entity-resolution entry, equivalence pinned in
-    # tests/test_dedup.py)
-    return dedup.dedup_components(
-        docs, pairs, "doc_id", impl="auto"
-    ).orderBy("doc_id")
+    return dedup.dedup_components(docs, pairs, "doc_id").orderBy("doc_id")
 
 
 def dedup_component_groups_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -850,16 +832,7 @@ def dedup_component_groups_portable(spark: SparkSession, sf_dir: str) -> DataFra
     pairs = dedup.minhash_lsh_pairs_portable(
         docs, "text", "doc_id", threshold=0.5
     )
-    # impl='auto': the LSH pair list is aggregation-sized (a few edges
-    # per near-dup cluster), so the bounded driver union-find runs and
-    # the ~log-diameter pointer-doubling rounds (each a scheduled
-    # join+agg+checkpoint) collapse to one collect; past the 2M-pair
-    # cap it falls back to the distributed iteration (r13; same
-    # dispatch as the entity-resolution entry, equivalence pinned in
-    # tests/test_dedup.py)
-    return dedup.dedup_components(
-        docs, pairs, "doc_id", impl="auto"
-    ).orderBy("doc_id")
+    return dedup.dedup_components(docs, pairs, "doc_id").orderBy("doc_id")
 
 
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2247,7 +2220,7 @@ def dedup_corpus_quality_keepers(
     pairs = dedup.ngram_jaccard_pairs(
         docs, "text", "doc_id", threshold=0.5, block_col="lang"
     )
-    comp = dedup.dedup_components(docs, pairs, "doc_id", impl="auto")
+    comp = dedup.dedup_components(docs, pairs, "doc_id")
     scored = docs.select("doc_id", quality_score("text").alias("_q"))
     j = comp.join(scored, "doc_id")
     w = Window.partitionBy("component").orderBy(
@@ -2601,18 +2574,7 @@ def entity_resolution_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("_nk_a") == F.col("_nk_b"))
     )
     return (
-        # auto dispatch: the blocked pair list is aggregation-sized
-        # (a few edges per entity regardless of input scale) so the
-        # driver union-find runs — its min-label propagation distance
-        # at sf0.1 is 26 rounds, 26 shuffle rounds relationally vs
-        # microseconds in union-find (same rationale as
-        # graphrank.pagerank iter_impl; equivalence pinned in
-        # tests/test_dedup.py). If a pathological blocking key ever
-        # pushes pairs past the 2M cap, 'auto' falls back to the
-        # distributed pointer-doubling path instead of raising.
-        dedup.dedup_components(
-            names, pairs, "id", "id_a", "id_b", impl="auto"
-        )
+        dedup.dedup_components(names, pairs, "id", "id_a", "id_b")
         .select(
             F.col("id").alias("c_custkey"),
             F.col("component").alias("canonical_id"),

@@ -22,7 +22,7 @@ import os
 import re
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 _DEP_RE = re.compile(r"^dependency(\d+)_")
 
@@ -85,7 +85,3 @@ def uncache_views_from_dir(
             and spark.catalog.isCached(name)
         ):
             spark.catalog.uncacheTable(name)
-
-
-def run_view(spark: SparkSession, name: str) -> DataFrame:
-    return spark.table(name)

@@ -10,8 +10,10 @@ it into a batch-incremental run (process everything new, then stop)
 — the exact execution shape of a scheduled Glue job run.
 
 At 100 TB: the file-source maintains seen-file state in the
-checkpoint (RocksDB-backed at scale); ``maxFilesPerTrigger`` bounds
-micro-batch size so a backlog never produces one giant batch.
+checkpoint (RocksDB-backed at scale). A run sets no
+``maxFilesPerTrigger``, so it takes every new file in one micro-batch;
+on the daily schedule that is one increment, the files the reference's
+Glue job reads per run.
 
 A partitioned sink first hash-repartitions by the partition columns:
 each partition value gets one writer task, so every increment lands as
@@ -34,7 +36,6 @@ def incremental_csv_ingest(
     schema: T.StructType,
     transform: Callable[[DataFrame], DataFrame] | None = None,
     partition_cols: tuple[str, ...] = (),
-    max_files_per_trigger: int | None = None,
 ) -> None:
     """One bookmark-style incremental run: read only new CSV files
     under ``input_dir``, apply ``transform``, append as parquet to
@@ -43,14 +44,12 @@ def incremental_csv_ingest(
     Re-running after new files arrive processes ONLY the new files —
     the checkpoint is the bookmark (exactly-once per file).
     """
-    reader = (
+    df = (
         spark.readStream.schema(schema)
         .option("header", True)
         .option("mode", "PERMISSIVE")
+        .csv(input_dir)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.csv(input_dir)
     if transform is not None:
         df = transform(df)
     if partition_cols:

@@ -23,9 +23,21 @@ def _n_files(root):
 
 
 def results(spark, root: str | None = None) -> tuple[dict, dict]:
-    from aws_de_final_project_spark.operators import dedup, embedlin
+    """Rows of the five operators whose cuts the fixture checks. The
+    components run ``connected_components_iters`` and PageRank and PCA
+    run under a driver cap of 0, so the relational loops' per-round
+    cuts are the ones exercised (the fixtures are far below the cap)."""
+    from unittest import mock
+
+    from aws_de_final_project_spark.operators import dedup, embedlin, util
     from aws_de_final_project_spark.operators import graphrank as G
     from tests.test_embedlin import _planted
+
+    def relational(run):
+        def go():
+            with mock.patch.object(util, "DRIVER_MAX_ROWS", 0):
+                return run()
+        return go
 
     df = spark.createDataFrame
     rng = random.Random(11)
@@ -45,14 +57,13 @@ def results(spark, root: str | None = None) -> tuple[dict, dict]:
                (4, "completely different content about spark shuffles")],
               "doc_id long, text string")
     runs = {
-        "connected_components": lambda: dedup.connected_components(
-            df(pairs, ["doc_a", "doc_b"])),
-        "pagerank": lambda: G.pagerank(
-            nodes, edges, n_iter=6, iter_impl="relational"),
+        "connected_components": lambda: dedup.connected_components_iters(
+            df(pairs, ["doc_a", "doc_b"]))[0],
+        "pagerank": relational(lambda: G.pagerank(nodes, edges, n_iter=6)),
         "triangle_counts": lambda: G.triangle_counts(tri, "a", "b"),
-        "pca_project": lambda: embedlin.pca_project(
+        "pca_project": relational(lambda: embedlin.pca_project(
             vecs, "embedding", "vec_id", dim=8, n_components=2, n_iter=8,
-            impl="sql", iter_impl="relational"),
+            impl="sql")),
         "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(
             docs, "text", "doc_id", 0.5),
     }

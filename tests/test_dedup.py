@@ -8,6 +8,10 @@ import pytest
 from aws_de_final_project_spark.operators import dedup
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     base = (
@@ -124,9 +128,11 @@ def test_simhash_portable_family_agrees_on_planted_pairs(docs):
 
 
 def test_connected_components_vs_union_find(spark):
-    """Iterative min-label propagation must agree with a driver-side
-    union-find on a random 200-node graph (including chain-shaped
-    components that need several propagation rounds)."""
+    """Both component paths — the operator's driver union-find (the
+    graph is far below the cap) and the relational min-label
+    propagation — must agree with an independent union-find on a
+    random 200-node graph (including chain-shaped components that need
+    several propagation rounds)."""
     import random
 
     rng = random.Random(3)
@@ -160,6 +166,11 @@ def test_connected_components_vs_union_find(spark):
         for r in dedup.connected_components(pairs).collect()
     }
     assert got == expected
+    rel = {
+        r.node: r.component
+        for r in dedup.connected_components_iters(pairs)[0].collect()
+    }
+    assert rel == expected
 
 
 def test_connected_components_log_round_convergence(spark):
@@ -413,9 +424,8 @@ def test_prefix_filter_exact_verify_mode_agrees(spark):
 
 
 def test_connected_components_driver_impl_matches_relational(spark):
-    """The driver union-find dispatch must produce identical labels to
-    the relational loop, and its pair-count cap must raise instead of
-    collecting unbounded data."""
+    """The driver union-find must produce identical labels to the
+    relational loop."""
     import random
 
     rng = random.Random(7)
@@ -425,14 +435,10 @@ def test_connected_components_driver_impl_matches_relational(spark):
     edges.update((i, i + 1) for i in range(500, 540))
     pairs = spark.createDataFrame(sorted(edges), ["doc_a", "doc_b"])
     rel = {(r.node, r.component)
-           for r in dedup.connected_components(pairs).collect()}
+           for r in dedup.connected_components_iters(pairs)[0].collect()}
     drv = {(r.node, r.component)
-           for r in dedup.connected_components(pairs, impl="driver").collect()}
+           for r in dedup.connected_components(pairs).collect()}
     assert rel == drv
-    with pytest.raises(ValueError, match="driver_max_pairs"):
-        dedup.connected_components(pairs, impl="driver", driver_max_pairs=10)
-    with pytest.raises(ValueError, match="impl"):
-        dedup.connected_components(pairs, impl="magic")
 
 
 def test_connected_components_nonconvergence_raises(spark):
@@ -449,9 +455,9 @@ def test_connected_components_nonconvergence_raises(spark):
 def test_connected_components_reliable_checkpoint(reliable_cut):
     """On a session with a checkpoint dir, ``util.cut`` is a reliable
     ``df.checkpoint()`` (durable on a real cluster, where
-    localCheckpoint blocks die with executors): connected_components
-    must give identical labels and actually write checkpoint data under
-    the dir."""
+    localCheckpoint blocks die with executors): the relational
+    components loop must give identical labels and actually write
+    checkpoint data under the dir."""
     local_rows, got = reliable_cut
     assert local_rows["connected_components"]
     assert got["rows"]["connected_components"] == local_rows["connected_components"]
@@ -459,12 +465,17 @@ def test_connected_components_reliable_checkpoint(reliable_cut):
         "reliable checkpoint wrote nothing under spark.checkpoint.dir")
 
 
-def test_connected_components_null_pairs_dropped_in_both_impls(spark):
-    """Pairs with NULL (or NULL-cast) ids must silently drop in BOTH
-    impls — previously the driver union-find raised an opaque
-    TypeError on None mid-loop while the relational path's equi-joins
-    dropped them."""
+def test_connected_components_null_pairs_dropped_in_both_impls(
+    spark, monkeypatch
+):
+    """Pairs with NULL (or NULL-cast) ids must silently drop on every
+    path — the driver union-find, the relational loop, and the
+    over-cap fallback that feeds the cleaned pairs to it. Previously
+    the driver union-find raised an opaque TypeError on None mid-loop
+    while the relational path's equi-joins dropped them."""
     from pyspark.sql import types as T
+
+    from aws_de_final_project_spark.operators import util
 
     schema = T.StructType([
         T.StructField("doc_a", T.LongType()),
@@ -475,19 +486,28 @@ def test_connected_components_null_pairs_dropped_in_both_impls(spark):
     )
     expected = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     rel = {(r.node, r.component)
-           for r in dedup.connected_components(pairs).collect()}
+           for r in dedup.connected_components_iters(pairs)[0].collect()}
     drv = {(r.node, r.component)
-           for r in dedup.connected_components(pairs, impl="driver").collect()}
+           for r in dedup.connected_components(pairs).collect()}
+    # 3 non-NULL pairs over a cap of 2: the fallback runs
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 2)
+    over = {(r.node, r.component)
+            for r in dedup.connected_components(pairs).collect()}
     assert rel == expected
     assert drv == expected
+    assert over == expected
 
 
-def test_connected_components_auto_dispatch(spark):
-    """impl='auto' must use the driver union-find when the pair list
-    fits the cap, and FALL BACK to the relational iteration (same
-    labels, no error) when it exceeds the cap — the scale-safety
-    contract entity resolution relies on."""
+def test_connected_components_auto_dispatch(spark, monkeypatch):
+    """connected_components must use the driver union-find when the
+    pair list fits ``util.DRIVER_MAX_ROWS``, and FALL BACK to the
+    relational iteration (same labels, no error) when it exceeds the
+    cap — the scale-safety contract entity resolution relies on. The
+    driver path's labels are a LocalTableScan; the fallback's are
+    not."""
     import random
+
+    from aws_de_final_project_spark.operators import util
 
     rng = random.Random(23)
     edges = {(min(a, b), max(a, b))
@@ -495,27 +515,28 @@ def test_connected_components_auto_dispatch(spark):
                           for _ in range(120)) if a != b}
     pairs = spark.createDataFrame(sorted(edges), ["doc_a", "doc_b"])
     rel = {(r.node, r.component)
-           for r in dedup.connected_components(pairs).collect()}
-    auto_small = {(r.node, r.component)
-                  for r in dedup.connected_components(
-                      pairs, impl="auto").collect()}
-    assert auto_small == rel
-    # cap of 10 forces the over-cap branch: auto falls back instead
-    # of raising (driver impl still raises, pinned elsewhere)
-    auto_over = {(r.node, r.component)
-                 for r in dedup.connected_components(
-                     pairs, impl="auto", driver_max_pairs=10).collect()}
-    assert auto_over == rel
+           for r in dedup.connected_components_iters(pairs)[0].collect()}
+    small = dedup.connected_components(pairs)
+    assert {(r.node, r.component) for r in small.collect()} == rel
+    assert "LocalTableScan" in _executed_plan(small)
+    # cap of 10 forces the over-cap branch: it falls back instead of
+    # raising
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 10)
+    over = dedup.connected_components(pairs)
+    assert {(r.node, r.component) for r in over.collect()} == rel
+    assert "LocalTableScan" not in _executed_plan(over)
 
 
-def test_auto_overcap_fallback_runs_pipeline_once(spark):
-    """The over-cap auto fallback must consume the MATERIALIZED pair
+def test_auto_overcap_fallback_runs_pipeline_once(spark, monkeypatch):
+    """The over-cap fallback must consume the MATERIALIZED pair
     list, not recompute the candidate pipeline from the original frame
     (r13 VERDICT item 2: the fallback paid a full pipeline run for the
     bound check and then started over). Pinned with a per-row UDF
     accumulator: the source expression must evaluate exactly once per
     row across the whole bound-check + fallback path."""
     from pyspark.sql import functions as F
+
+    from aws_de_final_project_spark.operators import util
 
     acc = spark.sparkContext.accumulator(0)
 
@@ -530,11 +551,10 @@ def test_auto_overcap_fallback_runs_pipeline_once(spark):
         counted(F.col("id")).alias("doc_a"),
         (F.col("id") + 1).alias("doc_b"),
     )
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 5)
     labels = {
         (r.node, r.component)
-        for r in dedup.connected_components(
-            base, impl="auto", driver_max_pairs=5
-        ).collect()
+        for r in dedup.connected_components(base).collect()
     }
     # one 41-node chain: component = 0 for every node
     assert labels == {(i, 0) for i in range(n + 1)}

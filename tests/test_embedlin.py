@@ -98,26 +98,34 @@ def test_pca_validates_components(planted):
         )
 
 
-def test_pca_iter_impl_equivalence(planted):
+def test_pca_iter_impl_equivalence(planted, monkeypatch):
     """Driver-side numpy iteration and the relational iteration run
-    the identical program — results agree inside the output rounding."""
+    the identical program — results agree inside the output rounding.
+    The default cap takes the driver path (its components are
+    LocalTableScans in the projection); a cap of 0 takes the
+    relational one."""
+    from aws_de_final_project_spark.operators import util
+
     df, _, _ = planted
-    a = embedlin.pca_project(
-        df, "embedding", "vec_id", dim=8, n_components=2,
-        n_iter=8, impl="sql", iter_impl="driver",
-    ).orderBy("vec_id").collect()
-    b = embedlin.pca_project(
-        df, "embedding", "vec_id", dim=8, n_components=2,
-        n_iter=8, impl="sql", iter_impl="relational",
-    ).orderBy("vec_id").collect()
+
+    def run():
+        out = embedlin.pca_project(
+            df, "embedding", "vec_id", dim=8, n_components=2,
+            n_iter=8, impl="sql",
+        ).orderBy("vec_id")
+        rows = out.collect()
+        return rows, out._jdf.queryExecution().executedPlan().toString()
+
+    a, drv_plan = run()
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    b, rel_plan = run()
+    assert "LocalTableScan" in drv_plan
+    assert "LocalTableScan" not in rel_plan
+    assert len(a) == len(b) == 400
     for ra, rb in zip(a, b):
         assert ra.vec_id == rb.vec_id
         assert abs(ra.pc1 - rb.pc1) <= 1e-4 + 1e-12
         assert abs(ra.pc2 - rb.pc2) <= 1e-4 + 1e-12
-    with pytest.raises(ValueError):
-        embedlin.pca_project(
-            df, "embedding", "vec_id", dim=8, iter_impl="nope"
-        )
 
 
 def test_jl_projection_preserves_norms(spark):

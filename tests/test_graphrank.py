@@ -18,6 +18,10 @@ def _df_edges(spark, triples):
     return spark.createDataFrame(triples, "src long, dst long, w double")
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_cycle_fixed_point_is_uniform(spark):
     """A 3-cycle's stationary distribution is uniform regardless of
     damping — and uniform is also the start vector, so ANY iteration
@@ -88,30 +92,28 @@ def test_pagerank_validates_params(spark):
         pagerank(_df_nodes(spark, []), edges)
 
 
-def test_iter_impl_equivalence(spark):
+def test_iter_impl_equivalence(spark, monkeypatch):
     """Driver and relational iterations run the identical program —
-    equal inside 1e-9 on a weighted digraph with a dangling sink."""
+    equal inside 1e-9 on a weighted digraph with a dangling sink. The
+    default cap takes the driver path (its ranks are a LocalTableScan);
+    a cap of 0 takes the relational one."""
+    from aws_de_final_project_spark.operators import util
+
     nodes = _df_nodes(spark, [1, 2, 3, 4])
     edges = _df_edges(
         spark,
         [(1, 2, 3.0), (1, 3, 1.0), (2, 3, 1.0), (3, 1, 2.0), (3, 4, 2.0)],
     )
-    a = {
-        r.id: r.pr
-        for r in pagerank(nodes, edges, n_iter=12, iter_impl="driver").collect()
-    }
-    b = {
-        r.id: r.pr
-        for r in pagerank(
-            nodes, edges, n_iter=12, iter_impl="relational"
-        ).collect()
-    }
+    drv = pagerank(nodes, edges, n_iter=12)
+    a = {r.id: r.pr for r in drv.collect()}
+    assert "LocalTableScan" in _executed_plan(drv)
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    rel = pagerank(nodes, edges, n_iter=12)
+    b = {r.id: r.pr for r in rel.collect()}
+    assert "LocalTableScan" not in _executed_plan(rel)
+    assert set(a) == set(b) == {1, 2, 3, 4}
     for v in a:
         assert abs(a[v] - b[v]) < 1e-9
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        pagerank(nodes, edges, iter_impl="nope")
 
 
 def test_triangle_counts_hand_graphs(spark):
@@ -204,6 +206,6 @@ def test_driver_path_key_dtypes(spark, key, want):
     edges = _df_edges(spark, [(1, 2, 1.0), (2, 1, 1.0)]).selectExpr(
         f"CAST(src AS {key}) AS src", f"CAST(dst AS {key}) AS dst", "w"
     )
-    out = pagerank(nodes, edges, n_iter=3, iter_impl="driver")
+    out = pagerank(nodes, edges, n_iter=3)
     assert out.dtypes == [("id", want), ("pr", "double")]
     assert sorted(r.pr for r in out.collect()) == pytest.approx([0.5, 0.5])

@@ -341,10 +341,11 @@ def test_no_ltz_output_columns_anywhere(frames):
 
 
 # The entries whose plan build runs Spark jobs at SF_DIR, by reason:
-# a count-sized impl='auto' dispatch; an action pipeline by contract
-# (bounded collect, vocabulary trainer, Bloom mask); a streaming replay;
-# a writer round-trip; a util.cut over an exchange (under AQE the cut
-# runs the exchange's map stages at the call).
+# a count-sized dispatch (impl='auto' or util.DRIVER_MAX_ROWS); an
+# action pipeline by contract (bounded collect, vocabulary trainer,
+# Bloom mask); a streaming replay; a writer round-trip; a util.cut
+# over an exchange (under AQE the cut runs the exchange's map stages
+# at the call).
 BUILD_JOB_ENTRIES = {
     name: reason
     for reason, names in {

@@ -138,16 +138,22 @@ def test_local_frame_datetimes_under_non_utc_process_tz(spark):
         time.tzset()
 
 
-def _outside(fn: str, patterns: tuple[str, ...]) -> str:
-    """Lines of the package and the entry module that contain one of
-    ``patterns`` outside operators/util.<fn>, one per line."""
+def _outside(fn: str | None, patterns: tuple[str, ...]) -> str:
+    """Lines of the package, the entry module, ``bench.py`` and
+    ``tools/`` that contain one of ``patterns`` outside
+    operators/util.<fn> (anywhere, when ``fn`` is None), one per
+    line."""
     allowed = next(
-        range(node.lineno, node.end_lineno + 1)
-        for node in ast.parse(UTIL.read_text()).body
-        if isinstance(node, ast.FunctionDef) and node.name == fn
+        (
+            range(node.lineno, node.end_lineno + 1)
+            for node in ast.parse(UTIL.read_text()).body
+            if isinstance(node, ast.FunctionDef) and node.name == fn
+        ),
+        (),
     )
     files = sorted((ROOT / "aws_de_final_project_spark").rglob("*.py"))
-    files.append(ROOT / "__spark_entry__.py")
+    files += [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    files += sorted((ROOT / "tools").glob("*.py"))
     return "\n".join(
         f"{path.relative_to(ROOT)}:{no}: {line.strip()}"
         for path in files
@@ -169,6 +175,15 @@ def test_frames_are_cut_only_through_util_cut():
     ``setCheckpointDir`` outside operators/util.cut, the one place the
     lazy/reliable choice is made."""
     hits = _outside("cut", ("localCheckpoint(", ".checkpoint(", "setCheckpointDir"))
+    assert not hits, hits
+
+
+def test_driver_or_cluster_is_one_rule():
+    """One-way guard: the driver-vs-relational choice of union-find,
+    PageRank and PCA is ``util.DRIVER_MAX_ROWS`` alone — no
+    ``iter_impl`` switch and no per-operator ``driver_max_*`` cap is
+    left to set."""
+    hits = _outside(None, ("iter_impl", "driver_max_"))
     assert not hits, hits
 
 
