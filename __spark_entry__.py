@@ -4,10 +4,10 @@
 ``queries`` — one entry per implemented operator family from
               SURVEY.md §2 plus the north-star extensions.
 ``oracle_sql`` — DuckDB-runnable ANSI twins. Omitted only for ops
-              whose results depend on Spark-internal hash functions
-              (minhash/simhash/LSH signatures) or on the stubbed
-              multimodal codec — those get rows-only checks here and
-              agreement tests against exact operators in tests/.
+              whose results depend on Spark-internal hash or sketch
+              functions (xxhash64 SimHash, HLL/KLL sketches) — those
+              get rows-only checks here and agreement tests against
+              exact operators in tests/.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from aws_de_final_project_spark.functions import text as _TX
 from aws_de_final_project_spark.operators import classifier as _CLF
 from aws_de_final_project_spark.operators import curation as _CUR
+from aws_de_final_project_spark.operators import dedup as _DD
 from aws_de_final_project_spark.operators import webcrawl as _WC
 from aws_de_final_project_spark.plans import extensions as X
 from aws_de_final_project_spark.plans import queries as Q
@@ -35,8 +36,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # portable twins carry the check) are pinned to the very back, so
 # driver sample slots are never spent on rows-only checks.
 _NO_ORACLE_BACK: tuple[str, ...] = (
-    "sketch_event_stats", "dedup_minhash_lsh", "dedup_simhash_pairs",
-    "dedup_component_groups_lsh",
+    "sketch_event_stats", "dedup_simhash_pairs",
 )
 
 
@@ -106,8 +106,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # in r1-r4 — back into the driver's ~50-entry sample window so
         # CORRECTNESS_r10 re-proves the §2 core under the current
         # codebase; then this round's new entries; then the r8/r9
-        # ordering. The no-oracle xxhash64 LSH variant stays last
-        # (its portable twin carries the check). The driver-facing
+        # ordering. The driver-facing
         # order is produced by queries() above from _R13_NEW/
         # _R13_ROTATION; this literal order is the fallback for
         # everything not rotated.
@@ -321,7 +320,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_ngram_jaccard": X.dedup_ngram_jaccard,
         "dedup_embedding_cosine": X.dedup_embedding_cosine,
         "dedup_embedding_cosine_blocked": X.dedup_embedding_cosine_blocked,
-        "dedup_minhash_lsh": X.dedup_minhash_lsh,
         "dedup_minhash_portable": X.dedup_minhash_portable,
         "dedup_simhash_portable": X.dedup_simhash_portable,
         "grouping_sets_order_stats": Q.grouping_sets_order_stats,
@@ -334,10 +332,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_winnow_fingerprints": X.doc_winnow_fingerprints,
         "lang_id_heuristic": X.lang_id_heuristic,
         "multimodal_byte_stats": X.multimodal_byte_stats,
-        # intentionally last: rows-only by design (xxhash64 edges
-        # have no DuckDB twin); the clustering capability's driver
-        # check now rides on dedup_component_groups_portable above
-        "dedup_component_groups_lsh": X.dedup_component_groups_lsh,
     }
 
 
@@ -1762,24 +1756,28 @@ def _mojibake_repair_sql(inner: str) -> str:
     return e
 
 
-def _minhash_portable_sql(
+def _minhash_sql(
     source_sql: str = "SELECT doc_id, text FROM documents",
     out_a: str = "doc_a",
     out_b: str = "doc_b",
 ) -> str:
-    """DuckDB twin of dedup.minhash_lsh_pairs_portable: identical md5
-    hash family, 16 signatures, 4 bands of 4, candidate join, exact
-    Jaccard verify. ``source_sql`` supplies (doc_id, text) — the
-    documents table by default, or any derived prompt/snippet frame
-    (the chat prompt twin reuses the whole pipeline this way)."""
+    """DuckDB twin of dedup.minhash_lsh_pairs, generated from the SAME
+    family constants (dedup.MINHASH_P / MINHASH_COEFFS /
+    MINHASH_BANDS): 60-bit md5 shingle hashes, affine mins, md5 band
+    keys, candidate join, exact Jaccard verify on the 60-bit sets.
+    ``source_sql`` supplies (doc_id, text) — the documents table by
+    default, or any derived prompt/snippet frame (the chat prompt twin
+    reuses the whole pipeline this way)."""
+    p = _DD.MINHASH_P
+    rows = _DD.MINHASH_K // _DD.MINHASH_BANDS
     mins = ",\n                ".join(
-        f"min(('0x' || substr(md5('{i}:' || sh1), 1, 15))::BIGINT) AS m{i}"
-        for i in range(16)
+        f"min(({a} * x + {b}) % {p}) AS m{i}"
+        for i, (a, b) in enumerate(_DD.MINHASH_COEFFS)
     )
     bands = ",\n                ".join(
-        "{'band': %d, 'bh': md5(m%d || '-' || m%d || '-' || m%d || '-' || m%d)}"
-        % (b, 4 * b, 4 * b + 1, 4 * b + 2, 4 * b + 3)
-        for b in range(4)
+        "{'band': %d, 'bh': md5(%s)}"
+        % (b, " || '-' || ".join(f"m{b * rows + r}" for r in range(rows)))
+        for b in range(_DD.MINHASH_BANDS)
     )
     return f"""
         WITH w AS (
@@ -1788,13 +1786,14 @@ def _minhash_portable_sql(
         ),
         s AS (
             SELECT doc_id,
-                   list_distinct([
+                   list_distinct(list_transform(list_distinct([
                        array_to_string(wd[i:least(i + 2, len(wd))], ' ')
                        for i in range(1, greatest(len(wd) - 2, 1) + 1)
-                   ]) AS sh
+                   ]), sh -> ('0x' || substr(md5(sh), 1, 15))::BIGINT))
+                       AS hs
             FROM w
         ),
-        e AS (SELECT doc_id, unnest(sh) AS sh1 FROM s),
+        e AS (SELECT doc_id, unnest(hs) % {p} AS x FROM s),
         m AS (
             SELECT doc_id,
                 {mins}
@@ -1812,16 +1811,16 @@ def _minhash_portable_sql(
               ON a.band = c.band AND a.bh = c.bh AND a.doc_id < c.doc_id
         )
         SELECT cand.doc_a AS {out_a}, cand.doc_b AS {out_b},
-               (floor((CAST(len(list_intersect(x.sh, y.sh)) AS double) /
-                   CAST(len(x.sh) + len(y.sh)
-                        - len(list_intersect(x.sh, y.sh)) AS double))
+               (floor((CAST(len(list_intersect(x.hs, y.hs)) AS double) /
+                   CAST(len(x.hs) + len(y.hs)
+                        - len(list_intersect(x.hs, y.hs)) AS double))
                    * 10000.0 + 0.5) / 10000.0) AS jaccard
         FROM cand
         JOIN s x ON x.doc_id = cand.doc_a
         JOIN s y ON y.doc_id = cand.doc_b
-        WHERE (floor((CAST(len(list_intersect(x.sh, y.sh)) AS double) /
-                   CAST(len(x.sh) + len(y.sh)
-                        - len(list_intersect(x.sh, y.sh)) AS double))
+        WHERE (floor((CAST(len(list_intersect(x.hs, y.hs)) AS double) /
+                   CAST(len(x.hs) + len(y.hs)
+                        - len(list_intersect(x.hs, y.hs)) AS double))
                    * 10000.0 + 0.5) / 10000.0) >= 0.5
         ORDER BY {out_a}, {out_b}
     """
@@ -3378,7 +3377,7 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY doc_a, doc_b
         """,
         "dedup_ngram_jaccard": _ngram_jaccard_sql() + " ORDER BY doc_a, doc_b",
-        "dedup_minhash_portable": _minhash_portable_sql(),
+        "dedup_minhash_portable": _minhash_sql(),
         "dedup_simhash_portable": _simhash_portable_sql(),
         "decontaminate_vs_benchmark": f"""
             WITH w AS (
@@ -3469,12 +3468,12 @@ def oracle_sql() -> dict[str, str]:
             FROM documents d LEFT JOIN mins m ON d.doc_id = m.node
             ORDER BY d.doc_id
         """,
-        # full-oracle LSH clustering: the portable-md5 MinHash edge
-        # list (bit-identical in DuckDB) closed transitively — the
+        # full-oracle LSH clustering: the MinHash edge list
+        # (bit-identical in DuckDB) closed transitively — the
         # same recursive-CTE closure as dedup_component_groups over
         # the banded candidate edges instead of the exact-Jaccard ones
         "dedup_component_groups_portable": f"""
-            WITH RECURSIVE plist AS ({_minhash_portable_sql()}),
+            WITH RECURSIVE plist AS ({_minhash_sql()}),
             edges AS (
                 SELECT doc_a AS a, doc_b AS b FROM plist
                 UNION
@@ -4649,8 +4648,8 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY query_id, rank
         """,
         # rows-only (genuinely engine-hash/sketch dependent):
-        #   dedup_minhash_lsh, dedup_simhash_pairs (Spark xxhash64 has
-        #   no DuckDB twin), sketch_event_stats (HLL/KLL internals)
+        #   dedup_simhash_pairs (Spark xxhash64 has no DuckDB twin),
+        #   sketch_event_stats (HLL/KLL internals)
         "line_dedup_docs": """
             WITH lines AS (
                 SELECT doc_id, unnest(range(len(lines))) AS pos,
@@ -7229,7 +7228,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # the parameterized minhash twin over the closed-form prompt
         # expression — identical signatures/bands/verify
-        "chat_prompt_near_dedup": _minhash_portable_sql(
+        "chat_prompt_near_dedup": _minhash_sql(
             source_sql=CHAT_NEAR_SRC,
             out_a="conv_a", out_b="conv_b",
         ),

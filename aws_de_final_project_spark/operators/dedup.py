@@ -14,6 +14,8 @@ Scale design (the whole point — 100 TB posture):
 * **MinHash + LSH banding**: turns the O(n^2) pairwise problem into
   a per-band hash-join. Candidates per band bucket only; exact
   Jaccard verification runs on candidates, not the cross product.
+  One hash family (md5 base hash, then ``MINHASH_K`` affine maps),
+  which DuckDB replays exactly, so the whole pipeline has an oracle.
 * **SimHash**: 64-bit signature, hamming<=k via pigeonhole banding —
   4 chunk-equality joins instead of a cross join.
 * everything is DataFrame-native (explode/groupBy/join) — no Python
@@ -21,6 +23,8 @@ Scale design (the whole point — 100 TB posture):
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -122,12 +126,12 @@ def _shingle_sets(
 def _hashed_shingle_sets(
     df: DataFrame, text_col: str, id_col: str, ngram: int
 ) -> DataFrame:
-    """id -> distinct 64-bit-hashed shingle set (array<bigint>).
+    """id -> distinct xxhash64 shingle set (array<bigint>), the
+    features of :func:`simhash`'s ``hash_family="xxhash64"``.
 
     Hashing shingles to 8-byte ints before any shuffle keeps rows
     narrow (a 300-char doc's shingle set is ~2.4 KB as strings, ~230 B
-    hashed) and makes min-hash seeding cheap. Set sizes — hence
-    Jaccard — are preserved up to 64-bit collision odds.
+    hashed).
     """
     sets = _shingle_sets(df, text_col, id_col, ngram)
     return sets.select(
@@ -200,50 +204,66 @@ def ngram_jaccard_pairs(
     return jaccard_pairs(df, text_col, id_col, threshold, block_col, ngram)
 
 
-def minhash_signature(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 64, ngram: int = 3
-) -> DataFrame:
-    """id -> minhash signature (array<bigint>, length ``num_hashes``).
-
-    Features = 64-bit-hashed word-``ngram`` shingles; hash family:
-    ``xxhash64(shingle_hash, seed=i)`` for i in [0, k).
-
-    Built as explode(shingles) -> hash-aggregate with k ``min(
-    xxhash64(h, seed))`` buffers -> array reassembly. Everything after
-    the shingle build is whole-stage codegen (min + xxhash64 are
-    codegen'd; higher-order-function folds are interpreted and
-    allocation-heavy — measured 5-10x slower with wild GC variance).
-    The explode looks like it multiplies rows, but partial (map-side)
-    aggregation collapses to one row per doc BEFORE the exchange, so
-    shuffle volume is docs x k x 8B regardless of corpus size.
-    """
-    words = _hashed_shingle_sets(df, text_col, id_col, ngram)
-    return _minhash_signature_from_words(words, num_hashes)
-
-
-def _minhash_signature_from_words(
-    words: DataFrame, num_hashes: int
-) -> DataFrame:
-    """Signature aggregate over a prebuilt hashed-shingle frame, so a
-    caller that also needs the shingle sets (the LSH verify) can share
-    ONE materialized frame instead of re-deriving the shingles per
-    consumer."""
-    # explode_outer, NOT explode: plain explode makes the optimizer
-    # infer a size(_words)>0 filter and push it below the repartition,
-    # re-running the whole shingle pipeline on the un-spread input
-    # (measured: the single pre-shuffle task dominated the job). Our
-    # shingle arrays are never empty by construction (split always
-    # yields >=1 element), so outer semantics are identical.
-    exploded = words.select("_id", F.explode_outer("_words").alias("_h"))
-    agg = exploded.groupBy("_id").agg(
-        *[
-            F.min(F.xxhash64(F.col("_h"), F.lit(i))).alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
+# The MinHash family, defined once: minhash_lsh_pairs below and its
+# DuckDB oracle (__spark_entry__._minhash_sql) both read these.
+# MINHASH_P is the Mersenne prime 2^31 - 1, so a_i * base < 2^62 and
+# the affine maps never overflow a BIGINT in either engine. The
+# (a_i, b_i) pairs come from md5 of the map index: fixed, and
+# reproducible without this table.
+MINHASH_P = (1 << 31) - 1
+MINHASH_K = 64
+MINHASH_BANDS = 16
+MINHASH_COEFFS: tuple[tuple[int, int], ...] = tuple(
+    (1 + d % (MINHASH_P - 1), (d >> 64) % MINHASH_P)
+    for d in (
+        int(hashlib.md5(str(i).encode()).hexdigest(), 16)
+        for i in range(MINHASH_K)
     )
-    return agg.select(
+)
+
+
+def _md5_shingle_sets(
+    df: DataFrame, text_col: str, id_col: str, ngram: int
+) -> DataFrame:
+    """id -> distinct set of 60-bit shingle hashes (array<bigint>):
+    the first 15 hex digits of each shingle's md5. One digest per
+    distinct shingle, bit-identical in every engine."""
+    sets = _shingle_sets(df, text_col, id_col, ngram)
+    return sets.select(
         "_id",
-        F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("_sig"),
+        F.expr(
+            "array_distinct(transform(_words, s -> "
+            "CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT))) "
+            "AS _words"
+        ),
+    )
+
+
+def _minhash_mins(sets: DataFrame) -> DataFrame:
+    """(_id, _m0 .. _m{K-1}) over a :func:`_md5_shingle_sets` frame:
+    ``_m{i} = min((a_i * (h mod P) + b_i) mod P)`` over the doc's
+    hashes ``h``.
+
+    explode -> hash aggregate with K min buffers: all whole-stage
+    codegen, and partial aggregation collapses the explode to one row
+    per doc before the exchange (docs x K x 8 B of shuffle).
+    explode_outer, NOT explode: plain explode makes the optimizer
+    infer a size(_words)>0 filter and push it below the repartition,
+    re-running the shingle pipeline on the un-spread input. Shingle
+    arrays are never empty, so outer semantics are identical.
+
+    Each min is one parsed SQL string: built from Column objects, the
+    K expressions cost several py4j round trips each, and that plan
+    build took as long as the aggregate's execution at sf0.1.
+    """
+    base = sets.select(
+        "_id", F.explode_outer("_words").alias("_h")
+    ).select("_id", (F.col("_h") % MINHASH_P).alias("_x"))
+    return base.groupBy("_id").agg(
+        *[
+            F.expr(f"min((_x * {a} + {b}) % {MINHASH_P}) AS _m{i}")
+            for i, (a, b) in enumerate(MINHASH_COEFFS)
+        ]
     )
 
 
@@ -252,82 +272,67 @@ def minhash_lsh_pairs(
     text_col: str,
     id_col: str,
     threshold: float = 0.5,
-    num_hashes: int = 64,
-    bands: int = 16,
     ngram: int = 3,
 ) -> DataFrame:
     """MinHash + LSH near-duplicate pairs, exact-Jaccard verified.
 
-    Pipeline: shingle (word ``ngram``-grams) -> signature
-    (k=``num_hashes``) -> split into ``bands`` bands of k/bands rows
-    -> band-hash -> self-join per (band, hash) bucket -> candidate
-    pairs -> exact shingle-Jaccard verify >= threshold. The verify
-    uses the SAME shingle sets as the signature, so output ==
+    Pipeline: shingle (word ``ngram``-grams) -> one md5 per distinct
+    shingle, first 60 bits ``h`` -> signature of ``MINHASH_K`` = 64
+    mins of ``(a_i * (h mod P) + b_i) mod P``, P = 2^31 - 1 (the
+    universal-hash MinHash of Broder, Charikar, Frieze, Mitzenmacher,
+    "Min-wise independent permutations", STOC 1998) -> 16 bands of
+    4 rows, each band keyed by md5 of its 4 mins joined by '-' ->
+    self-join per (band, key) bucket -> candidate pairs -> exact
+    Jaccard verify >= threshold on the 60-bit sets. Every step is
+    replayed by the DuckDB oracle, so the driver checks the whole
+    approximate pipeline, not just its recall.
+
+    S-curve (b=16, r=4): P(candidate | J) = 1 - (1 - J^4)^16, which is
+    0.64 at J=0.5, 0.989 at J=0.7 and 1 - 4e-8 at J=0.9. No false
+    positives: every output pair passed the verify, so the output is
     :func:`ngram_jaccard_pairs` minus S-curve misses.
 
-    ``num_hashes`` must divide evenly into ``bands`` — leftover
-    hashes would otherwise be silently dropped from every band
-    (ADVICE r1), changing the S-curve the caller thinks they asked
-    for.
+    Collision bound: over N distinct shingles the 31-bit base
+    ``h mod P`` collides about N^2/2^32 times (about 16 at sf0.1). A
+    base collision only perturbs a signature. The verify compares the
+    60-bit values (about N^2/2^61 collisions), so a base collision
+    cannot create a false pair.
 
-    With k=64, b=16 (r=4) the S-curve gives ~98% recall at J=0.5 and
-    near-1 at J>=0.7, while candidate volume stays ~collision-rate of
-    4-row band hashes. At 100 TB: the only shuffles are the band
-    explode (rows = docs x bands, ~40-byte rows) and the bucket
-    self-join; no cross product anywhere — provided features are
+    At 100 TB the only shuffles are the signature aggregate (docs x K
+    mins), the band explode (docs x bands, ~50-byte rows) and the
+    bucket self-join; no cross product anywhere, provided features are
     shingles, not unigrams (unigram sets over a shared vocabulary
     collide everything into the same buckets).
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands "
-            f"({bands}); {num_hashes % bands} hashes would be "
-            "silently dropped from the banding"
-        )
-    rows_per_band = num_hashes // bands
+    rows_per_band = MINHASH_K // MINHASH_BANDS
     # ONE hashed-shingle pass feeds the signature aggregate AND both
-    # exact-Jaccard verify sides: the cut materializes the ~230 B/doc
-    # hashed sets at the first action instead of re-running the
-    # normalize+shingle+hash pipeline once per consumer (3x before —
-    # the r14 measured defect; at 100 TB the frame is the lightweight
-    # decision proxy of guide §8, orders of magnitude under the corpus).
-    words = _hashed_shingle_sets(df, text_col, id_col, ngram)
-    words = _cut(words)
-    sigs = _minhash_signature_from_words(words, num_hashes)
-    banded = sigs.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.col("_sig")[b * rows_per_band + r]
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bucket")
+    # verify sides: the cut stores the ~8 B/shingle sets at the first
+    # action instead of re-running the normalize+shingle+md5 pipeline
+    # once per consumer (3x without it).
+    sets = _cut(_md5_shingle_sets(df, text_col, id_col, ngram))
+    mins = _minhash_mins(sets)
+    # one parsed SQL string for the same py4j reason as the mins
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'bh', md5(concat_ws('-', "
+        + ", ".join(f"_m{b * rows_per_band + r}" for r in range(rows_per_band))
+        + ")))"
+        for b in range(MINHASH_BANDS)
+    )
+    banded = mins.select(
+        "_id", F.expr(f"explode(array({bands})) AS bb")
+    ).select("_id", "bb.band", "bb.bh")
     # both bucket-join sides carry the IDENTICAL banded signatures:
-    # the cut materializes the k-min-hash aggregate once and both
-    # join sides scan the stored blocks (~bands rows x ~40 B per doc —
-    # scale-trivial). r13 relied on alias self-join exchange reuse,
-    # which only fires when BOTH sides shuffle; at broadcast-sized
-    # inputs the planner broadcast one side and re-evaluated the whole
-    # signature pipeline for it (the r14 measured defect: the 64-hash
-    # aggregate ran twice, ~14 s CPU per evaluation at sf0.1).
+    # the cut runs the K-min aggregate once and both join sides scan
+    # the stored blocks. An alias self-join only shares the pipeline
+    # when both sides shuffle; at broadcast-sized inputs the planner
+    # broadcast one side and re-evaluated the whole signature for it.
     banded = _cut(banded)
     bx, by = banded.alias("_bx"), banded.alias("_by")
     candidates = (
         bx.join(
             by,
             (F.col("_bx.band") == F.col("_by.band"))
-            & (F.col("_bx.bucket") == F.col("_by.bucket"))
+            & (F.col("_bx.bh") == F.col("_by.bh"))
             & (F.col("_bx._id") < F.col("_by._id")),
         )
         .select(
@@ -343,14 +348,13 @@ def minhash_lsh_pairs(
     candidates = candidates.repartition(
         df.sparkSession.sparkContext.defaultParallelism
     )
-    wa = words
-    wb = words.select(
+    wb = sets.select(
         F.col("_id").alias("_id_b"), F.col("_words").alias("_words_b")
     )
     inter = F.size(F.array_intersect(F.col("_words"), F.col("_words_b")))
     union = F.size(F.col("_words")) + F.size(F.col("_words_b")) - inter
     return (
-        candidates.join(wa, "_id")
+        candidates.join(sets, "_id")
         .join(wb, "_id_b")
         .select(
             F.col("_id").alias("doc_a"),
@@ -443,7 +447,7 @@ def simhash(
     """
     if hash_family == "xxhash64":
         # explode_outer for the same inferred-filter-pushdown reason
-        # as in minhash_signature; shingle arrays are never empty.
+        # as in _minhash_mins; shingle arrays are never empty.
         exploded = (
             _hashed_shingle_sets(df, text_col, id_col, ngram)
             .select("_id", F.explode_outer("_words").alias("_h"))
@@ -769,121 +773,6 @@ def dedup_components(
     )
 
 
-def minhash_lsh_pairs_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
-) -> DataFrame:
-    """Engine-portable MinHash+LSH: identical pipeline to
-    :func:`minhash_lsh_pairs`, but the hash family is
-    ``int(md5(i ':' shingle)[:15 hex])`` — md5 is bit-identical in
-    every engine, so the WHOLE approximate pipeline (signatures,
-    banding, candidate join, exact-Jaccard verify) has a DuckDB twin.
-
-    This is the correctness twin; :func:`minhash_lsh_pairs`
-    (xxhash64, k=64) is the fast path — md5 costs ~num_hashes
-    digests per shingle, which is why the portable variant defaults
-    to k=16. Same S-curve mechanics: b=4 bands of r=4 rows.
-    """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
-        )
-    rows_per_band = num_hashes // bands
-    # ONE shingle pass feeds the md5 signature aggregate AND both
-    # exact-Jaccard verify sides (3 evaluations of the normalize+
-    # shingle pipeline before). String sets are heavier to store than
-    # the fast path's hashed sets (~2.4 KB/doc), but this variant is
-    # the engine-portable correctness twin — the md5 family NEEDS the
-    # string shingles on both the signature and verify sides, and one
-    # stored pass beats three regex+HOF corpus passes.
-    sets = _shingle_sets(df, text_col, id_col, ngram)
-    sets = _cut(sets)
-    exploded = sets.select("_id", F.explode_outer("_words").alias("_sh"))
-    agg = exploded.groupBy("_id").agg(
-        *[
-            F.min(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(f"{i}:"), F.col("_sh"))), 1, 15
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-            ).alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    banded = agg.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "-",
-                                *[
-                                    F.col(f"_m{b * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bh")
-    # the cut materializes the md5 minhash pipeline once and both
-    # bucket-join sides scan the stored blocks (bands rows x ~50 B per
-    # doc). The r13 alias self-join only deduplicated the pipeline
-    # when both sides shuffled; at broadcast-sized inputs one side was
-    # re-evaluated — 16 md5 digests per shingle, twice (the r14
-    # measured defect). Candidate pairs re-spread before the per-row
-    # set-intersect verify (AQE coalesces the tiny id-pair bytes to a
-    # couple of partitions otherwise).
-    banded = _cut(banded)
-    bx, by = banded.alias("_bx"), banded.alias("_by")
-    cand = (
-        bx.join(
-            by,
-            (F.col("_bx.band") == F.col("_by.band"))
-            & (F.col("_bx.bh") == F.col("_by.bh"))
-            & (F.col("_bx._id") < F.col("_by._id")),
-        )
-        .select(
-            F.col("_bx._id").alias("_id"),
-            F.col("_by._id").alias("_id_b"),
-        )
-        .distinct()
-    )
-    cand = cand.repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    a = sets
-    b = sets.select(
-        F.col("_id").alias("_id_b"), F.col("_words").alias("_words_b")
-    )
-    inter = F.size(F.array_intersect(F.col("_words"), F.col("_words_b")))
-    union = F.size(F.col("_words")) + F.size(F.col("_words_b")) - inter
-    return (
-        cand.join(a, "_id")
-        .join(b, "_id_b")
-        .select(
-            F.col("_id").alias("doc_a"),
-            F.col("_id_b").alias("doc_b"),
-            rnd(inter.cast("double") / union.cast("double"), 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def dedup_against_state(
     new_docs: DataFrame,
     state: DataFrame,
@@ -1048,61 +937,6 @@ def exact_span_pairs(
         .filter(F.col("max_span_tokens") >= min_span_tokens)
         .select("doc_a", "doc_b", "shared_windows", "max_span_tokens")
     )
-
-
-def tune_lsh_bands(
-    threshold: float,
-    num_hashes: int = 64,
-    min_recall_at_threshold: float = 0.9,
-    max_fp_below: float | None = None,
-    fp_jaccard: float | None = None,
-) -> tuple[int, int]:
-    """Solve the MinHash-LSH S-curve for a banding that hits a recall
-    target: with b bands of r rows, P(candidate | J) = 1-(1-J^r)^b.
-    Returns (bands, rows_per_band) — the divisor pair of
-    ``num_hashes`` with the FEWEST bands (cheapest: candidate volume
-    grows with b) satisfying P(threshold) >= min_recall_at_threshold,
-    optionally also P(fp_jaccard) <= max_fp_below to cap the
-    candidate rate on known-dissimilar pairs.
-
-    Pure closed-form arithmetic (no data pass) — the parameter step
-    every LSH deployment does by hand, made explicit and testable.
-    Raises if no divisor pair satisfies the constraints: the caller
-    must raise ``num_hashes`` (longer signatures sharpen the curve),
-    which beats silently missing the recall target at 100 TB.
-    """
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    if (max_fp_below is None) != (fp_jaccard is None):
-        raise ValueError("max_fp_below and fp_jaccard go together")
-
-    def p_candidate(j: float, b: int, r: int) -> float:
-        return 1.0 - (1.0 - j**r) ** b
-
-    feasible = []
-    for b in range(1, num_hashes + 1):
-        if num_hashes % b:
-            continue
-        r = num_hashes // b
-        if p_candidate(threshold, b, r) < min_recall_at_threshold:
-            continue
-        if max_fp_below is not None and (
-            p_candidate(fp_jaccard, b, r) > max_fp_below
-        ):
-            continue
-        feasible.append((b, r))
-    if not feasible:
-        raise ValueError(
-            f"no (bands, rows) divisor of {num_hashes} meets "
-            f"recall >= {min_recall_at_threshold} at J={threshold}"
-            + (
-                f" with FP <= {max_fp_below} at J={fp_jaccard}"
-                if max_fp_below is not None
-                else ""
-            )
-            + "; raise num_hashes"
-        )
-    return min(feasible)  # fewest bands
 
 
 def _prefix_filter_candidates(sets: DataFrame, threshold: float) -> DataFrame:

@@ -3,9 +3,10 @@
 Each function is ``(spark, sf_dir) -> DataFrame`` with stable aliased
 columns, twinning a DuckDB oracle in ``__spark_entry__`` where the
 semantics are ANSI-expressible (exact dedup, jaccard, brute-force
-cosine, text stats); the hash-function-dependent ops (minhash/simhash
-LSH) get rows-only checks by design — their verification story is the
-agreement test against the exact operators in tests/.
+cosine, text stats, MinHash LSH on its md5 family); the ops that
+depend on a Spark-internal hash (xxhash64 SimHash) get rows-only
+checks — their verification story is the agreement test against the
+exact operators in tests/.
 """
 
 from __future__ import annotations
@@ -51,8 +52,8 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram shingle Jaccard near-dup pairs (J >= 0.5) —
-    the ground truth dedup_minhash_lsh approximates. O(n^2) within a
-    lang block; oracle-checkable."""
+    the ground truth dedup_minhash_portable approximates. O(n^2)
+    within a lang block; oracle-checkable."""
     t = load_tables(spark, sf_dir, ("documents",))
     return dedup.ngram_jaccard_pairs(
         t["documents"], "text", "doc_id", threshold=0.5, block_col="lang"
@@ -72,19 +73,6 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("documents",))
     return dedup.prefix_filter_jaccard_pairs(
         t["documents"], "text", "doc_id", threshold=0.5, ngram=3
-    ).orderBy("doc_a", "doc_b")
-
-
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs over 3-gram shingles (verified
-    shingle-J >= 0.5). No SQL oracle (signatures depend on Spark's
-    xxhash64); recall vs dedup_ngram_jaccard is asserted in
-    tests/test_dedup.py. Oracled twin: dedup_minhash_portable —
-    the identical pipeline on the portable md5 hash family, FULL
-    DuckDB oracle (the pairing the rows-only contract test pins)."""
-    t = load_tables(spark, sf_dir, ("documents",))
-    return dedup.minhash_lsh_pairs(
-        t["documents"], "text", "doc_id", threshold=0.5
     ).orderBy("doc_a", "doc_b")
 
 
@@ -790,10 +778,8 @@ def dedup_component_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     a DuckDB recursive-CTE transitive closure over the same pair list.
 
     Edges here come from the EXACT Jaccard join (O(n^2) within a lang
-    block) so the oracle can reproduce them — this entry is the
-    correctness twin. The scale path is
-    :func:`dedup_component_groups_lsh`, identical clustering over
-    MinHash+LSH edges."""
+    block). The scale path is :func:`dedup_component_groups_portable`,
+    identical clustering over MinHash+LSH edges."""
     t = load_tables(spark, sf_dir, ("documents",))
     docs = t["documents"]
     pairs = dedup.ngram_jaccard_pairs(
@@ -802,36 +788,17 @@ def dedup_component_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_components(docs, pairs, "doc_id").orderBy("doc_id")
 
 
-def dedup_component_groups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB dedup-clustering path: connected components over
-    MinHash+LSH candidate edges (every stage bucketed — no O(n^2)
-    anywhere). Rows-only check (edges depend on Spark's xxhash64);
-    the clustering itself is pinned by the oracled exact twin and the
-    union-find ground-truth test, and LSH edge recall by
-    tests/test_dedup.py. Oracled twin: dedup_component_groups_portable
-    — the identical clustering over the portable md5 LSH edges, FULL
-    DuckDB oracle (the pairing the rows-only contract test pins)."""
+def dedup_component_groups_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 100 TB dedup-clustering path, with a FULL oracle:
+    connected components over the MinHash+LSH candidate edges
+    (operators/dedup.py minhash_lsh_pairs — every stage bucketed, no
+    O(n^2) anywhere; its hash family DuckDB replays bit-identically),
+    so the driver hash-checks the entire approximate-clustering
+    pipeline end-to-end: signatures → bands → candidate join →
+    Jaccard verify → components → keeper flags."""
     t = load_tables(spark, sf_dir, ("documents",))
     docs = t["documents"]
     pairs = dedup.minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.5)
-    return dedup.dedup_components(docs, pairs, "doc_id").orderBy("doc_id")
-
-
-def dedup_component_groups_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-edge clustering with a FULL oracle: connected components
-    over the portable-md5 MinHash+LSH candidate edges
-    (operators/dedup.py minhash_lsh_pairs_portable — the hash family
-    DuckDB replays bit-identically), so the driver hash-checks the
-    entire approximate-clustering pipeline end-to-end: signatures →
-    bands → candidate join → Jaccard verify → components → keeper
-    flags. Same banded/bucketed plan shape as the xxhash64 scale
-    path (:func:`dedup_component_groups_lsh`); only the hash family
-    differs."""
-    t = load_tables(spark, sf_dir, ("documents",))
-    docs = t["documents"]
-    pairs = dedup.minhash_lsh_pairs_portable(
-        docs, "text", "doc_id", threshold=0.5
-    )
     return dedup.dedup_components(docs, pairs, "doc_id").orderBy("doc_id")
 
 
@@ -888,12 +855,13 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH with an md5 hash family — the oracle-checkable twin
-    of dedup_minhash_lsh: DuckDB computes the identical signatures,
-    bands, candidate pairs, and Jaccard verify, so the driver
-    hash-checks the full approximate pipeline (not just its recall)."""
+    """MinHash+LSH near-dup pairs over 3-gram shingles (verified
+    J >= 0.5). DuckDB computes the identical signatures, bands,
+    candidate pairs and Jaccard verify, so the driver hash-checks the
+    full approximate pipeline; recall vs dedup_ngram_jaccard is
+    asserted in tests/test_dedup.py."""
     t = load_tables(spark, sf_dir, ("documents",))
-    return dedup.minhash_lsh_pairs_portable(
+    return dedup.minhash_lsh_pairs(
         t["documents"], "text", "doc_id", threshold=0.5
     ).orderBy("doc_a", "doc_b")
 
@@ -5981,9 +5949,8 @@ def chat_prompt_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def chat_prompt_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEAR-duplicate prompt pairs across conversations: the portable
-    MinHash+LSH pipeline (operators/dedup.minhash_lsh_pairs_portable)
-    applied to the normalized first-user-turn prompt — the rephrase
+    """NEAR-duplicate prompt pairs across conversations: the
+    MinHash+LSH pipeline (operators/dedup.minhash_lsh_pairs) applied to the normalized first-user-turn prompt — the rephrase
     channel exact fingerprints cannot catch. Fixture: docs with
     d%100 < 4 form 4-prompt groups per 100-block (two verbatim
     copies, a 'three'->'five' rewrite at J=0.647, a 'review'->
@@ -6001,9 +5968,10 @@ def chat_prompt_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("doc_id")
     anchor = (d - d % 100).cast("string")
     # block-anchor tokens at FOUR spread positions: cross-block pairs
-    # share only 4 of 16 word-3-gram shingles (J=0.14 — band-collision
-    # probability ~4e-4, so grouped docs never pair across blocks and
-    # pair volume stays linear); within-block rewrites sit at
+    # share only 4 of 16 word-3-gram shingles (J=0.14 — candidate
+    # probability ~7e-3 over 16 bands of 4, and the verify rejects
+    # every such candidate, so grouped docs never pair across blocks
+    # and pair volume stays linear); within-block rewrites sit at
     # J=0.68/0.88/0.60, all above the 0.5 verify threshold
     a1 = (d - d % 100 + 1).cast("string")
     a2 = (d - d % 100 + 2).cast("string")
@@ -6051,7 +6019,7 @@ def chat_prompt_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conv_id", CH.normalized_prompt().alias("prompt")
     )
     return (
-        DD.minhash_lsh_pairs_portable(
+        DD.minhash_lsh_pairs(
             prompts, "prompt", "conv_id", threshold=0.5
         )
         .select(

@@ -131,7 +131,7 @@ HEADLINE = [
     "latest_event_per_user",
     "json_extract_events",
     "dedup_exact_groups",
-    "dedup_minhash_lsh",
+    "dedup_minhash_portable",
     "dedup_embedding_cosine_blocked",
     "doc_winnow_fingerprints",
     "ann_cosine_topk",
@@ -140,7 +140,6 @@ HEADLINE = [
     "text_stats_by_lang",
     "quality_filter_flags",
     "ngram_top_terms",
-    "dedup_component_groups_lsh",
     "skew_plain_join",
     "skew_salted_join",
     "dedup_semantic_clustered",
@@ -379,8 +378,8 @@ SCALING_QUERIES = [
     "latest_event_per_user",
     "doc_winnow_fingerprints",
     "quality_filter_flags",
-    "dedup_minhash_lsh",
-    "dedup_component_groups_lsh",
+    "dedup_minhash_portable",
+    "dedup_component_groups_portable",
     # round-5 additions with a quadratic failure mode to watch: the
     # anchor self-join (span dedup) and the Gram aggregate (PCA)
     "dedup_exact_spans",

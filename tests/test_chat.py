@@ -84,15 +84,13 @@ def test_prompt_dedup_registry_and_normalization(spark):
 
 def test_prompt_near_dup_via_minhash(spark):
     """NEAR-duplicate prompts (one word changed) pair up through the
-    existing portable minhash machinery applied to the prompt
-    column — the chat composition of the dedup family."""
-    from aws_de_final_project_spark.operators.dedup import (
-        minhash_lsh_pairs_portable,
-    )
+    existing minhash machinery applied to the prompt column — the
+    chat composition of the dedup family."""
+    from aws_de_final_project_spark.operators.dedup import minhash_lsh_pairs
 
     # long shared prompt so one changed word keeps Jaccard ~0.9 —
-    # comfortably above the b=4/r=4 S-curve knee (J=0.65 would be a
-    # ~50% candidate coin flip; near-dup means NEAR)
+    # on the b=16/r=4 S-curve a candidate with probability 1 - 4e-8
+    # (J=0.5 would be a 64% coin flip; near-dup means NEAR)
     base = ("please summarize this very long document about spark "
             "shuffles and partitions in three short bullet points "
             "and then list every table it mentions together with "
@@ -109,9 +107,7 @@ def test_prompt_near_dup_via_minhash(spark):
     prompts = convs.select(
         "conv_id", C.normalized_prompt().alias("prompt")
     )
-    pairs = minhash_lsh_pairs_portable(
-        prompts, "prompt", "conv_id", threshold=0.5
-    )
+    pairs = minhash_lsh_pairs(prompts, "prompt", "conv_id", threshold=0.5)
     got = sorted((r[0], r[1]) for r in pairs.collect())
     assert got == [(1, 2)]
 

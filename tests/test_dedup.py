@@ -1,5 +1,5 @@
 """Dedup operator tests: planted duplicates + LSH-vs-exact agreement
-(the verification story for the no-oracle minhash/simhash queries)."""
+(the verification story for the no-oracle xxhash64 SimHash query)."""
 
 from __future__ import annotations
 
@@ -62,6 +62,93 @@ def test_minhash_lsh_agrees_with_exact(docs):
     # on the planted high-J pairs must be total.
     assert lsh <= exact
     assert {(1, 2), (1, 3)} <= lsh
+
+
+def test_minhash_family_matches_python_reference(spark):
+    """The MinHash family, replayed from hashlib alone: each shingle's
+    60-bit hash is the first 15 hex digits of its md5, and mins i is
+    min((a_i * (h mod p) + b_i) mod p) with p = 2^31 - 1 and (a_i, b_i)
+    derived from md5 of i. The DuckDB oracle replays the same family,
+    so a changed coefficient, p or prefix would move both engines
+    together; this reference does not move with them."""
+    import hashlib
+
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+
+    p = 2**31 - 1
+    coeffs = []
+    for i in range(64):
+        d = int(hashlib.md5(str(i).encode()).hexdigest(), 16)
+        coeffs.append((1 + d % (p - 1), (d >> 64) % p))
+    texts = {
+        1: "alpha beta gamma delta epsilon",
+        2: "alpha beta gamma zeta",
+        3: "one two",  # shorter than the 3-gram: one whole-doc shingle
+    }
+
+    def ref_hashes(text):
+        w = text.split()
+        shingles = {" ".join(w[i:i + 3]) for i in range(max(len(w) - 2, 1))}
+        return sorted(
+            int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+            for s in shingles
+        )
+
+    ref = {k: ref_hashes(t) for k, t in texts.items()}
+    expected = pd.DataFrame(
+        [
+            (k, *[min((a * (h % p) + b) % p for h in hs) for a, b in coeffs])
+            for k, hs in sorted(ref.items())
+        ],
+        columns=["_id", *[f"_m{i}" for i in range(64)]],
+    )
+    docs = spark.createDataFrame(
+        sorted(texts.items()), "doc_id long, text string"
+    )
+    sets = dedup._md5_shingle_sets(docs, "text", "doc_id", 3)
+    assert {r._id: sorted(r._words) for r in sets.collect()} == ref
+    result = dedup._minhash_mins(sets).orderBy("_id").toPandas()
+    assert_frame_equal(expected, result)
+
+
+def test_minhash_lsh_evaluates_each_source_row_once(spark):
+    """The signature aggregate and both verify sides read one cut of
+    the hashed shingle sets, so through one collect() every source row
+    is evaluated exactly once. Without the cut each consumer re-runs
+    the normalize+shingle+md5 pipeline from the source. Pinned with a
+    per-row UDF accumulator, as in the union-find over-cap test."""
+    from pyspark.sql import functions as F
+
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(x):
+        acc.add(1)
+        return x
+
+    counted = counted.asNondeterministic()  # no dedup/reorder by Catalyst
+    base = (
+        "the quick brown fox jumps over the lazy dog near the old river "
+        "bank while birds sing in the tall green trees above"
+    )
+    rows = [
+        (i, base.replace("quick", f"w{i // 2}") if i % 2 else
+         base.replace("quick", f"w{i // 2}").replace("tall", "short"))
+        for i in range(20)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id", counted(F.col("text")).alias("text")
+    )
+    pairs = dedup.minhash_lsh_pairs(docs, "text", "doc_id", 0.5).collect()
+    # each odd doc pairs with its even neighbour (one-word edit)
+    assert {(r.doc_a, r.doc_b) for r in pairs} >= {
+        (i, i + 1) for i in range(0, 20, 2)
+    }
+    assert acc.value == len(rows), (
+        f"source evaluated {acc.value} times for {len(rows)} rows — a "
+        "consumer of the hashed shingle sets recomputed the pipeline"
+    )
 
 
 def test_minhash_lsh_recall_on_corpus(spark):
@@ -203,8 +290,6 @@ def test_banding_parameter_validation(docs):
     """ADVICE r1: silently-degraded parameter combos must raise."""
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="divisible"):
-        dedup.minhash_lsh_pairs(docs, "text", "doc_id", num_hashes=64, bands=10)
     with _pytest.raises(ValueError, match="pigeonhole"):
         dedup.simhash_near_pairs(docs, "text", "doc_id", max_hamming=5, chunks=4)
 
@@ -320,28 +405,6 @@ def test_exact_span_pairs_anchor_guard_drops_boilerplate(spark):
         docs, "text", "doc_id", k=8, min_span_tokens=8, max_anchor_docs=3
     )
     assert tight.count() == 0
-
-
-def test_tune_lsh_bands_s_curve():
-    """Tuner must satisfy its own S-curve bound, prefer fewer bands,
-    enforce divisibility, and refuse infeasible targets loudly."""
-    b, r = dedup.tune_lsh_bands(0.5, num_hashes=64, min_recall_at_threshold=0.9)
-    assert b * r == 64
-    assert 1.0 - (1.0 - 0.5**r) ** b >= 0.9
-    # any feasible banding with fewer bands would have been chosen
-    for b2 in range(1, b):
-        if 64 % b2 == 0:
-            r2 = 64 // b2
-            assert 1.0 - (1.0 - 0.5**r2) ** b2 < 0.9
-    # FP cap makes high-band configs infeasible
-    with pytest.raises(ValueError):
-        dedup.tune_lsh_bands(
-            0.9, num_hashes=4, min_recall_at_threshold=0.99,
-            max_fp_below=0.001, fp_jaccard=0.2,
-        )
-    # tuned banding plugs straight into the operator's contract
-    b3, r3 = dedup.tune_lsh_bands(0.3, num_hashes=64)
-    assert 64 % b3 == 0 and b3 * r3 == 64
 
 
 def test_prefix_filter_matches_quadratic_join(spark):

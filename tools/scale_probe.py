@@ -76,12 +76,11 @@ QUERIES = [
 DOC_QUERIES = [
     "dedup_exact_groups",
     "dedup_exact_spans",
-    "dedup_minhash_lsh",
+    "dedup_minhash_portable",
     "doc_winnow_fingerprints",
     "repetition_top_bigram",
     "text_stats_by_lang",
     "quality_filter_flags",
-    "dedup_component_groups_lsh",
     # round-5 session adds: the prefix-filter join's candidate stage
     # and the Misra-Gries partial-summary path are the two newest
     # structures whose scaling is a design CLAIM — probe both
@@ -91,8 +90,7 @@ DOC_QUERIES = [
     # hash split — both should be flat-linear by construction
     "epoch_shuffle_docs",
     "split_train_val_test_docs",
-    # round-6: the driver-facing full-oracle LSH clustering twin —
-    # same banded shape as dedup_component_groups_lsh, md5 family
+    # round-6: the driver-facing full-oracle LSH clustering
     "dedup_component_groups_portable",
     # round-6: bigram LM — two corpus aggregates + a model re-join
     "bigram_logprob_scores",
@@ -242,8 +240,7 @@ DOCS_X10_DIR = "/tmp/scale_probe_docs_x10"
 X30_QUERIES = [
     "doc_winnow_fingerprints",
     "quality_filter_flags",
-    "dedup_minhash_lsh",
-    "dedup_component_groups_lsh",
+    "dedup_minhash_portable",
     # round-5: the anchor self-join is the newest quadratic-risk
     # stage; the per-copy cipher keeps cross-copy anchors disjoint so
     # pair output scales linearly in copies
