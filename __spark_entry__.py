@@ -3,11 +3,11 @@
 ``entry``   — flagship query smoke check at sf0.001.
 ``queries`` — one entry per implemented operator family from
               SURVEY.md §2 plus the north-star extensions.
-``oracle_sql`` — DuckDB-runnable ANSI twins. Omitted only for ops
-              whose results depend on Spark-internal hash or sketch
-              functions (xxhash64 SimHash, HLL/KLL sketches) — those
-              get rows-only checks here and agreement tests against
-              exact operators in tests/.
+``oracle_sql`` — DuckDB-runnable ANSI twins. Omitted only for the
+              one op whose results depend on Spark-internal sketch
+              functions (HLL/KLL in sketch_event_stats) — it gets a
+              rows-only check here and agreement tests against exact
+              operators in tests/.
 """
 
 from __future__ import annotations
@@ -32,12 +32,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return Q.return_pct_by_nation(spark, "/root/testdata/sf0.001")
 
 
-# The rows-only engine-hash entries (no oracle by design; their
-# portable twins carry the check) are pinned to the very back, so
+# The rows-only engine-sketch entry (no oracle by design; its
+# portable twin carries the check) is pinned to the very back, so
 # driver sample slots are never spent on rows-only checks.
-_NO_ORACLE_BACK: tuple[str, ...] = (
-    "sketch_event_stats", "dedup_simhash_pairs",
-)
+_NO_ORACLE_BACK: tuple[str, ...] = ("sketch_event_stats",)
 
 
 # Round-13 driver-sample rotation (VERDICT r12 item 9): the next-
@@ -323,7 +321,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_minhash_portable": X.dedup_minhash_portable,
         "dedup_simhash_portable": X.dedup_simhash_portable,
         "grouping_sets_order_stats": Q.grouping_sets_order_stats,
-        "dedup_simhash_pairs": X.dedup_simhash_pairs,
         "ann_cosine_topk": X.ann_cosine_topk,
         "text_stats_by_lang": X.text_stats_by_lang,
         "token_counts": X.token_counts,
@@ -1681,11 +1678,14 @@ def _ngram_jaccard_sql() -> str:
     """
 
 
-def _simhash_portable_sql() -> str:
-    """DuckDB twin of dedup.simhash_near_pairs(hash_family='md5',
-    bits=60, chunks=4, max_hamming=3): identical shingle hashes, bit
-    sums, sign reassembly, pigeonhole banding, and popcount verify."""
-    bits, chunks, max_h = 60, 4, 3
+def _simhash_sql() -> str:
+    """DuckDB twin of dedup.simhash_near_pairs(max_hamming=3),
+    generated from the SAME constants (dedup.SIMHASH_BITS /
+    HAMMING_BANDS): identical shingle hashes, bit sums, sign
+    reassembly, pigeonhole banding, and popcount verify. It runs the
+    plain band join; the Spark operator's exact-signature collapse is
+    lossless, so the pair sets agree."""
+    bits, chunks, max_h = _DD.SIMHASH_BITS, _DD.HAMMING_BANDS, 3
     chunk_bits = bits // chunks
     mask = (1 << chunk_bits) - 1
     bsums = ",\n                       ".join(
@@ -3378,7 +3378,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "dedup_ngram_jaccard": _ngram_jaccard_sql() + " ORDER BY doc_a, doc_b",
         "dedup_minhash_portable": _minhash_sql(),
-        "dedup_simhash_portable": _simhash_portable_sql(),
+        "dedup_simhash_portable": _simhash_sql(),
         "decontaminate_vs_benchmark": f"""
             WITH w AS (
                 SELECT doc_id,
@@ -4647,8 +4647,7 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked WHERE rnk <= 5
             ORDER BY query_id, rank
         """,
-        # rows-only (genuinely engine-hash/sketch dependent):
-        #   dedup_simhash_pairs (Spark xxhash64 has no DuckDB twin),
+        # rows-only (genuinely engine-sketch dependent):
         #   sketch_event_stats (HLL/KLL internals)
         "line_dedup_docs": """
             WITH lines AS (

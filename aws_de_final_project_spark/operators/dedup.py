@@ -16,8 +16,11 @@ Scale design (the whole point — 100 TB posture):
   Jaccard verification runs on candidates, not the cross product.
   One hash family (md5 base hash, then ``MINHASH_K`` affine maps),
   which DuckDB replays exactly, so the whole pipeline has an oracle.
-* **SimHash**: 64-bit signature, hamming<=k via pigeonhole banding —
-  4 chunk-equality joins instead of a cross join.
+* **SimHash**: 60-bit signature over the same md5 shingle hashes as
+  MinHash, hamming<=k via pigeonhole banding — 4 band-equality joins
+  instead of a cross join. The Hamming join
+  (:func:`hamming_band_pairs`) is shared with the image, video-frame
+  and audio near-dup operators in ``multimodal``.
 * everything is DataFrame-native (explode/groupBy/join) — no Python
   in the hot path, no driver-side collection.
 """
@@ -120,25 +123,6 @@ def _shingle_sets(
     return words.select(
         "_id",
         _shingle_expr(F.col("_w"), ngram).alias("_words"),
-    )
-
-
-def _hashed_shingle_sets(
-    df: DataFrame, text_col: str, id_col: str, ngram: int
-) -> DataFrame:
-    """id -> distinct xxhash64 shingle set (array<bigint>), the
-    features of :func:`simhash`'s ``hash_family="xxhash64"``.
-
-    Hashing shingles to 8-byte ints before any shuffle keeps rows
-    narrow (a 300-char doc's shingle set is ~2.4 KB as strings, ~230 B
-    hashed).
-    """
-    sets = _shingle_sets(df, text_col, id_col, ngram)
-    return sets.select(
-        "_id",
-        F.array_distinct(
-            F.transform(F.col("_words"), lambda s: F.xxhash64(s))
-        ).alias("_words"),
     )
 
 
@@ -423,69 +407,13 @@ def winnow_fingerprints(
     )
 
 
-def simhash(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    bits: int = 64,
-    ngram: int = 3,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """id -> SimHash signature (bigint).
-
-    Per doc: hash every distinct word-``ngram`` shingle to ``bits``
-    bits; each output bit is the sign of the sum of (+1/-1)
-    contributions across shingles. Expressed as explode -> ``bits``
-    conditional sums -> bit reassembly; one shuffle on the doc id.
-    Shingle features for the same reason as minhash: unigram features
-    over a shared vocabulary put unrelated docs within small hamming
-    distance.
-
-    ``hash_family``: "xxhash64" (fast path, 64 bits, Spark-internal)
-    or "md5" (first 60 bits of md5 — bit-identical in every engine,
-    so the signature has a DuckDB twin; pass ``bits<=60``).
-    """
-    if hash_family == "xxhash64":
-        # explode_outer for the same inferred-filter-pushdown reason
-        # as in _minhash_mins; shingle arrays are never empty.
-        exploded = (
-            _hashed_shingle_sets(df, text_col, id_col, ngram)
-            .select("_id", F.explode_outer("_words").alias("_h"))
-        )
-    elif hash_family == "md5":
-        if bits > 60:
-            raise ValueError(
-                f"md5 family carries 60 portable bits, got bits={bits}"
-            )
-        exploded = (
-            _shingle_sets(df, text_col, id_col, ngram)
-            .select("_id", F.explode_outer("_words").alias("_sh"))
-            .select(
-                "_id",
-                F.conv(F.substring(F.md5("_sh"), 1, 15), 16, 10)
-                .cast("long")
-                .alias("_h"),
-            )
-        )
-    else:
-        raise ValueError(f"unknown hash_family {hash_family!r}")
-    bit_sums = exploded.groupBy("_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("_h"), i).bitwiseAND(F.lit(1)) == 1, 1)
-                .otherwise(-1)
-            ).alias(f"_b{i}")
-            for i in range(bits)
-        ]
-    )
-    sig = None
-    for i in range(bits):
-        bit = F.when(F.col(f"_b{i}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, i)
-        sig = term if sig is None else sig.bitwiseOR(term)
-    return bit_sums.select(F.col("_id"), sig.alias("simhash"))
+# The SimHash signature and the Hamming band join, defined once:
+# simhash_near_pairs, multimodal's image/video/audio near-dup operators
+# and the SimHash DuckDB oracle (__spark_entry__._simhash_sql) all read
+# these. HAMMING_BANDS bands give exact recall for max_hamming <=
+# HAMMING_BANDS - 1 (pigeonhole).
+SIMHASH_BITS = 60
+HAMMING_BANDS = 4
 
 
 def simhash_near_pairs(
@@ -493,82 +421,194 @@ def simhash_near_pairs(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    chunks: int = 4,
     ngram: int = 3,
-    bits: int = 64,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance <= ``max_hamming``.
+    """Near-dup pairs by SimHash Hamming distance <= ``max_hamming``:
+    (doc_a, doc_b, hamming), doc_a < doc_b.
 
-    Pigeonhole banding: split the 64-bit signature into ``chunks``
-    16-bit chunks; any pair within hamming<=chunks-1 shares at least
-    one exact chunk, so candidates come from ``chunks`` equality
-    joins (shuffle on 16-bit keys), then exact popcount verify.
+    Signature (Charikar, "Similarity estimation techniques from
+    rounding algorithms", STOC 2002): the features are the doc's
+    distinct 60-bit shingle hashes, the ones MinHash uses
+    (:func:`_md5_shingle_sets`, first 15 hex digits of each word-
+    ``ngram`` shingle's md5); bit i of the ``SIMHASH_BITS`` = 60-bit
+    signature is set iff more features have bit i set than clear. One
+    explode -> 60 conditional sums -> bit reassembly, one shuffle on
+    the doc id; the signature is carried as ``HAMMING_BANDS`` = 4
+    bands of 15 bits, band j holding bits [15j, 15j + 15).
 
-    The pigeonhole guarantee only holds for ``max_hamming <=
-    chunks-1`` — beyond it qualifying pairs can disagree in every
-    chunk and be silently missed (ADVICE r1), hence the ValueError.
+    Join: :func:`hamming_band_pairs`, the pigeonhole-banded search of
+    Manku, Jain, Das Sarma, "Detecting Near-Duplicates for Web
+    Crawling" (WWW 2007), with no frequency cap, so recall is exact:
+    the output is every pair within ``max_hamming``. Identical
+    signatures (boilerplate copies) enter the band join once.
+
+    Within-doc collisions: two of one doc's shingles whose 60-bit
+    hashes collide merge into one feature. The DuckDB twin hashes the
+    distinct shingle strings, so it counts both; the engines agree
+    barring about n^2/2^61 such collisions per doc of n shingles.
     """
-    if max_hamming > chunks - 1:
-        raise ValueError(
-            f"max_hamming ({max_hamming}) > chunks-1 ({chunks - 1}): "
-            "pigeonhole banding cannot guarantee recall — raise "
-            "chunks or lower max_hamming"
-        )
-    if bits % chunks != 0:
-        raise ValueError(f"bits ({bits}) must be divisible by chunks ({chunks})")
-    sigs = simhash(
-        df, text_col, id_col, bits=bits, ngram=ngram, hash_family=hash_family
+    sigs = _simhash_bands(_md5_shingle_sets(df, text_col, id_col, ngram))
+    pairs = hamming_band_pairs(sigs, max_hamming, max_band_freq=None)
+    return pairs.select(
+        F.col("_id").alias("doc_a"), F.col("_id_b").alias("doc_b"), "hamming"
     )
-    chunk_bits = bits // chunks
-    mask = (1 << chunk_bits) - 1
-    banded = sigs.select(
-        "_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("simhash"), c * chunk_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("cc"),
-    ).select("_id", "simhash", "cc.chunk", "cc.key")
-    # the cut materializes the simhash pipeline once and both
-    # chunk-join sides scan the stored blocks (chunks rows x ~40 B per
-    # doc). The r13 alias self-join only deduplicated the pipeline
-    # when both sides shuffled; at broadcast-sized inputs one side was
-    # re-evaluated (the r14 measured defect on the minhash twin).
-    banded = _cut(banded)
-    bx, by = banded.alias("_bx"), banded.alias("_by")
-    xor = F.col("simhash").bitwiseXOR(F.col("simhash_b"))
-    hamming = F.bit_count(xor)
+
+
+def _simhash_bands(sets: DataFrame) -> DataFrame:
+    """(_id, _b) over a :func:`_md5_shingle_sets` frame: the SimHash
+    signature as ``array<bigint>`` of ``HAMMING_BANDS`` bands, band j
+    = bits [15j, 15j + 15) of the 60-bit signature.
+
+    explode_outer for the same inferred-filter-pushdown reason as in
+    :func:`_minhash_mins` (shingle arrays are never empty); the sums
+    and the reassembly are parsed SQL strings for the same py4j
+    reason as its mins.
+    """
+    width = SIMHASH_BITS // HAMMING_BANDS
+    mask = (1 << width) - 1
+    sums = (
+        sets.select("_id", F.explode_outer("_words").alias("_h"))
+        .groupBy("_id")
+        .agg(
+            *[
+                F.expr(f"sum(IF(shiftright(_h, {i}) & 1 = 1, 1, -1)) AS _s{i}")
+                for i in range(SIMHASH_BITS)
+            ]
+        )
+    )
+    sig = " | ".join(
+        f"IF(_s{i} > 0, {1 << i}L, 0L)" for i in range(SIMHASH_BITS)
+    )
+    bands = ", ".join(
+        f"shiftright(_sig, {j * width}) & {mask}L" for j in range(HAMMING_BANDS)
+    )
+    return sums.select("_id", F.expr(f"{sig} AS _sig")).select(
+        "_id", F.expr(f"array({bands}) AS _b")
+    )
+
+
+def _hamming_band_candidates(
+    reps: DataFrame, max_band_freq: int | None
+) -> DataFrame:
+    """Candidate signature pairs from the pigeonhole band equi-joins
+    over one-row-per-DISTINCT-signature ``reps`` (_rep, _b), with the
+    per-(band_idx, value) frequency cap applied to BOTH join sides.
+    Split out so tests can pin the candidate volume bound directly
+    (the planted-hot-band test)."""
+    banded = reps.select(
+        "_rep", "_b", F.posexplode("_b").alias("chunk", "key")
+    )
+    if max_band_freq is not None:
+        cold = (
+            banded.groupBy("chunk", "key")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") <= max_band_freq)
+            .select("chunk", "key")
+        )
+        banded = banded.join(cold, ["chunk", "key"])
+    other = banded.select(
+        F.col("_rep").alias("_rep_b"), F.col("_b").alias("_b_b"),
+        "chunk", "key",
+    )
     return (
-        bx.join(
-            by,
-            (F.col("_bx.chunk") == F.col("_by.chunk"))
-            & (F.col("_bx.key") == F.col("_by.key"))
-            & (F.col("_bx._id") < F.col("_by._id")),
-        )
-        .select(
-            F.col("_bx._id").alias("_id"),
-            F.col("_by._id").alias("_id_b"),
-            F.col("_bx.simhash").alias("simhash"),
-            F.col("_by.simhash").alias("simhash_b"),
-        )
+        banded.join(other, ["chunk", "key"])
+        .filter(F.col("_rep") < F.col("_rep_b"))
+        .select("_rep", "_rep_b", "_b", "_b_b")
         .distinct()
-        .select(
-            F.col("_id").alias("doc_a"),
-            F.col("_id_b").alias("doc_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
     )
+
+
+def hamming_band_pairs(
+    sigs: DataFrame, max_hamming: int, max_band_freq: int | None
+) -> DataFrame:
+    """All pairs within Hamming distance ``max_hamming`` of
+    ``sigs`` (_id, _b), ``_b`` an ``array<bigint>`` of
+    ``HAMMING_BANDS`` band values: (_id, _id_b, hamming), _id < _id_b.
+
+    Pigeonhole banding: any pair within hamming <= HAMMING_BANDS - 1
+    agrees exactly on at least one band, so candidates come from
+    equality joins on (band_idx, band_value) — shuffles on narrow
+    keys, NO cartesian — then the exact popcount verify runs per
+    candidate. Beyond that bound a qualifying pair can disagree in
+    every band and be silently missed, hence the ValueError.
+
+    Scale shape — HOT-BAND GUARD (the containment_pairs hot-shingle
+    recipe): near-constant inputs (blank thumbnails, tracking pixels,
+    boilerplate pages) collapse to a handful of band values, and a
+    (band, value) bucket shared by k rows yields k^2/2 candidate
+    rows — quadratic in exactly the skewed case that matters at
+    100 TB. Two defenses, in order:
+
+    1. EXACT-GROUP PRE-COLLAPSE (lossless, always on): rows are
+       first grouped by their FULL signature; only one representative
+       per DISTINCT signature enters the band join. Identical
+       copies — the dominant hot case — therefore contribute ONE row
+       per bucket regardless of copy count. Hamming-0 pairs are
+       emitted directly from a self-equi-join on the full signature
+       (volume = true output size), and each verified representative
+       pair is expanded back to all member pairs (every member of
+       sig_a is at the same hamming from every member of sig_b), so
+       the output is IDENTICAL to the unguarded join.
+    2. PER-(band, value) FREQUENCY CAP (``max_band_freq``, the only
+       recall-loss channel): a band value still shared by more than
+       ``max_band_freq`` DISTINCT signatures is dropped from the
+       banding on both sides, bounding candidate volume per bucket at
+       max_band_freq^2/2. A qualifying pair is missed ONLY if every
+       band it agrees on is over-cap — the deliberate
+       quadratic-blowup trade (exact_span_pairs' max_anchor_docs,
+       containment_pairs' prefix filter). ``None`` disables the cap.
+       Candidate bound + recall-unchanged pins live in
+       tests/test_multimodal.py (planted hot-band fixture)."""
+    if max_hamming > HAMMING_BANDS - 1:
+        raise ValueError(
+            f"max_hamming ({max_hamming}) > bands-1 ({HAMMING_BANDS - 1}):"
+            " pigeonhole banding cannot guarantee recall"
+        )
+    # (id, signature) is consumed FIVE times below (reps, both sides
+    # of the hamming-0 self-join, both expansion joins) — materialize
+    # it once or the whole upstream subtree re-runs per consumer
+    # (measured 3.5 s -> 5.9 s for the image join at sf0.1 before this
+    # cut). The frame is tiny: one id + four band values per row.
+    sigs = _cut(sigs)
+    # 1. exact-group collapse: one representative per distinct signature
+    reps = sigs.groupBy("_b").agg(F.min("_id").alias("_rep"))
+    # hamming-0 pairs straight off the signature equality (no banding)
+    intra = (
+        sigs.join(
+            sigs.select(
+                F.col("_id").alias("_id_b"), F.col("_b").alias("_b_i")
+            ),
+            F.col("_b") == F.col("_b_i"),
+        )
+        .filter(F.col("_id") < F.col("_id_b"))
+        .select("_id", "_id_b", F.lit(0).cast("int").alias("hamming"))
+    )
+    # 2. banded join on representatives only, under the frequency cap
+    cand = _hamming_band_candidates(reps, max_band_freq)
+    hamming = sum(
+        F.bit_count(
+            F.element_at("_b", j + 1).bitwiseXOR(
+                F.element_at("_b_b", j + 1)
+            )
+        )
+        for j in range(HAMMING_BANDS)
+    )
+    rep_pairs = cand.select(
+        "_b", "_b_b", hamming.cast("int").alias("hamming")
+    ).filter(F.col("hamming") <= max_hamming)
+    # 3. expand each verified signature pair back to member pairs
+    ma = sigs.select(F.col("_id").alias("_ma"), F.col("_b").alias("_sig_a"))
+    mb = sigs.select(F.col("_id").alias("_mb"), F.col("_b").alias("_sig_b"))
+    cross = (
+        rep_pairs.join(ma, F.col("_b") == F.col("_sig_a"))
+        .join(mb, F.col("_b_b") == F.col("_sig_b"))
+        .select(
+            F.least("_ma", "_mb").alias("_id"),
+            F.greatest("_ma", "_mb").alias("_id_b"),
+            "hamming",
+        )
+    )
+    return intra.unionAll(cross)
 
 
 def connected_components(

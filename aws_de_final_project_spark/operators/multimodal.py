@@ -24,7 +24,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aws_de_final_project_spark.operators.util import cut
+from aws_de_final_project_spark.operators.dedup import (
+    HAMMING_BANDS,
+    hamming_band_pairs,
+)
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -759,10 +762,11 @@ def media_byte_stats(media: DataFrame) -> DataFrame:
 # Perceptual-hash image dedup (r10 verdict item 3): dHash over a 9x8
 # downsampled gray grid -> 64 difference bits carried as four 16-bit
 # bands (integer arithmetic end-to-end, no signed-BIGINT bit 63 —
-# DuckDB-replayable), pigeonhole banding for Hamming-ball candidates
-# (the simhash precedent, operators/dedup.py simhash_near_pairs),
-# exact popcount verify. The standard image near-dup step in
-# multimodal corpus curation: a re-encoded / resized / lightly
+# DuckDB-replayable). The bands go through the package's one Hamming
+# join, dedup.hamming_band_pairs (pigeonhole band equi-joins, hot-band
+# guard, exact popcount verify), which SimHash's text signatures
+# share; HAMMING_BANDS comes from there. The standard image near-dup
+# step in multimodal corpus curation: a re-encoded / resized / lightly
 # edited copy keeps ~all its luma gradients, so its dHash lands
 # within a few bits of the original.
 # ---------------------------------------------------------------------------
@@ -772,7 +776,6 @@ def media_byte_stats(media: DataFrame) -> DataFrame:
 #: neighbor, so each row of 9 samples yields 8 difference bits.
 PHASH_GRID_W = 9
 PHASH_GRID_H = 8
-PHASH_BANDS = 4
 
 
 def py_dhash_bands(grid) -> list[int]:
@@ -795,7 +798,7 @@ def dhash_bands(grid: Column) -> Column:
     and the band-not-signed-hash representation keeps every value in
     [0, 65535] so both engines fold identical non-negative BIGINTs."""
     bands = []
-    for j in range(PHASH_BANDS):
+    for j in range(HAMMING_BANDS):
         total = F.lit(0).cast("long")
         for p in range(16):
             k = 16 * j + p
@@ -809,37 +812,6 @@ def dhash_bands(grid: Column) -> Column:
     return F.array(*bands)
 
 
-def _phash_band_candidates(
-    reps: DataFrame, max_band_freq: int | None
-) -> DataFrame:
-    """Candidate signature pairs from the four pigeonhole band
-    equi-joins over one-row-per-DISTINCT-signature ``reps``
-    (_rep, _b), with the per-(band_idx, value) frequency cap applied
-    to BOTH join sides. Split out so tests can pin the candidate
-    volume bound directly (the planted-hot-band test)."""
-    banded = reps.select(
-        "_rep", "_b", F.posexplode("_b").alias("chunk", "key")
-    )
-    if max_band_freq is not None:
-        cold = (
-            banded.groupBy("chunk", "key")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") <= max_band_freq)
-            .select("chunk", "key")
-        )
-        banded = banded.join(cold, ["chunk", "key"])
-    other = banded.select(
-        F.col("_rep").alias("_rep_b"), F.col("_b").alias("_b_b"),
-        "chunk", "key",
-    )
-    return (
-        banded.join(other, ["chunk", "key"])
-        .filter(F.col("_rep") < F.col("_rep_b"))
-        .select("_rep", "_rep_b", "_b", "_b_b")
-        .distinct()
-    )
-
-
 def image_phash_pairs(
     images: DataFrame,
     id_col: str,
@@ -850,103 +822,21 @@ def image_phash_pairs(
     """Near-duplicate image pairs by dHash Hamming distance <=
     ``max_hamming``: (img_a, img_b, hamming), img_a < img_b.
 
-    Pigeonhole banding (the simhash shape): any pair within
-    hamming <= 3 agrees exactly on at least one of the four 16-bit
-    bands, so candidates come from four equality joins on (band_idx,
-    band_value) — shuffles on 16-bit keys, NO cartesian — then the
-    exact popcount verify runs per candidate. The guarantee needs
-    ``max_hamming <= PHASH_BANDS - 1``; beyond that a qualifying pair
-    can disagree in every band and be silently missed, hence the
-    ValueError (same contract as simhash_near_pairs).
-
-    Scale shape — HOT-BAND GUARD (r11 verdict item 1; the
-    containment_pairs hot-shingle recipe): on real web images,
-    near-constant frames (blank thumbnails, tracking pixels,
-    re-served logos) collapse to a handful of band values, and a
-    (band, value) bucket shared by k images yields k^2/2 candidate
-    rows — quadratic in exactly the skewed case that matters at
-    100 TB. Two defenses, in order:
-
-    1. EXACT-GROUP PRE-COLLAPSE (lossless, always on): images are
-       first grouped by their FULL 64-bit signature; only one
-       representative per DISTINCT signature enters the band join.
-       Identical re-uploads — the dominant web hot case — therefore
-       contribute ONE row per bucket regardless of copy count.
-       Hamming-0 pairs are emitted directly from a self-equi-join on
-       the full signature (volume = true output size), and each
-       verified representative pair is expanded back to all member
-       pairs (every member of sig_a is at the same hamming from every
-       member of sig_b), so the output is IDENTICAL to the unguarded
-       join.
-    2. PER-(band, value) FREQUENCY CAP (``max_band_freq``, the only
-       recall-loss channel): a band value still shared by more than
-       ``max_band_freq`` DISTINCT signatures is dropped from the
-       banding on both sides, bounding candidate volume per bucket at
-       max_band_freq^2/2. A qualifying pair is missed ONLY if every
-       band it agrees on is over-cap — the deliberate
-       quadratic-blowup trade (exact_span_pairs' max_anchor_docs,
-       containment_pairs' prefix filter). ``None`` disables the cap.
-       Candidate bound + recall-unchanged pins live in
-       tests/test_multimodal.py (planted hot-band fixture)."""
-    if max_hamming > PHASH_BANDS - 1:
-        raise ValueError(
-            f"max_hamming ({max_hamming}) > bands-1 ({PHASH_BANDS - 1}):"
-            " pigeonhole banding cannot guarantee recall"
-        )
-    # (id, signature) is consumed FIVE times below (reps, both sides
-    # of the hamming-0 self-join, both expansion joins) — materialize
-    # it once or the whole upstream grid/decode subtree re-runs per
-    # consumer (the round-5 multi-consumer lesson; measured 3.5 s ->
-    # 5.9 s at sf0.1 before this checkpoint). The frame is tiny:
-    # one id + four 16-bit bands per image.
-    sigs = cut(
-        images.select(
-            F.col(id_col).alias("_id"), dhash_bands(F.col(grid_col)).alias("_b")
-        )
+    The four 16-bit dHash bands ride the package's one Hamming join,
+    :func:`dedup.hamming_band_pairs` — pigeonhole band equi-joins
+    (the ValueError for ``max_hamming`` > 3 lives there), exact
+    popcount verify, and the hot-band guard: a lossless pre-collapse
+    of identical signatures (byte-identical re-uploads enter the band
+    join once) and the per-(band, value) cap ``max_band_freq``, the
+    only recall-loss channel (``None`` disables it). Near-constant
+    web images (blank thumbnails, tracking pixels, re-served logos)
+    are the hot case the cap bounds."""
+    sigs = images.select(
+        F.col(id_col).alias("_id"), dhash_bands(F.col(grid_col)).alias("_b")
     )
-    # 1. exact-group collapse: one representative per distinct signature
-    reps = sigs.groupBy("_b").agg(F.min("_id").alias("_rep"))
-    # hamming-0 pairs straight off the signature equality (no banding)
-    intra = (
-        sigs.join(
-            sigs.select(
-                F.col("_id").alias("_id_b"), F.col("_b").alias("_b_i")
-            ),
-            F.col("_b") == F.col("_b_i"),
-        )
-        .filter(F.col("_id") < F.col("_id_b"))
-        .select(
-            F.col("_id").alias("img_a"),
-            F.col("_id_b").alias("img_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
+    return hamming_band_pairs(sigs, max_hamming, max_band_freq).select(
+        F.col("_id").alias("img_a"), F.col("_id_b").alias("img_b"), "hamming"
     )
-    # 2. banded join on representatives only, under the frequency cap
-    cand = _phash_band_candidates(reps, max_band_freq)
-    hamming = sum(
-        F.bit_count(
-            F.element_at("_b", j + 1).bitwiseXOR(
-                F.element_at("_b_b", j + 1)
-            )
-        )
-        for j in range(PHASH_BANDS)
-    )
-    rep_pairs = cand.select(
-        "_b", "_b_b", hamming.cast("int").alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
-    # 3. expand each verified signature pair back to member pairs
-    ma = sigs.select(F.col("_id").alias("_ma"), F.col("_b").alias("_sig_a"))
-    mb = sigs.select(F.col("_id").alias("_mb"), F.col("_b").alias("_sig_b"))
-    cross = (
-        rep_pairs.join(ma, F.col("_b") == F.col("_sig_a"))
-        .join(mb, F.col("_b_b") == F.col("_sig_b"))
-        .select(
-            F.least("_ma", "_mb").alias("img_a"),
-            F.greatest("_ma", "_mb").alias("img_b"),
-            "hamming",
-        )
-    )
-    return intra.unionAll(cross)
 
 
 def _parse_image_pixels(payload: bytes):
@@ -1068,7 +958,7 @@ def image_exact_groups(
         F.col(id_col).alias("_id"), dhash_bands(F.col(grid_col)).alias("_b")
     ).select(
         "_id",
-        *[F.element_at("_b", j + 1).alias(f"b{j}") for j in range(PHASH_BANDS)],
+        *[F.element_at("_b", j + 1).alias(f"b{j}") for j in range(HAMMING_BANDS)],
     )
     return (
         sigs.groupBy("b0", "b1", "b2", "b3")
@@ -1463,7 +1353,7 @@ def video_scene_cuts(
                 F.element_at(prev, j + 1)
             )
         )
-        for j in range(PHASH_BANDS)
+        for j in range(HAMMING_BANDS)
     )
     return sigs.select(
         F.col("vid").alias(video_col),

@@ -98,7 +98,14 @@ def cut(df: DataFrame) -> DataFrame:
     """
     if df.sparkSession.sparkContext.getCheckpointDir():
         return df.checkpoint()
-    return df.localCheckpoint(eager=False)
+    out = df.localCheckpoint(eager=False)
+    # The lazy cut's tasks report SQL metrics to accumulators owned by
+    # the source frame's plan. Once the source is garbage-collected the
+    # driver drops them, and every later fill logs "attempted to access
+    # non-existent accumulator" with a stack trace. The cut frame keeps
+    # its source alive for as long as it can still be filled.
+    out._cut_source = df
+    return out
 
 
 def release(df: DataFrame) -> None:

@@ -3,10 +3,10 @@
 Each function is ``(spark, sf_dir) -> DataFrame`` with stable aliased
 columns, twinning a DuckDB oracle in ``__spark_entry__`` where the
 semantics are ANSI-expressible (exact dedup, jaccard, brute-force
-cosine, text stats, MinHash LSH on its md5 family); the ops that
-depend on a Spark-internal hash (xxhash64 SimHash) get rows-only
-checks — their verification story is the agreement test against the
-exact operators in tests/.
+cosine, text stats, MinHash and SimHash on their md5 families); the
+one op that depends on Spark-internal sketches (HLL/KLL in
+sketch_event_stats) gets a rows-only check — its verification story
+is the agreement test against the exact operators in tests/.
 """
 
 from __future__ import annotations
@@ -156,18 +156,6 @@ def dedup_semantic_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_assign=2,
         assign_impl="sql",
     ).orderBy("id_a", "id_b")
-
-
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (hamming <= 3). Rows-only check
-    (signatures depend on Spark's xxhash64). Oracled twin:
-    dedup_simhash_portable — same banding/verify on the
-    portable md5 family, FULL DuckDB oracle (the pairing the
-    rows-only contract test pins)."""
-    t = load_tables(spark, sf_dir, ("documents",))
-    return dedup.simhash_near_pairs(
-        t["documents"], "text", "doc_id", max_hamming=3
-    ).orderBy("doc_a", "doc_b")
 
 
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -339,7 +327,7 @@ def sketch_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sketch_kmv_distinct_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (k-minimum-values) distinct-count sketch per event_type —
     the FULL-oracle twin of sketch_event_stats' HLL++ column, same
-    recipe as the portable MinHash/SimHash twins: the hash family is
+    recipe as the MinHash and SimHash families: the hash family is
     ``int(md5(user_id)[:15 hex]) / 16^15`` (bit-identical in DuckDB),
     so signatures, the k-th minimum, and the (k-1)/u_k estimator all
     replay exactly and the driver hash-checks the whole sketch.
@@ -903,15 +891,15 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs with the md5 hash family (60 portable
-    bits, 4 chunks of 15) — the oracle-checkable twin of
-    dedup_simhash_pairs: DuckDB computes the identical signatures,
-    pigeonhole bands, candidate join, and popcount verify, so the
-    driver hash-checks the full approximate pipeline."""
+    """SimHash near-dup pairs (hamming <= 3) on the package's one
+    SimHash family: 60-bit md5 shingle hashes, 4 bands of 15 bits,
+    the Hamming band join shared with the image near-dup operators.
+    DuckDB computes the identical signatures, pigeonhole bands,
+    candidate join and popcount verify, so the driver hash-checks the
+    full approximate pipeline."""
     t = load_tables(spark, sf_dir, ("documents",))
     return dedup.simhash_near_pairs(
-        t["documents"], "text", "doc_id", max_hamming=3,
-        chunks=4, bits=60, hash_family="md5",
+        t["documents"], "text", "doc_id", max_hamming=3
     ).orderBy("doc_a", "doc_b")
 
 

@@ -1,5 +1,5 @@
-"""Dedup operator tests: planted duplicates + LSH-vs-exact agreement
-(the verification story for the no-oracle xxhash64 SimHash query)."""
+"""Dedup operator tests: planted duplicates, LSH-vs-exact agreement,
+and hashlib-only references for the MinHash and SimHash families."""
 
 from __future__ import annotations
 
@@ -113,21 +113,18 @@ def test_minhash_family_matches_python_reference(spark):
 
 
 def test_minhash_lsh_evaluates_each_source_row_once(spark):
-    """The signature aggregate and both verify sides read one cut of
-    the hashed shingle sets, so through one collect() every source row
-    is evaluated exactly once. Without the cut each consumer re-runs
-    the normalize+shingle+md5 pipeline from the source. Pinned with a
-    per-row UDF accumulator, as in the union-find over-cap test."""
+    """Through one collect() every source row is evaluated exactly
+    once, for MinHash and for SimHash. MinHash's signature aggregate
+    and both verify sides read one cut of the hashed shingle sets;
+    the Hamming band join reads SimHash's signatures five times (reps,
+    both sides of the hamming-0 join, both expansion joins) through
+    one cut. Without a cut each consumer re-runs the
+    normalize+shingle+md5 pipeline from the source. Pinned with a
+    per-row UDF accumulator, as in the union-find over-cap test. The
+    two operators run in one test, not a parametrization, so the
+    test's name is unchanged."""
     from pyspark.sql import functions as F
 
-    acc = spark.sparkContext.accumulator(0)
-
-    @F.udf("string")
-    def counted(x):
-        acc.add(1)
-        return x
-
-    counted = counted.asNondeterministic()  # no dedup/reorder by Catalyst
     base = (
         "the quick brown fox jumps over the lazy dog near the old river "
         "bank while birds sing in the tall green trees above"
@@ -137,18 +134,35 @@ def test_minhash_lsh_evaluates_each_source_row_once(spark):
          base.replace("quick", f"w{i // 2}").replace("tall", "short"))
         for i in range(20)
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string").select(
-        "doc_id", counted(F.col("text")).alias("text")
-    )
-    pairs = dedup.minhash_lsh_pairs(docs, "text", "doc_id", 0.5).collect()
-    # each odd doc pairs with its even neighbour (one-word edit)
-    assert {(r.doc_a, r.doc_b) for r in pairs} >= {
-        (i, i + 1) for i in range(0, 20, 2)
+    ops = {
+        "minhash_lsh_pairs": lambda d: dedup.minhash_lsh_pairs(
+            d, "text", "doc_id", 0.5
+        ),
+        "simhash_near_pairs": lambda d: dedup.simhash_near_pairs(
+            d, "text", "doc_id", 3
+        ),
     }
-    assert acc.value == len(rows), (
-        f"source evaluated {acc.value} times for {len(rows)} rows — a "
-        "consumer of the hashed shingle sets recomputed the pipeline"
-    )
+    for name, op in ops.items():
+        acc = spark.sparkContext.accumulator(0)
+
+        @F.udf("string")
+        def counted(x, acc=acc):
+            acc.add(1)
+            return x
+
+        counted = counted.asNondeterministic()  # no dedup/reorder by Catalyst
+        docs = spark.createDataFrame(rows, "doc_id long, text string").select(
+            "doc_id", counted(F.col("text")).alias("text")
+        )
+        pairs = {(r.doc_a, r.doc_b) for r in op(docs).collect()}
+        if name == "minhash_lsh_pairs":
+            # each odd doc pairs with its even neighbour (one-word edit)
+            assert pairs >= {(i, i + 1) for i in range(0, 20, 2)}
+        assert acc.value == len(rows), (
+            f"{name}: source evaluated {acc.value} times for {len(rows)} "
+            "rows — a consumer of the hashed shingle sets or signatures "
+            "recomputed the pipeline"
+        )
 
 
 def test_minhash_lsh_recall_on_corpus(spark):
@@ -193,25 +207,65 @@ def test_simhash_near_pairs(docs):
 
 
 def test_simhash_portable_family_agrees_on_planted_pairs(docs):
-    """The md5/60-bit portable family must reproduce the xxhash64
-    family's planted-pair behavior (identical text -> hamming 0,
-    unrelated text -> no pair) and reject invalid bit widths."""
-    import pytest as _pytest
-
+    """The md5/60-bit family (the one the DuckDB oracle replays) keeps
+    the planted-pair behavior: identical text -> hamming 0, unrelated
+    text -> no pair."""
     pairs = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in dedup.simhash_near_pairs(
-            docs, "text", "doc_id", 3, bits=60, hash_family="md5"
-        ).collect()
+        for r in dedup.simhash_near_pairs(docs, "text", "doc_id", 3).collect()
     }
     assert pairs[(1, 2)] == 0
     assert (1, 4) not in pairs
-    with _pytest.raises(ValueError):
-        dedup.simhash_near_pairs(
-            docs, "text", "doc_id", 3, bits=64, hash_family="md5"
-        )
-    with _pytest.raises(ValueError):
-        dedup.simhash_near_pairs(docs, "text", "doc_id", 3, bits=62)
+
+
+def test_simhash_matches_python_reference(spark):
+    """The SimHash family, replayed from hashlib alone: each 3-gram
+    shingle's feature is the first 15 hex digits of its md5 (60
+    bits), signature bit i is set iff more of the doc's distinct
+    features have bit i set than clear, and the signature travels as
+    4 bands of 15 bits, band j = bits [15j, 15j + 15). The DuckDB
+    oracle reads the same constants, so a changed bit order, band
+    width or prefix would move both engines together; this reference
+    does not move with them."""
+    import hashlib
+
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+    from pyspark.sql import functions as F
+
+    texts = {
+        1: "alpha beta gamma delta epsilon zeta eta theta",
+        2: "alpha beta gamma delta epsilon zeta eta iota",
+        3: "one two",  # shorter than the 3-gram: one whole-doc shingle
+        4: "the cat sat on the mat and the dog sat on the log",
+    }
+
+    def ref_bands(text):
+        w = text.split()
+        shingles = {" ".join(w[i:i + 3]) for i in range(max(len(w) - 2, 1))}
+        hs = {int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in shingles}
+        sig = 0
+        for i in range(60):
+            if sum(1 if (h >> i) & 1 else -1 for h in hs) > 0:
+                sig |= 1 << i
+        return [(sig >> (15 * j)) & 0x7FFF for j in range(4)]
+
+    expected = pd.DataFrame(
+        [(k, *ref_bands(t)) for k, t in sorted(texts.items())],
+        columns=["_id", "b0", "b1", "b2", "b3"],
+    )
+    docs = spark.createDataFrame(
+        sorted(texts.items()), "doc_id long, text string"
+    )
+    sigs = dedup._simhash_bands(
+        dedup._md5_shingle_sets(docs, "text", "doc_id", 3)
+    )
+    result = (
+        sigs.select("_id", *[F.col("_b")[j].alias(f"b{j}") for j in range(4)])
+        .orderBy("_id")
+        .toPandas()
+    )
+    assert_frame_equal(expected, result)
 
 
 def test_connected_components_vs_union_find(spark):
@@ -291,7 +345,7 @@ def test_banding_parameter_validation(docs):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="pigeonhole"):
-        dedup.simhash_near_pairs(docs, "text", "doc_id", max_hamming=5, chunks=4)
+        dedup.simhash_near_pairs(docs, "text", "doc_id", max_hamming=5)
 
 
 def test_winnow_fingerprints(docs):

@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from aws_de_final_project_spark.operators import multimodal
+from aws_de_final_project_spark.operators import dedup, multimodal
 
 
 @pytest.fixture(scope="module")
@@ -1012,8 +1012,8 @@ def test_image_phash_hot_band_guard(spark):
         multimodal.dhash_bands(F.col("grid")).alias("_b"),
     )
     reps = sigs.groupBy("_b").agg(F.min("_id").alias("_rep"))
-    n_capped = multimodal._phash_band_candidates(reps, 50).count()
-    n_uncapped = multimodal._phash_band_candidates(reps, None).count()
+    n_capped = dedup._hamming_band_candidates(reps, 50).count()
+    n_uncapped = dedup._hamming_band_candidates(reps, None).count()
     assert n_uncapped >= 66 * 65 // 2, n_uncapped
     assert n_capped <= 20, n_capped
 
@@ -1037,7 +1037,7 @@ def test_image_phash_exact_collapse_bounds_band_join(spark):
     )
     reps = sigs.groupBy("_b").agg(F.min("_id").alias("_rep"))
     # 2 distinct signatures -> at most C(2,2)=1 candidate pair
-    assert multimodal._phash_band_candidates(reps, 1000).count() == 1
+    assert dedup._hamming_band_candidates(reps, 1000).count() == 1
 
 
 def test_phash_quarantines_corrupt_png_streams(spark):

@@ -367,7 +367,7 @@ BUILD_JOB_ENTRIES = {
         "cut": """basket_pair_affinity chat_prompt_near_dedup
             curation_manifest_docs dedup_containment_pairs
             dedup_minhash_portable dedup_prefix_filter_pairs
-            dedup_simhash_pairs dedup_simhash_portable dedup_video_frames
+            dedup_simhash_portable dedup_video_frames
             ivm_join_view_fold rollup_incremental_value_quantiles
             state_diff_user_snapshots triangle_parts_copurchase""",
     }.items()
