@@ -2,7 +2,9 @@
 
 ``entry``   — flagship query smoke check at sf0.001.
 ``queries`` — one entry per implemented operator family from
-              SURVEY.md §2 plus the north-star extensions.
+              SURVEY.md §2 plus the north-star extensions, read
+              from ``ENTRIES``, the one registry (order and tags:
+              see the comment above it; ``tagged`` looks tags up).
 ``oracle_sql`` — DuckDB-runnable ANSI twins. Omitted only for the
               one op whose results depend on Spark-internal sketch
               functions (HLL/KLL in sketch_event_stats) — it gets a
@@ -32,303 +34,414 @@ def entry(spark: SparkSession) -> DataFrame:
     return Q.return_pct_by_nation(spark, "/root/testdata/sf0.001")
 
 
-# The rows-only engine-sketch entry (no oracle by design; its
-# portable twin carries the check) is pinned to the very back, so
-# driver sample slots are never spent on rows-only checks.
-_NO_ORACLE_BACK: tuple[str, ...] = ("sketch_event_stats",)
+# The registry: one row per queries() entry, (name, builder, tags).
+#
+# Row order is queries() order, which the outside driver reads. It
+# checks a ~50-entry sample from the front, so the front holds what most
+# needs re-proving: the flagship, then the round-13 cohort (the 14
+# entries new that round, then the 41 oracled entries whose last driver
+# sample was the oldest), then the rest in the order they were
+# registered. Rows-only entries (no oracle_sql() key) come last, so no
+# sample slot is spent on a rows-only check.
+#
+# Tags, space-separated (tagged() reads them):
+#   headline  bench.py times the entry at sf0.1.
+#   slope     bench.py also re-times it at sf0.01, so a superlinear
+#             regression shows as a warm(sf)/warm(sf0.01) slope jump
+#             even when the sf0.1 time looks healthy. Needs headline:
+#             the sf0.1 time is reused, not re-measured.
+#   events10  tools/scale_probe.py times it up to the x10 events tier.
+#   docsN     ... up to the xN documents tier (10, 30 or 100).
+#   miscN     ... up to the xN lineitem/embeddings/customer tier.
+#   build:R   its plan build runs Spark jobs at sf0.001, for reason R:
+#             auto      a count-sized dispatch (impl='auto' or
+#                       util.DRIVER_MAX_ROWS);
+#             pipeline  an action pipeline by contract (bounded
+#                       collect, vocabulary trainer, Bloom mask);
+#             stream    a streaming replay;
+#             writer    a writer round-trip;
+#             cut       a util.cut over an exchange (under AQE the cut
+#                       runs the exchange's map stages at the call).
+#             tests/test_plan_shapes.py checks it both ways.
+Builder = Callable[[SparkSession, str], DataFrame]
 
-
-# Round-13 driver-sample rotation (VERDICT r12 item 9): the next-
-# stalest cohort — all 26 oracled entries last driver-sampled in r7,
-# the 7 last sampled in r8, and the head of the r9 block to fill the
-# ~50-entry window behind the flagship + this round's new entries.
-_R13_NEW: tuple[str, ...] = (
-    "pdf_extract_stats",
-    "image_caption_pairs",
-    "media_exif_stats",
-    "scrub_exif_gps_docs",
-    "pagerank_host_graph",
-    "chat_validation_suite",
-    "chat_prompt_dedup",
-    "chat_prompt_near_dedup",
-    "chat_loss_mask_stats",
-    "chat_prompt_split",
-    "image_caption_keepers",
-    "chat_render_template",
-    "chat_pack_sequences",
-    "streaming_chat_validation_replay",
+ENTRIES: tuple[tuple[str, Builder, str], ...] = (
+    ("return_pct_by_nation", Q.return_pct_by_nation, "headline"),
+    # probe: per-page parse is a mapInPandas scan, flat-linear
+    ("pdf_extract_stats", X.pdf_extract_stats, "headline docs10"),
+    # probe: scan-side extraction + one img_url window
+    ("image_caption_pairs", X.image_caption_pairs, "headline docs10"),
+    # probe: header-only byte walk, flat
+    ("media_exif_stats", X.media_exif_stats, "headline docs10"),
+    # probe: header-only byte walk, flat
+    ("scrub_exif_gps_docs", X.scrub_exif_gps_docs, "headline docs10"),
+    # probe: domain-keyed graph build + bounded driver iteration
+    ("pagerank_host_graph", X.pagerank_host_graph, "headline docs10 build:auto"),
+    # probe: single-scan HOF suite
+    ("chat_validation_suite", X.chat_validation_suite, "headline docs10"),
+    # probe: batch-sized registry anti-join
+    ("chat_prompt_dedup", X.chat_prompt_dedup, "headline docs10"),
+    # probe: bounded 4-prompt groups, so pair volume is linear
+    ("chat_prompt_near_dedup", X.chat_prompt_near_dedup, "headline docs10 build:cut"),
+    # probe: pure projection, flat
+    ("chat_loss_mask_stats", X.chat_loss_mask_stats, "headline docs10"),
+    # probe: pure projection, flat
+    ("chat_prompt_split", X.chat_prompt_split, "headline docs10"),
+    # probe: one signature window
+    ("image_caption_keepers", X.image_caption_keepers, "headline docs10"),
+    # probe: one HOF fold
+    ("chat_render_template", X.chat_render_template, "headline docs10"),
+    # probe: per-shard pack window
+    ("chat_pack_sequences", X.chat_pack_sequences, "headline docs10"),
+    # probe: the streaming validation fold keeps 8 longs of state, so cost is
+    # linear in batch count
+    ("streaming_chat_validation_replay", X.streaming_chat_validation_replay,
+     "headline docs10 build:stream"),
+    # probe: the composed curation chain (dedup -> gate -> decontaminate
+    # -> split), every stage linear; the costliest bench query, stressed
+    # at 1.5M docs
+    ("curation_manifest_docs", X.curation_manifest_docs, "headline docs30 build:cut"),
+    ("decontaminate_vs_benchmark", X.decontaminate_vs_benchmark, ""),
+    ("dedup_component_groups", X.dedup_component_groups, "build:auto"),
+    # probe: the driver-facing full-oracle LSH clustering; banded md5
+    # clustering is a growth risk, so x30 too
+    ("dedup_component_groups_portable", X.dedup_component_groups_portable,
+     "headline slope docs30 build:auto"),
+    # probe: shingle equi-join; cipher copies keep cross-copy shingles
+    # disjoint, so pair volume stays linear
+    ("dedup_containment_pairs", X.dedup_containment_pairs,
+     "headline docs100 build:cut"),
+    ("dedup_incremental_fold", X.dedup_incremental_fold, ""),
+    ("drift_psi_event_values", X.drift_psi_event_values, "headline"),
+    # probe: per-shard rank, flat-linear by construction
+    ("epoch_shuffle_docs", X.epoch_shuffle_docs, "headline docs10"),
+    # probe: per-user interval windows
+    ("interval_coverage_per_user", Q.interval_coverage_per_user, "headline events10"),
+    # probe: scan-side literal-bank projection, zero exchanges before
+    # the output order
+    ("jl_project_embeddings", X.jl_project_embeddings, "headline misc10"),
+    ("latency_quantiles_by_type", Q.latency_quantiles_by_type, "headline"),
+    # probe: line-level dedup (md5-keyed line shuffle)
+    ("line_dedup_docs", X.line_dedup_docs, "docs10"),
+    ("max_event_gap_per_user", Q.max_event_gap_per_user, "headline"),
+    ("mixture_rebalance", X.mixture_rebalance, ""),
+    ("ngram_top_terms", X.ngram_top_terms, "headline"),
+    ("phrase_search_docs", X.phrase_search_docs, "headline"),
+    # probe: grew fastest at x10 (3.2x), so x30 too
+    ("quality_filter_flags", X.quality_filter_flags, "headline slope docs30"),
+    ("quality_topq_by_source", X.quality_topq_by_source, ""),
+    ("repetition_top_bigram", X.repetition_top_bigram, "headline docs10"),
+    # probe: the KMV merge path (two delta sketches folded); same no-full-sort
+    # claim per delta, merge input <= 2k per group
+    ("rollup_incremental_distinct_kmv", X.rollup_incremental_distinct_kmv,
+     "headline events10"),
+    # probe: CMS cells are vocabulary-independent state; the shuffle must stay
+    # ~2048 cells per task whatever the corpus
+    ("sketch_cms_token_freq", X.sketch_cms_token_freq, "headline docs10"),
+    # probe: salted two-phase KMV k-minimum; the claim is that no task ever
+    # sorts a full group's distinct set
+    ("sketch_kmv_distinct_portable", X.sketch_kmv_distinct_portable,
+     "headline events10"),
+    # probe: pure-projection hash split, flat-linear by construction
+    ("split_train_val_test_docs", X.split_train_val_test_docs, "headline docs10"),
+    ("stratified_sample_events", X.stratified_sample_events, ""),
+    ("topk_orders_per_customer_agg", Q.topk_orders_per_customer_agg, "headline"),
+    ("zorder_pruned_scan", X.zorder_pruned_scan, "headline build:writer"),
+    # probe: an sf1 slope flag (one keyed window + anti-join); the fresh row
+    # pins the floor-distortion triage
+    ("cdc_apply_user_state", Q.cdc_apply_user_state, "headline events10"),
+    ("ema_user_value", Q.ema_user_value, "headline"),
+    ("entity_resolution_customers", X.entity_resolution_customers,
+     "headline misc30 build:auto"),
+    # probe: retrieval stack (scan-side term filter + broadcast stats)
+    ("inverted_index_postings", X.inverted_index_postings, "headline docs10"),
+    ("k_anonymity_customers", Q.k_anonymity_customers, "headline"),
+    ("profile_orders_table", Q.profile_orders_table, "headline"),
+    ("state_diff_user_snapshots", Q.state_diff_user_snapshots, "headline build:cut"),
+    # probe: scan-side regex/canon + one (domain, term) count
+    ("anchor_text_stats", X.anchor_text_stats, "headline docs10"),
+    # probe: shares bloom_decontaminate_docs' machinery (two mask
+    # builds + probe)
+    ("bloom_incremental_union", X.bloom_incremental_union,
+     "headline docs10 build:pipeline"),
+    # probe: retrieval stack (scan-side term filter + broadcast stats)
+    ("bm25_doc_scores", X.bm25_doc_scores, "headline docs10"),
+    # probe: scan-side replace chain, flat scan speed
+    ("bpe_encode_docs", X.bpe_encode_docs, "headline docs10"),
+    # probe: narrow (id, domain) window shuffle, bodies never move
+    ("cap_docs_per_host", X.cap_docs_per_host_docs, "headline docs10"),
+    # probe: candidates must scale with the true dup count (cipher copies keep
+    # cross-copy shingles disjoint), not n^2
+    ("dedup_prefix_filter_pairs", X.dedup_prefix_filter_pairs,
+     "headline docs30 build:cut"),
+    # probe: two D-bounded aggregates + broadcast join + narrow keyed sum
+    ("dsir_importance_docs", X.dsir_importance_docs, "headline docs10"),
+    # probe: Misra-Gries partial summaries must stay O(k * partitions)
+    ("heavy_hitter_tokens", X.heavy_hitter_tokens, "headline docs30"),
+    ("q1_pricing_summary", Q.q1_pricing_summary, "headline"),
+    ("filter_disjunctive", Q.filter_disjunctive, "headline"),
+    ("count_by_concat_key", Q.count_by_concat_key, ""),
+    ("weekday_features", Q.weekday_features, ""),
+    ("etl_derive_dates", Q.etl_derive_dates, ""),
+    ("filtered_agg_returns", Q.filtered_agg_returns, ""),
+    ("dim_join_rollup", Q.dim_join_rollup, "headline"),
+    ("topk_customers", Q.topk_customers, ""),
+    ("window_rank_orders", Q.window_rank_orders, "headline"),
+    ("left_join_order_counts", Q.left_join_order_counts, ""),
+    ("anti_join_idle_customers", Q.anti_join_idle_customers, ""),
+    ("rollup_region_nation", Q.rollup_region_nation, ""),
+    ("distinct_agg_customers", Q.distinct_agg_customers, ""),
+    ("set_union_distinct", Q.set_union_distinct, ""),
+    ("view_layering", Q.view_layering, ""),
+    # probe: scan-side table extraction
+    ("html_table_rows", X.html_table_rows, "headline docs10"),
+    # probe: scan-side table extraction
+    ("html_table_records", X.html_table_records, "headline docs10"),
+    # probe: train + broadcast verdict join
+    ("tokenizer_roundtrip_docs", X.tokenizer_roundtrip_docs,
+     "headline docs10 build:pipeline"),
+    ("tokenizer_export_manifest", X.tokenizer_export_manifest, "headline build:writer"),
+    # probe: frame-sampled video banding
+    ("dedup_video_frames", X.dedup_video_frames, "headline docs10 build:cut"),
+    # probe: the highest x10 slope (3.9) had no x30 row; one more decade
+    # settles it
+    ("video_scene_cut_frames", X.video_scene_cut_frames, "headline docs30"),
+    ("media_header_stats", X.media_header_stats, "headline docs10"),
+    ("dedup_image_quality_keepers", X.dedup_image_quality_keepers, "headline"),
+    # probe: audio fingerprint banding
+    ("dedup_audio_fingerprint", X.dedup_audio_fingerprint, "headline docs10"),
+    ("avro_roundtrip_stats", X.avro_roundtrip_stats, "headline build:writer"),
+    ("main_content_multilingual_docs", X.main_content_multilingual_docs, "headline"),
+    # probe: groups are doc_id-derived, so id-shifted copies scale planted
+    # pairs exactly linearly
+    ("dedup_image_phash", X.dedup_image_phash, "headline docs30"),
+    ("dedup_image_exact_groups", X.dedup_image_exact_groups, "headline"),
+    ("unigram_lm_vocab", X.unigram_lm_vocab, "headline build:pipeline"),
+    # probe: cipher copies grow |vocab| ~10x; vocab-linear training +
+    # scan-linear encode
+    ("unigram_encode_docs", X.unigram_encode_docs, "headline docs30 build:pipeline"),
+    # headline: bench carries the auto-sized path users should run, not just
+    # the fixed-literal oracle twin; probe: 'auto' grows the blocking planes
+    # with the corpus, so the slope stays <= ~linear up to 500k vectors
+    ("dedup_embedding_cosine_auto", X.dedup_embedding_cosine_auto,
+     "headline misc100 build:auto"),
+    # headline: bench carries the auto-sized path users should run, not just
+    # the fixed-literal oracle twin
+    ("dedup_semantic_auto", X.dedup_semantic_auto, "headline build:auto"),
+    ("html_main_content_docs", X.html_main_content_docs, "headline"),
+    ("robots_wildcard_docs", X.robots_wildcard_docs, "headline"),
+    # probe: the staged-projection classifier is a pure scan, flat all the way
+    # to the 500k-doc x100 tier
+    ("lang_id_classifier_docs", X.lang_id_classifier_docs, "headline docs100"),
+    ("perplexity_buckets_docs", X.perplexity_buckets_docs, "headline"),
+    ("kneser_ney_logprob_docs", X.kneser_ney_logprob_docs, "headline"),
+    ("temperature_mixture_rates", X.temperature_mixture_rates_docs, "headline"),
+    ("repetition_signals_docs", X.repetition_signals_docs, "headline"),
+    # probe: scan-side regexp chain, flat-linear scan speed
+    ("url_canonicalize", X.url_canonicalize_docs, "headline docs10"),
+    # probe: one hash aggregate, flat-linear scan speed
+    ("host_quality_stats", X.host_quality_stats_docs, "headline docs10"),
+    # probe: water-filling planner, one count aggregate + tiny
+    # single-row-per-source windows; cost must be the count scan
+    ("mixture_plan_rates", X.mixture_plan_rates_docs, "headline docs10"),
+    ("streaming_kmv_replay", X.streaming_kmv_replay, "headline build:stream"),
+    # probe: one hash aggregate, flat-linear scan speed
+    ("dedup_url_canonical", X.dedup_url_canonical, "headline docs10"),
+    # probe: scan-side regexp chain, flat-linear scan speed
+    ("html_extract_text", X.html_extract_docs, "headline docs10"),
+    # probe: scan-side regexp chain, flat-linear scan speed
+    ("pii_scrub_docs", X.pii_scrub_docs, "headline docs10"),
+    ("jsonl_roundtrip_stats", X.jsonl_roundtrip_stats, "headline build:writer"),
+    # probe: the one Arrow pandas-UDF scan probed; linear scan speed plus a
+    # constant Arrow serialize cost
+    ("unicode_nfc_docs", X.unicode_nfc_docs, "headline docs10"),
+    ("ann_lsh_topk", X.ann_lsh_topk, ""),
+    ("ann_ivf_topk", X.ann_ivf_topk, "headline"),
+    ("multimodal_decode_features", X.multimodal_decode_features, ""),
+    ("multimodal_resize_stats", X.multimodal_resize_stats, ""),
+    ("multimodal_feature_knn", X.multimodal_feature_knn, ""),
+    ("multimodal_frame_sample", X.multimodal_frame_sample, ""),
+    # probe: an aggregate + broadcast anti-join; two linear scans, no doc
+    # shuffle
+    ("host_blocklist_filter", X.host_blocklist_filter, "headline docs10"),
+    ("warc_extract_stats", X.warc_extract_stats, "headline build:writer"),
+    # probe: hashed-BoW linear classifier is scan-side codegen, flat scan speed
+    ("quality_classifier_scores", X.quality_classifier_docs, "headline docs10"),
+    # probe: scan-side regex + one domain-pair aggregate
+    ("host_link_graph", X.host_link_graph_docs, "headline docs10"),
+    ("orc_roundtrip_stats", X.orc_roundtrip_stats, "headline build:writer"),
+    # probe: chained-replace repair is scan-side codegen, flat scan speed
+    ("mojibake_repair_docs", X.mojibake_repair_docs, "headline docs10"),
+    # probe: the full sessionization replay (slice write + 5 micro-batches +
+    # session-window state); state-store work scales with events per batch, so
+    # the replay is linear in the events table
+    ("streaming_session_replay", X.streaming_session_replay,
+     "headline events10 build:stream"),
+    # probe: JVM shingle+position codegen feeding a numpy bit-test Arrow kernel
+    # against the broadcast mask; linear scan + kernel cost, no join, a build
+    # bounded by the fixed-size benchmark slice; kernel batch cost is a growth
+    # risk, so x30
+    ("bloom_decontaminate_docs", X.bloom_decontaminate_docs,
+     "headline docs30 build:pipeline"),
+    # probe: vocab aggregate then a charset^2-bounded pair aggregate; vocab
+    # cardinality is a growth risk, so x30
+    ("bpe_merge_candidates", X.bpe_merge_candidates, "headline docs30"),
+    # probe: full BPE training over the materialized vocab; one corpus
+    # aggregate + vocab-sized iterations
+    ("bpe_merge_table", X.bpe_merge_table, "headline docs10 build:pipeline"),
+    # probe: scan-side Luhn codegen, flat scan speed
+    ("pii_card_scrub_docs", X.pii_card_scrub_docs, "headline docs10"),
+    # probe: scan-side codegen, flat scan speed
+    ("script_mix_docs", X.script_mix_docs, "headline docs10"),
+    # probe: bounded-state dedup; state is O(keys in horizon) and each batch's
+    # filter is linear in its events
+    ("streaming_dedup_replay", X.streaming_dedup_replay,
+     "headline events10 build:stream"),
+    # probe: scan-side HOF codegen, flat scan speed
+    ("sentence_stats_docs", X.sentence_stats_docs, "headline docs10"),
+    # probe: broadcast join + scan-side exists/startswith, no URL-side shuffle
+    ("robots_filter_docs", X.robots_filter_docs, "headline docs10"),
+    # probe: scan-side HOFs over literal rule arrays, flat scan speed
+    ("registered_domain_psl_docs", X.registered_domain_psl_docs, "headline docs10"),
+    # probe: one vocab aggregate + a constant-size tail, the vocab-collapse
+    # linearity of BPE counting
+    ("zipf_fit_tokens", X.zipf_fit_tokens, "headline docs10"),
+    # probe: foreachBatch drift monitor, a reference freeze + 2 micro-batch PSI
+    # aggregates, linear in events
+    ("streaming_drift_replay", X.streaming_drift_replay,
+     "headline events10 build:stream"),
+    # probe: scan-side HOF IN-set, flat scan speed
+    ("lexicon_filter_docs", X.lexicon_filter_docs, "headline docs10"),
+    ("winsorize_event_values", X.winsorize_event_values, "headline"),
+    ("ivm_join_view_fold", X.ivm_join_view_fold, "headline build:cut"),
+    ("lateral_top_orders_per_customer", Q.lateral_top_orders_per_customer, "headline"),
+    ("mad_outlier_orders", X.mad_outlier_orders, "headline"),
+    ("scd2_user_event_type", Q.scd2_user_event_type, "headline"),
+    ("triangle_parts_copurchase", X.triangle_parts_copurchase,
+     "headline misc100 build:cut"),
+    # probe: an sf1 slope flag (two chained aggregates + a broadcast seasonal
+    # profile); the fresh row pins the floor-distortion triage
+    ("seasonal_hourly_outliers", Q.seasonal_hourly_outliers, "headline events10"),
+    ("chi2_event_type_hour", Q.chi2_event_type_hour, "headline"),
+    # probe: bigram LM, two corpus aggregates + a model re-join (a growth risk,
+    # so x30)
+    ("bigram_logprob_scores", X.bigram_logprob_scores, "headline docs30"),
+    # probe: pair expansion + two hash aggregates; per-copy disjoint part ids
+    # keep pair counts exactly linear
+    ("basket_pair_affinity", X.basket_pair_affinity, "headline misc30 build:cut"),
+    # probe: CDC chunking is scan-side codegen; scan-speed linearity, zero
+    # exchanges before ordering
+    ("chunk_text_cdc", X.chunk_text_cdc, "headline docs30"),
+    ("ann_cosine_topk_vec", X.ann_cosine_topk_vec, "headline build:pipeline"),
+    ("chunk_text_windows", X.chunk_text_windows, ""),
+    # probe: two-phase prefix-sum packing
+    ("pack_training_sequences", X.pack_training_sequences, "docs10"),
+    ("dq_orders_suite", X.dq_orders_suite, "headline"),
+    ("dedup_semantic_clustered", X.dedup_semantic_clustered, "headline"),
+    ("unigram_logprob_scores", X.unigram_logprob_scores, ""),
+    ("spatial_near_customers", X.spatial_near_customers, "headline"),
+    ("fuzzy_name_pairs", X.fuzzy_name_pairs, "headline"),
+    ("rollup_incremental_user_stats", X.rollup_incremental_user_stats, ""),
+    ("rollup_incremental_user_variance", X.rollup_incremental_user_variance,
+     "headline"),
+    ("overlap_shipment_pairs", X.overlap_shipment_pairs, ""),
+    ("token_entropy_scores", X.token_entropy_scores, ""),
+    ("rolling_1h_user_value", X.rolling_1h_user_value, "events10"),
+    ("dq_documents_suite", X.dq_documents_suite, ""),
+    ("semi_join_fast_parts", X.semi_join_fast_parts, "headline"),
+    ("unpivot_part_metrics", X.unpivot_part_metrics, "headline"),
+    ("pii_redact_names", X.pii_redact_names, "headline"),
+    ("band_join_order_tiers", X.band_join_order_tiers, ""),
+    ("order_percentile_ranks", X.order_percentile_ranks, ""),
+    ("recursive_org_depth", X.recursive_org_depth, ""),
+    ("histogram_order_values", X.histogram_order_values, ""),
+    # slope and probe: the anchor self-join is a quadratic-risk stage; the
+    # per-copy cipher keeps cross-copy anchors disjoint, so pair output
+    # scales linearly in copies
+    ("dedup_exact_spans", X.dedup_exact_spans, "headline slope docs100"),
+    # slope: the Gram aggregate has a quadratic failure mode
+    ("pca_embedding_projection", X.pca_embedding_projection,
+     "headline slope misc30 build:auto"),
+    ("hard_negatives_contrastive", X.hard_negatives_contrastive, "headline"),
+    ("weighted_sample_docs", X.weighted_sample_docs, "headline"),
+    ("ann_int8_topk", X.ann_int8_topk, "headline"),
+    ("pagerank_trade_nations", X.pagerank_trade_nations, "headline build:auto"),
+    # probe: double-aggregate cohorts
+    ("cohort_retention", Q.cohort_retention, "headline events10"),
+    ("rollup_incremental_value_quantiles", X.rollup_incremental_value_quantiles,
+     "headline build:cut"),
+    ("dedup_corpus_quality_keepers", X.dedup_corpus_quality_keepers, "build:auto"),
+    # probe: token-budget sharding
+    ("shard_docs_by_token_budget", X.shard_docs_by_token_budget, "headline docs10"),
+    # probe: lead windows
+    ("event_transition_matrix", Q.event_transition_matrix, "headline events10"),
+    ("ann_matryoshka_prefix_recall", X.ann_matryoshka_prefix_recall, "headline"),
+    ("weighted_median_price_by_flag", Q.weighted_median_price_by_flag, "headline"),
+    ("q5_local_supplier_volume", Q.q5_local_supplier_volume, "headline"),
+    ("json_extract_events", Q.json_extract_events, "headline events10"),
+    ("hourly_event_stats", Q.hourly_event_stats, "headline slope events10"),
+    ("user_sessions", Q.user_sessions, "events10"),
+    ("asof_click_attribution", Q.asof_click_attribution, "headline events10"),
+    ("range_join_event_sessions", Q.range_join_event_sessions, "headline events10"),
+    ("pivot_event_matrix", Q.pivot_event_matrix, ""),
+    ("latest_event_per_user", Q.latest_event_per_user, "headline slope events10"),
+    ("user_value_intervals", Q.user_value_intervals, ""),
+    ("gap_fill_hourly_values", Q.gap_fill_hourly_values, ""),
+    ("full_outer_nation_activity", Q.full_outer_nation_activity, ""),
+    ("above_customer_avg_orders", Q.above_customer_avg_orders, ""),
+    ("corr_qty_price_by_flag", Q.corr_qty_price_by_flag, ""),
+    ("funnel_user_steps", Q.funnel_user_steps, "headline events10"),
+    ("readability_scores", X.readability_scores, ""),
+    ("order_value_deciles", Q.order_value_deciles, ""),
+    # probe: the planted hot-key pathology that skew_salted_join exists to fix;
+    # the fresh rows quantify both
+    ("skew_plain_join", Q.skew_plain_join, "headline events10"),
+    ("skew_salted_join", Q.skew_salted_join, "headline events10"),
+    ("cube_order_stats", Q.cube_order_stats, ""),
+    ("set_intersect_customers", Q.set_intersect_customers, ""),
+    ("set_except_customers", Q.set_except_customers, ""),
+    ("moving_avg_user_value", Q.moving_avg_user_value, ""),
+    ("median_value_by_type", Q.median_value_by_type, ""),
+    ("label_centroids", X.label_centroids, ""),
+    # probe: retrieval stack (scan-side term filter + broadcast stats)
+    ("tfidf_top_terms", X.tfidf_top_terms, "docs10"),
+    ("dedup_exact_groups", X.dedup_exact_groups, "headline docs10"),
+    ("dedup_jaccard_pairs", X.dedup_jaccard_pairs, ""),
+    ("dedup_ngram_jaccard", X.dedup_ngram_jaccard, ""),
+    ("dedup_embedding_cosine", X.dedup_embedding_cosine, ""),
+    ("dedup_embedding_cosine_blocked", X.dedup_embedding_cosine_blocked, "headline"),
+    ("dedup_minhash_portable", X.dedup_minhash_portable,
+     "headline slope docs30 build:cut"),
+    ("dedup_simhash_portable", X.dedup_simhash_portable, "build:cut"),
+    ("grouping_sets_order_stats", Q.grouping_sets_order_stats, ""),
+    # probe: brute-force cosine top-k is a linear scan; its sf1 19x read is
+    # floor distortion (0.3 s base)
+    ("ann_cosine_topk", X.ann_cosine_topk, "headline misc10"),
+    ("text_stats_by_lang", X.text_stats_by_lang, "headline docs10"),
+    ("token_counts", X.token_counts, ""),
+    ("doc_fingerprints", X.doc_fingerprints, ""),
+    # probe: grew fastest at x10 (4.3x), so x30 too
+    ("doc_winnow_fingerprints", X.doc_winnow_fingerprints, "headline slope docs30"),
+    ("lang_id_heuristic", X.lang_id_heuristic, ""),
+    ("multimodal_byte_stats", X.multimodal_byte_stats, ""),
+    ("sketch_event_stats", X.sketch_event_stats, ""),
 )
-_R13_ROTATION: tuple[str, ...] = (
-    # last sampled r7
-    "curation_manifest_docs", "decontaminate_vs_benchmark",
-    "dedup_component_groups", "dedup_component_groups_portable",
-    "dedup_containment_pairs", "dedup_incremental_fold",
-    "drift_psi_event_values", "epoch_shuffle_docs",
-    "interval_coverage_per_user", "jl_project_embeddings",
-    "latency_quantiles_by_type", "line_dedup_docs",
-    "max_event_gap_per_user", "mixture_rebalance", "ngram_top_terms",
-    "phrase_search_docs", "quality_filter_flags",
-    "quality_topq_by_source", "repetition_top_bigram",
-    "rollup_incremental_distinct_kmv", "sketch_cms_token_freq",
-    "sketch_kmv_distinct_portable", "split_train_val_test_docs",
-    "stratified_sample_events", "topk_orders_per_customer_agg",
-    "zorder_pruned_scan",
-    # last sampled r8
-    "cdc_apply_user_state", "ema_user_value",
-    "entity_resolution_customers", "inverted_index_postings",
-    "k_anonymity_customers", "profile_orders_table",
-    "state_diff_user_snapshots",
-    # head of the r9 block (fills the window)
-    "anchor_text_stats", "bloom_incremental_union", "bm25_doc_scores",
-    "bpe_encode_docs", "cap_docs_per_host", "dedup_prefix_filter_pairs",
-    "dsir_importance_docs", "heavy_hitter_tokens",
-)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    base = _queries_base()
-    front = ["return_pct_by_nation", *_R13_NEW, *_R13_ROTATION]
-    out = {k: base[k] for k in front if k in base}
-    out.update(
-        (k, v) for k, v in base.items()
-        if k not in out and k not in _NO_ORACLE_BACK
-    )
-    out.update((k, base[k]) for k in _NO_ORACLE_BACK)
-    return out
+def queries() -> dict[str, Builder]:
+    return {name: build for name, build, _ in ENTRIES}
 
 
-def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def tagged(prefix: str) -> dict[str, str]:
+    """name -> its tag that starts with ``prefix``, in row order:
+    ``tagged("headline")`` is bench's set, ``tagged("docs")`` maps each
+    documents-probe entry to its top tier, ``tagged("build:")`` each
+    build-job entry to its reason."""
     return {
-        # Flagship first; then (round 10, verdict item 10) positions
-        # 2-16 rotate the core P/F/A/J/O §2 inventory — sampled only
-        # in r1-r4 — back into the driver's ~50-entry sample window so
-        # CORRECTNESS_r10 re-proves the §2 core under the current
-        # codebase; then this round's new entries; then the r8/r9
-        # ordering. The driver-facing
-        # order is produced by queries() above from _R13_NEW/
-        # _R13_ROTATION; this literal order is the fallback for
-        # everything not rotated.
-        "return_pct_by_nation": Q.return_pct_by_nation,
-        "q1_pricing_summary": Q.q1_pricing_summary,
-        "filter_disjunctive": Q.filter_disjunctive,
-        "count_by_concat_key": Q.count_by_concat_key,
-        "weekday_features": Q.weekday_features,
-        "etl_derive_dates": Q.etl_derive_dates,
-        "filtered_agg_returns": Q.filtered_agg_returns,
-        "dim_join_rollup": Q.dim_join_rollup,
-        "topk_customers": Q.topk_customers,
-        "window_rank_orders": Q.window_rank_orders,
-        "left_join_order_counts": Q.left_join_order_counts,
-        "anti_join_idle_customers": Q.anti_join_idle_customers,
-        "rollup_region_nation": Q.rollup_region_nation,
-        "distinct_agg_customers": Q.distinct_agg_customers,
-        "set_union_distinct": Q.set_union_distinct,
-        "view_layering": Q.view_layering,
-        # round-13 additions (inside the sample window via _R13_NEW)
-        "pdf_extract_stats": X.pdf_extract_stats,
-        "media_exif_stats": X.media_exif_stats,
-        "scrub_exif_gps_docs": X.scrub_exif_gps_docs,
-        "image_caption_pairs": X.image_caption_pairs,
-        "pagerank_host_graph": X.pagerank_host_graph,
-        "chat_validation_suite": X.chat_validation_suite,
-        "chat_prompt_dedup": X.chat_prompt_dedup,
-        "chat_prompt_near_dedup": X.chat_prompt_near_dedup,
-        "chat_loss_mask_stats": X.chat_loss_mask_stats,
-        "chat_prompt_split": X.chat_prompt_split,
-        "image_caption_keepers": X.image_caption_keepers,
-        "chat_render_template": X.chat_render_template,
-        "chat_pack_sequences": X.chat_pack_sequences,
-        "streaming_chat_validation_replay": X.streaming_chat_validation_replay,
-        # round-12 additions
-        "html_table_rows": X.html_table_rows,
-        "html_table_records": X.html_table_records,
-        "tokenizer_roundtrip_docs": X.tokenizer_roundtrip_docs,
-        "tokenizer_export_manifest": X.tokenizer_export_manifest,
-        "dedup_video_frames": X.dedup_video_frames,
-        "video_scene_cut_frames": X.video_scene_cut_frames,
-        "media_header_stats": X.media_header_stats,
-        "dedup_image_quality_keepers": X.dedup_image_quality_keepers,
-        "dedup_audio_fingerprint": X.dedup_audio_fingerprint,
-        "avro_roundtrip_stats": X.avro_roundtrip_stats,
-        # round-11 additions
-        "main_content_multilingual_docs": X.main_content_multilingual_docs,
-        "dedup_image_phash": X.dedup_image_phash,
-        "dedup_image_exact_groups": X.dedup_image_exact_groups,
-        "unigram_lm_vocab": X.unigram_lm_vocab,
-        "unigram_encode_docs": X.unigram_encode_docs,
-        # round-10 additions (inside the sample window)
-        "dedup_embedding_cosine_auto": X.dedup_embedding_cosine_auto,
-        "dedup_semantic_auto": X.dedup_semantic_auto,
-        "html_main_content_docs": X.html_main_content_docs,
-        "robots_wildcard_docs": X.robots_wildcard_docs,
-        "lang_id_classifier_docs": X.lang_id_classifier_docs,
-        "perplexity_buckets_docs": X.perplexity_buckets_docs,
-        "kneser_ney_logprob_docs": X.kneser_ney_logprob_docs,
-        "temperature_mixture_rates": X.temperature_mixture_rates_docs,
-        "repetition_signals_docs": X.repetition_signals_docs,
-        "url_canonicalize": X.url_canonicalize_docs,
-        "host_quality_stats": X.host_quality_stats_docs,
-        "mixture_plan_rates": X.mixture_plan_rates_docs,
-        "streaming_kmv_replay": X.streaming_kmv_replay,
-        "dedup_url_canonical": X.dedup_url_canonical,
-        "html_extract_text": X.html_extract_docs,
-        "pii_scrub_docs": X.pii_scrub_docs,
-        "jsonl_roundtrip_stats": X.jsonl_roundtrip_stats,
-        "unicode_nfc_docs": X.unicode_nfc_docs,
-        "ann_lsh_topk": X.ann_lsh_topk,
-        "ann_ivf_topk": X.ann_ivf_topk,
-        "multimodal_decode_features": X.multimodal_decode_features,
-        "multimodal_resize_stats": X.multimodal_resize_stats,
-        "multimodal_feature_knn": X.multimodal_feature_knn,
-        "multimodal_frame_sample": X.multimodal_frame_sample,
-        # round-8 additions (inside the sample window)
-        "host_blocklist_filter": X.host_blocklist_filter,
-        "warc_extract_stats": X.warc_extract_stats,
-        "quality_classifier_scores": X.quality_classifier_docs,
-        "host_link_graph": X.host_link_graph_docs,
-        "orc_roundtrip_stats": X.orc_roundtrip_stats,
-        "mojibake_repair_docs": X.mojibake_repair_docs,
-        "streaming_session_replay": X.streaming_session_replay,
-        "bloom_decontaminate_docs": X.bloom_decontaminate_docs,
-        "bpe_merge_candidates": X.bpe_merge_candidates,
-        "bpe_merge_table": X.bpe_merge_table,
-        "bpe_encode_docs": X.bpe_encode_docs,
-        "dsir_importance_docs": X.dsir_importance_docs,
-        "pii_card_scrub_docs": X.pii_card_scrub_docs,
-        "script_mix_docs": X.script_mix_docs,
-        "streaming_dedup_replay": X.streaming_dedup_replay,
-        "anchor_text_stats": X.anchor_text_stats,
-        "sentence_stats_docs": X.sentence_stats_docs,
-        "robots_filter_docs": X.robots_filter_docs,
-        "registered_domain_psl_docs": X.registered_domain_psl_docs,
-        "zipf_fit_tokens": X.zipf_fit_tokens,
-        "streaming_drift_replay": X.streaming_drift_replay,
-        "bloom_incremental_union": X.bloom_incremental_union,
-        "cap_docs_per_host": X.cap_docs_per_host_docs,
-        "lexicon_filter_docs": X.lexicon_filter_docs,
-        "winsorize_event_values": X.winsorize_event_values,
-        "ivm_join_view_fold": X.ivm_join_view_fold,
-        "lateral_top_orders_per_customer": Q.lateral_top_orders_per_customer,
-        "mad_outlier_orders": X.mad_outlier_orders,
-        "dedup_prefix_filter_pairs": X.dedup_prefix_filter_pairs,
-        "scd2_user_event_type": Q.scd2_user_event_type,
-        "heavy_hitter_tokens": X.heavy_hitter_tokens,
-        "triangle_parts_copurchase": X.triangle_parts_copurchase,
-        "bm25_doc_scores": X.bm25_doc_scores,
-        "seasonal_hourly_outliers": Q.seasonal_hourly_outliers,
-        "cdc_apply_user_state": Q.cdc_apply_user_state,
-        "k_anonymity_customers": Q.k_anonymity_customers,
-        "inverted_index_postings": X.inverted_index_postings,
-        "ema_user_value": Q.ema_user_value,
-        "entity_resolution_customers": X.entity_resolution_customers,
-        "state_diff_user_snapshots": Q.state_diff_user_snapshots,
-        "profile_orders_table": Q.profile_orders_table,
-        "phrase_search_docs": X.phrase_search_docs,
-        "chi2_event_type_hour": Q.chi2_event_type_hour,
-        "max_event_gap_per_user": Q.max_event_gap_per_user,
-        "topk_orders_per_customer_agg": Q.topk_orders_per_customer_agg,
-        "latency_quantiles_by_type": Q.latency_quantiles_by_type,
-        "dedup_component_groups_portable": X.dedup_component_groups_portable,
-        "sketch_kmv_distinct_portable": X.sketch_kmv_distinct_portable,
-        "epoch_shuffle_docs": X.epoch_shuffle_docs,
-        "split_train_val_test_docs": X.split_train_val_test_docs,
-        "bigram_logprob_scores": X.bigram_logprob_scores,
-        "curation_manifest_docs": X.curation_manifest_docs,
-        "sketch_cms_token_freq": X.sketch_cms_token_freq,
-        "jl_project_embeddings": X.jl_project_embeddings,
-        "rollup_incremental_distinct_kmv": X.rollup_incremental_distinct_kmv,
-        "basket_pair_affinity": X.basket_pair_affinity,
-        # --- end of the driver's ~50-entry sample window (r8) ---
-        "chunk_text_cdc": X.chunk_text_cdc,
-        "dedup_containment_pairs": X.dedup_containment_pairs,
-        "repetition_top_bigram": X.repetition_top_bigram,
-        "drift_psi_event_values": X.drift_psi_event_values,
-        "interval_coverage_per_user": Q.interval_coverage_per_user,
-        "zorder_pruned_scan": X.zorder_pruned_scan,
-        "dedup_incremental_fold": X.dedup_incremental_fold,
-        "quality_topq_by_source": X.quality_topq_by_source,
-        "ann_cosine_topk_vec": X.ann_cosine_topk_vec,
-        "quality_filter_flags": X.quality_filter_flags,
-        "ngram_top_terms": X.ngram_top_terms,
-        "stratified_sample_events": X.stratified_sample_events,
-        "dedup_component_groups": X.dedup_component_groups,
-        "decontaminate_vs_benchmark": X.decontaminate_vs_benchmark,
-        "mixture_rebalance": X.mixture_rebalance,
-        "line_dedup_docs": X.line_dedup_docs,
-        "chunk_text_windows": X.chunk_text_windows,
-        "pack_training_sequences": X.pack_training_sequences,
-        "dq_orders_suite": X.dq_orders_suite,
-        "dedup_semantic_clustered": X.dedup_semantic_clustered,
-        "unigram_logprob_scores": X.unigram_logprob_scores,
-        "spatial_near_customers": X.spatial_near_customers,
-        "fuzzy_name_pairs": X.fuzzy_name_pairs,
-        "rollup_incremental_user_stats": X.rollup_incremental_user_stats,
-        "rollup_incremental_user_variance": X.rollup_incremental_user_variance,
-        "overlap_shipment_pairs": X.overlap_shipment_pairs,
-        "token_entropy_scores": X.token_entropy_scores,
-        "rolling_1h_user_value": X.rolling_1h_user_value,
-        "dq_documents_suite": X.dq_documents_suite,
-        "semi_join_fast_parts": X.semi_join_fast_parts,
-        "unpivot_part_metrics": X.unpivot_part_metrics,
-        "pii_redact_names": X.pii_redact_names,
-        "band_join_order_tiers": X.band_join_order_tiers,
-        "order_percentile_ranks": X.order_percentile_ranks,
-        "recursive_org_depth": X.recursive_org_depth,
-        "histogram_order_values": X.histogram_order_values,
-        "dedup_exact_spans": X.dedup_exact_spans,
-        "pca_embedding_projection": X.pca_embedding_projection,
-        "hard_negatives_contrastive": X.hard_negatives_contrastive,
-        "weighted_sample_docs": X.weighted_sample_docs,
-        "ann_int8_topk": X.ann_int8_topk,
-        "pagerank_trade_nations": X.pagerank_trade_nations,
-        "cohort_retention": Q.cohort_retention,
-        "rollup_incremental_value_quantiles": X.rollup_incremental_value_quantiles,
-        "dedup_corpus_quality_keepers": X.dedup_corpus_quality_keepers,
-        "shard_docs_by_token_budget": X.shard_docs_by_token_budget,
-        "event_transition_matrix": Q.event_transition_matrix,
-        "ann_matryoshka_prefix_recall": X.ann_matryoshka_prefix_recall,
-        "weighted_median_price_by_flag": Q.weighted_median_price_by_flag,
-        "q5_local_supplier_volume": Q.q5_local_supplier_volume,
-        "json_extract_events": Q.json_extract_events,
-        "hourly_event_stats": Q.hourly_event_stats,
-        "user_sessions": Q.user_sessions,
-        "asof_click_attribution": Q.asof_click_attribution,
-        "range_join_event_sessions": Q.range_join_event_sessions,
-        "pivot_event_matrix": Q.pivot_event_matrix,
-        "latest_event_per_user": Q.latest_event_per_user,
-        "user_value_intervals": Q.user_value_intervals,
-        "gap_fill_hourly_values": Q.gap_fill_hourly_values,
-        "full_outer_nation_activity": Q.full_outer_nation_activity,
-        "above_customer_avg_orders": Q.above_customer_avg_orders,
-        "corr_qty_price_by_flag": Q.corr_qty_price_by_flag,
-        "funnel_user_steps": Q.funnel_user_steps,
-        "readability_scores": X.readability_scores,
-        "order_value_deciles": Q.order_value_deciles,
-        "skew_plain_join": Q.skew_plain_join,
-        "skew_salted_join": Q.skew_salted_join,
-        "cube_order_stats": Q.cube_order_stats,
-        "set_intersect_customers": Q.set_intersect_customers,
-        "set_except_customers": Q.set_except_customers,
-        "moving_avg_user_value": Q.moving_avg_user_value,
-        "median_value_by_type": Q.median_value_by_type,
-        "label_centroids": X.label_centroids,
-        "tfidf_top_terms": X.tfidf_top_terms,
-        "dedup_exact_groups": X.dedup_exact_groups,
-        "dedup_jaccard_pairs": X.dedup_jaccard_pairs,
-        "dedup_ngram_jaccard": X.dedup_ngram_jaccard,
-        "dedup_embedding_cosine": X.dedup_embedding_cosine,
-        "dedup_embedding_cosine_blocked": X.dedup_embedding_cosine_blocked,
-        "dedup_minhash_portable": X.dedup_minhash_portable,
-        "dedup_simhash_portable": X.dedup_simhash_portable,
-        "grouping_sets_order_stats": Q.grouping_sets_order_stats,
-        "ann_cosine_topk": X.ann_cosine_topk,
-        "text_stats_by_lang": X.text_stats_by_lang,
-        "token_counts": X.token_counts,
-        "sketch_event_stats": X.sketch_event_stats,
-        "doc_fingerprints": X.doc_fingerprints,
-        "doc_winnow_fingerprints": X.doc_winnow_fingerprints,
-        "lang_id_heuristic": X.lang_id_heuristic,
-        "multimodal_byte_stats": X.multimodal_byte_stats,
+        name: tag
+        for name, _, tags in ENTRIES
+        for tag in tags.split()
+        if tag.startswith(prefix)
     }
 
 

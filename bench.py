@@ -28,175 +28,6 @@ from aws_de_final_project_spark.session import (  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "return_pct_by_nation",
-    # round-13 additions
-    "pdf_extract_stats",
-    "media_exif_stats",
-    "scrub_exif_gps_docs",
-    "image_caption_pairs",
-    "pagerank_host_graph",
-    "chat_validation_suite",
-    "chat_prompt_dedup",
-    "chat_prompt_near_dedup",
-    "chat_loss_mask_stats",
-    "chat_prompt_split",
-    "image_caption_keepers",
-    "chat_render_template",
-    "chat_pack_sequences",
-    "streaming_chat_validation_replay",
-    # round-12 additions
-    "html_table_rows",
-    "html_table_records",
-    "avro_roundtrip_stats",
-    "tokenizer_roundtrip_docs",
-    "tokenizer_export_manifest",
-    "dedup_video_frames",
-    "video_scene_cut_frames",
-    "media_header_stats",
-    "dedup_image_quality_keepers",
-    "dedup_audio_fingerprint",
-    # round-11 additions
-    "main_content_multilingual_docs",
-    "dedup_image_phash",
-    "dedup_image_exact_groups",
-    "unigram_lm_vocab",
-    "unigram_encode_docs",
-    # round-10 additions: the auto-sized dedup paths users should run
-    # (r9 verdict: BENCH must carry the recommended path, not just the
-    # fixed-literal oracle twins)
-    "dedup_embedding_cosine_auto",
-    "dedup_semantic_auto",
-    "html_main_content_docs",
-    "robots_wildcard_docs",
-    "lang_id_classifier_docs",
-    "perplexity_buckets_docs",
-    "kneser_ney_logprob_docs",
-    "temperature_mixture_rates",
-    "repetition_signals_docs",
-    # round-9 additions
-    "bpe_merge_table",
-    "registered_domain_psl_docs",
-    "bpe_encode_docs",
-    "dsir_importance_docs",
-    "pii_card_scrub_docs",
-    "script_mix_docs",
-    "streaming_dedup_replay",
-    # round-8 additions
-    "host_blocklist_filter",
-    "warc_extract_stats",
-    "quality_classifier_scores",
-    "host_link_graph",
-    "orc_roundtrip_stats",
-    "mojibake_repair_docs",
-    "streaming_session_replay",
-    "bloom_decontaminate_docs",
-    "bpe_merge_candidates",
-    "anchor_text_stats",
-    "sentence_stats_docs",
-    "robots_filter_docs",
-    "zipf_fit_tokens",
-    "streaming_drift_replay",
-    "bloom_incremental_union",
-    "cap_docs_per_host",
-    "lexicon_filter_docs",
-    # round-7 additions
-    "url_canonicalize",
-    "host_quality_stats",
-    "dedup_url_canonical",
-    "html_extract_text",
-    "mixture_plan_rates",
-    "streaming_kmv_replay",
-    "pii_scrub_docs",
-    "jsonl_roundtrip_stats",
-    "unicode_nfc_docs",
-    # round-6 additions
-    "dedup_component_groups_portable",
-    "sketch_kmv_distinct_portable",
-    "epoch_shuffle_docs",
-    "split_train_val_test_docs",
-    "bigram_logprob_scores",
-    "curation_manifest_docs",
-    "sketch_cms_token_freq",
-    "jl_project_embeddings",
-    "rollup_incremental_distinct_kmv",
-    "basket_pair_affinity",
-    "chunk_text_cdc",
-    "dedup_containment_pairs",
-    "filter_disjunctive",
-    "dim_join_rollup",
-    "window_rank_orders",
-    "hourly_event_stats",
-    "latest_event_per_user",
-    "json_extract_events",
-    "dedup_exact_groups",
-    "dedup_minhash_portable",
-    "dedup_embedding_cosine_blocked",
-    "doc_winnow_fingerprints",
-    "ann_cosine_topk",
-    "ann_cosine_topk_vec",
-    "ann_ivf_topk",
-    "text_stats_by_lang",
-    "quality_filter_flags",
-    "ngram_top_terms",
-    "skew_plain_join",
-    "skew_salted_join",
-    "dedup_semantic_clustered",
-    "funnel_user_steps",
-    "dq_orders_suite",
-    "spatial_near_customers",
-    "fuzzy_name_pairs",
-    # round 4 additions
-    "asof_click_attribution",
-    "range_join_event_sessions",
-    "semi_join_fast_parts",
-    "unpivot_part_metrics",
-    "repetition_top_bigram",
-    "pii_redact_names",
-    "rollup_incremental_user_variance",
-    # round 5 additions
-    "zorder_pruned_scan",
-    "dedup_exact_spans",
-    "pca_embedding_projection",
-    "ann_int8_topk",
-    "weighted_sample_docs",
-    "hard_negatives_contrastive",
-    "pagerank_trade_nations",
-    "cohort_retention",
-    "rollup_incremental_value_quantiles",
-    "interval_coverage_per_user",
-    "event_transition_matrix",
-    "drift_psi_event_values",
-    "shard_docs_by_token_budget",
-    "q5_local_supplier_volume",
-    "weighted_median_price_by_flag",
-    "winsorize_event_values",
-    "ann_matryoshka_prefix_recall",
-    "ivm_join_view_fold",
-    "lateral_top_orders_per_customer",
-    "mad_outlier_orders",
-    # round 5 session additions
-    "dedup_prefix_filter_pairs",
-    "scd2_user_event_type",
-    "heavy_hitter_tokens",
-    "triangle_parts_copurchase",
-    "bm25_doc_scores",
-    "seasonal_hourly_outliers",
-    "cdc_apply_user_state",
-    "k_anonymity_customers",
-    "inverted_index_postings",
-    "ema_user_value",
-    "entity_resolution_customers",
-    "state_diff_user_snapshots",
-    "profile_orders_table",
-    "phrase_search_docs",
-    "chi2_event_type_hour",
-    "max_event_gap_per_user",
-    "topk_orders_per_customer_agg",
-    "latency_quantiles_by_type",
-]
-
 
 def drive(df) -> None:
     """Execute a query with a FULL-WIDTH action: a checksum over every
@@ -368,31 +199,14 @@ def bench_streaming_sessionize(spark, sf_dir: str) -> dict:
     }
 
 
-# per-round slope guard (VERDICT r4 #7): queries re-timed at sf0.01 so
-# BENCH carries warm(sf)/warm(sf0.01) slopes, overhead-adjusted — a
-# superlinear regression shows up as a slope jump even when the
-# absolute sf0.1 time still looks healthy. All entries are in HEADLINE
-# so the big-tier number is reused, not re-measured.
-SCALING_QUERIES = [
-    "hourly_event_stats",
-    "latest_event_per_user",
-    "doc_winnow_fingerprints",
-    "quality_filter_flags",
-    "dedup_minhash_portable",
-    "dedup_component_groups_portable",
-    # round-5 additions with a quadratic failure mode to watch: the
-    # anchor self-join (span dedup) and the Gram aggregate (PCA)
-    "dedup_exact_spans",
-    "pca_embedding_projection",
-]
-
-
 def bench_scaling(spark, sf_dir, queries, warm, overhead) -> dict:
+    """warm(sf)/warm(sf0.01) slopes, overhead-adjusted, for the entries
+    tagged ``slope`` (see ``__spark_entry__.ENTRIES``)."""
     small_dir = "/root/testdata/sf0.01"
     if os.path.realpath(sf_dir) == os.path.realpath(small_dir):
         return {}
     out = {}
-    for name in SCALING_QUERIES:
+    for name in entrymod.tagged("slope"):
         fn = queries[name]
         drive(fn(spark, small_dir))  # warmup
         reps = []
@@ -501,8 +315,8 @@ def main() -> None:
     queries = entrymod.queries()
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
-    warm_spread: dict[str, float] = {}
-    for name in HEADLINE:
+    warm_reps: dict[str, list[float]] = {}
+    for name in entrymod.tagged("headline"):
         fn = queries[name]
         # JMH-style forced GC between trials: without it, garbage from
         # the previous query's run inflates later queries' times by up
@@ -519,15 +333,16 @@ def main() -> None:
         # MEDIAN of three reps (VERDICT r7): min-of-2 let one clean
         # rep hide systematic contention while one dirty rep dragged
         # the other metric; the median tolerates a single outlier in
-        # either direction and the recorded spread (max-min) makes
-        # residual interference visible in the artifact.
+        # either direction, and the reps recorded in run order make
+        # residual interference (or reps still falling) visible in
+        # the artifact.
         reps = []
         for _ in range(3):
             t0 = time.perf_counter()
             drive(fn(spark, sf_dir))
-            reps.append(time.perf_counter() - t0)
-        warm[name] = round(sorted(reps)[1], 3)
-        warm_spread[name] = round(max(reps) - min(reps), 3)
+            reps.append(round(time.perf_counter() - t0, 3))
+        warm[name] = sorted(reps)[1]
+        warm_reps[name] = reps
     total_warm = round(sum(warm.values()), 3)
     total_cold = round(sum(cold.values()), 3)
     overhead = measure_action_overhead(spark)
@@ -554,12 +369,13 @@ def main() -> None:
     # so it fits the driver's output-capture window — BENCH_r04/r05
     # came back "parsed": null because this line had grown past it
     # (VERDICT r5 item 2).
+    spread = {n: round(max(r) - min(r), 3) for n, r in warm_reps.items()}
     quality = run_quality(
-        load_start, os.getloadavg(), warm, warm_spread, default_parallelism()
+        load_start, os.getloadavg(), warm, spread, default_parallelism()
     )
     detail = {
         "queries_warm": warm,
-        "queries_warm_spread": warm_spread,
+        "queries_warm_reps": warm_reps,
         "run_quality": quality,
         "total_cold": total_cold,
         "queries_cold": cold,

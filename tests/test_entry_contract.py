@@ -12,6 +12,11 @@ Complex types are fine as intermediates — only the FINAL schema of a
 
 from __future__ import annotations
 
+import ast
+import sys
+from collections import Counter
+from pathlib import Path
+
 import pytest
 from pyspark.sql.types import ArrayType, MapType, StructType
 
@@ -119,3 +124,125 @@ def test_documented_bench_claim_matches_committed_artifact():
         f"BENCH_DETAIL.json records ({n}, {total}) — re-run bench.py "
         "and update BOTH together"
     )
+
+
+# --- the registry: __spark_entry__.ENTRIES --------------------------
+
+ROOT = Path(__file__).resolve().parent.parent
+
+TAGS = {
+    "headline", "slope", "events10",
+    "docs10", "docs30", "docs100", "misc10", "misc30", "misc100",
+    "build:auto", "build:pipeline", "build:stream", "build:writer",
+    "build:cut",
+}
+
+
+def _name_literals(path: Path, skip_fn: str | None = None):
+    """(lineno, name) for every registered name written in a string
+    literal of ``path`` (whitespace-separated words count, so a name
+    list packed into one string counts too), docstrings and the body of
+    function ``skip_fn`` excepted."""
+    tree = ast.parse(path.read_text())
+    docs, skip = set(), set()
+    for node in ast.walk(tree):
+        body = getattr(node, "body", None)
+        if (
+            isinstance(body, list) and body
+            and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+        ):
+            docs.add(id(body[0].value))
+        if isinstance(node, ast.FunctionDef) and node.name == skip_fn:
+            skip.update(range(node.lineno, node.end_lineno + 1))
+    return [
+        (node.lineno, word)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and id(node) not in docs and node.lineno not in skip
+        for word in node.value.split()
+        if word in _QUERIES
+    ]
+
+
+def test_entry_names_are_written_once_in_the_registry():
+    """One-way guard: outside oracle_sql(), each entry name is written
+    exactly once in the entry module, bench.py and tools/ — in its
+    ENTRIES row. A list of names elsewhere is a second registry that
+    the next added or deleted entry leaves stale."""
+    entry_py = ROOT / "__spark_entry__.py"
+    rows = next(
+        range(node.lineno, node.end_lineno + 1)
+        for node in ast.parse(entry_py.read_text()).body
+        if isinstance(node, ast.AnnAssign) and node.target.id == "ENTRIES"
+    )
+    files = [ROOT / "bench.py", *sorted((ROOT / "tools").glob("*.py"))]
+    hits = [
+        (f"__spark_entry__.py:{no}", name)
+        for no, name in _name_literals(entry_py, "oracle_sql")
+        if no not in rows
+    ]
+    hits += [
+        (f"{path.relative_to(ROOT)}:{no}", name)
+        for path in files
+        for no, name in _name_literals(path)
+    ]
+    assert not hits, hits
+    in_rows = Counter(
+        name for no, name in _name_literals(entry_py, "oracle_sql")
+    )
+    assert in_rows == Counter(list(_QUERIES)), (
+        {n: k for n, k in in_rows.items() if k != 1}
+    )
+
+
+def test_rows_only_entries_come_after_oracled_ones():
+    """queries() order puts every rows-only entry (no oracle_sql() key)
+    after every oracled one, so the driver's front-of-list sample never
+    spends a slot on a rows-only check."""
+    oracled = [name in entrymod.oracle_sql() for name in _QUERIES]
+    assert oracled == sorted(oracled, reverse=True), [
+        name for name in _QUERIES if name not in entrymod.oracle_sql()
+    ]
+
+
+def test_slope_entries_are_headline_entries():
+    """bench_scaling reuses the sf0.1 warm time of each ``slope`` entry
+    from the headline run (``warm[name]``)."""
+    missing = entrymod.tagged("slope").keys() - entrymod.tagged("headline")
+    assert not missing, missing
+
+
+def test_every_tag_is_in_the_vocabulary():
+    """A misspelt tag would silently drop its entry from bench, the
+    scale probe or the build-job check."""
+    bad = {
+        name: tags
+        for name, _, tags in entrymod.ENTRIES
+        if not set(tags.split()) <= TAGS
+        or len(tags.split()) != len(set(tags.split()))
+    }
+    assert not bad, bad
+
+
+def test_probe_tiers_nest():
+    """An entry carries at most one tag per probe family (and one
+    build reason), so each family's tiers nest — x100 within x30
+    within x10 — and the events, docs and misc families are
+    disjoint."""
+    sys.path.insert(0, str(ROOT / "tools"))
+    import scale_probe
+
+    for name, _, tags in entrymod.ENTRIES:
+        fams = [t.rstrip("0123456789").split(":")[0] for t in tags.split()]
+        probe = [f for f in fams if f in ("events", "docs", "misc")]
+        assert len(probe) <= 1 and fams.count("build") <= 1, (name, tags)
+    tiers = {
+        fam: [set(scale_probe.probed(fam, n)) for n in (10, 30, 100)]
+        for fam in ("events", "docs", "misc")
+    }
+    for fam, (x10, x30, x100) in tiers.items():
+        assert x100 <= x30 <= x10, fam
+    assert not tiers["events"][0] & tiers["docs"][0]
+    assert not tiers["events"][0] & tiers["misc"][0]
+    assert not tiers["docs"][0] & tiers["misc"][0]

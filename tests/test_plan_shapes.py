@@ -205,13 +205,12 @@ def test_semantic_dedup_no_cartesian(plans):
 
 
 def test_headline_set_has_no_accidental_cross_product(plans):
-    """Blanket guard over the ENTIRE bench headline: no query may plan
-    a CartesianProduct, and BroadcastNestedLoopJoin is allowed only in
-    the two intentional broadcast brute-force ANN baselines (small
-    query side x corpus scan — the correct exact-scoring shape).
+    """Blanket guard over the ENTIRE bench headline (the entries tagged
+    ``headline``): no query may plan a CartesianProduct, and
+    BroadcastNestedLoopJoin is allowed only in the two intentional
+    broadcast brute-force ANN baselines (small query side x corpus scan
+    — the correct exact-scoring shape).
     Catching a regression here beats discovering it in BENCH_r{N}."""
-    import bench
-
     # intentional broadcast nested-loop scans: tiny query/anchor side
     # broadcast against one corpus pass (documented in similarity.py)
     BNLJ_OK = {
@@ -255,7 +254,7 @@ def test_headline_set_has_no_accidental_cross_product(plans):
         "tokenizer_roundtrip_docs",
         "tokenizer_export_manifest",
     }
-    for name in bench.HEADLINE:
+    for name in entrymod.tagged("headline"):
         p = plans(name)
         assert "CartesianProduct" not in p, f"{name} planned a cartesian"
         if name not in BNLJ_OK:
@@ -341,51 +340,19 @@ def test_no_ltz_output_columns_anywhere(frames):
     assert not offenders, f"LTZ output columns: {offenders}"
 
 
-# The entries whose plan build runs Spark jobs at SF_DIR, by reason:
-# a count-sized dispatch (impl='auto' or util.DRIVER_MAX_ROWS); an
-# action pipeline by contract (bounded collect, vocabulary trainer,
-# Bloom mask); a streaming replay; a writer round-trip; a util.cut
-# over an exchange (under AQE the cut runs the exchange's map stages
-# at the call).
-BUILD_JOB_ENTRIES = {
-    name: reason
-    for reason, names in {
-        "auto": """dedup_component_groups dedup_component_groups_portable
-            dedup_corpus_quality_keepers
-            dedup_embedding_cosine_auto dedup_semantic_auto
-            entity_resolution_customers pagerank_host_graph
-            pagerank_trade_nations pca_embedding_projection""",
-        "pipeline": """ann_cosine_topk_vec bloom_decontaminate_docs
-            bloom_incremental_union bpe_merge_table tokenizer_roundtrip_docs
-            unigram_encode_docs unigram_lm_vocab""",
-        "stream": """streaming_chat_validation_replay streaming_dedup_replay
-            streaming_drift_replay streaming_kmv_replay
-            streaming_session_replay""",
-        "writer": """avro_roundtrip_stats jsonl_roundtrip_stats
-            orc_roundtrip_stats tokenizer_export_manifest warc_extract_stats
-            zorder_pruned_scan""",
-        "cut": """basket_pair_affinity chat_prompt_near_dedup
-            curation_manifest_docs dedup_containment_pairs
-            dedup_minhash_portable dedup_prefix_filter_pairs
-            dedup_simhash_portable dedup_video_frames
-            ivm_join_view_fold rollup_incremental_value_quantiles
-            state_diff_user_snapshots triangle_parts_copurchase""",
-    }.items()
-    for name in names.split()
-}
-
-
 def test_plan_builds_run_jobs_only_in_named_entries(frames):
-    """Building a queries() entry runs no Spark job unless the entry is
-    named in BUILD_JOB_ENTRIES, so a new eager action at plan-build time
-    shows up here. Plan-build only; the builds are the fixture's."""
+    """Building a queries() entry runs Spark jobs exactly when its
+    registry row carries a ``build:<reason>`` tag: a new eager action at
+    plan-build time shows up here, and so does a stale tag whose entry
+    no longer runs one. Plan-build only; the builds are the fixture's."""
     for name in entrymod.queries():
         frames(name)
-    unnamed = {
-        n: len(jobs) for n, jobs in frames.build_jobs.items()
-        if jobs and n not in BUILD_JOB_ENTRIES
-    }
+    named = entrymod.tagged("build:")
+    ran = {n: len(jobs) for n, jobs in frames.build_jobs.items() if jobs}
+    unnamed = {n: k for n, k in ran.items() if n not in named}
     assert not unnamed, f"plan builds that ran jobs: {unnamed}"
+    idle = sorted(named.keys() - ran.keys())
+    assert not idle, f"build:-tagged entries whose build ran no job: {idle}"
 
 
 def test_hash_split_is_pure_projection(plans):

@@ -9,7 +9,7 @@ Usage: python tools/capture_plans.py <subdir> <suffix> [--final] [query ...]
            prints isFinalPlan=true with ReusedExchange / AQEShuffleRead
            nodes visible (pre-execution plans cannot show runtime
            exchange reuse).
-  no query args = the full headline list from bench.py.
+  no query args = the entries tagged headline in __spark_entry__.ENTRIES.
 
 Without --final nothing is executed (safe alongside other work).
 """
@@ -33,11 +33,7 @@ def main() -> None:
     if args and args[0] == "--final":
         final = True
         args.pop(0)
-    names = args
-    if not names:
-        import bench
-
-        names = bench.HEADLINE
+    names = args or list(entrymod.tagged("headline"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     outdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

@@ -23,320 +23,55 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# The probed entries are tagged in __spark_entry__.ENTRIES with their
+# family and top tier: events10, docs10/30/100, misc10/30/100. An
+# entry is timed at every tier of its family up to the tagged one
+# (probed() reads the tags), so each tier's set nests in the one below.
 X10_DIR = "/tmp/scale_probe_x10"
-
-QUERIES = [
-    "hourly_event_stats",
-    # round-5 event-family additions: per-user windows (coverage),
-    # lead windows (transitions), and double-aggregate cohorts
-    "interval_coverage_per_user",
-    "event_transition_matrix",
-    "cohort_retention",
-    "user_sessions",
-    "latest_event_per_user",
-    "json_extract_events",
-    "rolling_1h_user_value",
-    "asof_click_attribution",
-    "range_join_event_sessions",
-    "funnel_user_steps",
-    # round-6: salted two-phase KMV k-minimum — the claim is that no
-    # task ever sorts a full group's distinct set
-    "sketch_kmv_distinct_portable",
-    # round-6 session: the KMV MERGE path (two delta sketches folded)
-    # — same no-full-sort claim per delta, merge input <= 2k/group
-    "rollup_incremental_distinct_kmv",
-    # round-8: the full streaming sessionization replay (slice write
-    # + 5 micro-batches + session-window state) — the claim is that
-    # state-store work scales with events per batch, so the whole
-    # replay is linear in the events table
-    "streaming_session_replay",
-    # round-8: the foreachBatch drift-monitor replay — reference
-    # freeze + 2 micro-batch PSI aggregates, linear in events
-    "streaming_drift_replay",
-    # round-9: bounded-state dedup replay — dedup state is O(keys in
-    # horizon) and each batch's filter is linear in its events
-    "streaming_dedup_replay",
-    # round-11 (VERDICT r10 #7): the two in-suite sf1 slope flags —
-    # both retimed ~7x/~5.3x fresh in r9/r10; a dedicated fresh
-    # probe row pins the floor-distortion triage so the flag stops
-    # recurring. cdc = one keyed window + anti-join; seasonal = two
-    # chained aggregates + a broadcast seasonal profile
-    "cdc_apply_user_state",
-    "seasonal_hourly_outliers",
-    # round-12: sf1 slope-flag triage — the deliberate hot-key probe
-    # pair (the plain join IS the planted pathology the salted twin
-    # exists to fix; the fresh rows quantify both)
-    "skew_plain_join",
-    "skew_salted_join",
-]
 
 # dedup/text family runs against the documents x10/x30 tiers built by
 # build_docs_xn (per-copy cipher — see its docstring for why pair
 # counts scale linearly in copies).
-DOC_QUERIES = [
-    "dedup_exact_groups",
-    "dedup_exact_spans",
-    "dedup_minhash_portable",
-    "doc_winnow_fingerprints",
-    "repetition_top_bigram",
-    "text_stats_by_lang",
-    "quality_filter_flags",
-    # round-5 session adds: the prefix-filter join's candidate stage
-    # and the Misra-Gries partial-summary path are the two newest
-    # structures whose scaling is a design CLAIM — probe both
-    "dedup_prefix_filter_pairs",
-    "heavy_hitter_tokens",
-    # round-6: per-shard rank (epoch shuffle) and pure-projection
-    # hash split — both should be flat-linear by construction
-    "epoch_shuffle_docs",
-    "split_train_val_test_docs",
-    # round-6: the driver-facing full-oracle LSH clustering
-    "dedup_component_groups_portable",
-    # round-6: bigram LM — two corpus aggregates + a model re-join
-    "bigram_logprob_scores",
-    # round-6: the composed curation pipeline (dedup -> gate ->
-    # decontaminate -> split) — every stage linear, so the chain is
-    "curation_manifest_docs",
-    # round-6 session: CMS cells are vocabulary-independent state —
-    # the shuffle must stay ~2048 cells/task no matter the corpus
-    "sketch_cms_token_freq",
-    # round-6 session: CDC chunking is pure scan-side codegen — the
-    # claim is scan-speed linearity, zero exchanges before ordering
-    "chunk_text_cdc",
-    # round-6 session: containment shingle equi-join — cipher copies
-    # keep cross-copy shingles disjoint, so pair volume stays linear
-    "dedup_containment_pairs",
-    # round-6 session sweep: the remaining doc-family scaling claims
-    # never probed — line-level dedup (md5-keyed line shuffle),
-    # two-phase prefix-sum packing + token-budget sharding, and the
-    # retrieval stack (scan-side term filter + broadcast stats)
-    "line_dedup_docs",
-    "pack_training_sequences",
-    "shard_docs_by_token_budget",
-    "bm25_doc_scores",
-    "inverted_index_postings",
-    "tfidf_top_terms",
-    # round-7: the web-crawl curation family — canonicalize/host-stats/
-    # URL-dedup/HTML-extract/PII-scrub are scan-side regexp chains or
-    # single hash aggregates, so the claim is flat-linear scan speed
-    "url_canonicalize",
-    "host_quality_stats",
-    "dedup_url_canonical",
-    "html_extract_text",
-    "pii_scrub_docs",
-    # round-7: water-filling planner — one count aggregate + tiny
-    # single-row-per-source windows; cost must be the count scan
-    "mixture_plan_rates",
-    # round-7: the one Arrow-pandas-UDF scan in the probe set — the
-    # claim is linear scan speed plus a constant Arrow serialize cost
-    "unicode_nfc_docs",
-    # round-8: chained-replace mojibake repair and hashed-BoW linear
-    # classifier inference are pure scan-side codegen (claim: flat
-    # scan speed); link-graph extraction is scan-side regex + ONE
-    # domain-pair aggregate; the blocklist filter is an aggregate +
-    # broadcast anti-join (claim: two linear scans, no doc shuffle)
-    "mojibake_repair_docs",
-    "quality_classifier_scores",
-    "host_link_graph",
-    "host_blocklist_filter",
-    # round-8: Bloom decontamination — JVM shingle+position codegen
-    # feeding a numpy bit-test Arrow kernel against the broadcast
-    # mask; the claim is linear scan+kernel cost, no join, and a
-    # build cost bounded by the (fixed-size) benchmark slice
-    "bloom_decontaminate_docs",
-    # round-8: BPE pair counting (vocab aggregate then charset^2-
-    # bounded pair aggregate) and anchor-term extraction (scan-side
-    # regex/canon + ONE (domain,term) count) — both claims are
-    # aggregate-input linearity with bounded output
-    "bpe_merge_candidates",
-    "anchor_text_stats",
-    # round-8: sentence segmentation is pure scan-side HOF codegen —
-    # flat scan-speed claim
-    "sentence_stats_docs",
-    # round-8: robots filtering is a broadcast join + scan-side
-    # exists/startswith — flat scan-speed claim, no URL-side shuffle
-    "robots_filter_docs",
-    # round-8: Zipf fit = one vocab aggregate + constant-size tail —
-    # the claim is the same vocab-collapse linearity as BPE counting
-    "zipf_fit_tokens",
-    # round-8: per-domain cap — narrow (id, domain) window shuffle,
-    # bodies never move; claim is keyed-shuffle linearity
-    "cap_docs_per_host",
-    # round-8: the OR-fold union probe shares bloom_decontaminate's
-    # machinery; probed for completeness (two mask builds + probe)
-    "bloom_incremental_union",
-    # round-8: word-list filter is a scan-side HOF IN-set — flat
-    # scan-speed claim
-    "lexicon_filter_docs",
-    # round-9: full BPE training (16 jobs over the MATERIALIZED vocab
-    # — claim: cost = one corpus aggregate + vocab-sized iterations),
-    # BPE encoding (pure scan-side replace chain — flat scan speed),
-    # DSIR importance (two D-bounded aggregates + broadcast join +
-    # narrow keyed sum), PSL domain extraction (scan-side HOFs over
-    # literal rule arrays — flat scan speed)
-    "bpe_merge_table",
-    "bpe_encode_docs",
-    "dsir_importance_docs",
-    "registered_domain_psl_docs",
-    # round-9 session: Luhn scrub and script-mix are pure scan-side
-    # codegen (flat scan-speed claims)
-    "pii_card_scrub_docs",
-    "script_mix_docs",
-    # round-11 (VERDICT r10 #10): the staged-projection classifier is
-    # a pure scan — the claim is flat scan speed all the way to the
-    # 500k-doc x100 tier
-    "lang_id_classifier_docs",
-    # round-12 (VERDICT r11 #2): the two new r11 heavies with no
-    # probe rows — banded image phash (groups are doc_id-derived, so
-    # the id-shifted copies scale planted pairs exactly linearly) and
-    # the broadcast unigram encode (cipher copies grow |vocab| ~10x,
-    # so the claim is vocab-linear training + scan-linear encode)
-    "dedup_image_phash",
-    "unigram_encode_docs",
-    # round-12 additions: frame-sampled video banding, audio
-    # fingerprint banding, scan-side table extraction, and the
-    # tokenizer round-trip audit (train + broadcast verdict join)
-    "dedup_video_frames",
-    "dedup_audio_fingerprint",
-    "html_table_rows",
-    "html_table_records",
-    "tokenizer_roundtrip_docs",
-    "video_scene_cut_frames",
-    "media_header_stats",
-    # round-13 additions: per-page PDF parse (mapInPandas scan —
-    # flat-linear claim), EXIF walk + GPS scrub (header-only byte
-    # walks — flat), image-caption mining (scan-side extraction +
-    # one img_url window), host PageRank (domain-keyed graph build +
-    # bounded driver iteration), chat validation/stats (single-scan
-    # HOF suite), prompt dedup exact (batch-sized registry anti-join)
-    # and near (bounded 4-prompt groups -> linear pair volume)
-    "pdf_extract_stats",
-    "media_exif_stats",
-    "scrub_exif_gps_docs",
-    "image_caption_pairs",
-    "pagerank_host_graph",
-    "chat_validation_suite",
-    "chat_prompt_dedup",
-    "chat_prompt_near_dedup",
-    # round-13 session 2: loss-mask accounting + prompt-keyed split
-    # (both pure projections — flat claims), caption-aware keepers
-    # (one signature window), ChatML rendering (one HOF fold)
-    "chat_loss_mask_stats",
-    "chat_prompt_split",
-    "image_caption_keepers",
-    "chat_render_template",
-    # round-13 session 3: per-shard pack window + the streaming
-    # validation fold (state = 8 longs -> batch-count-linear claim)
-    "chat_pack_sequences",
-    "streaming_chat_validation_replay",
-]
-
-# x30 docs tier (VERDICT r4 #3): winnow and quality grew fastest at
-# x10 (4.3x / 3.2x) — push those families one more decade so
-# superlinearity can't hide between decades. 1.5M docs fits the
-# 128 GiB envelope.
-X30_DIR = "/tmp/scale_probe_docs_x30"
 DOCS_X10_DIR = "/tmp/scale_probe_docs_x10"
-X30_QUERIES = [
-    "doc_winnow_fingerprints",
-    "quality_filter_flags",
-    "dedup_minhash_portable",
-    # round-5: the anchor self-join is the newest quadratic-risk
-    # stage; the per-copy cipher keeps cross-copy anchors disjoint so
-    # pair output scales linearly in copies
-    "dedup_exact_spans",
-    # prefix-filter join: candidates must scale with true dup count
-    # (cipher copies keep cross-copy shingles disjoint), not n^2
-    "dedup_prefix_filter_pairs",
-    # round-6: banded md5 clustering and the bigram-model join are
-    # the two newest structures with any growth risk
-    "dedup_component_groups_portable",
-    "bigram_logprob_scores",
-    # round-6 session: the 4-stage curation composition is the most
-    # expensive bench query — stress the whole chain at 1.5M docs;
-    # Misra-Gries partial summaries must stay O(k·partitions)
-    "curation_manifest_docs",
-    "heavy_hitter_tokens",
-    # round-6 session: shingle-equi-join containment and scan-side
-    # CDC chunking at 1.5M docs
-    "dedup_containment_pairs",
-    "chunk_text_cdc",
-    # round-8: the Bloom probe's Arrow kernel and the BPE vocabulary
-    # aggregate are the two newest structures with any growth risk
-    # (kernel batch cost, vocab cardinality) — push both to 150k docs
-    "bloom_decontaminate_docs",
-    "bpe_merge_candidates",
-    # round-11: x30 baseline for the lang-id x100 flat-scan claim
-    "lang_id_classifier_docs",
-    # round-12 (VERDICT r11 #2): one more decade for the two r11
-    # heavies so superlinearity can't hide between decades
-    "dedup_image_phash",
-    "unigram_encode_docs",
-    # round-13 (VERDICT r12 #10): scene cuts had the highest r12 x10
-    # slope (3.9) and no x30 row — one more decade settles it
-    "video_scene_cut_frames",
-]
+# x30 docs tier: the families that grew fastest at x10 (winnow 4.3x,
+# quality 3.2x) and the newest structures with a growth risk go one
+# more decade, so superlinearity can't hide between decades. 1.5M
+# docs fits the 128 GiB envelope.
+X30_DIR = "/tmp/scale_probe_docs_x30"
 
-# round-6: the round-5 heavies (triangle enumeration over the
-# co-purchase graph, power-iteration PCA, blocked entity resolution)
-# get their own x10 tier of id-shifted lineitem / embeddings /
-# ciphered customer copies — each copy's graph/blocks are disjoint
-# from the others', so edge, Gram-row, and blocked-pair counts scale
-# exactly linearly in copies.
+# The misc heavies (triangle enumeration over the co-purchase graph,
+# power-iteration PCA, blocked entity resolution) get their own x10
+# tier of id-shifted lineitem / embeddings / ciphered customer copies
+# — each copy's graph/blocks are disjoint from the others', so edge,
+# Gram-row, and blocked-pair counts scale exactly linearly in copies.
 MISC_X10_DIR = "/tmp/scale_probe_misc_x10"
-MISC_QUERIES = [
-    "triangle_parts_copurchase",
-    "pca_embedding_projection",
-    "entity_resolution_customers",
-    # round-11: x10 row for the embedding-auto x30/x100 decade chain
-    "dedup_embedding_cosine_auto",
-    # round-6 session: scan-side literal-bank projection — the claim
-    # is pure linear scan speed, zero exchanges before output order
-    "jl_project_embeddings",
-    # round-6 session: basket pair expansion + two hash aggregates —
-    # per-copy disjoint part ids keep pair counts exactly linear
-    "basket_pair_affinity",
-    # round-12: sf1 flag triage — brute-force cosine top-k is a pure
-    # linear scan; the sf1 19x read is floor distortion (0.3 s base)
-    "ann_cosine_topk",
-]
 # one more decade for the misc heavies (x30 = 18M lineitem rows /
 # 30k vectors / 450k customers — fits the memory envelope): decade-
 # over-decade ratios catch superlinearity hiding between tiers
 MISC_X30_DIR = "/tmp/scale_probe_misc_x30"
-MISC_X30_QUERIES = [
-    "triangle_parts_copurchase",
-    "pca_embedding_projection",
-    "entity_resolution_customers",
-    # round-6 session: basket pair expansion + aggregates at 18M rows
-    "basket_pair_affinity",
-    # round-11: x30 baseline for the embedding-auto x100 claim
-    "dedup_embedding_cosine_auto",
-]
 
-# round-8 (VERDICT r7 #6): one FURTHER decade for the top-3 heavies —
-# the x30 tier caught two real scale bugs in r6, and x100 (60M
-# lineitem rows / 500k docs) is the largest tier the 128 GiB box
-# holds. Docs x100 uses SEEDED PERMUTATION ciphers (a 100-copy Caesar
-# family has only 36 distinct rotations, so copies i and i+36 would
-# be exact cross-copy twins — the same aliasing bug the x10 vowel
-# rotation had); linear baseline is the x30 row:
-# t100 ~= (100/30) * (t30 - fixed) + fixed.
+# One FURTHER decade for the top heavies — the x30 tier caught two
+# real scale bugs, and x100 (60M lineitem rows / 500k docs) is the
+# largest tier the 128 GiB box holds. Docs x100 uses SEEDED
+# PERMUTATION ciphers (a 100-copy Caesar family has only 36 distinct
+# rotations, so copies i and i+36 would be exact cross-copy twins —
+# the same aliasing bug the x10 vowel rotation had); linear baseline
+# is the x30 row: t100 ~= (100/30) * (t30 - fixed) + fixed.
 X100_DOCS_DIR = "/tmp/scale_probe_docs_x100"
-X100_DOCS_QUERIES = [
-    "dedup_exact_spans",
-    "dedup_containment_pairs",
-    # round-11 (VERDICT r10 #10): flat-scan claim at 500k docs
-    "lang_id_classifier_docs",
-]
+# misc x100 holds lineitem and embeddings only (the triangle and the
+# auto embedding-dedup entries); customer stops at x30
 MISC_X100_DIR = "/tmp/scale_probe_misc_x100"
-MISC_X100_QUERIES = [
-    "triangle_parts_copurchase",
-    # round-11 (VERDICT r10 #10): the RECOMMENDED embedding-dedup
-    # path at 500k vectors — 'auto' grows the blocking planes with
-    # the corpus, so the claim is slope <= ~linear, never quadratic
-    "dedup_embedding_cosine_auto",
-]
+
+
+def probed(family: str, tier: int, only: set | None = None) -> list[str]:
+    """Entries probed in ``family`` at x``tier`` (tagged ``<family>N``
+    with N >= ``tier``), in registry order; ``only`` restricts them."""
+    import __spark_entry__ as E
+
+    return [
+        name for name, tag in E.tagged(family).items()
+        if int(tag[len(family):]) >= tier and (only is None or name in only)
+    ]
 
 _ALNUM = "abcdefghijklmnopqrstuvwxyz0123456789"
 
@@ -539,10 +274,10 @@ def main() -> None:
     only: set | None = None
     if len(sys.argv) > 2 and sys.argv[1] == "--only":
         only = set(sys.argv[2].split(","))
-    ev_queries = [q for q in QUERIES if only is None or q in only]
-    doc_queries = [q for q in DOC_QUERIES if only is None or q in only]
-    x30_queries = [q for q in X30_QUERIES if only is None or q in only]
-    misc_queries = [q for q in MISC_QUERIES if only is None or q in only]
+    ev_queries = probed("events", 10, only)
+    doc_queries = probed("docs", 10, only)
+    x30_queries = probed("docs", 30, only)
+    misc_queries = probed("misc", 10, only)
 
     spark = get_spark()
     spark.range(10).count()
@@ -571,9 +306,9 @@ def main() -> None:
     fixed = measure_action_overhead(spark)
     rows = []
     for name in ev_queries + doc_queries + misc_queries:
-        if name in QUERIES:
+        if name in ev_queries:
             big = X10_DIR
-        elif name in DOC_QUERIES:
+        elif name in doc_queries:
             big = DOCS_X10_DIR
         else:
             big = MISC_X10_DIR
@@ -676,7 +411,7 @@ def main() -> None:
                            "x30_ratio_vs_linear",
                            "x30_ratio_vs_linear_median")}))
 
-    misc_x30 = [q for q in MISC_X30_QUERIES if only is None or q in only]
+    misc_x30 = probed("misc", 30, only)
     # the misc x30 loop needs the x10 row for the linear baseline
     misc_x30 = [q for q in misc_x30 if q in by_name]
     if misc_x30 and not os.path.exists(
@@ -740,8 +475,7 @@ def main() -> None:
                            "x100_ratio_vs_linear",
                            "x100_ratio_vs_linear_median")}))
 
-    x100_docs = [q for q in X100_DOCS_QUERIES
-                 if (only is None or q in only) and q in by_name]
+    x100_docs = [q for q in probed("docs", 100, only) if q in by_name]
     if x100_docs and not os.path.exists(
         os.path.join(X100_DOCS_DIR, "documents.parquet")
     ):
@@ -749,20 +483,13 @@ def main() -> None:
     for name in x100_docs:
         measure_x100(name, X100_DOCS_DIR)
 
-    x100_misc = [q for q in MISC_X100_QUERIES
-                 if (only is None or q in only) and q in by_name]
-    if any(q == "triangle_parts_copurchase" for q in x100_misc) and (
-        not os.path.exists(os.path.join(MISC_X100_DIR, "lineitem.parquet"))
-    ):
-        build_misc_x10(spark, "/root/testdata/sf0.1", 100, MISC_X100_DIR,
-                       tables=("lineitem",))
-    if any(q == "dedup_embedding_cosine_auto" for q in x100_misc) and (
-        not os.path.exists(
-            os.path.join(MISC_X100_DIR, "embeddings.parquet")
-        )
-    ):
-        build_misc_x10(spark, "/root/testdata/sf0.1", 100, MISC_X100_DIR,
-                       tables=("embeddings",))
+    x100_misc = [q for q in probed("misc", 100, only) if q in by_name]
+    for table in ("lineitem", "embeddings"):
+        if x100_misc and not os.path.exists(
+            os.path.join(MISC_X100_DIR, f"{table}.parquet")
+        ):
+            build_misc_x10(spark, "/root/testdata/sf0.1", 100,
+                           MISC_X100_DIR, tables=(table,))
     for name in x100_misc:
         measure_x100(name, MISC_X100_DIR)
 
